@@ -9,8 +9,14 @@ renames. The protocol:
   table path. A writer never modifies a committed segment — each
   ingest/rewrite creates a new one.
 - A single small pointer file ``_MANIFEST.json`` names the live
-  segment set (``{"version": N, "segments": [...]}``). Readers resolve
-  the table THROUGH the manifest; uncommitted segments are invisible.
+  segment set (``{"version": N, "segments": [...], "schema": {...}}``).
+  Readers resolve the table THROUGH the manifest; uncommitted segments
+  are invisible. ``schema`` is the StructType JSON of the segments'
+  parquet files (:func:`file_schema`), recorded at commit whenever
+  every live segment is known to share it, so a read resolves without
+  a schema-inference Spark job per segment. It is absent on manifests
+  written before it was recorded and after appending to adopted
+  legacy files; readers then infer it once.
 - Commit = write the new manifest to a sibling temp file, fsync, then
   one atomic single-file replace (:func:`os.replace`). A crash at ANY
   point before the flip leaves the previous manifest — and therefore
@@ -66,8 +72,9 @@ def _manifest_file(path: str) -> str:
 
 
 def read_manifest(path: str) -> dict | None:
-    """The live manifest (``{"version": int, "segments": [str]}``), or
-    None when the table has never committed through the protocol."""
+    """The live manifest (``{"version": int, "segments": [str]}``, plus
+    ``"schema"`` when recorded), or None when the table has never
+    committed through the protocol."""
     try:
         with open(_manifest_file(path)) as f:
             return json.load(f)
@@ -91,18 +98,49 @@ def _flip(tmp: str, dst: str) -> None:
     os.replace(tmp, dst)
 
 
-def commit_segments(path: str, segments: list[str], *, gc: bool = True) -> None:
+def file_schema(df, partition_by: str | None = None):
+    """The schema of the parquet files ``df``'s write produces, as a
+    read returns it: every field nullable (the parquet source reads all
+    columns as nullable), without the ``partition_by`` column — that
+    one lives in directory names, and a read still discovers it (and
+    infers its type) from them without a job. This is what a commit
+    records, so readers skip the footer-inference job."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    def nullable(t):
+        if isinstance(t, StructType):
+            return StructType([
+                StructField(f.name, nullable(f.dataType), True, f.metadata)
+                for f in t
+            ])
+        if isinstance(t, ArrayType):
+            return ArrayType(nullable(t.elementType), True)
+        if isinstance(t, MapType):
+            return MapType(nullable(t.keyType), nullable(t.valueType), True)
+        return t
+
+    return nullable(
+        StructType([f for f in df.schema if f.name != partition_by])
+    )
+
+
+def commit_segments(path: str, segments: list[str], *, gc: bool = True,
+                    schema=None) -> None:
     """Atomically point the manifest at exactly ``segments`` (REPLACE
-    semantics). Data must already be fully written. On success, sweeps
-    segment directories the new manifest no longer references —
-    superseded versions and crash orphans alike (single-owner
-    contract)."""
+    semantics). Data must already be fully written; ``schema`` (a
+    StructType, see :func:`file_schema`) is recorded when every
+    segment in the set has it. On success, sweeps segment directories
+    the new manifest no longer references — superseded versions and
+    crash orphans alike (single-owner contract)."""
     prev = read_manifest(path)
     version = (prev["version"] if prev else 0) + 1
+    m = {"version": version, "segments": list(segments)}
+    if schema is not None:
+        m["schema"] = schema.jsonValue()
     os.makedirs(path, exist_ok=True)
     tmp = os.path.join(path, f"{_TMP_PREFIX}{uuid.uuid4().hex[:8]}")
     with open(tmp, "w") as f:
-        f.write(json.dumps({"version": version, "segments": list(segments)}))
+        f.write(json.dumps(m))
         f.flush()
         os.fsync(f.fileno())
     _flip(tmp, _manifest_file(path))
@@ -110,13 +148,18 @@ def commit_segments(path: str, segments: list[str], *, gc: bool = True) -> None:
         gc_segments(path)
 
 
-def append_commit(path: str, new_names: list[str], *, gc: bool = True) -> None:
+def append_commit(path: str, new_names: list[str], *, gc: bool = True,
+                  schema=None) -> None:
     """Atomically extend the live segment set with ``new_names``
     (APPEND semantics — one pointer flip makes the whole batch of new
-    segments visible at once)."""
+    segments visible at once). ``schema`` is that of the new segments;
+    it stays recorded only if the live segments are recorded with the
+    same one."""
     prev = read_manifest(path)
     base = prev["segments"] if prev else []
-    commit_segments(path, base + list(new_names), gc=gc)
+    if base and schema is not None and prev.get("schema") != schema.jsonValue():
+        schema = None
+    commit_segments(path, base + list(new_names), gc=gc, schema=schema)
 
 
 def gc_segments(path: str) -> None:
@@ -142,24 +185,51 @@ def gc_segments(path: str) -> None:
                 pass
 
 
+def _partition_cols(segs: list[str]) -> set[str]:
+    """Directory-partition column names (``__cell`` of ``__cell=N/``)
+    found under any of ``segs``."""
+    cols = set()
+    for seg in segs:
+        try:
+            cols.update(e.split("=", 1)[0] for e in os.listdir(seg) if "=" in e)
+        except FileNotFoundError:
+            pass
+    return cols
+
+
 def manifest_read(spark, path: str):
     """DataFrame over the committed segments (None before the first
-    commit or when the live set is empty). Each segment reads with its
-    own ``basePath`` so directory-partitioned layouts (``__cell=N/``)
-    keep their partition column AND per-segment partition pruning;
-    segments then union by name. Snapshot isolation is structural:
-    segments are immutable, so the set resolved here cannot change
-    under the plan. Segment count is bounded by compaction (one
-    compact = one segment), keeping the union shallow."""
+    commit or when the live set is empty). Reads with the manifest's
+    recorded file schema (:func:`file_schema`), so building the
+    DataFrame starts no Spark job; a manifest without one infers it
+    once, from the first segment.
+    Unpartitioned segments are one scan over all of them.
+    Directory-partitioned layouts (``__cell=N/``) read each segment
+    with its own ``basePath`` — Spark rejects several partitioned
+    roots in one read — so they keep their partition column and
+    per-segment partition pruning, and the segments union by name.
+    Snapshot isolation is structural: segments are immutable, so the
+    set resolved here cannot change under the plan. Segment count is
+    bounded by compaction (one compact = one segment), keeping the
+    union shallow."""
+    from pyspark.sql.types import StructType
+
     m = read_manifest(path)
     if m is None or not m["segments"]:
         return None
-    parts = []
-    for name in m["segments"]:
-        seg = os.path.join(path, name)
-        parts.append(
-            spark.read.option("basePath", seg).parquet(seg)
-        )
+    segs = [os.path.join(path, name) for name in m["segments"]]
+    part_cols = _partition_cols(segs)
+    if m.get("schema"):
+        schema = StructType.fromJson(m["schema"])
+    else:
+        inferred = spark.read.option("basePath", segs[0]).parquet(segs[0]).schema
+        schema = StructType([f for f in inferred if f.name not in part_cols])
+    if not part_cols:
+        return spark.read.schema(schema).parquet(*segs)
+    parts = [
+        spark.read.schema(schema).option("basePath", seg).parquet(seg)
+        for seg in segs
+    ]
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -191,25 +261,20 @@ def adopt_legacy(path: str) -> list[str]:
     return [name]
 
 
-def replace_write(df, path: str, *, coalesce: int | None = None,
+def replace_write(df, path: str, *, n_files: int | None = None,
                   partition_by: str | None = None) -> None:
     """Write ``df`` as the table's new (sole) version: land a segment,
     flip the pointer, sweep the old version. The crash-safe successor
     of the ``write.mode('overwrite')``-then-rename-swap pattern — a
     crash anywhere before the flip leaves the previous version the
-    live one."""
+    live one. ``n_files`` repartitions (a shuffle, round-robin) to
+    exactly that many files; the rows are the same for
+    row-order-insensitive readers, which every reader of these tables
+    is. It is not ``coalesce``: that would fold a pickled local
+    relation's slices into one task evaluating them through the Python
+    worker one after another."""
     name, seg = new_segment(path)
-    # repartition, NOT coalesce (r12, measured): every caller that asks
-    # for file-count control here passes a codebook/sketch-sized frame,
-    # and most of those are createDataFrame local relations whose rows
-    # live in defaultParallelism pickled slices. coalesce(1) folds all
-    # those slices into ONE task that evaluates them through the Python
-    # worker SEQUENTIALLY — ~5-7 s per tiny state write (32 round trips
-    # at local[32]; same pathology on a cluster). repartition keeps the
-    # slice evaluations parallel on the map side and funnels rows
-    # through one reduce task: 0.6 s vs 5.2 s measured on a 32-row
-    # register table, bit-identical file contents either way.
-    w = df.repartition(coalesce) if coalesce else df
+    w = df.repartition(n_files) if n_files else df
     writer = w.write
     if partition_by:
         writer = writer.partitionBy(partition_by)
@@ -219,7 +284,7 @@ def replace_write(df, path: str, *, coalesce: int | None = None,
         # them into an (unreferenced) segment so the flip's GC sweeps
         # them instead of leaving them to shadow plain directory reads
         adopt_legacy(path)
-    commit_segments(path, [name])
+    commit_segments(path, [name], schema=file_schema(df, partition_by))
 
 
 def append_write(df, path: str, *, partition_by: str | None = None) -> str:
@@ -234,5 +299,6 @@ def append_write(df, path: str, *, partition_by: str | None = None) -> str:
         writer = writer.partitionBy(partition_by)
     writer.parquet(seg)
     legacy = [] if read_manifest(path) is not None else adopt_legacy(path)
-    append_commit(path, legacy + [name])
+    schema = None if legacy else file_schema(df, partition_by)
+    append_commit(path, legacy + [name], schema=schema)
     return name

@@ -2153,7 +2153,9 @@ def snapshot_read(spark, path: str, base_path: str | None = None):
     segments are immutable and a concurrent commit only flips the
     pointer, so this read sees exactly one version, never a torn mix,
     and never an uncommitted (crash-orphaned) segment. ``base_path``
-    is ignored: partition columns survive via per-segment basePath.
+    is ignored: :func:`~streamtasks_spark.core.state.manifest_read`
+    reads with the schema the manifest records and keeps the partition
+    column of a directory-partitioned layout.
 
     **Legacy plain directories** (pre-manifest data, appended output
     logs): resolve the concrete file list up front and read those
@@ -2235,6 +2237,7 @@ def compact_table(
 
     from streamtasks_spark.core.state import (
         commit_segments,
+        file_schema,
         new_segment,
         read_manifest,
     )
@@ -2257,7 +2260,9 @@ def compact_table(
     if read_manifest(path) is not None:
         name, seg = new_segment(path)
         writer.parquet(seg)
-        commit_segments(path, [name])
+        commit_segments(
+            path, [name], schema=file_schema(cur, partition_by)
+        )
         return True
     tag = uuid.uuid4().hex[:8]
     tmp = f"{path}__compact_{tag}"

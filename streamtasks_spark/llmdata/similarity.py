@@ -2609,7 +2609,7 @@ class IvfIndex:
             )
             from streamtasks_spark.core.state import replace_write
 
-            replace_write(seed, self.centroids_path, coalesce=1)
+            replace_write(seed, self.centroids_path, n_files=1)
             cents = self._centroids(spark)
             # emptiness check AFTER the write, against the materialized
             # file — one tiny file read that covers BOTH seed paths
@@ -2743,7 +2743,7 @@ class IvfIndex:
             vecs, new_cb, None, batch_expr=F.lit(0)
         ).collect()[0]
         name, epoch = new_segment(self.path)
-        replace_write(cents_df, f"{epoch}/centroids", coalesce=1)
+        replace_write(cents_df, f"{epoch}/centroids", n_files=1)
         assigned = vecs.withColumn(
             "__best", F.expr(_argmax_struct_expr(new_cb))
         ).select(
@@ -3074,7 +3074,7 @@ class IvfPqIndex:
             )
             from streamtasks_spark.core.state import replace_write
 
-            replace_write(seed, self.centroids_path, coalesce=1)
+            replace_write(seed, self.centroids_path, n_files=1)
             wrote_centroids = True
             cents = self._centroids(spark)
             if cents is None or not cents.limit(1).count():
@@ -3130,7 +3130,7 @@ class IvfPqIndex:
                 spark.createDataFrame(
                     rows, "__m int, __j int, __cv array<double>"
                 ),
-                self.pq_codebook_path, coalesce=1,
+                self.pq_codebook_path, n_files=1,
             )
             cb = self._pq_cents(spark)
         pq_cents, _ = cb
@@ -3305,7 +3305,7 @@ class IvfPqIndex:
         ).collect()[0]
         # stage the complete new epoch, invisible until the flip
         name, epoch = new_segment(self.path)
-        replace_write(cents_df, f"{epoch}/centroids", coalesce=1)
+        replace_write(cents_df, f"{epoch}/centroids", n_files=1)
         pq_rows = [
             (m, j, new_pq[0][m][j])
             for m in sorted(new_pq[0])
@@ -3315,7 +3315,7 @@ class IvfPqIndex:
             spark.createDataFrame(
                 pq_rows, "__m int, __j int, __cv array<double>"
             ),
-            f"{epoch}/pq_codebook", coalesce=1,
+            f"{epoch}/pq_codebook", n_files=1,
         )
         sub = self.dim // self.m_sub
         assigned = pin(

@@ -28,6 +28,23 @@ _EXCLUDED_OPT_RULES = ",".join([
 ])
 
 
+# Streaming checkpoint I/O (offset log, commit log, state-store files)
+# through Hadoop's FileSystem API instead of the default FileContext
+# manager. Without the native Hadoop library (pip PySpark ships none),
+# FileContext on `file:` paths reaches RawLocalFs, which forks a
+# `readlink` process on every rename and a `chmod` process on every
+# file it creates. Measured on streaming_dedup_exact micro-batches
+# (4 vCPUs): the JVM's child-process CPU fell from 0.97 to 0.18 s per
+# batch, walCommit from ~45 to ~9 ms. The FileSystem manager writes a
+# temp file and renames it into place, which is atomic on the local
+# POSIX filesystem a `local[n]` session checkpoints to. Spark 4.1
+# moved the class into `checkpointing`.
+_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
 def exclude_generate_filter_inference(spark: SparkSession) -> None:
     """Runtime-settable twin of the builder config, for sessions built
     by someone else (the round driver passes its own SparkSession).
@@ -57,6 +74,8 @@ def get_spark(
       - Arrow on for every pandas UDF hop
       - shuffle partitions sized to the local core count; on a real cluster
         AQE coalesces, so a high initial number is safe.
+      - streaming checkpoints written through Hadoop's FileSystem API
+        (see ``_CHECKPOINT_FILE_MANAGER``)
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     if shuffle_partitions is None:
@@ -96,6 +115,7 @@ def get_spark(
         # native type for — read as long and convert (read_parquet below)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.optimizer.excludedRules", _EXCLUDED_OPT_RULES)
+        .config("spark.sql.streaming.checkpointFileManagerClass", _CHECKPOINT_FILE_MANAGER)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -169,6 +189,29 @@ def read_parquet(spark: SparkSession, path: str):
     if memo_key is not None:
         df_memo[memo_key] = df
     return df
+
+
+def local_frame(spark: SparkSession, rows, schema):
+    """DataFrame over a small in-process list of row tuples, built as
+    a JVM ``LocalRelation`` from a ``pyarrow.Table``. The default
+    ``createDataFrame(rows)`` pickles the rows into
+    ``defaultParallelism`` slices that a Python worker unpickles and
+    reserializes on every action, one Python-worker task per slice.
+    Here the rows cross py4j once as Arrow and no Python worker runs.
+    ``schema``: a StructType or a DDL string; values are converted to
+    its types."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def named_output(df, name: str) -> None:

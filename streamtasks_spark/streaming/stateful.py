@@ -35,6 +35,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
 from streamtasks_spark.core.timeutil import ensure_event_time
+from streamtasks_spark.session import local_frame
 
 _PRIO_CONTROL, _PRIO_DATA = 0, 1
 
@@ -52,28 +53,21 @@ def _atomic_state_write(spark, rows, schema: str, path: str) -> None:
     before the flip leaves the previous state the live one (a restart
     replays the in-flight batch against intact registers/counters —
     never against empty state, which would be a silent under-estimate,
-    and never against a half-written rewrite). Unlike the r10
-    directory-rename swap this replaces, there is NO residual window:
-    directory rename is copy+delete on S3-class object stores, while
-    atomic replacement of one small file is the primitive every target
+    and never against a half-written rewrite). Unlike a
+    directory-rename swap there is NO residual window: directory
+    rename is copy+delete on S3-class object stores, while atomic
+    replacement of one small file is the primitive every target
     filesystem provides (POSIX rename, HDFS rename, object PUT).
     Crash debris is an unreferenced segment directory — inert (never
     resolved by :func:`~streamtasks_spark.llmdata.dedup.snapshot_read`,
-    which reads through the manifest) and swept by the next commit."""
+    which reads through the manifest) and swept by the next commit.
+    ``rows`` is sketch-bounded, so it is written from a JVM local
+    relation (:func:`~streamtasks_spark.session.local_frame`) as one
+    file by one task: coalescing a local relation runs no Python worker
+    and starts no shuffle."""
     from streamtasks_spark.core.state import replace_write
 
-    # ONE slice from the start (r12, measured): `rows` is a
-    # sketch-bounded driver-side list; the default createDataFrame
-    # spreads it over defaultParallelism pickled slices and the
-    # single-file write then pays one Python-worker round trip PER
-    # SLICE (~5-7 s per micro-batch at local[32]). parallelize(rows, 1)
-    # makes the write one task, one round trip (~0.3 s), same file.
-    replace_write(
-        spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, 1), schema
-        ),
-        path,
-    )
+    replace_write(local_frame(spark, rows, schema).coalesce(1), path)
 
 
 def streaming_last_value_join(
@@ -1261,14 +1255,15 @@ def streaming_approx_distinct(
     _regs: dict[str, dict[int, int] | None] = {"v": None}
 
     def _ingest(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         spark = batch.sparkSession
         new = _registers(batch.select(id_col, text_col))
         # ≤ m rows (register file): bound ENFORCED, not just argued
         rows_new = bounded_collect(
             new, m, "streaming_approx_distinct registers"
         )
+        # a batch with registers is not empty: no separate isEmpty job
+        if not rows_new and batch.isEmpty():
+            return
         if _regs["v"] is None:
             old = snapshot_read(spark, state_path)
             _regs["v"] = {} if old is None else {
@@ -1277,7 +1272,8 @@ def streaming_approx_distinct(
                     "streaming_approx_distinct state",
                 )
             }
-        regs = _regs["v"]
+        # merge into a copy: the cache follows only committed state
+        regs = dict(_regs["v"])
         for r in rows_new:
             b = r["__bucket"]
             if r["__M"] > regs.get(b, 0):
@@ -1286,6 +1282,7 @@ def streaming_approx_distinct(
         _atomic_state_write(
             spark, rows, "`__bucket` bigint, `__M` int", state_path
         )
+        _regs["v"] = regs
         n_hit = len(rows)
         ssum = sum(2 ** (s - M) for _, M in rows) + (m - n_hit) * (2 ** s)
         est = am2 * float(2 ** s) / float(ssum)
@@ -1297,8 +1294,8 @@ def streaming_approx_distinct(
         # decimal; ln must come from the same libm as approx_distinct_
         # hll's corrected_estimate), so the documented bit-equality to
         # the one-shot batch estimate holds by construction.
-        spark.createDataFrame(
-            [(batch_id, n_hit, est)],
+        local_frame(
+            spark, [(batch_id, n_hit, est)],
             "batch_id long, n_buckets_hit long, __est double",
         ).select(
             "batch_id",
@@ -1403,14 +1400,15 @@ def streaming_heavy_hitters(
     _grid: dict[str, dict[tuple[int, int], int] | None] = {"v": None}
 
     def _ingest(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         spark = batch.sparkSession
         new = _cells(batch.select(id_col, text_col))
         # ≤ depth·width rows (CMS grid): bound ENFORCED, not just argued
         rows_new = bounded_collect(
             new, depth * width, "streaming_heavy_hitters sketch"
         )
+        # a batch with cells is not empty: no separate isEmpty job
+        if not rows_new and batch.isEmpty():
+            return
         if _grid["v"] is None:
             old = snapshot_read(spark, state_path)
             _grid["v"] = {} if old is None else {
@@ -1420,7 +1418,9 @@ def streaming_heavy_hitters(
                     depth * width, "streaming_heavy_hitters state",
                 )
             }
-        grid = _grid["v"]
+        # merge into a copy: adds are not idempotent, so the cache must
+        # not run ahead of the committed grid if the write fails
+        grid = dict(_grid["v"])
         for r in rows_new:
             key = (r["__row"], r["__bucket"])
             grid[key] = grid.get(key, 0) + r["__cell"]
@@ -1429,6 +1429,7 @@ def streaming_heavy_hitters(
             spark, rows, "`__row` int, `__bucket` bigint, `__cell` bigint",
             state_path,
         )
+        _grid["v"] = grid
         total = sum(c for rj, b, c in rows if rj == 0)
         bar = total * int(round(phi * 1_000_000))
         # heavy-cell count: every truly heavy token's cell clears the
@@ -1450,8 +1451,8 @@ def streaming_heavy_hitters(
             )
             for j in range(depth)
         )
-        spark.createDataFrame(
-            [(batch_id, total, n_heavy_cells)],
+        local_frame(
+            spark, [(batch_id, total, n_heavy_cells)],
             "batch_id long, token_total long, n_heavy_cells long",
         ).write.mode("append").parquet(reports_path)
 
@@ -1608,8 +1609,9 @@ def streaming_cluster_prune(
     def _judge(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        cents = batch.sparkSession.createDataFrame(
-            centroids_rows, "__cell int, __cv array<double>, __cn double"
+        cents = local_frame(
+            batch.sparkSession, centroids_rows,
+            "__cell int, __cv array<double>, __cn double",
         )
         out = cluster_prune_frozen(
             batch.select(id_col, vec_col),

@@ -12,9 +12,10 @@ No Spark session required — queries() only builds a dict of callables.
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from bench import short_names  # noqa: E402

@@ -15,6 +15,7 @@ retry converges to the one-shot result bit-exactly.
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -61,13 +62,38 @@ def _canon(df):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
+def _jobs_started(spark, fn):
+    """(fn(), number of Spark jobs it started): the status tracker's
+    job ids for a group set around the call, read after the listener
+    bus has drained."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _segment_union(spark, p):
+    """The per-segment read, each with its own schema inference."""
+    segs = [os.path.join(p, n) for n in state.read_manifest(p)["segments"]]
+    parts = [spark.read.option("basePath", s).parquet(s) for s in segs]
+    out = parts[0]
+    for part in parts[1:]:
+        out = out.unionByName(part)
+    return out
+
+
 # ------------------------------------------------------------- core API
 
 
 def test_replace_and_append_roundtrip(spark, tmp_path):
     p = str(tmp_path / "t")
     state.replace_write(
-        spark.createDataFrame([(1, "a")], "id int, v string"), p, coalesce=1
+        spark.createDataFrame([(1, "a")], "id int, v string"), p, n_files=1
     )
     m1 = state.read_manifest(p)
     assert m1["version"] == 1 and len(m1["segments"]) == 1
@@ -88,26 +114,31 @@ def test_replace_and_append_roundtrip(spark, tmp_path):
 
 def test_partitioned_segments_keep_column_and_prune(spark, tmp_path):
     p = str(tmp_path / "pt")
+    # written as bigint; partition discovery reads small values as int
     df = spark.createDataFrame(
-        [(i, i % 4) for i in range(64)], "id int, __cell int"
+        [(i, i % 4) for i in range(64)], "id int, __cell bigint"
     )
-    state.append_write(df, p, partition_by="__cell")
-    state.append_write(df, p, partition_by="__cell")
-    r = snapshot_read(spark, p)
+    for _ in range(3):
+        state.append_write(df, p, partition_by="__cell")
+    # the manifest's recorded schema: no inference job per segment
+    r, jobs = _jobs_started(spark, lambda: snapshot_read(spark, p))
+    assert jobs == 0
     assert "__cell" in r.columns
-    assert r.count() == 128
+    want = _segment_union(spark, p)
+    assert r.schema == want.schema  # the discovered partition type too
+    assert _canon(r) == _canon(want) and r.count() == 192
     plan = (
         r.filter(F.col("__cell") == 2)
         ._jdf.queryExecution().executedPlan().toString()
     )
     # the partition filter must reach EVERY segment scan
-    assert plan.count("PartitionFilters: [isnotnull(__cell") == 2, plan[:2000]
+    assert plan.count("PartitionFilters: [isnotnull(__cell") == 3, plan[:2000]
 
 
 def test_crash_at_flip_preserves_previous_version(spark, tmp_path, monkeypatch):
     p = str(tmp_path / "t")
     v1 = spark.createDataFrame([(1, "a")], "id int, v string")
-    state.replace_write(v1, p, coalesce=1)
+    state.replace_write(v1, p, n_files=1)
     before = _canon(snapshot_read(spark, p))
     with _crash_at_flip(monkeypatch):
         with pytest.raises(_FlipCrash):
@@ -159,6 +190,75 @@ def test_legacy_directory_adoption(spark, tmp_path):
     # and the loose legacy files were folded + swept, not left to
     # shadow plain directory listings
     assert not [e for e in os.listdir(p2) if e.endswith(".parquet")]
+
+
+def _three_segments(spark, p, partition_by=None):
+    for k in range(3):
+        state.append_write(
+            spark.createDataFrame(
+                [(k * 100 + i, f"v{i}", i % 4) for i in range(20)],
+                "id int, v string, __cell int",
+            ),
+            p, partition_by=partition_by,
+        )
+
+
+def test_manifest_read_starts_no_job(spark, tmp_path):
+    p = str(tmp_path / "t")
+    _three_segments(spark, p)
+    seg = os.path.join(p, state.read_manifest(p)["segments"][0])
+    # the counter sees the schema-inference job a plain read starts
+    assert _jobs_started(spark, lambda: spark.read.parquet(seg))[1] >= 1
+    df, jobs = _jobs_started(spark, lambda: state.manifest_read(spark, p))
+    assert jobs == 0
+    want = _segment_union(spark, p)
+    assert df.schema == want.schema
+    assert _canon(df) == _canon(want) and len(_canon(df)) == 60
+
+
+@pytest.mark.parametrize("partition_by", [None, "__cell"])
+def test_manifest_read_without_recorded_schema(spark, tmp_path, partition_by):
+    """A manifest written before the schema was recorded: the read
+    infers it once and returns the per-segment union's rows."""
+    import json
+
+    p = str(tmp_path / "old")
+    _three_segments(spark, p, partition_by=partition_by)
+    mf = os.path.join(p, state.MANIFEST_NAME)
+    with open(mf) as f:
+        m = json.load(f)
+    del m["schema"]
+    with open(mf, "w") as f:
+        json.dump(m, f)
+    df, jobs = _jobs_started(spark, lambda: state.manifest_read(spark, p))
+    assert jobs <= 1
+    want = _segment_union(spark, p)
+    assert df.schema == want.schema
+    assert _canon(df) == _canon(want) and len(_canon(df)) == 60
+
+
+def test_append_of_another_schema_drops_the_record(spark, tmp_path):
+    p = str(tmp_path / "t")
+    state.append_write(spark.createDataFrame([(1, "a")], "id int, v string"), p)
+    assert "schema" in state.read_manifest(p)
+    state.append_write(spark.createDataFrame([(2, "b")], "id long, v string"), p)
+    assert "schema" not in state.read_manifest(p)
+    state.replace_write(spark.createDataFrame([(3, "c")], "id long, v string"), p)
+    assert "schema" in state.read_manifest(p)
+
+
+def test_local_frame_is_a_jvm_local_relation(spark):
+    from streamtasks_spark.session import local_frame
+
+    df = local_frame(
+        spark, [(0, [1.0, 2.0], 3.0), (1, [4.0], 5.0)],
+        "__cell int, __cv array<double>, __cn double",
+    )
+    plan = df._jdf.queryExecution().analyzed()
+    assert plan.getClass().getSimpleName() == "LocalRelation", plan.toString()
+    assert df.collect() == [(0, [1.0, 2.0], 3.0), (1, [4.0], 5.0)]
+    empty = local_frame(spark, [], "a long")
+    assert empty.collect() == [] and empty.columns == ["a"]
 
 
 # -------------------------------------------- index/sketch state owners
@@ -387,3 +487,58 @@ def test_atomic_state_write_crash_at_flip(spark, tmp_path, monkeypatch):
     )
     # _canon sorts columns by name: (__M, __bucket)
     assert _canon(snapshot_read(spark, p)) == [(6, 0), (9, 1)]
+
+
+class _CaptureForeachBatch:
+    """Stands in for a streaming DataFrame: captures the foreachBatch
+    function a twin registers, so a test can call it on static
+    batches."""
+
+    fn = None
+
+    @property
+    def writeStream(self):
+        return self
+
+    def foreachBatch(self, fn):
+        self.fn = fn
+        return self
+
+    def option(self, *_):
+        return self
+
+    def start(self):
+        return None
+
+
+def test_heavy_hitters_cache_waits_for_the_commit(spark, tmp_path, monkeypatch):
+    """Count-Min adds are not idempotent: when the state flip fails,
+    the twin's cached grid must stay at the committed grid, so a retry
+    of the batch counts it once."""
+    from streamtasks_spark.streaming.stateful import streaming_heavy_hitters
+
+    docs = _docs(spark)
+    b1 = docs.filter(F.col("doc_id") < 250)
+    b2 = docs.filter(F.col("doc_id") >= 250)
+
+    def twin(name):
+        cap = _CaptureForeachBatch()
+        streaming_heavy_hitters(
+            cap, state_path=str(tmp_path / name / "state"),
+            reports_path=str(tmp_path / name / "reports"),
+            checkpoint=str(tmp_path / name / "ckpt"), width=64, depth=3,
+        )
+        return cap.fn, str(tmp_path / name / "state")
+
+    ingest, p = twin("crash")
+    ingest(b1, 0)
+    before = _canon(snapshot_read(spark, p))
+    with _crash_at_flip(monkeypatch):
+        with pytest.raises(_FlipCrash):
+            ingest(b2, 1)
+    assert _canon(snapshot_read(spark, p)) == before
+    ingest(b2, 1)  # the retry, same closure
+    one, p_one = twin("one")
+    one(b1, 0)
+    one(b2, 1)
+    assert _canon(snapshot_read(spark, p)) == _canon(snapshot_read(spark, p_one))

@@ -2247,3 +2247,14 @@ def test_streaming_importance_resample_matches_batch_draw(spark, tmp_path):
     }
     assert len(rows) == len(got)  # no re-draw across the restart
     assert got == expect  # bit-exact: same kept SET, same audit values
+
+
+def test_checkpoints_use_the_filesystem_manager(spark):
+    """Checkpoint I/O goes through Hadoop's FileSystem API: the default
+    FileContext manager forks `readlink`/`chmod` processes per rename
+    and per file on a local filesystem without the native library. The
+    class must exist under the configured name (it moved packages in
+    Spark 4.1; a stale name fails every streaming query)."""
+    name = spark.conf.get("spark.sql.streaming.checkpointFileManagerClass")
+    assert name.endswith(".FileSystemBasedCheckpointFileManager")
+    assert spark._jvm.java.lang.Class.forName(name).getName() == name
