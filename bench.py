@@ -66,6 +66,39 @@ def short_names(names) -> dict[str, str]:
     return out
 
 
+def stdout_line(payload: dict, results: dict, names, limit: int = 1950) -> str:
+    """The one stdout JSON line: ``payload`` plus the per-query map.
+
+    Full names while the line fits 1,900 chars; otherwise the compact
+    map, keyed by the ``short_names()`` aliases of ``names`` (the full
+    ``queries()`` list, so a filtered run uses the same aliases as the
+    full run's ``BENCH_DETAIL.json`` table) with 2-significant-digit
+    seconds. If even that exceeds ``limit``, entries are dropped from
+    the end of ``results`` until it fits, and ``queries_dropped`` says
+    how many: a degraded run still prints its line."""
+    with_queries = json.dumps({**payload, "queries": results})
+    if len(with_queries) <= 1900:
+        return with_queries
+    aliases = short_names(names)
+
+    def fmt(v: float) -> float:
+        return round(v, 2) if v < 1 else round(v, 1)
+
+    compact = [(aliases[n], None if v is None else fmt(v)) for n, v in results.items()]
+    # wall_total stays in BENCH_DETAIL.json only: every stdout char
+    # competes with per-query entries inside the driver's 2,000-char
+    # keep, and calib_md5_sec (boot-health normalizer) wins that seat
+    slim = {k: v for k, v in payload.items() if k != "wall_total"}
+    kept = len(compact)
+    while True:
+        extra = {"queries_dropped": len(compact) - kept} if kept < len(compact) else {}
+        line = json.dumps({**slim, **extra, "queries": dict(compact[:kept])},
+                          separators=(",", ":"))
+        if len(line) <= limit or kept == 0:
+            return line
+        kept -= 1
+
+
 def run_query(fn, spark, sf_dir: str) -> float:
     # drop persisted subplans from prior runs: cache-manager reuse makes
     # timings depend on run order and eviction state, not the query
@@ -213,35 +246,20 @@ def main() -> int:
     # killed BENCH_r03: 102 per-query timings ≈ 2,550 chars, and dropping
     # the map entirely blinded PERF_r11). Inline the full-name map while
     # it fits; otherwise emit a COMPACT map (short_names() aliases,
-    # 2-significant-digit seconds) that always fits at 152 queries.
-    # BENCH_DETAIL.json next to this script always gets the full map,
-    # full precision, and the alias table.
+    # 2-significant-digit seconds) that fits at 152 queries, dropping
+    # entries past that (stdout_line). BENCH_DETAIL.json next to this
+    # script always gets the full map, full precision, and the alias
+    # table.
     detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                "BENCH_DETAIL.json")
-    aliases = short_names(results)
     if not only:  # a filtered run must not clobber the full-run record
         try:
             with open(detail_path, "w") as f:
                 json.dump({**payload, "queries": results,
-                           "stdout_query_aliases": aliases}, f, indent=1)
+                           "stdout_query_aliases": short_names(qs)}, f, indent=1)
         except OSError as e:
             log(f"bench: could not write {detail_path}: {e}")
-    with_queries = json.dumps({**payload, "queries": results})
-    if len(with_queries) <= 1900:
-        line = with_queries
-    else:
-        def fmt(v: float) -> float:
-            return round(v, 2) if v < 1 else round(v, 1)
-
-        compact = {aliases[n]: (None if v is None else fmt(v))
-                   for n, v in results.items()}
-        # wall_total stays in BENCH_DETAIL.json only: every stdout char
-        # competes with per-query entries inside the driver's 2,000-char
-        # keep, and calib_md5_sec (boot-health normalizer) wins that seat
-        slim = {k: v for k, v in payload.items() if k != "wall_total"}
-        line = json.dumps({**slim, "queries": compact},
-                          separators=(",", ":"))
-    assert len(line) <= 1950, f"stdout JSON line {len(line)} chars > 1950"
+    line = stdout_line(payload, results, list(qs))
     print(line, flush=True)
     return 0 if ok and len(ok) == len(results) else 1
 

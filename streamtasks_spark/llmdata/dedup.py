@@ -34,7 +34,9 @@ requirement, built on the same Spark-first vocabulary.
 
 from __future__ import annotations
 
+import os
 import random
+import re
 import threading
 from collections.abc import Iterator, Sequence
 from contextlib import contextmanager
@@ -2143,6 +2145,17 @@ def oracle_dedup_recall_sql(
 
 # ---------------------------------------------------- incremental index
 
+def _local_fs_path(path: str) -> str | None:
+    """The local filesystem path ``path`` names, or None when it has
+    another URI scheme or glob characters (Hadoop expands those)."""
+    if any(c in path for c in "*?[{"):
+        return None
+    m = re.match(r"([A-Za-z][A-Za-z0-9+.-]*):", path)
+    if m is None:
+        return path
+    return path[len("file:"):] if m.group(1).lower() == "file" else None
+
+
 def snapshot_read(spark, path: str, base_path: str | None = None):
     """Read a parquet dataset as a SNAPSHOT. Two layouts:
 
@@ -2167,11 +2180,17 @@ def snapshot_read(spark, path: str, base_path: str | None = None):
     ``base_path`` preserves partition columns when the dataset is
     directory-partitioned.
 
-    Returns None when the dataset doesn't exist yet."""
+    Returns None when the dataset doesn't exist yet. A missing local
+    path (no scheme, or ``file:``, and no glob characters) returns
+    before any Spark read: the failed resolution would log a ~50-line
+    FileNotFoundException WARN on every twin's first batch."""
     from streamtasks_spark.core.state import manifest_read, read_manifest
 
     if read_manifest(path) is not None:
         return manifest_read(spark, path)
+    local = _local_fs_path(path)
+    if local is not None and not os.path.exists(local):
+        return None
     try:
         reader = spark.read
         if base_path:

@@ -10,7 +10,10 @@ from __future__ import annotations
 import os
 from collections.abc import Mapping
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+from streamtasks_spark import cds
 
 
 # InferFiltersFromGenerate rewrites explode(arr) into
@@ -76,8 +79,24 @@ def get_spark(
         AQE coalesces, so a high initial number is safe.
       - streaming checkpoints written through Hadoop's FileSystem API
         (see ``_CHECKPOINT_FILE_MANAGER``)
+
+    The call that starts this process's JVM starts it from a dynamic
+    AppCDS class archive (:mod:`streamtasks_spark.cds`), which about
+    halves the JVM's start-up. The first launch for a JDK, Spark jar
+    set and driver-memory setting records the archive when its JVM
+    exits; later launches map it. The archive options are prepended to
+    any ``spark.driver.extraJavaOptions`` in ``extra_conf``, so the
+    caller's options still apply and win where they clash. The launch
+    runs with ``SPARK_CONF_DIR`` pointed at an empty directory when the
+    active one holds only ``*.template`` files, and the caller's
+    environment is restored afterwards; a conf directory with a real
+    file starts without the archive and logs why.
+    ``SPARK_GRAFT_CDS_DIR`` moves the archive directory, and an empty
+    value turns the archive off.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    driver_memory = (extra_conf or {}).get(
+        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
     builder = (
@@ -107,7 +126,7 @@ def get_spark(
         # task launches for every probe, even the selective ones).
         .config("spark.sql.limit.scaleUpFactor", "32")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory)
         # timestamps in testdata are timezone-less; read them as-is
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
@@ -117,10 +136,43 @@ def get_spark(
         .config("spark.sql.optimizer.excludedRules", _EXCLUDED_OPT_RULES)
         .config("spark.sql.streaming.checkpointFileManagerClass", _CHECKPOINT_FILE_MANAGER)
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    launch = None
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        launch = cds.prepare(driver_memory)
+    if launch is not None:
+        conf["spark.driver.extraJavaOptions"] = " ".join(
+            filter(None, [launch.java_options, conf.get("spark.driver.extraJavaOptions")]))
+    for k, v in conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    if launch is None:
+        spark = builder.getOrCreate()
+    else:
+        spark = _launch(builder, launch, driver_memory)
     spark.sparkContext.setLogLevel("WARN")
+    return spark
+
+
+def _launch(builder, launch: cds.Launch, driver_memory: str) -> SparkSession:
+    """Start the JVM with ``SPARK_CONF_DIR`` pointed at the archive's
+    empty conf directory, then restore the caller's environment."""
+    saved = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = launch.conf_dir
+    try:
+        spark = builder.getOrCreate()
+    except BaseException:
+        if launch.writer:
+            cds.abandon(launch)
+        raise
+    finally:
+        if saved is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = saved
+    if launch.writer:
+        jvm = spark._jvm
+        cds.note_jvm(launch, int(jvm.ProcessHandle.current().pid()),
+                     jvm.System.getProperty("java.class.path"), driver_memory)
     return spark
 
 

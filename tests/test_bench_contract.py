@@ -18,7 +18,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from bench import short_names  # noqa: E402
+from bench import short_names, stdout_line  # noqa: E402
 
 
 def _names():
@@ -63,3 +63,49 @@ def test_full_name_map_used_for_small_runs():
                "n_queries": 3, "n_failed": 0}
     line = json.dumps({**payload, "queries": {"q1_pricing_summary": 1.23}})
     assert len(line) <= 1900
+
+
+def _pessimistic_payload(n):
+    return {"metric": "sum_of_per_query_best_wall_seconds_noop_sink",
+            "value": 99999.9999, "unit": "sec", "sf": 0.1, "n_queries": n,
+            "n_failed": 0, "wall_total": 9999.99, "calib_md5_sec": 0.6786}
+
+
+def test_stdout_line_is_total_and_drops_deterministically():
+    # 400 queries cannot fit even as aliases: the line still prints,
+    # stays in the window, and says how many entries it dropped, from
+    # the end of the results order
+    names = [f"query_number_{i}_{'x' * (i % 7)}" for i in range(400)]
+    results = {n: 99.9 for n in names}
+    line = stdout_line(_pessimistic_payload(len(names)), results, names)
+    assert line == stdout_line(_pessimistic_payload(len(names)), dict(results), list(names))
+    assert len(line) <= 1950
+    rec = json.loads(line)
+    kept = list(rec["queries"])
+    assert rec["queries_dropped"] == len(names) - len(kept) > 0
+    aliases = short_names(names)
+    assert kept == [aliases[n] for n in names[:len(kept)]]
+    # one more entry would not have fitted
+    more = dict(rec, queries_dropped=rec["queries_dropped"] - 1,
+                queries={aliases[n]: 99.9 for n in names[:len(kept) + 1]})
+    assert len(json.dumps(more, separators=(",", ":"))) > 1950
+
+
+def test_stdout_line_fits_without_dropping_at_full_suite():
+    names = _names()
+    rec = json.loads(stdout_line(_pessimistic_payload(len(names)),
+                                 {n: 99.9 for n in names}, names))
+    assert "queries_dropped" not in rec
+    assert len(rec["queries"]) == len(names)
+
+
+def test_filtered_run_uses_full_list_aliases():
+    # a filtered run long enough to go compact keys its entries with
+    # the full queries() aliases, the ones BENCH_DETAIL.json records
+    names = _names()
+    subset = names[len(names) // 3:]
+    line = stdout_line(_pessimistic_payload(len(subset)), {n: 12.3 for n in subset}, names)
+    rec = json.loads(line)
+    full = short_names(names)
+    assert list(rec["queries"]) == [full[n] for n in subset]
+    assert any(short_names(subset)[n] != full[n] for n in subset)

@@ -1305,6 +1305,34 @@ def test_snapshot_read_missing_vs_corrupt(spark, tmp_path):
         snapshot_read(spark, str(tmp_path / "corrupt"))
 
 
+def test_snapshot_read_missing_local_path_runs_no_spark_read(tmp_path):
+    """A table path that does not exist yet (every sketch/index twin's
+    first batch) returns None before any Spark read, so Spark logs no
+    FileNotFoundException; an existing path still reads through Spark
+    and its errors propagate."""
+    import os
+
+    import pytest
+
+    from streamtasks_spark.llmdata.dedup import snapshot_read
+
+    class NoSpark:
+        @property
+        def read(self):
+            raise RuntimeError("spark.read used")
+
+    for p in (str(tmp_path / "nope"), f"file:{tmp_path}/nope",
+              f"file://{tmp_path}/nope"):
+        assert snapshot_read(NoSpark(), p) is None
+    os.makedirs(tmp_path / "there")
+    with pytest.raises(RuntimeError, match="spark.read used"):
+        snapshot_read(NoSpark(), str(tmp_path / "there"))
+    # another scheme or a glob is Hadoop's to resolve
+    for p in ("hdfs://nn/none/such", f"{tmp_path}/nope*"):
+        with pytest.raises(RuntimeError, match="spark.read used"):
+            snapshot_read(NoSpark(), p)
+
+
 def test_ivf_index_default_seed_matches_ivf_topk_filter(spark, tmp_path):
     """The first-ingest default codebook uses the identical
     id_col < n_cells filter as ivf_topk's default seeding — not the
