@@ -9,14 +9,19 @@ renames. The protocol:
   table path. A writer never modifies a committed segment — each
   ingest/rewrite creates a new one.
 - A single small pointer file ``_MANIFEST.json`` names the live
-  segment set (``{"version": N, "segments": [...], "schema": {...}}``).
+  segment set (``{"version": N, "segments": [...], "schema": {...},
+  "fence": {...}}``).
   Readers resolve the table THROUGH the manifest; uncommitted segments
   are invisible. ``schema`` is the StructType JSON of the segments'
   parquet files (:func:`file_schema`), recorded at commit whenever
   every live segment is known to share it, so a read resolves without
   a schema-inference Spark job per segment. It is absent on manifests
   written before it was recorded and after appending to adopted
-  legacy files; readers then infer it once.
+  legacy files; readers then infer it once. ``fence`` is the
+  ``{"query": id, "batch": n}`` of the streaming micro-batch whose
+  state this version is, when a streaming twin commits it: the batch
+  and its state become durable in the same flip, so a replay of that
+  batch can tell it is already in.
 - Commit = write the new manifest to a sibling temp file, fsync, then
   one atomic single-file replace (:func:`os.replace`). A crash at ANY
   point before the flip leaves the previous manifest — and therefore
@@ -73,8 +78,8 @@ def _manifest_file(path: str) -> str:
 
 def read_manifest(path: str) -> dict | None:
     """The live manifest (``{"version": int, "segments": [str]}``, plus
-    ``"schema"`` when recorded), or None when the table has never
-    committed through the protocol."""
+    ``"schema"`` and ``"fence"`` when recorded), or None when the table
+    has never committed through the protocol."""
     try:
         with open(_manifest_file(path)) as f:
             return json.load(f)
@@ -125,11 +130,12 @@ def file_schema(df, partition_by: str | None = None):
 
 
 def commit_segments(path: str, segments: list[str], *, gc: bool = True,
-                    schema=None) -> None:
+                    schema=None, fence: dict | None = None) -> None:
     """Atomically point the manifest at exactly ``segments`` (REPLACE
     semantics). Data must already be fully written; ``schema`` (a
     StructType, see :func:`file_schema`) is recorded when every
-    segment in the set has it. On success, sweeps segment directories
+    segment in the set has it, ``fence`` (``{"query": id, "batch": n}``)
+    in the same flip. On success, sweeps segment directories
     the new manifest no longer references — superseded versions and
     crash orphans alike (single-owner contract)."""
     prev = read_manifest(path)
@@ -137,6 +143,8 @@ def commit_segments(path: str, segments: list[str], *, gc: bool = True,
     m = {"version": version, "segments": list(segments)}
     if schema is not None:
         m["schema"] = schema.jsonValue()
+    if fence is not None:
+        m["fence"] = fence
     os.makedirs(path, exist_ok=True)
     tmp = os.path.join(path, f"{_TMP_PREFIX}{uuid.uuid4().hex[:8]}")
     with open(tmp, "w") as f:
@@ -262,7 +270,8 @@ def adopt_legacy(path: str) -> list[str]:
 
 
 def replace_write(df, path: str, *, n_files: int | None = None,
-                  partition_by: str | None = None) -> None:
+                  partition_by: str | None = None,
+                  fence: dict | None = None) -> None:
     """Write ``df`` as the table's new (sole) version: land a segment,
     flip the pointer, sweep the old version. The crash-safe successor
     of the ``write.mode('overwrite')``-then-rename-swap pattern — a
@@ -272,7 +281,8 @@ def replace_write(df, path: str, *, n_files: int | None = None,
     row-order-insensitive readers, which every reader of these tables
     is. It is not ``coalesce``: that would fold a pickled local
     relation's slices into one task evaluating them through the Python
-    worker one after another."""
+    worker one after another. ``fence`` is recorded in the flip (see
+    :func:`commit_segments`)."""
     name, seg = new_segment(path)
     w = df.repartition(n_files) if n_files else df
     writer = w.write
@@ -284,7 +294,9 @@ def replace_write(df, path: str, *, n_files: int | None = None,
         # them into an (unreferenced) segment so the flip's GC sweeps
         # them instead of leaving them to shadow plain directory reads
         adopt_legacy(path)
-    commit_segments(path, [name], schema=file_schema(df, partition_by))
+    commit_segments(
+        path, [name], schema=file_schema(df, partition_by), fence=fence
+    )
 
 
 def append_write(df, path: str, *, partition_by: str | None = None) -> str:

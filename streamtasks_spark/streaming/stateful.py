@@ -22,10 +22,45 @@ drops it; so do we).
 
 State is per group key — at 100 TB the state store shards by key across
 executors exactly like the batch shuffles partition by key.
+
+The foreachBatch twins (:func:`streaming_dedup_minhash` through
+:func:`streaming_ann_ingest`) keep their state outside the checkpoint:
+in a persistent index, in a sketch table, or nowhere (frozen-model
+twins). All of them start through :func:`_start_twin`, which owns
+their output layout and replay contract:
+
+- Batch *n*'s output is the directory ``<out>/batch_id=<n>/``, rewritten
+  whole when the batch replays. ``spark.read.parquet(out)`` returns the
+  union with a ``batch_id`` column discovered from the directory names
+  (type int); no plan carries the batch id as a literal, so a batch
+  reuses the previous batch's generated code.
+- One query per output path: the query's persistent id (the checkpoint's
+  ``metadata``, ``StreamingQuery.id``) is recorded in
+  ``<out>/_QUERY_ID`` on its first batch, and a batch of any other query
+  fails naming both ids before it writes anything. A fresh checkpoint
+  therefore needs a fresh output path.
+- Frozen-model twins are pure functions of the batch: a replay rewrites
+  the same rows, so the output is exactly-once per checkpoint.
+- Sketch twins (:func:`streaming_approx_distinct`,
+  :func:`streaming_heavy_hitters`) write the report first, then commit
+  the merged state with the batch's ``(query, batch)`` fence in the same
+  manifest flip, and skip a batch their query already fenced: state and
+  reports are exactly-once per checkpoint.
+- Index twins commit their index inside ``ingest()``, before the output
+  exists. The output is still one copy per batch, but a crash between
+  the index commit and the checkpoint commit ingests the batch twice;
+  each one's docstring says what that does.
+- No twin runs a per-batch ``isEmpty`` job: a stateless upstream plan
+  never sends an empty batch, and on an empty one (after a stateful
+  upstream's no-data batch) each step changes no table's rows.
 """
 
 from __future__ import annotations
 
+import json
+import operator
+import os
+import uuid
 from collections.abc import Iterator, Sequence
 
 import pandas as pd
@@ -44,7 +79,8 @@ def _schema_of(df: DataFrame, cols: Sequence[str]) -> StructType:
     return StructType([df.schema[c] for c in cols])
 
 
-def _atomic_state_write(spark, rows, schema: str, path: str) -> None:
+def _atomic_state_write(spark, rows, schema: str, path: str, *,
+                        fence: dict | None = None) -> None:
     """Replace a (small) persistent state table atomically through the
     versioned-manifest commit protocol
     (:func:`streamtasks_spark.core.state.replace_write`): the rewrite
@@ -64,10 +100,12 @@ def _atomic_state_write(spark, rows, schema: str, path: str) -> None:
     ``rows`` is sketch-bounded, so it is written from a JVM local
     relation (:func:`~streamtasks_spark.session.local_frame`) as one
     file by one task: coalescing a local relation runs no Python worker
-    and starts no shuffle."""
+    and starts no shuffle. ``fence`` is recorded in the same flip."""
     from streamtasks_spark.core.state import replace_write
 
-    replace_write(local_frame(spark, rows, schema).coalesce(1), path)
+    replace_write(
+        local_frame(spark, rows, schema).coalesce(1), path, fence=fence
+    )
 
 
 def streaming_last_value_join(
@@ -782,6 +820,126 @@ def streaming_interval_join(
     return out
 
 
+def _claim(checkpoint: str, out_path: str) -> str:
+    """The persistent id of the query on ``checkpoint`` (its
+    ``metadata`` file, written before batch 0; ``StreamingQuery.id``),
+    made the one query that writes ``out_path``: recorded in
+    ``_QUERY_ID`` on its first batch (Spark's listing skips ``_``
+    names), and any other query is refused before it writes."""
+    with open(os.path.join(checkpoint, "metadata")) as f:
+        qid = json.load(f)["id"]
+    owner_file = os.path.join(out_path, "_QUERY_ID")
+    try:
+        with open(owner_file) as f:
+            owner = f.read()
+    except FileNotFoundError:
+        os.makedirs(out_path, exist_ok=True)
+        tmp = f"{owner_file}.{uuid.uuid4().hex[:8]}"
+        with open(tmp, "w") as f:
+            f.write(qid)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, owner_file)
+        owner = qid
+    if owner != qid:
+        raise ValueError(
+            f"{out_path} belongs to streaming query {owner}; query {qid} "
+            "may not write it (one query per output path: give this "
+            "checkpoint its own output path)"
+        )
+    return qid
+
+
+def _start_twin(stream: DataFrame, checkpoint: str, out_path: str, step):
+    """Start ``stream`` as the foreachBatch query of a twin below.
+    ``step(batch, fence)`` is the twin's per-batch work, with ``fence``
+    its ``{"query": id, "batch": n}``. It returns None (nothing to
+    write), the batch's output DataFrame, or ``(output, commit)``, where
+    ``commit()`` runs once the output is durable. Batch ``n``'s output
+    replaces ``<out_path>/batch_id=<n>/``; see the module docstring for
+    the replay contract this gives."""
+
+    def run(batch: DataFrame, batch_id: int) -> None:
+        qid = _claim(checkpoint, out_path)
+        res = step(batch, {"query": qid, "batch": batch_id})
+        if res is None:
+            return
+        out, commit = res if isinstance(res, tuple) else (res, None)
+        out.write.mode("overwrite").parquet(
+            os.path.join(out_path, f"batch_id={batch_id}")
+        )
+        out.unpersist()
+        if commit is not None:
+            commit()
+
+    return (
+        stream.writeStream.foreachBatch(run)
+        .option("checkpointLocation", checkpoint)
+        .start()
+    )
+
+
+def _sketch_step(state_path: str, schema: str, cells, bound: int, merge,
+                 report, what: str):
+    """The step of a sketch twin over the mergeable table at
+    ``state_path`` (``schema``: key columns, then one value column).
+    ``cells(batch)`` is the batch's sketch in that shape, at most
+    ``bound`` rows; ``merge(old, new)`` folds a value into the state
+    (``max`` for registers, ``operator.add`` for counters); and
+    ``report(spark, rows)`` builds the batch's one-row report from the
+    merged rows.
+
+    The merged state is committed after the report is written, with
+    the batch's fence in the same manifest flip, and a batch this query
+    already fenced is skipped whole: so a replay neither merges a batch
+    twice nor adds a report. The merged table is sketch-sized, so it is
+    cached on the driver; the cache is merged into a copy, published
+    only after the flip, and reloaded whenever the manifest version is
+    not the one it mirrors."""
+    from streamtasks_spark.core.state import read_manifest
+    from streamtasks_spark.llmdata.dedup import bounded_collect, snapshot_read
+
+    cache: dict = {"version": None, "rows": None}
+
+    def step(batch: DataFrame, fence: dict):
+        m = read_manifest(state_path)
+        done = (m or {}).get("fence") or {}
+        if done.get("query") == fence["query"] and (
+            done["batch"] >= fence["batch"]
+        ):
+            return None  # this query already committed the batch
+        spark = batch.sparkSession
+        new = cells(batch)
+        # the bound is enforced, not just argued
+        new_rows = bounded_collect(new, bound, f"{what} batch")
+        # a batch with cells is not empty: isEmpty runs only without
+        if not new_rows and batch.isEmpty():
+            return None
+        version = m["version"] if m else None
+        if cache["version"] != version or cache["rows"] is None:
+            old = snapshot_read(spark, state_path)
+            cache["rows"] = {} if old is None else {
+                tuple(r[:-1]): r[-1] for r in bounded_collect(
+                    old.select(*new.columns), bound, f"{what} state"
+                )
+            }
+            cache["version"] = version
+        merged = dict(cache["rows"])
+        for r in new_rows:
+            k = tuple(r[:-1])
+            merged[k] = merge(merged[k], r[-1]) if k in merged else r[-1]
+        rows = [(*k, v) for k, v in sorted(merged.items())]
+
+        def commit() -> None:
+            _atomic_state_write(spark, rows, schema, state_path, fence=fence)
+            cache["version"] = read_manifest(state_path)["version"]
+            cache["rows"] = merged
+
+        return report(spark, rows), commit
+
+    return step
+
+
 def streaming_dedup_minhash(
     docs: DataFrame,
     *,
@@ -796,8 +954,8 @@ def streaming_dedup_minhash(
 ):
     """Streaming near-dedup: continuously ingest a document stream
     against a persistent :class:`~streamtasks_spark.llmdata.dedup.
-    MinHashIndex`, appending each micro-batch's verified near-dup pairs
-    to ``pairs_path``.
+    MinHashIndex`, writing each micro-batch's verified near-dup pairs
+    under ``pairs_path``.
 
     Near-dedup is join-against-all-history — outside the watermark
     model that serves :func:`streaming_dedup_exact` (whose state is one
@@ -807,17 +965,14 @@ def streaming_dedup_minhash(
     participates as one band-keyed join against the postings table, and
     the union of all emitted pair deltas equals the one-shot batch
     ``dedup_minhash`` over everything ingested (the property
-    MinHashIndex pins in its batch-equivalence test; exactly-once per
-    pair follows from each pair being emitted by the first micro-batch
-    that contains both ends... i.e. the one where the later doc
-    arrives).
+    MinHashIndex pins in its batch-equivalence test; each pair is
+    emitted by the micro-batch where its later doc arrives).
 
-    Restart semantics: the checkpoint replays an in-flight micro-batch,
-    and the index append is not transactional with the checkpoint — a
-    crash between append and commit can re-append one batch's sketches.
-    Idempotent upstream ids make that harmless for pair OUTPUT
-    correctness only if consumers dedup pairs_path on (doc_a, doc_b);
-    documented here rather than hidden.
+    Replay: the index commits inside ``ingest``, before the pairs are
+    written. A crash between that commit and the checkpoint commit
+    re-ingests the batch: its pairs directory is still rewritten once,
+    but the index then holds the batch's sketches twice, and pairs
+    touching its documents can repeat, in that batch and later ones.
 
     Returns the started StreamingQuery.
     """
@@ -831,20 +986,9 @@ def streaming_dedup_minhash(
         threshold=threshold,
         max_bucket=max_bucket,
     )
-
-    def _ingest(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        pairs = index.ingest(batch.select(id_col, text_col))
-        pairs.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(pairs_path)
-        pairs.unpersist()
-
-    return (
-        docs.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return _start_twin(
+        docs, checkpoint, pairs_path,
+        lambda batch, _: index.ingest(batch.select(id_col, text_col)),
     )
 
 
@@ -861,8 +1005,8 @@ def streaming_bloom_dedup(
 ):
     """Streaming bloom membership pre-filter: continuously ingest a
     document stream against a persistent
-    :class:`~streamtasks_spark.llmdata.dedup.BloomIndex`, appending
-    each micro-batch's flags (``id, n_bits_hit, maybe_dup``) to
+    :class:`~streamtasks_spark.llmdata.dedup.BloomIndex`, writing
+    each micro-batch's flags (``id, n_bits_hit, maybe_dup``) under
     ``flags_path`` — the cheap always-on first gate of a crawl-ingest
     topology, with :func:`streaming_dedup_minhash` as the exact
     near-dup stage behind it.
@@ -872,10 +1016,11 @@ def streaming_bloom_dedup(
     union property: the bit set is a pure set union over keys, so each
     batch's flags equal ``bloom_dedup(batch, all prior batches)``
     bit-exactly regardless of batching (BloomIndex pins this).
-    Restart semantics: an in-flight batch's flags append replays and
-    its bits may re-append — bit re-appends are IDEMPOTENT by the set
-    union (probe re-distincts), so only flags_path needs consumer-side
-    dedup on the id, the standard foreachBatch contract.
+
+    Replay: the bits commit inside ``ingest``, before the flags are
+    written. A crash between that commit and the checkpoint commit
+    re-ingests the batch: the bit set is unchanged (set union), but the
+    rewritten flags probe the batch's own bits.
 
     Returns the started StreamingQuery."""
     from streamtasks_spark.llmdata.dedup import BloomIndex
@@ -887,20 +1032,9 @@ def streaming_bloom_dedup(
         m_bits=m_bits,
         n_hashes=n_hashes,
     )
-
-    def _ingest(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        flags = index.ingest(batch.select(id_col, text_col))
-        flags.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(flags_path)
-        flags.unpersist()
-
-    return (
-        docs.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return _start_twin(
+        docs, checkpoint, flags_path,
+        lambda batch, _: index.ingest(batch.select(id_col, text_col)),
     )
 
 
@@ -919,8 +1053,8 @@ def streaming_semantic_dedup(
 ):
     """Streaming semantic dedup: continuously ingest an embedding
     stream against a persistent :class:`~streamtasks_spark.llmdata.
-    similarity.SemDedupIndex`, appending each micro-batch's keep/drop
-    verdicts to ``verdicts_path`` — the embedding-space twin of
+    similarity.SemDedupIndex`, writing each micro-batch's keep/drop
+    verdicts under ``verdicts_path`` — the embedding-space twin of
     :func:`streaming_dedup_minhash`, and the same reasoning for the
     ``foreachBatch`` shape: domination-against-all-history is outside
     the watermark model, so history participates as the index's
@@ -937,14 +1071,14 @@ def streaming_semantic_dedup(
     verdict row (each id is verdict-ed by the micro-batch that carries
     it).
 
-    Restart semantics match streaming_dedup_minhash: the checkpoint
-    replays an in-flight micro-batch, and the index append is not
-    transactional with the checkpoint — a crash between append and
-    commit can re-append one batch's survivors; consumers that need
-    exact-once verdicts dedup verdicts_path on the id. Documented, not
-    hidden.
+    Replay: the kept table commits inside ``ingest``, before the
+    verdicts are written. A crash between that commit and the
+    checkpoint commit re-ingests the batch: its verdicts directory is
+    still rewritten once, but the kept table then holds the batch's
+    survivors twice.
 
     Returns the started StreamingQuery."""
+    from streamtasks_spark.core.state import read_manifest
     from streamtasks_spark.llmdata.similarity import SemDedupIndex
 
     index = SemDedupIndex(
@@ -957,20 +1091,13 @@ def streaming_semantic_dedup(
         threshold=threshold,
     )
 
-    def _ingest(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        verdict = index.ingest(batch.select(id_col, vec_col))
-        verdict.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(verdicts_path)
-        verdict.unpersist()
+    def step(batch: DataFrame, _):
+        # an empty batch cannot train the codebook: checked until it can
+        if read_manifest(index.codebook_path) is None and batch.isEmpty():
+            return None
+        return index.ingest(batch.select(id_col, vec_col))
 
-    return (
-        vectors.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    return _start_twin(vectors, checkpoint, verdicts_path, step)
 
 
 def streaming_unigram_lm(
@@ -995,31 +1122,19 @@ def streaming_unigram_lm(
     independent of arrival batching or order.
 
     That purity is why ``foreachBatch`` needs no index or state here
-    (unlike streaming_dedup_minhash): the union of per-batch score
-    appends equals the batch :func:`unigram_lm_score` over everything
-    ingested, bit-exactly, one row per arriving document. Restart
-    replays at most one in-flight micro-batch append; consumers
-    needing exactly-once dedup ``scores_path`` on the id — same
-    documented contract as the other foreachBatch twins.
+    (unlike streaming_dedup_minhash): the union of per-batch scores
+    equals the batch :func:`unigram_lm_score` over everything
+    ingested, bit-exactly, one row per arriving document.
 
     Returns the started StreamingQuery."""
     from streamtasks_spark.llmdata.quality import unigram_lm_score
 
-    def _score(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        out = unigram_lm_score(
+    return _start_twin(
+        docs, checkpoint, scores_path,
+        lambda batch, _: unigram_lm_score(
             batch.select(id_col, text_col), vocab, total,
             id_col=id_col, text_col=text_col,
-        )
-        out.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(scores_path)
-
-    return (
-        docs.writeStream.foreachBatch(_score)
-        .option("checkpointLocation", checkpoint)
-        .start()
+        ),
     )
 
 
@@ -1039,27 +1154,17 @@ def streaming_ngram_lm(
     bigram rung of the CCNet-style ladder under the exact
     frozen-model/foreachBatch contract of :func:`streaming_unigram_lm`
     (a doc's score is a pure function of its own text and the model,
-    so per-batch appends union to the batch result bit-exactly; no
-    state, restart replays at most one in-flight append).
+    so per-batch outputs union to the batch result bit-exactly).
 
     Returns the started StreamingQuery."""
     from streamtasks_spark.llmdata.quality import ngram_lm_score
 
-    def _score(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        out = ngram_lm_score(
+    return _start_twin(
+        docs, checkpoint, scores_path,
+        lambda batch, _: ngram_lm_score(
             batch.select(id_col, text_col), vocab, total,
             id_col=id_col, text_col=text_col, n=n,
-        )
-        out.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(scores_path)
-
-    return (
-        docs.writeStream.foreachBatch(_score)
-        .option("checkpointLocation", checkpoint)
-        .start()
+        ),
     )
 
 
@@ -1079,32 +1184,23 @@ def streaming_bm25_filter(
     """Streaming topical-crawl filter: score each arriving document's
     BM25 relevance to a fixed ``terms`` bag under FROZEN corpus stats
     from :func:`~streamtasks_spark.llmdata.textstats.bm25_stats`, and
-    append documents scoring ≥ ``threshold`` to ``hits_path`` — the
+    write documents scoring ≥ ``threshold`` under ``hits_path`` — the
     targeted-crawl curation shape (keep the pages relevant to a topic
     bag as they arrive). Same frozen-model/foreachBatch contract as
     :func:`streaming_unigram_lm`: a doc's score is a pure function of
-    (text, terms, stats), so per-batch appends union to the batch
+    (text, terms, stats), so per-batch outputs union to the batch
     :func:`bm25_score_frozen` result filtered at the same threshold,
     bit-exactly, independent of batching.
 
     Returns the started StreamingQuery."""
     from streamtasks_spark.llmdata.textstats import bm25_score_frozen
 
-    def _score(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        out = bm25_score_frozen(
+    return _start_twin(
+        docs, checkpoint, hits_path,
+        lambda batch, _: bm25_score_frozen(
             batch.select(id_col, text_col), stats, terms=terms,
             id_col=id_col, text_col=text_col, k1=k1, b=b,
-        ).filter(F.col("bm25") >= F.lit(threshold))
-        out.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(hits_path)
-
-    return (
-        docs.writeStream.foreachBatch(_score)
-        .option("checkpointLocation", checkpoint)
-        .start()
+        ).filter(F.col("bm25") >= F.lit(threshold)),
     )
 
 
@@ -1122,37 +1218,25 @@ def streaming_bpe_count(
     :func:`~streamtasks_spark.llmdata.bpe.bpe_train` result, collected
     once at stream start): each arriving document is encoded with
     :func:`~streamtasks_spark.llmdata.bpe.bpe_encode_frozen` and its
-    ``(id, n_tokens, n_bpe_tokens, batch_id)`` row appended to
-    ``out_path`` — the live half of token-budget accounting while a
+    ``(id, n_bpe_tokens)`` row written under ``out_path`` — the live
+    half of token-budget accounting while a
     crawl streams in (what does this batch cost in training tokens
     under OUR tokenizer, not a whitespace estimate). Same
     frozen-model/foreachBatch contract as :func:`streaming_bm25_filter`:
     a doc's encoding is a pure function of (text, merges), so per-batch
-    appends union to the one-shot batch encode bit-exactly,
+    outputs union to the one-shot batch encode bit-exactly,
     independent of arrival batching and order.
 
     Returns the started StreamingQuery."""
     from streamtasks_spark.llmdata.bpe import bpe_encode_frozen
 
     rows = sorted(tuple(m[:3]) for m in merge_rows)
-
-    def _count(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        enc = bpe_encode_frozen(
+    return _start_twin(
+        docs, checkpoint, out_path,
+        lambda batch, _: bpe_encode_frozen(
             batch.select(id_col, text_col), rows,
             id_col=id_col, text_col=text_col,
-        )
-        enc.select(
-            id_col,
-            "n_bpe_tokens",
-            F.lit(batch_id).cast("long").alias("batch_id"),
-        ).write.mode("append").parquet(out_path)
-
-    return (
-        docs.writeStream.foreachBatch(_count)
-        .option("checkpointLocation", checkpoint)
-        .start()
+        ).select(id_col, "n_bpe_tokens"),
     )
 
 
@@ -1171,32 +1255,21 @@ def streaming_approx_distinct(
     HyperLogLog register file — the MERGEABILITY that makes sketches
     the streaming-native summary: per micro-batch, compute the batch's
     registers and max-merge them into the ``state_path`` table (≤ 2^p
-    rows however much history accretes), then append one
-    (batch_id, n_buckets_hit, raw_estimate, corrected_estimate) row to
+    rows however much history accretes), then write one
+    (n_buckets_hit, raw_estimate, corrected_estimate) row under
     ``estimates_path``.
     After any batch decomposition the merged registers — and therefore
     the estimate — equal the one-shot
     :func:`~streamtasks_spark.llmdata.textstats.approx_distinct_hll`
     register state over everything ingested, EXACTLY: max-merge is
-    associative, commutative, and idempotent, which also makes a
-    checkpoint replay of an in-flight batch harmless to the registers
-    (the classic sketch replay-safety argument; the estimates append
-    can duplicate one batch row — consumers dedup on batch_id, the
-    standard foreachBatch contract). The state rewrite is ATOMIC
-    (:func:`_atomic_state_write`: versioned segment + one-file manifest
-    flip, never ``mode('overwrite')``'s delete-then-write), so a crash
-    mid-rewrite cannot lose the accreted registers; it is still
-    last-writer-wins,
-    not transactional with the checkpoint — run one ingest owner, the
-    MinHashIndex discipline.
+    associative, commutative, and idempotent. The state rewrite is
+    ATOMIC (:func:`_atomic_state_write`: versioned segment + one-file
+    manifest flip, never ``mode('overwrite')``'s delete-then-write) and
+    fenced by the batch (:func:`_sketch_step`); run one ingest owner
+    per state table, the MinHashIndex discipline.
 
     Returns the started StreamingQuery."""
-    from streamtasks_spark.llmdata.dedup import (
-        bounded_collect,
-        snapshot_read,
-        spread,
-        tokens_expr,
-    )
+    from streamtasks_spark.llmdata.dedup import spread
     from streamtasks_spark.llmdata.textstats import (
         _hll_corrected_expr,
         _hll_units_expr,
@@ -1214,9 +1287,9 @@ def streaming_approx_distinct(
     am2 = alpha * m * m
     h = "cast(conv(substring(md5(__t), 1, 12), 16, 10) as bigint)"
 
-    def _registers(batch: DataFrame) -> DataFrame:
+    def registers(batch: DataFrame) -> DataFrame:
         return (
-            spread(batch, id_col)
+            spread(batch.select(id_col, text_col), id_col)
             .select(
                 F.explode(F.expr(_hll_units_expr(text_col, n, "spark")))
                 .alias("__t")
@@ -1237,52 +1310,7 @@ def streaming_approx_distinct(
             .agg(F.max("__M").alias("__M"))
         )
 
-    # Driver-side register cache (r12 — VERDICT r11 item 3): the merged
-    # register file is sketch-BOUNDED (≤ 2^p rows) and the estimate was
-    # ALREADY computed from its collected rows, so merging old∪new in a
-    # distributed union+groupBy only to collect the result paid one
-    # parquet scan + shuffle of the state per micro-batch for nothing.
-    # Now: collect the BATCH's registers (distributed — the batch is
-    # the unbounded side), max-merge into this dict in O(m), rewrite
-    # the state file atomically as before. Bit-identical state and
-    # estimates (integer max/sum are order-free; the division is the
-    # same one correctly-rounded op). Restart/replay: the cache loads
-    # lazily from the committed state, so a checkpoint replay of an
-    # in-flight batch max-merges idempotently exactly as the
-    # read-back path did; the single-ingest-owner contract
-    # (MinHashIndex discipline, documented above) is unchanged —
-    # the cache mirrors what this owner wrote.
-    _regs: dict[str, dict[int, int] | None] = {"v": None}
-
-    def _ingest(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        new = _registers(batch.select(id_col, text_col))
-        # ≤ m rows (register file): bound ENFORCED, not just argued
-        rows_new = bounded_collect(
-            new, m, "streaming_approx_distinct registers"
-        )
-        # a batch with registers is not empty: no separate isEmpty job
-        if not rows_new and batch.isEmpty():
-            return
-        if _regs["v"] is None:
-            old = snapshot_read(spark, state_path)
-            _regs["v"] = {} if old is None else {
-                r["__bucket"]: r["__M"] for r in bounded_collect(
-                    old.select("__bucket", "__M"), m,
-                    "streaming_approx_distinct state",
-                )
-            }
-        # merge into a copy: the cache follows only committed state
-        regs = dict(_regs["v"])
-        for r in rows_new:
-            b = r["__bucket"]
-            if r["__M"] > regs.get(b, 0):
-                regs[b] = r["__M"]
-        rows = sorted(regs.items())
-        _atomic_state_write(
-            spark, rows, "`__bucket` bigint, `__M` int", state_path
-        )
-        _regs["v"] = regs
+    def report(spark, rows) -> DataFrame:
         n_hit = len(rows)
         ssum = sum(2 ** (s - M) for _, M in rows) + (m - n_hit) * (2 ** s)
         est = am2 * float(2 ** s) / float(ssum)
@@ -1294,22 +1322,22 @@ def streaming_approx_distinct(
         # decimal; ln must come from the same libm as approx_distinct_
         # hll's corrected_estimate), so the documented bit-equality to
         # the one-shot batch estimate holds by construction.
-        local_frame(
-            spark, [(batch_id, n_hit, est)],
-            "batch_id long, n_buckets_hit long, __est double",
+        return local_frame(
+            spark, [(n_hit, est)], "n_buckets_hit long, __est double",
         ).select(
-            "batch_id",
             "n_buckets_hit",
             F.round(F.col("__est"), 6).alias("raw_estimate"),
             F.round(
                 F.expr(_hll_corrected_expr("__est", "n_buckets_hit", m)), 6
             ).alias("corrected_estimate"),
-        ).write.mode("append").parquet(estimates_path)
+        )
 
-    return (
-        docs.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return _start_twin(
+        docs, checkpoint, estimates_path,
+        _sketch_step(
+            state_path, "`__bucket` bigint, `__M` int", registers, m, max,
+            report, "streaming_approx_distinct",
+        ),
     )
 
 
@@ -1332,17 +1360,12 @@ def streaming_heavy_hitters(
     commutative, so the merged sketch equals the one-shot sketch over
     everything ingested for ANY batch decomposition), the corpus
     token total accumulates alongside, and one report row per batch
-    appends to ``reports_path`` with the current heavy set size and
-    token total. Unlike max-merge, counter ADDS are NOT idempotent: a
-    checkpoint replay of an in-flight batch double-counts it — the
-    estimate stays an upper bound (the CMS guarantee direction is
-    preserved: est can only grow), but exactness vs the one-shot then
-    needs the batch-id fencing a production deployment gets from
-    writing state transactionally; documented honestly, run one
-    ingest owner and treat post-crash sketches as upper bounds. The
-    state rewrite itself is ATOMIC (:func:`_atomic_state_write`), so
-    a crash can at worst double-count the in-flight batch — never
-    lose the accreted counters.
+    (current token total and heavy-cell count) is written under
+    ``reports_path``. Counter adds are NOT idempotent, so exactness
+    under replay rests on the batch fence committed with the state
+    (:func:`_sketch_step`): a batch this query already merged is
+    skipped. A different query on the same state (a fresh checkpoint)
+    is new input and adds again; run one ingest owner per state table.
 
     The heavy SET itself (with exact verification) remains the batch
     op's job — this twin maintains the mergeable state the way a
@@ -1351,16 +1374,11 @@ def streaming_heavy_hitters(
     runs over the full corpus when the exact column is wanted.
 
     Returns the started StreamingQuery."""
-    from streamtasks_spark.llmdata.dedup import (
-        bounded_collect,
-        snapshot_read,
-        spread,
-        tokens_expr,
-    )
+    from streamtasks_spark.llmdata.dedup import spread, tokens_expr
 
-    def _cells(batch: DataFrame) -> DataFrame:
+    def cells(batch: DataFrame) -> DataFrame:
         toks = (
-            spread(batch, id_col)
+            spread(batch.select(id_col, text_col), id_col)
             .select(
                 F.explode(F.expr(tokens_expr(text_col))).alias("__t")
             )
@@ -1387,49 +1405,7 @@ def streaming_heavy_hitters(
             F.sum("__c").alias("__cell")
         )
 
-    # Driver-side CMS cache (r12 — VERDICT r11 item 3): same shape as
-    # streaming_approx_distinct's register cache — the merged grid is
-    # sketch-BOUNDED (≤ depth·width cells) and the report was already
-    # computed from its collected rows, so the per-batch distributed
-    # union+groupBy over the read-back state bought nothing. Collect
-    # the BATCH's cells (distributed), sum-merge into the dict in
-    # O(depth·width), rewrite atomically. Exact integer adds in either
-    # engine — state and reports bit-identical. The documented
-    # replay-double-counts caveat is unchanged: a replayed batch adds
-    # its cells again whether the merge ran in Spark or here.
-    _grid: dict[str, dict[tuple[int, int], int] | None] = {"v": None}
-
-    def _ingest(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        new = _cells(batch.select(id_col, text_col))
-        # ≤ depth·width rows (CMS grid): bound ENFORCED, not just argued
-        rows_new = bounded_collect(
-            new, depth * width, "streaming_heavy_hitters sketch"
-        )
-        # a batch with cells is not empty: no separate isEmpty job
-        if not rows_new and batch.isEmpty():
-            return
-        if _grid["v"] is None:
-            old = snapshot_read(spark, state_path)
-            _grid["v"] = {} if old is None else {
-                (r["__row"], r["__bucket"]): r["__cell"]
-                for r in bounded_collect(
-                    old.select("__row", "__bucket", "__cell"),
-                    depth * width, "streaming_heavy_hitters state",
-                )
-            }
-        # merge into a copy: adds are not idempotent, so the cache must
-        # not run ahead of the committed grid if the write fails
-        grid = dict(_grid["v"])
-        for r in rows_new:
-            key = (r["__row"], r["__bucket"])
-            grid[key] = grid.get(key, 0) + r["__cell"]
-        rows = [(rj, b, c) for (rj, b), c in sorted(grid.items())]
-        _atomic_state_write(
-            spark, rows, "`__row` int, `__bucket` bigint, `__cell` bigint",
-            state_path,
-        )
-        _grid["v"] = grid
+    def report(spark, rows) -> DataFrame:
         total = sum(c for rj, b, c in rows if rj == 0)
         bar = total * int(round(phi * 1_000_000))
         # heavy-cell count: every truly heavy token's cell clears the
@@ -1441,9 +1417,8 @@ def streaming_heavy_hitters(
         # count whenever at least one row separates all heavy tokens
         # (collision in every one of the `depth` independent rows has
         # probability ~(k²/2w)^depth for k heavy tokens), where min()
-        # already undercounts at a single colliding row — r10 advisor
-        # finding. Report-only; the token-level heavy SET is the batch
-        # op's job.
+        # already undercounts at a single colliding row. Report-only;
+        # the token-level heavy SET is the batch op's job.
         n_heavy_cells = max(
             sum(
                 1 for rj, b, c in rows
@@ -1451,15 +1426,18 @@ def streaming_heavy_hitters(
             )
             for j in range(depth)
         )
-        local_frame(
-            spark, [(batch_id, total, n_heavy_cells)],
-            "batch_id long, token_total long, n_heavy_cells long",
-        ).write.mode("append").parquet(reports_path)
+        return local_frame(
+            spark, [(total, n_heavy_cells)],
+            "token_total long, n_heavy_cells long",
+        )
 
-    return (
-        docs.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return _start_twin(
+        docs, checkpoint, reports_path,
+        _sketch_step(
+            state_path, "`__row` int, `__bucket` bigint, `__cell` bigint",
+            cells, depth * width, operator.add, report,
+            "streaming_heavy_hitters",
+        ),
     )
 
 
@@ -1488,30 +1466,19 @@ def streaming_dsir_weights(
     batching or order.
 
     That purity is why ``foreachBatch`` needs no index or state: the
-    union of per-batch weight appends equals the batch
-    :func:`dsir_score` over everything ingested, bit-exactly, one row
-    per arriving document. Restart replays at most one in-flight
-    micro-batch append; consumers needing exactly-once dedup
-    ``weights_path`` on the id — the documented foreachBatch contract.
+    union of per-batch weights equals the batch :func:`dsir_score`
+    over everything ingested, bit-exactly, one row per arriving
+    document.
 
     Returns the started StreamingQuery."""
     from streamtasks_spark.llmdata.quality import dsir_score
 
-    def _weigh(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        out = dsir_score(
+    return _start_twin(
+        docs, checkpoint, weights_path,
+        lambda batch, _: dsir_score(
             batch.select(id_col, text_col), counts, t_t, t_r,
             id_col=id_col, text_col=text_col, n_buckets=n_buckets,
-        )
-        out.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(weights_path)
-
-    return (
-        docs.writeStream.foreachBatch(_weigh)
-        .option("checkpointLocation", checkpoint)
-        .start()
+        ),
     )
 
 
@@ -1540,33 +1507,22 @@ def streaming_importance_resample(
 
     Both the weight and the coin are pure functions of the document
     and the frozen models — independent of arrival batching and order
-    — so the union of per-batch kept appends equals the batch
+    — so the union of per-batch kept rows equals the batch
     :func:`~streamtasks_spark.llmdata.quality.importance_resample_score`
     over everything ingested, bit-exactly (the streaming_dsir_weights
     purity argument carried through the filter: a filter of a pure
-    projection is itself pure). Restart replays at most one in-flight
-    micro-batch append; consumers needing exactly-once dedup
-    ``kept_path`` on the id — the documented foreachBatch contract.
+    projection is itself pure).
 
     Returns the started StreamingQuery."""
     from streamtasks_spark.llmdata.quality import importance_resample_score
 
-    def _draw(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        out = importance_resample_score(
+    return _start_twin(
+        docs, checkpoint, kept_path,
+        lambda batch, _: importance_resample_score(
             batch.select(id_col, text_col), counts, t_t, t_r,
             id_col=id_col, text_col=text_col, n_buckets=n_buckets,
             rate=rate, salt=salt,
-        )
-        out.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(kept_path)
-
-    return (
-        docs.writeStream.foreachBatch(_draw)
-        .option("checkpointLocation", checkpoint)
-        .start()
+        ),
     )
 
 
@@ -1581,7 +1537,7 @@ def streaming_cluster_prune(
     vec_col: str = "embedding",
     dim: int = 64,
 ):
-    """Streaming D4 curation against a FROZEN prune policy (r10): each
+    """Streaming D4 curation against a FROZEN prune policy: each
     arriving embedding micro-batch is judged by :func:`~streamtasks_
     spark.llmdata.similarity.cluster_prune_frozen` under the
     ``(centroids, cutoffs)`` policy profiled once on a reference
@@ -1592,11 +1548,8 @@ def streaming_cluster_prune(
     contract as :func:`streaming_unigram_lm`: the policy never moves
     under already-judged vectors, so a verdict is a pure function of
     the vector and the policy, independent of arrival batching or
-    order. Per-batch appends union to the batch
-    ``cluster_prune_frozen`` over everything ingested, bit-exactly;
-    restart replays at most one in-flight append; consumers needing
-    exactly-once dedup ``verdicts_path`` on the id — the documented
-    foreachBatch contract.
+    order. Per-batch verdicts union to the batch
+    ``cluster_prune_frozen`` over everything ingested, bit-exactly.
 
     ``centroids_rows``: the frozen codebook as plain
     ``(cell, vector, norm)`` tuples (collect the ``__cell/__cv/__cn``
@@ -1606,26 +1559,16 @@ def streaming_cluster_prune(
     Returns the started StreamingQuery."""
     from streamtasks_spark.llmdata.similarity import cluster_prune_frozen
 
-    def _judge(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        cents = local_frame(
-            batch.sparkSession, centroids_rows,
-            "__cell int, __cv array<double>, __cn double",
-        )
-        out = cluster_prune_frozen(
+    return _start_twin(
+        vectors, checkpoint, verdicts_path,
+        lambda batch, _: cluster_prune_frozen(
             batch.select(id_col, vec_col),
-            centroids=cents, cutoffs=cutoffs,
-            id_col=id_col, vec_col=vec_col, dim=dim,
-        )
-        out.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(verdicts_path)
-
-    return (
-        vectors.writeStream.foreachBatch(_judge)
-        .option("checkpointLocation", checkpoint)
-        .start()
+            centroids=local_frame(
+                batch.sparkSession, centroids_rows,
+                "__cell int, __cv array<double>, __cn double",
+            ),
+            cutoffs=cutoffs, id_col=id_col, vec_col=vec_col, dim=dim,
+        ),
     )
 
 
@@ -1645,13 +1588,13 @@ def streaming_ann_ingest(
     n_iters: int = 2,
     rerank: int = 4,
 ):
-    """Continuous ANN-index ingestion (r11) — the 24th foreachBatch
-    twin: each micro-batch appends into a persistent
+    """Continuous ANN-index ingestion: each micro-batch appends into a
+    persistent
     :class:`~streamtasks_spark.llmdata.similarity.IvfPqIndex` (raw
     vectors commit before codes; each commit is one atomic manifest
     flip), and the batch's own drift-stats row — measured against the
-    frozen codebooks — re-emits to ``reports_path`` tagged with the
-    batch id, so the monitoring stream and the index's
+    frozen codebooks — is written under ``reports_path``, so the
+    monitoring stream and the index's
     :meth:`drift_report` are the same numbers. Queries serve from the
     index between batches via :meth:`IvfPqIndex.query` (snapshot-
     isolated by the manifest protocol).
@@ -1661,16 +1604,14 @@ def streaming_ann_ingest(
     natural id-monotone crawl order — or pre-build the index with
     trained codebooks before starting the stream).
 
-    Restart semantics: index commits are crash-atomic but not
-    transactional with the checkpoint, so a crash between the final
-    commit and the checkpoint commit replays one batch — re-appending
-    VALUE-IDENTICAL code/vector rows, which ``query()`` tolerates
-    (dropDuplicates on the rerank set) and ``compact()`` folds
-    durably; the replayed batch also re-appends a stats row and a
-    report row (consumers dedup reports on ``batch_id``, the standard
-    foreachBatch contract). A crash at any manifest flip leaves the
-    index at its previous version intact — the crash-injection leg of
-    the restart sweep pins this.
+    Replay: the index commits inside ``ingest``, before the report is
+    written. A crash between the final commit and the checkpoint commit
+    re-ingests the batch: it re-appends VALUE-IDENTICAL code/vector
+    rows, which ``query()`` tolerates (dropDuplicates on the rerank
+    set) and ``compact()`` folds durably, plus a second stats row, and
+    the report directory is rewritten with the replay's stats row. A
+    crash at any manifest flip leaves the index at its previous version
+    intact.
 
     Returns the started StreamingQuery."""
     from streamtasks_spark.core.state import read_manifest
@@ -1690,25 +1631,17 @@ def streaming_ann_ingest(
         rerank=rerank,
     )
 
-    def _ingest(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
+    def step(batch: DataFrame, _):
+        # an empty batch cannot seed the codebooks: checked until it can
+        if read_manifest(index.centroids_path) is None and batch.isEmpty():
+            return None
         index.ingest(batch.select(id_col, vec_col))
         # the ingest's own stats row (one commit per ingest, so the
-        # stats manifest version IS its ingest_id), re-emitted with
-        # the batch id — sketch-sized read, never the data tables
+        # stats manifest version IS its ingest_id) — a sketch-sized
+        # read, never the data tables
         iid = read_manifest(index.stats_path)["version"]
-        (
-            snapshot_read(spark, index.stats_path)
-            .filter(F.col("ingest_id") == iid)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(reports_path)
+        return snapshot_read(batch.sparkSession, index.stats_path).filter(
+            F.col("ingest_id") == iid
         )
 
-    return (
-        vectors.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
+    return _start_twin(vectors, checkpoint, reports_path, step)

@@ -33,9 +33,9 @@ def streaming_hourly_stats(
     events = ensure_event_time(events, ts)
     # integer micro-unit sums, same formula as the batch twin (see
     # events_hourly_stats: ulp-exact across engines and agg orders);
-    # DECIMAL(38,0) accumulator like the batch twin (r06) — per-window
-    # row counts grow with event rate, and a BIGINT sum of 1e-6-unit
-    # terms overflows at scale (fatal under ANSI, silent wrap without)
+    # DECIMAL(38,0) accumulator like the batch twin — per-window row
+    # counts grow with event rate, and a BIGINT sum of 1e-6-unit terms
+    # overflows at scale (fatal under ANSI, silent wrap without)
     q = F.expr("cast(floor(value * 1000000) as bigint)")
     return (
         events.withWatermark(ts, watermark_delay)
@@ -72,8 +72,8 @@ def streaming_sliding_stats(
     the delay must cover the window width plus allowed lateness."""
     events = ensure_event_time(events, ts)
     # integer micro-unit sums, same formula as the batch twin, with
-    # the same r06 DECIMAL(38,0) accumulator (per-window row counts
-    # grow with event rate)
+    # the same DECIMAL(38,0) accumulator (per-window row counts grow
+    # with event rate)
     q = F.expr("cast(floor(value * 1000000) as bigint)")
     return (
         events.withWatermark(ts, watermark_delay)
@@ -114,9 +114,9 @@ def streaming_session_stats(
         )
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            # cent-exact like the batch twin (r05): 2-dp values sum as
-            # exact BIGINTs, so micro-batch boundaries can't drift the
-            # double sum against the batch result
+            # cent-exact like the batch twin: 2-dp values sum as exact
+            # BIGINTs, so micro-batch boundaries can't drift the double
+            # sum against the batch result
             (
                 F.sum(
                     F.expr("cast(floor(value * 100 + 0.5) as bigint)")

@@ -1,46 +1,48 @@
-"""Restart/replay sweep over every foreachBatch persistent-index and
-frozen-model streaming twin (r10 — the durability story of the
-incremental-ingest tier).
+"""Restart/replay sweep over every foreachBatch persistent-index,
+sketch and frozen-model streaming twin.
 
 The applyInPandasWithState twins get their restart coverage from
 test_streaming_restart_sweep.py (checkpointed state store). The
 foreachBatch twins keep their durable state OUTSIDE the checkpoint —
-parquet index tables, sketch files, appended outputs — so their
-restart contract is different and is pinned here, parametrized over
-all twelve (r11 adds ann_ingest — continuous IvfPqIndex ingestion
-whose reports stream re-emits the index's own drift-stats rows):
+parquet index tables, sketch files, per-batch output directories — so
+their restart contract is different and is pinned here, parametrized
+over all thirteen:
 
 1. **clean-stop resume**: the stream is stopped after the first two
    of four micro-batches and a NEW query incarnation resumes from the
    same checkpoint over the remaining files. The union of both runs'
-   appended outputs — and, for the index/sketch twins, the final
-   state table — must equal the one-shot batch result over everything
-   ingested, bit-exactly, with no row re-emitted (the committed-offset
-   log is what keeps run 2 from re-reading run 1's files).
+   outputs — and, for the index/sketch twins, the final state table —
+   must equal the one-shot batch result over everything ingested,
+   bit-exactly, with no row re-emitted (the committed-offset log is
+   what keeps run 2 from re-reading run 1's files).
 
-2. **replayed-batch state invariance**: a crash between the state
-   write and the checkpoint commit replays an in-flight micro-batch
-   against already-updated state. Each twin's docstring argues what
-   that does to the DURABLE state; this sweep turns those arguments
-   into tests by re-running the whole source against the same state
-   under a FRESH checkpoint (every batch replayed once — a strictly
-   harsher version of the single-batch replay):
+2. **crash after commit** (the nine twins without an index): the last
+   batch's output and state are durable but its checkpoint commit is
+   deleted, so the same checkpoint replays it. Every output row stays
+   one copy (the batch rewrites its own ``batch_id=<n>`` directory) and
+   the state does not move (the sketch twins' batch fence skips it), so
+   the Count-Min grid still equals the one-shot grid. The index twins
+   commit inside ``ingest()``, before their output exists, so they are
+   not exactly-once under this replay and have no such leg.
+
+3. **one query per output path**: a fresh checkpoint on the same output
+   path fails before it writes; output and state are unchanged.
+
+4. **replay as a new query**: the whole source re-runs against the
+   same durable state under a FRESH checkpoint and a FRESH output path.
+   A new query is new input to the state algebra:
 
    - max-merge registers (HLL) and set-union bits (bloom):
      IDEMPOTENT — state bit-identical after the full replay;
    - sum-merge cells (CMS): NOT idempotent — every cell exactly
-     doubles (the documented upper-bound-only degradation, now
-     asserted rather than narrated);
-   - pair/verdict index twins (minhash, semantic): replay re-appends
-     postings/survivors; their per-batch restart behavior is covered
-     by the resume half and their own dedicated tests — the
-     documented contract is consumer-side dedup of the output paths,
-     not state invariance, so no replay leg here;
-   - frozen-model twins (unigram, ngram, bm25 filter, dsir weights,
-     importance resample, cluster prune): stateless — replay
-     duplicates output rows
-     keyed by the same ids with identical values (asserted), which is
-     exactly why the documented contract is consumer dedup on the id.
+     doubles;
+   - frozen-model twins (unigram, ngram, bm25 filter, bpe count, dsir
+     weights, importance resample, cluster prune): stateless — the new
+     path holds exactly one copy of every row and the old path is
+     unchanged;
+   - pair/verdict/ANN index twins (minhash, semantic, ann ingest):
+     no leg; their per-batch restart behavior is covered by the resume
+     half and their own dedicated tests.
 """
 
 from __future__ import annotations
@@ -128,9 +130,9 @@ def _spec_unigram():
     return dict(
         source="documents", idc="doc_id",
         prepare=lambda spark, full: unigram_lm_train(full, vocab_size=64),
-        start=lambda stream, td, ctx, ck: streaming_unigram_lm(
+        start=lambda stream, td, ctx, ck, out: streaming_unigram_lm(
             stream, vocab=ctx[0], total=ctx[1],
-            scores_path=f"{td}/out", checkpoint=ck,
+            scores_path=out, checkpoint=ck,
         ),
         expect=lambda spark, full, chunks, td, ctx: _canon(
             unigram_lm_score(full, ctx[0], ctx[1])
@@ -151,9 +153,9 @@ def _spec_ngram():
         prepare=lambda spark, full: ngram_lm_train(
             full, n=2, vocab_size=64
         ),
-        start=lambda stream, td, ctx, ck: streaming_ngram_lm(
+        start=lambda stream, td, ctx, ck, out: streaming_ngram_lm(
             stream, vocab=ctx[0], total=ctx[1],
-            scores_path=f"{td}/out", checkpoint=ck, n=2,
+            scores_path=out, checkpoint=ck, n=2,
         ),
         expect=lambda spark, full, chunks, td, ctx: _canon(
             ngram_lm_score(full, ctx[0], ctx[1], n=2)
@@ -187,9 +189,9 @@ def _spec_bm25_filter():
     return dict(
         source="documents", idc="doc_id",
         prepare=prepare,
-        start=lambda stream, td, ctx, ck: streaming_bm25_filter(
+        start=lambda stream, td, ctx, ck, out: streaming_bm25_filter(
             stream, terms=_BM25_TERMS, stats=ctx[0], threshold=ctx[1],
-            hits_path=f"{td}/out", checkpoint=ck,
+            hits_path=out, checkpoint=ck,
         ),
         expect=lambda spark, full, chunks, td, ctx: _canon(
             bm25_score_frozen(full, ctx[0], terms=_BM25_TERMS).filter(
@@ -215,8 +217,8 @@ def _spec_bpe_count():
     return dict(
         source="documents", idc="doc_id",
         prepare=prepare,
-        start=lambda stream, td, ctx, ck: streaming_bpe_count(
-            stream, merge_rows=ctx[0], out_path=f"{td}/out",
+        start=lambda stream, td, ctx, ck, out: streaming_bpe_count(
+            stream, merge_rows=ctx[0], out_path=out,
             checkpoint=ck,
         ),
         expect=lambda spark, full, chunks, td, ctx: _canon(
@@ -236,9 +238,9 @@ def _spec_dsir_weights():
     return dict(
         source="documents", idc="doc_id",
         prepare=lambda spark, full: dsir_train(full, target_pred=pred),
-        start=lambda stream, td, ctx, ck: streaming_dsir_weights(
+        start=lambda stream, td, ctx, ck, out: streaming_dsir_weights(
             stream, counts=ctx[0], t_t=ctx[1], t_r=ctx[2],
-            weights_path=f"{td}/out", checkpoint=ck,
+            weights_path=out, checkpoint=ck,
         ),
         expect=lambda spark, full, chunks, td, ctx: _canon(
             dsir_score(full, ctx[0], ctx[1], ctx[2])
@@ -260,9 +262,9 @@ def _spec_importance_resample():
     return dict(
         source="documents", idc="doc_id",
         prepare=lambda spark, full: dsir_train(full, target_pred=pred),
-        start=lambda stream, td, ctx, ck: streaming_importance_resample(
+        start=lambda stream, td, ctx, ck, out: streaming_importance_resample(
             stream, counts=ctx[0], t_t=ctx[1], t_r=ctx[2],
-            kept_path=f"{td}/out", checkpoint=ck, rate=0.5,
+            kept_path=out, checkpoint=ck, rate=0.5,
         ),
         expect=lambda spark, full, chunks, td, ctx: _canon(
             importance_resample_score(
@@ -280,8 +282,8 @@ def _spec_minhash():
     return dict(
         source="documents", idc="doc_id",
         prepare=lambda spark, full: None,
-        start=lambda stream, td, ctx, ck: streaming_dedup_minhash(
-            stream, index_path=f"{td}/index", pairs_path=f"{td}/out",
+        start=lambda stream, td, ctx, ck, out: streaming_dedup_minhash(
+            stream, index_path=f"{td}/index", pairs_path=out,
             checkpoint=ck, threshold=0.5,
         ),
         expect=lambda spark, full, chunks, td, ctx: _canon(
@@ -317,15 +319,15 @@ def _spec_bloom():
     return dict(
         source="documents", idc="doc_id",
         prepare=lambda spark, full: None,
-        start=lambda stream, td, ctx, ck: streaming_bloom_dedup(
-            stream, index_path=f"{td}/index", flags_path=f"{td}/out",
+        start=lambda stream, td, ctx, ck, out: streaming_bloom_dedup(
+            stream, index_path=f"{td}/index", flags_path=out,
             checkpoint=ck, m_bits=1 << 16,
         ),
         expect=expect,
         # ordered (id, n_bits_hit, maybe_dup) triples, like expect
-        canon_out=lambda spark, td: sorted(
+        canon_out=lambda spark, out: sorted(
             (r["doc_id"], r["n_bits_hit"], r["maybe_dup"])
-            for r in spark.read.parquet(f"{td}/out").collect()
+            for r in spark.read.parquet(out).collect()
         ),
         state=lambda spark, td: sorted(
             r["__pos"]
@@ -362,14 +364,14 @@ def _spec_semantic():
     return dict(
         source="embeddings", idc="vec_id",
         prepare=lambda spark, full: None,
-        start=lambda stream, td, ctx, ck: streaming_semantic_dedup(
+        start=lambda stream, td, ctx, ck, out: streaming_semantic_dedup(
             stream, index_path=f"{td}/index",
-            verdicts_path=f"{td}/out", checkpoint=ck, threshold=0.35,
+            verdicts_path=out, checkpoint=ck, threshold=0.35,
         ),
         expect=expect,
-        canon_out=lambda spark, td: sorted(
+        canon_out=lambda spark, out: sorted(
             (r["vec_id"], r["cell"], r["keep"])
-            for r in spark.read.parquet(f"{td}/out").collect()
+            for r in spark.read.parquet(out).collect()
         ),
         state=lambda spark, td: sorted(
             r["vec_id"]
@@ -411,9 +413,9 @@ def _spec_cluster_prune():
     return dict(
         source="embeddings", idc="vec_id",
         prepare=prepare,
-        start=lambda stream, td, ctx, ck: streaming_cluster_prune(
+        start=lambda stream, td, ctx, ck, out: streaming_cluster_prune(
             stream, centroids_rows=ctx[0], cutoffs=ctx[1],
-            verdicts_path=f"{td}/out", checkpoint=ck,
+            verdicts_path=out, checkpoint=ck,
         ),
         expect=expect,
         replay="stateless",
@@ -446,9 +448,9 @@ def _spec_hll():
     return dict(
         source="documents", idc="doc_id",
         prepare=lambda spark, full: None,
-        start=lambda stream, td, ctx, ck: streaming_approx_distinct(
+        start=lambda stream, td, ctx, ck, out: streaming_approx_distinct(
             stream, state_path=f"{td}/state",
-            estimates_path=f"{td}/out", checkpoint=ck, n=3, p=8,
+            estimates_path=out, checkpoint=ck, n=3, p=8,
         ),
         expect=expect,
         state=lambda spark, td: sorted(
@@ -477,12 +479,38 @@ def _spec_cms():
         assert reps[-1]["token_total"] == toks.count()
         return None
 
+    def state_expect(spark, full, td):
+        # the one-shot Count-Min grid, built the way the twin builds a
+        # batch's cells (width 64, depth 3)
+        counts = spread(full, "doc_id").select(
+            F.explode(F.expr(tokens_expr("text"))).alias("__t")
+        ).groupBy("__t").agg(F.count(F.lit(1)).alias("__c"))
+        bucket = (
+            "pmod(cast(conv(substring(md5(concat(cast({j} as string), "
+            "':', __t)), 1, 12), 16, 10) as bigint), 64)"
+        )
+        parts = [
+            counts.select(
+                F.lit(j).alias("__row"),
+                F.expr(bucket.format(j=j)).alias("__bucket"), "__c",
+            )
+            for j in range(3)
+        ]
+        allc = parts[0]
+        for part in parts[1:]:
+            allc = allc.unionByName(part)
+        return sorted(
+            (r["__row"], r["__bucket"], r["s"])
+            for r in allc.groupBy("__row", "__bucket")
+            .agg(F.sum("__c").alias("s")).collect()
+        )
+
     return dict(
         source="documents", idc="doc_id",
         prepare=lambda spark, full: None,
-        start=lambda stream, td, ctx, ck: streaming_heavy_hitters(
+        start=lambda stream, td, ctx, ck, out: streaming_heavy_hitters(
             stream, state_path=f"{td}/state",
-            reports_path=f"{td}/out", checkpoint=ck,
+            reports_path=out, checkpoint=ck,
             width=64, depth=3,
         ),
         expect=expect,
@@ -490,6 +518,7 @@ def _spec_cms():
             (r["__row"], r["__bucket"], r["__cell"])
             for r in _state_read(spark, f"{td}/state").collect()
         ),
+        state_expect=state_expect,
         replay="double",
     )
 
@@ -522,15 +551,15 @@ def _spec_ann_ingest():
             for r in _state_read(spark, ref.stats_path).collect()
         )
 
-    def canon_out(spark, td):
-        # reports re-emit the stats rows tagged with batch_id; drop
-        # the tag for the sequential-reference compare
+    def canon_out(spark, out):
+        # reports re-emit the stats rows under batch_id directories;
+        # drop the tag for the sequential-reference compare
         return sorted(
             (
                 r["ingest_id"], r["n"], r["mean_win_cosine"],
                 r["mean_adc_err"],
             )
-            for r in spark.read.parquet(f"{td}/out").collect()
+            for r in spark.read.parquet(out).collect()
         )
 
     def state(spark, td):
@@ -553,9 +582,9 @@ def _spec_ann_ingest():
     return dict(
         source="embeddings", idc="vec_id",
         prepare=lambda spark, full: None,
-        start=lambda stream, td, ctx, ck: streaming_ann_ingest(
+        start=lambda stream, td, ctx, ck, out: streaming_ann_ingest(
             stream, index_path=f"{td}/index",
-            reports_path=f"{td}/out", checkpoint=ck, **kw,
+            reports_path=out, checkpoint=ck, **kw,
         ),
         expect=expect,
         canon_out=canon_out,
@@ -582,6 +611,20 @@ SPECS = {
 }
 
 
+_INDEX_TWINS = ("ann_ingest", "bloom_dedup", "dedup_minhash", "semantic_dedup")
+
+
+def _uncommit_last_batch(ck):
+    """Delete the checkpoint's last batch commit (and its checksum):
+    what a kill after the batch's own commits and before Spark's leaves
+    behind, so the next incarnation replays that batch."""
+    commits = os.path.join(ck, "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+
+
 @pytest.mark.parametrize("name", sorted(SPECS))
 def test_foreachbatch_twin_restart_and_replay(name, spark, tmp_path):
     spec = SPECS[name]()
@@ -606,21 +649,19 @@ def test_foreachbatch_twin_restart_and_replay(name, spark, tmp_path):
             .parquet(src)
         )
 
-    ck = f"{td}/ckpt"
+    ck, out = f"{td}/ckpt", f"{td}/out"
     # run 1: first two chunks, clean stop
     _write_chunks(full, idc, src, (0, 1), 1_700_000_000)
-    _drain(spec["start"](make_stream(), td, ctx, ck))
-    n_first = spark.read.parquet(f"{td}/out").count()
+    _drain(spec["start"](make_stream(), td, ctx, ck, out))
+    n_first = spark.read.parquet(out).count()
     assert n_first > 0  # the stop point sits mid-stream
 
     # run 2: two more chunks arrive; NEW incarnation, same checkpoint
     _write_chunks(full, idc, src, (2, 3), 1_700_001_000)
-    _drain(spec["start"](make_stream(), td, ctx, ck))
+    _drain(spec["start"](make_stream(), td, ctx, ck, out))
 
-    canon_out = spec.get(
-        "canon_out", lambda spark, td: _rows(spark, f"{td}/out")
-    )
-    got = canon_out(spark, td)
+    canon_out = spec.get("canon_out", _rows)
+    got = canon_out(spark, out)
     expect = spec["expect"](spark, full, chunks, td, ctx)
     if expect is not None:
         assert got == expect, (
@@ -632,16 +673,42 @@ def test_foreachbatch_twin_restart_and_replay(name, spark, tmp_path):
         assert spec["state"](spark, td) == spec["state_expect"](
             spark, full, td
         ), f"{name}: durable state != one-shot derivation"
+    pre_out = canon_out(spark, out)
+    before = spec["state"](spark, td) if "state" in spec else None
+
+    # crash-after-commit leg: the last batch's output and state are
+    # durable, its checkpoint commit is not; the same checkpoint
+    # replays it, and nothing may land twice
+    if name not in _INDEX_TWINS:
+        _uncommit_last_batch(ck)
+        _drain(spec["start"](make_stream(), td, ctx, ck, out))
+        assert canon_out(spark, out) == pre_out, (
+            f"{name}: a replayed batch changed the output"
+        )
+        if before is not None:
+            assert spec["state"](spark, td) == before, (
+                f"{name}: a replayed batch moved the state"
+            )
+
+    # one query per output path: a fresh checkpoint on the same output
+    # path fails before it writes anything
+    with pytest.raises(Exception, match="belongs to streaming query"):
+        _drain(spec["start"](
+            make_stream(), td, ctx, f"{td}/ckpt_other", out
+        ))
+    assert canon_out(spark, out) == pre_out, name
+    if before is not None:
+        assert spec["state"](spark, td) == before, name
 
     # replay leg: re-run EVERY batch against the same durable state
-    # under a fresh checkpoint — the docstring crash-replay arguments,
-    # asserted
+    # under a fresh checkpoint and a fresh output path — a new query,
+    # so its input is new input to the state algebra
     mode = spec["replay"]
     if mode is None:
         return
-    before = spec["state"](spark, td) if "state" in spec else None
-    pre_out = canon_out(spark, td)
-    _drain(spec["start"](make_stream(), td, ctx, f"{td}/ckpt2"))
+    _drain(spec["start"](
+        make_stream(), td, ctx, f"{td}/ckpt2", f"{td}/out2"
+    ))
     if mode in ("idempotent", "double") and before is not None:
         after = spec["state"](spark, td)
         if mode == "idempotent":
@@ -651,11 +718,13 @@ def test_foreachbatch_twin_restart_and_replay(name, spark, tmp_path):
                 (r0, b, c * 2) for (r0, b, c) in before
             ) == after, f"{name}: replayed sum-merge must exactly double"
     if mode == "stateless":
-        # full replay re-appends one identical copy of every row
-        post = canon_out(spark, td)
-        assert post == sorted(pre_out + pre_out), (
-            f"{name}: replayed stateless twin must duplicate rows "
-            "with identical values (consumer dedups on id)"
+        # the new query's path holds exactly one copy; the old path is
+        # untouched
+        assert canon_out(spark, f"{td}/out2") == pre_out, (
+            f"{name}: the replaying query's output is not one copy"
+        )
+        assert canon_out(spark, out) == pre_out, (
+            f"{name}: the replaying query touched the old output"
         )
 
 
@@ -703,7 +772,7 @@ def test_foreachbatch_twin_crash_at_flip(name, spark, tmp_path):
     ck = f"{td}/ckpt"
     # batches 0,1 land cleanly and freeze any first-ingest codebooks
     _write_chunks(full, idc, src, (0, 1), 1_700_000_000)
-    _drain(spec["start"](make_stream(), td, ctx, ck))
+    _drain(spec["start"](make_stream(), td, ctx, ck, f"{td}/out"))
     s1 = spec["state"](spark, td)
 
     # batch 2 arrives; its FIRST manifest flip dies
@@ -719,7 +788,7 @@ def test_foreachbatch_twin_crash_at_flip(name, spark, tmp_path):
 
     state_mod._flip = dying_flip
     try:
-        q = spec["start"](make_stream(), td, ctx, ck)
+        q = spec["start"](make_stream(), td, ctx, ck, f"{td}/out")
         with pytest.raises(Exception, match="injected crash"):
             try:
                 q.processAllAvailable()
@@ -736,11 +805,9 @@ def test_foreachbatch_twin_crash_at_flip(name, spark, tmp_path):
     # (b) restart from the same checkpoint: the failed batch replays,
     # batch 3 follows; everything converges to the one-shot result
     _write_chunks(full, idc, src, (3,), 1_700_002_000)
-    _drain(spec["start"](make_stream(), td, ctx, ck))
-    canon_out = spec.get(
-        "canon_out", lambda spark, td: _rows(spark, f"{td}/out")
-    )
-    got = canon_out(spark, td)
+    _drain(spec["start"](make_stream(), td, ctx, ck, f"{td}/out"))
+    canon_out = spec.get("canon_out", _rows)
+    got = canon_out(spark, f"{td}/out")
     expect = spec["expect"](spark, full, chunks, td, ctx)
     if expect is not None:
         assert got == expect, (

@@ -14,6 +14,7 @@ retry converges to the one-shot result bit-exactly.
 
 from __future__ import annotations
 
+import json
 import os
 import uuid
 
@@ -511,26 +512,65 @@ class _CaptureForeachBatch:
         return None
 
 
+def _capture(start, checkpoint, **kw):
+    """The per-batch function of twin ``start`` on ``checkpoint``, which
+    gets the ``metadata`` file (the query id) Spark writes before batch
+    0 unless it has one."""
+    os.makedirs(checkpoint, exist_ok=True)
+    meta = os.path.join(checkpoint, "metadata")
+    if not os.path.exists(meta):
+        with open(meta, "w") as f:
+            json.dump({"id": str(uuid.uuid4())}, f)
+    cap = _CaptureForeachBatch()
+    start(cap, checkpoint=checkpoint, **kw)
+    return cap.fn
+
+
+class _flip_then_die(_crash_at_flip):
+    """The Nth _flip commits, then raises: a kill after the state
+    commit and before the checkpoint commit."""
+
+    def __enter__(self):
+        orig = state._flip
+
+        def flip(tmp, dst):
+            orig(tmp, dst)
+            self.calls += 1
+            if self.calls == self.at:
+                raise _FlipCrash(f"injected crash after flip #{self.at}")
+
+        self.monkeypatch.setattr(state, "_flip", flip)
+        return self
+
+
+def _three_batches(spark):
+    docs = _docs(spark)
+    return [
+        docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+        for lo, hi in ((0, 170), (170, 340), (340, 1 << 62))
+    ]
+
+
+def _heavy_hitters(tmp_path, name, ckpt=None):
+    """A captured streaming_heavy_hitters over ``name``'s paths."""
+    from streamtasks_spark.streaming.stateful import streaming_heavy_hitters
+
+    return _capture(
+        streaming_heavy_hitters, str(tmp_path / (ckpt or name) / "ckpt"),
+        state_path=str(tmp_path / name / "state"),
+        reports_path=str(tmp_path / name / "reports"), width=64, depth=3,
+    )
+
+
 def test_heavy_hitters_cache_waits_for_the_commit(spark, tmp_path, monkeypatch):
     """Count-Min adds are not idempotent: when the state flip fails,
     the twin's cached grid must stay at the committed grid, so a retry
     of the batch counts it once."""
-    from streamtasks_spark.streaming.stateful import streaming_heavy_hitters
-
     docs = _docs(spark)
     b1 = docs.filter(F.col("doc_id") < 250)
     b2 = docs.filter(F.col("doc_id") >= 250)
-
-    def twin(name):
-        cap = _CaptureForeachBatch()
-        streaming_heavy_hitters(
-            cap, state_path=str(tmp_path / name / "state"),
-            reports_path=str(tmp_path / name / "reports"),
-            checkpoint=str(tmp_path / name / "ckpt"), width=64, depth=3,
-        )
-        return cap.fn, str(tmp_path / name / "state")
-
-    ingest, p = twin("crash")
+    ingest = _heavy_hitters(tmp_path, "crash")
+    p = str(tmp_path / "crash" / "state")
     ingest(b1, 0)
     before = _canon(snapshot_read(spark, p))
     with _crash_at_flip(monkeypatch):
@@ -538,7 +578,152 @@ def test_heavy_hitters_cache_waits_for_the_commit(spark, tmp_path, monkeypatch):
             ingest(b2, 1)
     assert _canon(snapshot_read(spark, p)) == before
     ingest(b2, 1)  # the retry, same closure
-    one, p_one = twin("one")
+    one = _heavy_hitters(tmp_path, "one")
     one(b1, 0)
     one(b2, 1)
+    p_one = str(tmp_path / "one" / "state")
     assert _canon(snapshot_read(spark, p)) == _canon(snapshot_read(spark, p_one))
+
+
+def test_heavy_hitters_replay_after_the_state_commit(spark, tmp_path, monkeypatch):
+    """A kill after the state flip and before the checkpoint commit:
+    the batch's fence is in that flip, so its retry, in the same
+    process or a restarted one, is skipped. The grid equals a one-shot
+    run and every batch has one report row."""
+    b1, b2, b3 = _three_batches(spark)
+    ingest = _heavy_hitters(tmp_path, "crash")
+    ingest(b1, 0)
+    with _flip_then_die(monkeypatch):
+        with pytest.raises(_FlipCrash):
+            ingest(b2, 1)
+    ingest(b2, 1)  # the retry, same closure
+    ingest(b3, 2)
+    _heavy_hitters(tmp_path, "crash")(b3, 2)  # a restarted process
+    one = _heavy_hitters(tmp_path, "one")
+    for i, b in enumerate((b1, b2, b3)):
+        one(b, i)
+    state_of = lambda name: _canon(  # noqa: E731
+        snapshot_read(spark, str(tmp_path / name / "state"))
+    )
+    assert state_of("crash") == state_of("one")
+    reports_of = lambda name: _canon(  # noqa: E731
+        spark.read.parquet(str(tmp_path / name / "reports"))
+    )
+    assert reports_of("crash") == reports_of("one")
+    assert [r[0] for r in reports_of("crash")] == [0, 1, 2]  # batch_id
+
+
+def test_unigram_lm_replay_keeps_one_copy(spark, tmp_path):
+    """A frozen-model twin's batch rewrites its own directory: the same
+    batch id twice leaves one copy of its rows."""
+    from streamtasks_spark.llmdata.quality import unigram_lm_train
+    from streamtasks_spark.streaming.stateful import streaming_unigram_lm
+
+    docs = _docs(spark)
+    vocab, total = unigram_lm_train(docs, vocab_size=64)
+    out = str(tmp_path / "scores")
+    score = _capture(
+        streaming_unigram_lm, str(tmp_path / "ckpt"),
+        vocab=vocab, total=total, scores_path=out,
+    )
+    b0, b1 = (docs.filter(F.col("doc_id") % 2 == i) for i in (0, 1))
+    score(b0, 0)
+    score(b1, 1)
+    once = _canon(spark.read.parquet(out))
+    score(b1, 1)
+    assert _canon(spark.read.parquet(out)) == once
+    assert len(once) == docs.count()
+
+
+def test_second_query_on_an_output_path_is_refused(spark, tmp_path):
+    """One query per output path: a batch of another query id fails,
+    naming both ids, before it writes output or state."""
+    b1, b2, _ = _three_batches(spark)
+    _heavy_hitters(tmp_path, "hh")(b1, 0)
+    state_p = str(tmp_path / "hh" / "state")
+    reports_p = str(tmp_path / "hh" / "reports")
+    manifest = state.read_manifest(state_p)
+    reports = _canon(spark.read.parquet(reports_p))
+    other = _heavy_hitters(tmp_path, "hh", ckpt="other")
+    with open(os.path.join(reports_p, "_QUERY_ID")) as f:
+        owner = f.read()
+    with open(str(tmp_path / "other" / "ckpt" / "metadata")) as f:
+        intruder = json.load(f)["id"]
+    with pytest.raises(ValueError) as e:
+        other(b2, 1)
+    assert owner in str(e.value) and intruder in str(e.value)
+    assert state.read_manifest(state_p) == manifest
+    assert _canon(spark.read.parquet(reports_p)) == reports
+    assert sorted(os.listdir(reports_p)) == ["_QUERY_ID", "batch_id=0"]
+
+
+def test_empty_batch_commits_no_state_and_writes_no_rows(spark, tmp_path):
+    """An empty batch (what a stateful upstream's no-data batch can
+    deliver) leaves every table's rows as they were."""
+    from streamtasks_spark.llmdata.quality import unigram_lm_train
+    from streamtasks_spark.streaming.stateful import streaming_unigram_lm
+
+    b1, _, _ = _three_batches(spark)
+    empty = b1.limit(0)
+    ingest = _heavy_hitters(tmp_path, "hh")
+    ingest(b1, 0)
+    state_p = str(tmp_path / "hh" / "state")
+    manifest = state.read_manifest(state_p)
+    ingest(empty, 1)
+    assert state.read_manifest(state_p) == manifest
+    assert spark.read.parquet(str(tmp_path / "hh" / "reports")).count() == 1
+
+    vocab, total = unigram_lm_train(b1, vocab_size=16)
+    out = str(tmp_path / "scores")
+    score = _capture(
+        streaming_unigram_lm, str(tmp_path / "ckpt"),
+        vocab=vocab, total=total, scores_path=out,
+    )
+    score(b1, 0)
+    score(empty, 1)
+    assert spark.read.parquet(out).count() == b1.count()
+
+
+def _codegen_compiles(spark) -> int:
+    jvm = spark.sparkContext._jvm
+    return jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount()
+
+
+def test_dedup_minhash_batches_reuse_generated_code(spark, tmp_path):
+    """The batch id reaches the output through its directory, not a
+    literal in the plan, so once warm a batch compiles no new classes,
+    and a batch with rows starts no isEmpty job."""
+    from streamtasks_spark.streaming.stateful import streaming_dedup_minhash
+
+    docs = _docs(spark)
+    files = []
+    for i in range(6):
+        f = str(tmp_path / "src" / f"b{i}")
+        docs.filter(F.col("doc_id") % 6 == i).coalesce(1).write.parquet(f)
+        files.append(f)
+    ingest = _capture(
+        streaming_dedup_minhash, str(tmp_path / "ckpt"),
+        index_path=str(tmp_path / "index"),
+        pairs_path=str(tmp_path / "pairs"), threshold=0.5,
+    )
+    sc = spark.sparkContext
+    compiled = []
+    for i, f in enumerate(files):
+        group = f"batch-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, group)
+        try:
+            ingest(spark.read.parquet(f), i)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        compiled.append(_codegen_compiles(spark))
+        st = sc.statusTracker()
+        stages = [
+            st.getStageInfo(s)
+            for j in st.getJobIdsForGroup(group)
+            for s in st.getJobInfo(j).stageIds
+        ]
+        assert not [s.name for s in stages if s and s.name.startswith("isEmpty")]
+    assert compiled[5] == compiled[2], compiled
+    assert spark.read.parquet(str(tmp_path / "pairs")).count() > 0
