@@ -8,6 +8,13 @@
   pattern of ``n_planes`` Rademacher (±1) projections; candidates are
   bucket-mates only; exact cosine re-rank within the bucket. The 100 TB
   path — per-bucket work is bounded, one shuffle on the bucket key.
+- the rest of the ANN family (:func:`ivf_topk`, :func:`sq_topk`,
+  :func:`ivf_sq_topk`, :func:`pq_topk`, :func:`ivf_pq_topk`,
+  :func:`ivf_pq_res_topk`) — like the two above, short specs over one
+  search pipeline of coarse × code × exact re-rank stages (see "ANN
+  search pipeline" below); :func:`recall_probe` composes the same
+  stages, and :class:`IvfIndex` / :class:`IvfPqIndex` share one
+  persistent-index lifecycle.
 - :func:`embedding_near_dup` — near-duplicate pairs by cosine ≥
   threshold, LSH-blocked (pairs generated within buckets only).
 
@@ -24,29 +31,42 @@ BASELINE.json LLM-data-pipeline requirement.
 
 from __future__ import annotations
 
+import functools
 import math
 import os
 import random
+import shutil
+from collections.abc import Callable
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from streamtasks_spark.core.state import (
+    append_write,
+    commit_segments,
+    new_segment,
+    read_manifest,
+    replace_write,
+)
 from streamtasks_spark.llmdata.dedup import (
     bounded_collect,
+    compact_table,
     pin,
     run_build_steps,
+    snapshot_read,
     spread,
 )
 
 
-# Driver-local training gate (r11 optimization): corpora at or under
-# this many surviving (finite-positive-norm) vectors are pulled once
-# (`limit(bound+1)` — driver-safe whatever the true corpus size, the
-# bounded_collect discipline) and the k-means / PQ training loops run
-# in-process, replacing n_iters distributed assignment+groupBy rounds
-# (2 Spark jobs each, plus per-round codegen of the literal-codebook
-# argmax expression) with ZERO extra jobs. Same size-gated fast path
+# Driver-local training gate: corpora at or under this many surviving
+# (finite-positive-norm) vectors are pulled once (`limit(bound+1)` —
+# driver-safe whatever the true corpus size, the bounded_collect
+# discipline) and the k-means / PQ training loops run in-process,
+# replacing n_iters distributed assignment+groupBy rounds (2 Spark jobs
+# each, plus per-round codegen of the literal-codebook argmax
+# expression) with ZERO extra jobs. Same size-gated fast path
 # as bpe._BPE_MAX_LOCAL_VOCAB and dedup.connected_components'
 # max_local_edges: above the gate the distributed loops run unchanged,
 # so 100 TB corpora keep training distributed. The local twins are
@@ -54,9 +74,7 @@ from streamtasks_spark.llmdata.dedup import (
 # left-to-right folds equal to the JVM's, struct-comparator tie-breaks
 # reproduced) and pinned by tests/test_ann_local_train.py both-paths
 # sweeps. 65,536 vectors × dim 64 doubles ≈ 32 MB of driver state.
-_ANN_MAX_LOCAL_TRAIN = int(
-    os.environ.get("SPARK_GRAFT_ANN_LOCAL_TRAIN", "65536")
-)
+_ANN_MAX_LOCAL_TRAIN = 65536
 
 
 def hyperplanes(dim: int, n_planes: int, seed: int = 0xA11CE) -> list[list[int]]:
@@ -72,18 +90,22 @@ def _dot(a: str, b: str) -> str:
     return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, v) -> acc + v)"
 
 
+def _cos(a: str, b: str, na: str, nb: str):
+    """Cosine of vector columns ``a``/``b`` given their norms."""
+    return F.expr(_dot(a, b)) / (F.col(na) * F.col(nb))
+
+
 def _with_norm(df: DataFrame, vec_col: str) -> DataFrame:
     """Attach the double-cast vector and its L2 norm, DROPPING vectors
-    whose norm is not FINITE-POSITIVE — zero-norm, NULL, and (late-r07
-    nonfinite probe) NaN/±Inf components: a zero vector has no
-    direction, ANSI cosine division would raise DIVIDE_BY_ZERO, and a
-    NaN/Inf vector both carries no usable direction and POISONS k-means
-    centroid sums — the trained codebook then inlines ``nan`` into the
-    argmax literal, which Spark parses as an unresolvable column
-    (`nanD`), killing the query. The exclusion is mirrored by the
-    ``_duck_norm_pred`` predicate in every DuckDB oracle. The
-    ``< inf`` comparison also rejects NaN in BOTH engines (each treats
-    NaN as greater than every value, probed r07)."""
+    whose norm is not FINITE-POSITIVE — zero-norm, NULL, and NaN/±Inf
+    components: a zero vector has no direction, ANSI cosine division
+    would raise DIVIDE_BY_ZERO, and a NaN/Inf vector both carries no
+    usable direction and POISONS k-means centroid sums — the trained
+    codebook then inlines ``nan`` into the argmax literal, which Spark
+    parses as an unresolvable column (`nanD`), killing the query. The
+    exclusion is mirrored by the ``_duck_norm_pred`` predicate in every
+    DuckDB oracle. The ``< inf`` comparison also rejects NaN in BOTH
+    engines (each treats NaN as greater than every value)."""
     v = f"cast({vec_col} as array<double>)"
     return (
         df.withColumn("__v", F.expr(v))
@@ -100,9 +122,9 @@ def _duck_norm_pred(v: str, dim: int) -> str:
     self-dot, plus an explicit no-NULL-ELEMENT condition — DuckDB's
     ``list_sum`` SKIPS NULL products where Spark's ``aggregate`` fold
     propagates NULL, so a vector like ``[NULL, 0.5, ...]`` would gate
-    IN here while Spark drops it (r07 review finding; the len filter
-    makes both engines reject zero, NULL, NaN, ±Inf, and
-    NULL-element vectors identically)."""
+    IN here while Spark drops it (the len filter makes both engines
+    reject zero, NULL, NaN, ±Inf, and NULL-element vectors
+    identically)."""
     d = _duck_dot(v, v, dim)
     return (
         f"({d} > 0 AND {d} < 'inf'::DOUBLE"
@@ -119,17 +141,17 @@ def guard_dim(df: DataFrame, vec_col: str, dim: int, op: str) -> DataFrame:
     every bucket collapses to 0) while DuckDB NULL-skips; with LONGER
     data the oracle's ``range(1, dim+1)`` dot silently truncates to
     the first dim coords while the data-derived Spark ops use the full
-    vector. Found by the ``--dim`` fuzz axis (r07): 15 silent
-    divergences at dim 3 and one more (ann_ivf_topk's oracle) at
-    dim 512. The guard is one JVM case expression per row — no
-    shuffle, no job, negligible at 100 TB. Data-derived ops
-    (cosine_topk, ivf_topk) are dim-agnostic and stay unguarded;
-    callers coupling them to a fixed-dim oracle apply this guard at
-    the call site. NULL vectors pass through untouched: they are
-    legitimate input that ``_with_norm`` drops downstream (mirrored by
-    the oracles' ``dot(v,v) > 0`` predicate), and without the explicit
-    pass-through ``F.size(NULL)`` is NULL so the when-condition would
-    misroute them into ``raise_error``."""
+    vector. Found by the ``--dim`` fuzz axis: 15 silent divergences at
+    dim 3 and one more (ann_ivf_topk's oracle) at dim 512. The guard
+    is one JVM case expression per row — no shuffle, no job,
+    negligible at 100 TB. Data-derived ops (cosine_topk, ivf_topk) are
+    dim-agnostic and stay unguarded; callers coupling them to a
+    fixed-dim oracle apply this guard at the call site. NULL vectors
+    pass through untouched: they are legitimate input that
+    ``_with_norm`` drops downstream (mirrored by the oracles'
+    ``dot(v,v) > 0`` predicate), and without the explicit pass-through
+    ``F.size(NULL)`` is NULL so the when-condition would misroute them
+    into ``raise_error``."""
     return df.withColumn(
         vec_col,
         F.when(
@@ -158,17 +180,25 @@ def _require_dim(df: DataFrame, dim: int, op: str) -> DataFrame:
 def _corpus_norm(vectors: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """The corpus-side (id, __v, __nrm) projection every ANN tier
     builds. A PRE-NORMALIZED base — ``__v``/``__nrm`` already present,
-    e.g. :func:`recall_probe`'s shared pinned scan — is reused as-is,
+    e.g. a caller's pinned scan shared across tiers — is reused as-is,
     removing one parquet scan + spread Exchange + normalize subtree
-    per tier (r11: recall_probe carried EIGHT identical copies); a raw
-    corpus takes the usual spread + :func:`_with_norm` path. Values
-    are identical either way (the base IS that same expression,
-    computed once), so downstream plans differ only in sharing."""
+    per consumer; a raw corpus takes the usual spread +
+    :func:`_with_norm` path. Values are identical either way (the base
+    IS that same expression, computed once), so downstream plans differ
+    only in sharing."""
     if "__v" in vectors.columns and "__nrm" in vectors.columns:
         return vectors.select(id_col, "__v", "__nrm")
     return _with_norm(
         spread(vectors, id_col).select(id_col, vec_col), vec_col
     ).select(id_col, "__v", "__nrm")
+
+
+def _query_norm(queries: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The query side every ANN search starts from: ``query_id`` plus
+    :func:`_with_norm`'s ``__v``/``__nrm``."""
+    return _with_norm(
+        queries.select(F.col(id_col).alias("query_id"), vec_col), vec_col
+    )
 
 
 def _seed_cells(
@@ -201,23 +231,18 @@ def _cell_assign(
     *,
     keep_centroid: bool = False,
 ) -> DataFrame:
-    """The coarse cell-assignment kernel every IVF-family tier builds
-    inline (broadcast-codebook crossJoin + per-``id_out`` cosine argmax
-    window, ties to the lowest cell): one module-level twin so
-    :func:`recall_probe` can compute the CORPUS assignment once and
-    share it across its four IVF rungs (r11 optimization round — they
-    assign with identical seeded centroids, so four corpus-wide
-    crossJoin+window subtrees collapse to one pinned pass). The
-    expressions are byte-for-byte those of the tiers' local closures;
-    ``keep_centroid`` mirrors :func:`ivf_pq_res_topk`'s variant that
-    carries ``__cv``/``__cn`` through for residual computation."""
-    score = F.expr(f"{_dot('__v', '__cv')}") / (F.col("__nrm") * F.col("__cn"))
+    """The coarse cell-assignment kernel — of the ivf stage and of the
+    persistent indexes alike: crossJoin the (caller-broadcast)
+    codebook ``cents`` (``__cell, __cv, __cn``) and keep each
+    ``id_out``'s ``rank_limit`` best cells by cosine, ties to the
+    lowest cell. ``keep_centroid`` carries ``__cv``/``__cn`` through
+    for the residual code."""
     w = Window.partitionBy(id_out).orderBy(
         F.col("__score").desc(), F.col("__cell").asc()
     )
     out = (
         df.crossJoin(cents)
-        .withColumn("__score", score)
+        .withColumn("__score", _cos("__v", "__cv", "__nrm", "__cn"))
         .withColumn("__cr", F.row_number().over(w))
         .filter(F.col("__cr") <= rank_limit)
     )
@@ -249,7 +274,237 @@ def _duck_bucket(planes: list[list[int]], v: str, dim: int) -> str:
     return " + ".join(bits)
 
 
-# ------------------------------------------------------------ brute force
+# --------------------------------------------------- ANN search pipeline
+#
+# Every one-shot top-k tier is a composition of three stages — the
+# Faiss index-factory decomposition (``IVF8,PQ8`` = an ivf coarse
+# quantizer × pq codes × exact re-rank; Jégou, Douze & Schmid, TPAMI
+# 2011):
+#
+# - coarse: which (corpus, query) pairs meet. ``none`` is the broadcast
+#   crossJoin, ranked two-phase (per partition, then global); ``lsh``
+#   joins on the hyperplane bucket (:func:`_lsh`); ``ivf`` joins on the
+#   cell (:func:`_ivf`).
+# - code (:class:`_Code`): what a pair is scored by. ``raw`` scores by
+#   exact cosine, which is the answer; ``sq`` by int8 codes
+#   (:func:`_sq_code`); ``pq`` / ``pq_res`` by the integer ADC sum
+#   (:func:`_pq_code`).
+# - rerank: the ``rerank·k`` best pairs by code re-rank by exact cosine
+#   (:func:`_rerank`); the raw code has none.
+#
+# :func:`recall_probe` and the persistent indexes compose the same
+# stages over shared inputs.
+
+
+class _Code(NamedTuple):
+    """A code stage. ``corpus(a, id_col, key)`` / ``query(q, key)``
+    project each side to the columns its pair score reads, keeping the
+    coarse join ``key``; ``score`` lists the (column, expression) pairs
+    attached to every joined pair, the last one ranking candidates;
+    ``approx`` is the reported approximate score and ``rerank`` the
+    candidate budget multiplier — both None for the raw code, whose
+    score is the exact cosine."""
+
+    corpus: Callable[[DataFrame, str, str | None], DataFrame]
+    query: Callable[[DataFrame, str | None], DataFrame]
+    score: list[tuple[str, Column]]
+    approx: Column | None = None
+    rerank: int | None = None
+
+
+def _keys(key: str | None) -> list[str]:
+    return [] if key is None else [key]
+
+
+def _raw_code() -> _Code:
+    return _Code(
+        # an uncoarsened corpus base is already (id, __v, __nrm)
+        lambda a, idc, key: (
+            a if key is None else a.select(idc, "__v", "__nrm", key)
+        ),
+        lambda q, key: q.select(
+            "query_id",
+            F.col("__v").alias("__qv"),
+            F.col("__nrm").alias("__qn"),
+            *_keys(key),
+        ),
+        [("__cos", _cos("__v", "__qv", "__nrm", "__qn"))],
+    )
+
+
+def _sq_code(rerank: int) -> _Code:
+    """The int8 scalar-quantization code (:func:`_sq_encode` on both
+    sides): pairs score by the quantized cosine
+    ``(s_a·s_q·Σ qa_i·qq_i) / (‖a‖·‖q‖)``, whose inner sum is exact
+    int64."""
+    appx = (
+        (F.col("__as2") * F.col("__qs2"))
+        * F.expr(_int_dot("__ac", "__qc")).cast("double")
+    ) / (F.col("__anrm") * F.col("__qnrm"))
+    return _Code(
+        lambda a, idc, key: _sq_encode(a, "__a", [idc, *_keys(key)]),
+        lambda q, key: _sq_encode(q, "__q", ["query_id", *_keys(key)]),
+        [("__appx", appx)],
+        F.col("__appx"),
+        rerank,
+    )
+
+
+def _lsh(
+    a: DataFrame, q: DataFrame, dim: int, n_planes: int
+) -> tuple[DataFrame, DataFrame]:
+    """The lsh coarse stage: both sides keyed by their ``__bkt``."""
+    bucket = F.expr(_bucket_expr(hyperplanes(dim, n_planes)))
+    return a.withColumn("__bkt", bucket), q.withColumn("__bkt", bucket)
+
+
+def _ivf(
+    a: DataFrame,
+    q: DataFrame,
+    cents: DataFrame,
+    id_col: str,
+    n_probe: int,
+    *,
+    carry: tuple[str, ...] = (),
+    keep_centroid: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """The ivf coarse stage: every corpus vector to its nearest cell of
+    the broadcast codebook ``cents``, every query to its ``n_probe``
+    nearest — the query side first narrowed to ``__v``/``__nrm`` plus
+    the ``carry`` columns its code reads. Centroids are broadcast
+    (bounded by n_cells, like any trained codebook) and the pair join
+    shuffles once on the cell id, per-cell work bounded by cell size ×
+    queries probing the cell."""
+    cents = broadcast(cents)
+    return (
+        _cell_assign(a, cents, id_col, 1, keep_centroid=keep_centroid),
+        _cell_assign(
+            q.select("query_id", "__v", "__nrm", *carry), cents,
+            "query_id", n_probe, keep_centroid=keep_centroid,
+        ),
+    )
+
+
+def _topk(
+    scored: DataFrame,
+    score: str,
+    id_col: str,
+    limit: int,
+    out: str,
+    *,
+    two_phase: bool,
+    distinct: bool = False,
+) -> DataFrame:
+    """Rank each query's pairs by (``score`` desc, id asc) into ``out``
+    and keep the best ``limit``. ``two_phase`` (the uncoarsened
+    crossJoin) first keeps ``limit`` per (query, partition), so no
+    task sorts a query's whole score list and the global stage holds
+    ``n_queries × limit × n_partitions`` rows. ``distinct`` ranks
+    distinct ids only: value-identical rows (a persistent index after
+    a replayed ingest) tie and share a rank."""
+    order = (F.col(score).desc(), F.col(id_col).asc())
+    if two_phase:
+        scored = (
+            scored.withColumn("__pid", F.spark_partition_id())
+            .withColumn(
+                "__r",
+                F.row_number().over(
+                    Window.partitionBy("query_id", "__pid").orderBy(*order)
+                ),
+            )
+            .filter(F.col("__r") <= limit)
+        )
+    rank = F.dense_rank() if distinct else F.row_number()
+    return scored.withColumn(
+        out, rank.over(Window.partitionBy("query_id").orderBy(*order))
+    ).filter(F.col(out) <= limit)
+
+
+def _candidates(
+    a: DataFrame,
+    q: DataFrame,
+    code: _Code,
+    id_col: str,
+    key: str | None,
+    limit: int,
+    out: str,
+    *,
+    distinct: bool = False,
+) -> DataFrame:
+    """Pair the encoded sides on the coarse ``key`` (a crossJoin
+    without one), drop self-pairs, score them with ``code`` and keep
+    each query's best ``limit`` (:func:`_topk`). The query side is
+    broadcast — the probe batch is broadcast-sized by the tier
+    contract (n_queries · n_probe rows under ivf); without the hint
+    the initial plan sort-merge-joins, shuffling the whole corpus by
+    the key before AQE can convert, and at fleet scale the vector
+    table must never be the build side."""
+    pairs = (
+        a.crossJoin(broadcast(q)) if key is None
+        else a.join(broadcast(q), key)
+    )
+    scored = pairs.filter(F.col(id_col) != F.col("query_id"))
+    for name, col in code.score:
+        scored = scored.withColumn(name, col)
+    return _topk(
+        scored, code.score[-1][0], id_col, limit, out,
+        two_phase=key is None, distinct=distinct,
+    )
+
+
+def _rerank(cand: DataFrame, id_col: str, k: int, approx) -> DataFrame:
+    """The exact re-rank tail: each query's candidates (``__av``/
+    ``__anrm`` against ``__qv``/``__qnrm``) ranked by exact cosine
+    desc, id asc; output (query_id, id, cosine, approx, rank). The
+    exact float dot runs only on the candidates, never on all pairs."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("__cos").desc(), F.col(id_col).asc()
+    )
+    return (
+        cand.withColumn("__cos", _cos("__av", "__qv", "__anrm", "__qnrm"))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id",
+            F.col(id_col),
+            F.round("__cos", 6).alias("cosine"),
+            F.round(approx, 6).alias("approx"),
+            "rank",
+        )
+    )
+
+
+def _search(
+    a: DataFrame,
+    q: DataFrame,
+    code: _Code | None,
+    *,
+    id_col: str,
+    k: int,
+    key: str | None = None,
+    distinct: bool = False,
+) -> DataFrame:
+    """One ANN search over coarse-staged sides ``a``/``q`` (joined on
+    ``key``): encode both with ``code``, score the pairs and return
+    the top-k — directly for the raw code, else the exact re-rank of
+    the ``rerank·k`` best by code. A None code (training saw no
+    vectors: an empty corpus) yields the schema-stable empty result.
+    ``distinct`` (raw code only) ranks distinct ids only."""
+    if code is None:
+        return _empty_pq_result(a, q, id_col)
+    a, q = code.corpus(a, id_col, key), code.query(q, key)
+    if code.rerank is not None:
+        return _rerank(
+            _candidates(a, q, code, id_col, key, code.rerank * k, "__cr"),
+            id_col, k, code.approx,
+        )
+    top = _candidates(a, q, code, id_col, key, k, "rank", distinct=distinct)
+    if distinct:
+        top = top.dropDuplicates(["query_id", id_col])
+    return top.select(
+        "query_id", F.col(id_col), F.round("__cos", 6).alias("cosine"), "rank"
+    )
+
 
 def cosine_topk(
     vectors: DataFrame,
@@ -263,37 +518,14 @@ def cosine_topk(
     Output: (query_id, vec_id, cosine, rank), rank 1..k by (cosine desc,
     vec_id asc); the query vector itself is excluded.
 
-    Scale: broadcast the (small) query side; score distributed over the
-    vector table's partitions; two-phase top-k keeps the global stage at
+    Coarse ``none`` × code ``raw``. Scale: broadcast the (small) query
+    side; score distributed over the vector table's partitions;
+    two-phase top-k keeps the global stage at
     ``n_queries × k × n_partitions`` rows."""
-    q = _with_norm(
-        queries.select(F.col(id_col).alias("query_id"), vec_col), vec_col
-    ).select("query_id", F.col("__v").alias("__qv"), F.col("__nrm").alias("__qn"))
-    v = _corpus_norm(vectors, id_col, vec_col)
-    cos = F.expr(f"{_dot('__v', '__qv')}") / (F.col("__nrm") * F.col("__qn"))
-    scored = (
-        v.crossJoin(broadcast(q))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .withColumn("__cos", cos)
-    )
-    w_local = Window.partitionBy("query_id", "__pid").orderBy(
-        F.col("__cos").desc(), F.col(id_col).asc()
-    )
-    w_global = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("__pid", F.spark_partition_id())
-        .withColumn("__r", F.row_number().over(w_local))
-        .filter(F.col("__r") <= k)
-        .withColumn("rank", F.row_number().over(w_global))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col(id_col),
-            F.round("__cos", 6).alias("cosine"),
-            "rank",
-        )
+    return _search(
+        _corpus_norm(vectors, id_col, vec_col),
+        _query_norm(queries, id_col, vec_col),
+        _raw_code(), id_col=id_col, k=k,
     )
 
 
@@ -375,24 +607,22 @@ def sq_topk(
 ) -> DataFrame:
     """Approximate cosine top-k via int8 SCALAR QUANTIZATION with exact
     re-rank — the memory-bandwidth tier of the ANN family (Faiss's
-    ``SQ8`` / Milvus ``IVF_SQ8`` storage idea): each vector is encoded
-    as ``round(v_i / s)`` with per-vector scale ``s = max|v_i| / 127``
-    — int8 codes, 4× smaller than float32, 8× smaller than float64 —
-    and candidates are ranked by the QUANTIZED cosine
-    ``(s_a·s_q·Σ qa_i·qq_i) / (‖a‖·‖q‖)``, whose inner sum is pure
-    int64 arithmetic. The top ``rerank·k`` candidates per query are
-    then re-ranked by exact cosine; output (query_id, vec_id, cosine,
-    approx, rank) with rank 1..k by (exact cosine desc, id asc) and
-    ``approx`` the quantized cosine that selected the candidate.
+    ``SQ8`` / Milvus ``IVF_SQ8`` storage idea), coarse ``none`` × code
+    ``sq``: each vector is encoded as ``round(v_i / s)`` with per-vector
+    scale ``s = max|v_i| / 127`` — int8 codes, 4× smaller than float32,
+    8× smaller than float64 — and candidates are ranked by the
+    QUANTIZED cosine ``(s_a·s_q·Σ qa_i·qq_i) / (‖a‖·‖q‖)``, whose inner
+    sum is pure int64 arithmetic. The top ``rerank·k`` candidates per
+    query are then re-ranked by exact cosine; output (query_id,
+    vec_id, cosine, approx, rank) with rank 1..k by (exact cosine desc,
+    id asc) and ``approx`` the quantized cosine that selected the
+    candidate.
 
-    Why int8 and not PQ here: product quantization ranks by summed
-    FLOAT table lookups, whose cross-engine bit-reproducibility would
-    need the same pinned-order discipline per subspace; the int8 inner
-    sum is a single exact integer, so the whole candidate-selection
-    order is bit-identical in the DuckDB oracle by construction (the
-    unigram_lm integer-sums recipe applied to ANN). Rounding is
-    ``floor(x + 0.5)`` — half-up in BOTH engines, unlike banker's
-    ``round()`` (a known cross-engine hazard class).
+    The int8 inner sum is a single exact integer, so the whole
+    candidate-selection order is bit-identical in the DuckDB oracle by
+    construction (the unigram_lm integer-sums recipe applied to ANN).
+    Rounding is ``floor(x + 0.5)`` — half-up in BOTH engines, unlike
+    banker's ``round()`` (a known cross-engine hazard class).
 
     Scale shape: encoding is one narrow projection (codes live
     alongside the float vector here; a production table would persist
@@ -403,59 +633,11 @@ def sq_topk(
     float path is memory-bound — and the exact float dot runs only on
     the ``rerank·k`` survivors per query. Quality: recall@k vs the
     exact baseline is pinned in tests (int8 keeps ~1e-2 relative
-    score error, far inside top-k margins on real corpora).
-
-    The reference repo has no ANN at all; this extends the
-    BASELINE.json ANN tier (brute/LSH/IVF/IVF-trained) with the
-    quantized-storage rung."""
-    q = _sq_encode(
-        _with_norm(
-            queries.select(F.col(id_col).alias("query_id"), vec_col), vec_col
-        ),
-        "__q", ["query_id"],
-    )
-    v = _sq_encode(
+    score error, far inside top-k margins on real corpora)."""
+    return _search(
         _corpus_norm(vectors, id_col, vec_col),
-        "__a", [id_col],
-    )
-    appx = (
-        (F.col("__as2") * F.col("__qs2"))
-        * F.expr(_int_dot("__ac", "__qc")).cast("double")
-    ) / (F.col("__anrm") * F.col("__qnrm"))
-    scored = (
-        v.crossJoin(broadcast(q))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .withColumn("__appx", appx)
-    )
-    w_local = Window.partitionBy("query_id", "__pid").orderBy(
-        F.col("__appx").desc(), F.col(id_col).asc()
-    )
-    w_cand = Window.partitionBy("query_id").orderBy(
-        F.col("__appx").desc(), F.col(id_col).asc()
-    )
-    r = rerank * k
-    cand = (
-        scored.withColumn("__pid", F.spark_partition_id())
-        .withColumn("__r", F.row_number().over(w_local))
-        .filter(F.col("__r") <= r)
-        .withColumn("__cr", F.row_number().over(w_cand))
-        .filter(F.col("__cr") <= r)
-    )
-    cos = F.expr(_dot("__av", "__qv")) / (F.col("__anrm") * F.col("__qnrm"))
-    w_final = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col(id_col).asc()
-    )
-    return (
-        cand.withColumn("__cos", cos)
-        .withColumn("rank", F.row_number().over(w_final))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col(id_col),
-            F.round("__cos", 6).alias("cosine"),
-            F.round("__appx", 6).alias("approx"),
-            "rank",
-        )
+        _query_norm(queries, id_col, vec_col),
+        _sq_code(rerank), id_col=id_col, k=k,
     )
 
 
@@ -533,16 +715,16 @@ def _pq_lit_arr(xs: list[float]) -> str:
 
 
 def _pq_argmin_expr(
-    cents_m: dict[int, list[float]], off: int, sub: int
+    cents_m: dict[int, list[float]], off: int, sub: int, src: str = "__nv"
 ) -> str:
     """Spark expression: the L2-argmin code for subspace slice
-    [off+1, off+sub] of ``__nv`` against literal centroids — min
-    squared distance, ties to the LOWEST code (struct min compares the
-    distance field first, then the code field)."""
+    [off+1, off+sub] of the unit-vector column ``src`` against literal
+    centroids — min squared distance, ties to the LOWEST code (struct
+    min compares the distance field first, then the code field)."""
     structs = []
     for j in sorted(cents_m):
         dist = (
-            f"aggregate(zip_with(slice(__nv, {off + 1}, {sub}), "
+            f"aggregate(zip_with(slice({src}, {off + 1}, {sub}), "
             f"{_pq_lit_arr(cents_m[j])}, (x, y) -> (x - y) * (x - y)), "
             f"0D, (acc, v) -> acc + v)"
         )
@@ -748,7 +930,7 @@ def _pq_train(
             # top-k of an EMPTY corpus is empty, not an error — a
             # 100 TB pipeline hits empty partitions/slices routinely
             # and the DuckDB twin's CTE k-means over zero rows also
-            # yields zero rows (r09 empty-input sweep). Only the
+            # yields zero rows. Only the
             # non-empty-but-unseedable corpus (every id < n_codes
             # NULL/zero-norm: a mis-id'd corpus) stays LOUD, matching
             # train_centroids' contract.
@@ -811,27 +993,30 @@ def _pq_codebooks(
     sparse whenever ids below n_codes are missing or norm-dropped —
     but the scoring path indexes the per-query LUT POSITIONALLY
     (element_at), so a sparse label would read past the array (found
-    by the r09 vectors fuzz pass, seed 9501, promoted into the
-    committed fixtures). Relabel to dense 0..len-1 in sorted-label
-    order: order-preserving, so the argmin tie-break (lowest code)
-    matches the oracle's lowest-seed-id tie-break exactly — the oracle
-    keeps natural labels and joins codes to LUT by label, never
-    positionally. Grid encoding int(floor(c·2^20 + 0.5)) is exact on
-    identical cross-engine doubles."""
-    sub = dim // m_sub
+    by the vectors fuzz pass, seed 9501, promoted into the committed
+    fixtures). Relabel to dense 0..len-1 in sorted-label order:
+    order-preserving, so the argmin tie-break (lowest code) matches the
+    oracle's lowest-seed-id tie-break exactly — the oracle keeps
+    natural labels and joins codes to LUT by label, never
+    positionally."""
     cents = _pq_train(v, id_col, dim, m_sub, n_codes, n_iters)
     cents = {
         m: {pos: cents[m][j] for pos, j in enumerate(sorted(cents[m]))}
         for m in cents
     }
-    cint = {
+    return cents, _pq_grid(cents)
+
+
+def _pq_grid(cents: dict) -> dict:
+    """Grid-encode codebooks: int(floor(c·2^20 + 0.5)) per component —
+    exact on identical cross-engine doubles."""
+    return {
         m: {
             j: [int(math.floor(c * PQ_GRID + 0.5)) for c in cv]
             for j, cv in cents[m].items()
         }
         for m in cents
     }
-    return cents, cint
 
 
 def train_pq_codebooks(
@@ -844,28 +1029,27 @@ def train_pq_codebooks(
     n_codes: int = 8,
     n_iters: int = 2,
 ) -> tuple[dict, dict]:
-    """Public train-once entry for the PQ codebooks (r10) — the
+    """Public train-once entry for the PQ codebooks — the
     :func:`train_centroids` convention applied to product
     quantization: train on a reference corpus, freeze, and feed the
-    returned ``(cents, cint)`` pair to :func:`pq_topk` /
-    :func:`ivf_pq_topk` (their ``_cb``) or
-    :meth:`IvfPqIndex.ingest` (``pq_codebooks=``). Training is the
-    deterministic integer-mean k-means of :func:`_pq_train`, so two
-    runs over the same corpus are bit-identical — which is what makes
-    "index built incrementally under a frozen codebook" equal
-    "one-shot plan fed the same codebook" exactly."""
+    returned ``(cents, cint)`` pair to :meth:`IvfPqIndex.ingest`
+    (``pq_codebooks=``) or to the pq code stage (:func:`_pq_code`).
+    Training is the deterministic integer-mean k-means of
+    :func:`_pq_train`, so two runs over the same corpus are
+    bit-identical — which is what makes "index built incrementally
+    under a frozen codebook" equal "one-shot plan fed the same
+    codebook" exactly."""
     if dim % m_sub:
         raise ValueError(
             f"train_pq_codebooks: dim {dim} not divisible by m_sub {m_sub}"
         )
-    nv = "transform(__v, x -> x / __nrm)"
     v = pin(
-        _require_dim(
+        _pq_prep(
             _with_norm(
                 spread(vectors, id_col).select(id_col, vec_col), vec_col
             ),
             dim, "train_pq_codebooks",
-        ).withColumn("__nv", F.expr(nv))
+        )
     )
     try:
         return _pq_codebooks(v, id_col, dim, m_sub, n_codes, n_iters)
@@ -873,24 +1057,25 @@ def train_pq_codebooks(
         v.unpersist()
 
 
-def _empty_pq_result(
-    vectors: DataFrame, queries: DataFrame, id_col: str
-) -> DataFrame:
+def _empty_pq_result(a: DataFrame, q: DataFrame, id_col: str) -> DataFrame:
     """Schema-stable empty result for the PQ family on an EMPTY corpus
     — the same five columns the scored path emits, id types mirrored
-    from the inputs so downstream unions/joins see no difference."""
-    qt = dict(queries.dtypes).get(id_col, "bigint")
-    vt = dict(vectors.dtypes).get(id_col, "bigint")
-    return vectors.sparkSession.createDataFrame(
+    from the corpus side ``a`` and the query side ``q`` so downstream
+    unions/joins see no difference."""
+    qt = dict(q.dtypes).get("query_id", "bigint")
+    vt = dict(a.dtypes).get(id_col, "bigint")
+    return a.sparkSession.createDataFrame(
         [],
         f"query_id {qt}, {id_col} {vt}, cosine double, approx double, "
         "rank int",
     )
 
 
-def _pq_codes_col(cents: dict, m_sub: int, sub: int):
+def _pq_codes_col(cents: dict, m_sub: int, sub: int, src: str = "__nv"):
+    """The ``m_sub`` per-subspace argmin codes of unit-vector column
+    ``src`` (``__nv``, or the residual ``__res``)."""
     return F.array(*[
-        F.expr(_pq_argmin_expr(cents[m], m * sub, sub))
+        F.expr(_pq_argmin_expr(cents[m], m * sub, sub, src))
         for m in range(m_sub)
     ])
 
@@ -924,6 +1109,85 @@ def _pq_iscore(m_sub: int):
     )
 
 
+# the unit vector v̂ of a _with_norm side, and its residual r = v̂ − ĉ
+# against its assigned UNIT centroid (an ivf side kept with __cv/__cn)
+_NV = "transform(__v, x -> x / __nrm)"
+_RES = "zip_with(__nv, transform(__cv, c -> c / __cn), (x, y) -> x - y)"
+
+
+def _pq_prep(
+    df: DataFrame, dim: int, op: str, *, query: bool = False
+) -> DataFrame:
+    """A side's PQ inputs: the dim guard, the unit vector ``__nv`` and,
+    for a query side, its fixed-grid integer encoding ``__qi``."""
+    df = _require_dim(df, dim, op).withColumn("__nv", F.expr(_NV))
+    return df.withColumn("__qi", F.expr(_pq_qi_expr())) if query else df
+
+
+def _pq_code(
+    cb: tuple[dict, dict],
+    dim: int,
+    m_sub: int,
+    rerank: int,
+    *,
+    residual: bool = False,
+) -> _Code | None:
+    """The pq code over trained codebooks ``cb`` — None when training
+    saw no vectors. A corpus vector stores ``m_sub`` codes of ``__nv``
+    (of the residual ``__res`` when ``residual``), a query carries its
+    per-subspace integer lookup table, and a pair scores by the int64
+    ADC sum ``__is`` (``approx`` = ``__is / 2^40``). The residual code
+    adds the exact per-(query, probed cell) dot ``__cd = q̂·ĉ`` and
+    ranks by ``__adc = __cd + __is / 2^40``, which it also reports."""
+    cents, cint = cb
+    if not cents:
+        return None
+    sub = dim // m_sub
+    score = [("__is", _pq_iscore(m_sub))]
+    approx = F.col("__is").cast("double") / F.lit(float(PQ_GRID) ** 2)
+    cd = []
+    if residual:
+        cd = [F.expr(_dot("__nv", "transform(__cv, c -> c / __cn)"))
+              .alias("__cd")]
+        score.append(("__adc", F.col("__cd") + approx))
+        approx = F.col("__adc")
+    src = "__res" if residual else "__nv"
+    return _Code(
+        lambda a, idc, key: a.select(
+            idc,
+            *_keys(key),
+            F.col("__v").alias("__av"),
+            F.col("__nrm").alias("__anrm"),
+            _pq_codes_col(cents, m_sub, sub, src).alias("__codes"),
+        ),
+        lambda q, key: q.select(
+            "query_id",
+            *_keys(key),
+            F.col("__v").alias("__qv"),
+            F.col("__nrm").alias("__qnrm"),
+            *cd,
+            F.expr(_pq_lut_expr(cint, m_sub, sub)).alias("__lut"),
+        ),
+        score,
+        approx,
+        rerank,
+    )
+
+
+def _res_codebooks(
+    a: DataFrame, id_col: str, dim: int, m_sub: int, n_codes: int,
+    n_iters: int,
+) -> tuple[dict, dict]:
+    """Pooled-residual PQ codebooks of an ivf corpus side carrying
+    ``__res``: :func:`_pq_train` reads (id, __nv), so it is fed the
+    residuals under that name — same seeding (id < n_codes), same
+    exact-integer means, same DuckDB CTE twin."""
+    return _pq_codebooks(
+        a.select(F.col(id_col), F.col("__res").alias("__nv")),
+        id_col, dim, m_sub, n_codes, n_iters,
+    )
+
+
 def pq_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -936,27 +1200,25 @@ def pq_topk(
     n_iters: int = 2,
     k: int = 5,
     rerank: int = 4,
-    _cb: tuple[dict, dict] | None = None,
-    _base: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k via PRODUCT QUANTIZATION with exact
-    re-rank — the highest-compression rung of the ANN family (Jégou,
-    Douze, Schmid TPAMI'11, "Product Quantization for Nearest Neighbor
-    Search"; Faiss ``PQ`` / Milvus ``IVF_PQ`` storage): the NORMALIZED
-    vector is split into ``m_sub`` subspaces, each quantized to one of
-    ``n_codes`` per-subspace centroids (deterministic L2 k-means via
-    :func:`_pq_train`), so a vector stores ``m_sub`` small codes —
-    at (8 subspaces × 1 byte) per 64-dim vector that is 32× smaller
-    than float32 — and the approximate cosine is the ADC sum of
-    ``m_sub`` table lookups. The top ``rerank·k`` candidates per query
-    re-rank by exact cosine; output (query_id, id, cosine, approx,
-    rank), rank 1..k by (exact cosine desc, id asc).
+    re-rank — the highest-compression rung of the ANN family, coarse
+    ``none`` × code ``pq`` (Jégou, Douze, Schmid TPAMI'11, "Product
+    Quantization for Nearest Neighbor Search"; Faiss ``PQ`` / Milvus
+    ``IVF_PQ`` storage): the NORMALIZED vector is split into ``m_sub``
+    subspaces, each quantized to one of ``n_codes`` per-subspace
+    centroids (deterministic L2 k-means via :func:`_pq_train`), so a
+    vector stores ``m_sub`` small codes — at (8 subspaces × 1 byte)
+    per 64-dim vector that is 32× smaller than float32 — and the
+    approximate cosine is the ADC sum of ``m_sub`` table lookups. The
+    top ``rerank·k`` candidates per query re-rank by exact cosine;
+    output (query_id, id, cosine, approx, rank), rank 1..k by (exact
+    cosine desc, id asc).
 
-    Bit-exactness — the open challenge in :func:`sq_topk`'s design
-    note ("PQ ranks by summed FLOAT table lookups") — is solved by a
-    FIXED INTEGER GRID: centroid components and query components are
-    both encoded as ``floor(x · 2^20 + 0.5)`` (exact: ‖v̂‖ = 1 bounds
-    every component to [−1, 1], the power-of-two scaling is
+    Bit-exactness — PQ ranks by summed FLOAT table lookups — is solved
+    by a FIXED INTEGER GRID: centroid components and query components
+    are both encoded as ``floor(x · 2^20 + 0.5)`` (exact: ‖v̂‖ = 1
+    bounds every component to [−1, 1], the power-of-two scaling is
     rounding-free, and half-up floor matches across engines), each
     lookup-table entry is a pure int64 dot of grid codes, and the ADC
     score is an int64 SUM of table entries — order-independent, so the
@@ -980,91 +1242,17 @@ def pq_topk(
     assertion."""
     if dim % m_sub:
         raise ValueError(f"pq_topk: dim {dim} not divisible by m_sub {m_sub}")
-    sub = dim // m_sub
-    nv = "transform(__v, x -> x / __nrm)"
-    # _base: a caller-pinned normalized corpus already carrying __nv
-    # (recall_probe's shared assigned scan) — skips this tier's own pin
-    # of the identical projection; the caller manages its lifetime.
-    v = _base if _base is not None else pin(
-        _require_dim(
-            _corpus_norm(vectors, id_col, vec_col),
-            dim, "pq_topk",
-        ).withColumn("__nv", F.expr(nv))
-    )
-    # _cb: pre-trained codebooks from a caller that scores the SAME
-    # corpus under the same (dim, m_sub, n_codes, n_iters) — recall_probe
-    # trains once and shares between the pq and ivf_pq tiers (the
-    # values are bit-identical to a local train by construction, so
-    # results and the analyzed plan are unchanged; only the redundant
-    # training passes are saved)
-    cents, cint = (
-        _cb if _cb is not None
-        else _pq_codebooks(v, id_col, dim, m_sub, n_codes, n_iters)
-    )
-    if not cents:
-        return _empty_pq_result(vectors, queries, id_col)
-    a = v.select(
-        F.col(id_col),
-        F.col("__v").alias("__av"),
-        F.col("__nrm").alias("__anrm"),
-        _pq_codes_col(cents, m_sub, sub).alias("__codes"),
-    )
-    q = (
-        _require_dim(
-            _with_norm(
-                queries.select(F.col(id_col).alias("query_id"), vec_col),
-                vec_col,
-            ),
-            dim, "pq_topk",
-        )
-        .withColumn("__nv", F.expr(nv))
-        .withColumn("__qi", F.expr(_pq_qi_expr()))
-        .select(
-            "query_id",
-            F.col("__v").alias("__qv"),
-            F.col("__nrm").alias("__qnrm"),
-            F.expr(_pq_lut_expr(cint, m_sub, sub)).alias("__lut"),
-        )
-    )
-    iscore = _pq_iscore(m_sub)
-    scored = (
-        a.crossJoin(broadcast(q))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .withColumn("__is", iscore)
-    )
-    w_local = Window.partitionBy("query_id", "__pid").orderBy(
-        F.col("__is").desc(), F.col(id_col).asc()
-    )
-    w_cand = Window.partitionBy("query_id").orderBy(
-        F.col("__is").desc(), F.col(id_col).asc()
-    )
-    r = rerank * k
-    cand = (
-        scored.withColumn("__pid", F.spark_partition_id())
-        .withColumn("__r", F.row_number().over(w_local))
-        .filter(F.col("__r") <= r)
-        .withColumn("__cr", F.row_number().over(w_cand))
-        .filter(F.col("__cr") <= r)
-    )
-    cos = F.expr(_dot("__av", "__qv")) / (F.col("__anrm") * F.col("__qnrm"))
-    w_final = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col(id_col).asc()
-    )
-    return (
-        cand.withColumn("__cos", cos)
-        .withColumn(
-            "__appx",
-            F.col("__is").cast("double") / F.lit(float(PQ_GRID) ** 2),
-        )
-        .withColumn("rank", F.row_number().over(w_final))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col(id_col),
-            F.round("__cos", 6).alias("cosine"),
-            F.round("__appx", 6).alias("approx"),
-            "rank",
-        )
+    a = pin(_pq_prep(_corpus_norm(vectors, id_col, vec_col), dim, "pq_topk"))
+    return _search(
+        a,
+        _pq_prep(
+            _query_norm(queries, id_col, vec_col), dim, "pq_topk", query=True
+        ),
+        _pq_code(
+            _pq_codebooks(a, id_col, dim, m_sub, n_codes, n_iters),
+            dim, m_sub, rerank,
+        ),
+        id_col=id_col, k=k,
     )
 
 
@@ -1233,51 +1421,16 @@ def lsh_topk(
     n_planes: int = 4,
     k: int = 5,
 ) -> DataFrame:
-    """Approximate top-k: exact cosine re-rank restricted to the query's
-    LSH bucket. May return fewer than k rows per query (bucket-bounded) —
-    that is the approximation. One shuffle on the bucket id."""
-    planes = hyperplanes(dim, n_planes)
-    bucket = _bucket_expr(planes)
-    v = (
-        _require_dim(
-            _corpus_norm(vectors, id_col, vec_col),
-            dim, "lsh_topk",
-        )
-        .withColumn("__bkt", F.expr(bucket))
-        .select(id_col, "__v", "__nrm", "__bkt")
+    """Approximate top-k, coarse ``lsh`` × code ``raw``: exact cosine
+    ranking restricted to the query's LSH bucket. May return fewer than
+    k rows per query (bucket-bounded) — that is the approximation. One
+    shuffle on the bucket id."""
+    a, q = _lsh(
+        _require_dim(_corpus_norm(vectors, id_col, vec_col), dim, "lsh_topk"),
+        _require_dim(_query_norm(queries, id_col, vec_col), dim, "lsh_topk"),
+        dim, n_planes,
     )
-    q = (
-        _require_dim(
-            _with_norm(
-                queries.select(F.col(id_col).alias("query_id"), vec_col), vec_col
-            ),
-            dim, "lsh_topk",
-        )
-        .withColumn("__bkt", F.expr(bucket))
-        .select(
-            "query_id",
-            F.col("__v").alias("__qv"),
-            F.col("__nrm").alias("__qn"),
-            "__bkt",
-        )
-    )
-    cos = F.expr(f"{_dot('__v', '__qv')}") / (F.col("__nrm") * F.col("__qn"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col(id_col).asc()
-    )
-    return (
-        v.join(broadcast(q), "__bkt")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .withColumn("__cos", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col(id_col),
-            F.round("__cos", 6).alias("cosine"),
-            "rank",
-        )
-    )
+    return _search(a, q, _raw_code(), id_col=id_col, k=k, key="__bkt")
 
 
 def oracle_lsh_topk_sql(
@@ -1326,102 +1479,31 @@ def ivf_topk(
     n_probe: int = 2,
     k: int = 5,
     centroids: DataFrame | None = None,
-    _assigned: DataFrame | None = None,
-    _q_assigned: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF (inverted-file) approximate top-k — the second scale path
-    beside :func:`lsh_topk`.
-
-    ``_assigned`` (internal): a caller-pinned corpus assignment
-    (columns ⊇ ``id_col, __v, __nrm, __cell``) computed with the SAME
-    default seeded centroids — :func:`recall_probe` shares one
-    :func:`_cell_assign` pass across its four IVF rungs instead of
-    re-running the crossJoin+window per tier. Values are bit-identical
-    (it IS the same expression); only valid with ``centroids=None``.
-    ``_q_assigned`` (internal, r12): the QUERY-side twin — a
-    caller-pinned probed-cell assignment (columns ⊇ ``query_id, __v,
-    __nrm, __cell``, n_probe rows per query, same seeded centroids and
-    the same :func:`_cell_assign` expressions), shared across the four
-    IVF rungs exactly like ``_assigned``; only valid with
-    ``centroids=None``.
+    """IVF (inverted-file) approximate top-k, coarse ``ivf`` × code
+    ``raw`` — the second scale path beside :func:`lsh_topk`.
 
     Coarse quantizer: the ``n_cells`` lowest-id vectors serve as cell
-    centroids — a deterministic, reproducible seeding; a trained k-means
-    centroid table drops into the same plan without changing its shape.
-    Every vector is assigned to its nearest centroid by cosine (ties to
-    the lowest cell id); each query probes its ``n_probe`` nearest cells
-    and exact-reranks ONLY those cells' vectors.
+    centroids — a deterministic, reproducible seeding — or
+    ``centroids`` (columns ``__cell, __cv, __cn``, e.g. a
+    :func:`train_centroids` codebook) drops into the same plan without
+    changing its shape. Every vector is assigned to its nearest
+    centroid by cosine (ties to the lowest cell id); each query probes
+    its ``n_probe`` nearest cells and exact-ranks ONLY those cells'
+    vectors.
 
-    Scale: centroids are broadcast (bounded by n_cells, like any trained
-    codebook); assignment is a broadcast join + per-vector argmax; the
-    rerank shuffles once on the cell id, and per-cell work is bounded by
-    cell size × queries probing the cell. No all-pairs stage."""
-    # codebook: default deterministic seeding, or a trained table from
-    # :func:`train_centroids` (columns __cell, __cv, __cn) — same plan
-    # shape either way, the codebook is always broadcast
-    cents = broadcast(
-        centroids
-        if centroids is not None
-        else _seed_cells(vectors, id_col, vec_col, n_cells)
+    Scale: centroids are broadcast; assignment is a broadcast join +
+    per-vector argmax; the ranking shuffles once on the cell id, and
+    per-cell work is bounded by cell size × queries probing the cell.
+    No all-pairs stage."""
+    a, q = _ivf(
+        _corpus_norm(vectors, id_col, vec_col),
+        _query_norm(queries, id_col, vec_col),
+        centroids if centroids is not None
+        else _seed_cells(vectors, id_col, vec_col, n_cells),
+        id_col, n_probe,
     )
-    score = F.expr(f"{_dot('__v', '__cv')}") / (F.col("__nrm") * F.col("__cn"))
-
-    def assign(df: DataFrame, id_out: str, rank_limit: int) -> DataFrame:
-        w = Window.partitionBy(id_out).orderBy(
-            F.col("__score").desc(), F.col("__cell").asc()
-        )
-        return (
-            df.crossJoin(cents)
-            .withColumn("__score", score)
-            .withColumn("__cr", F.row_number().over(w))
-            .filter(F.col("__cr") <= rank_limit)
-            .drop("__cv", "__cn", "__score", "__cr")
-        )
-
-    v = (
-        _assigned
-        if _assigned is not None
-        else assign(_corpus_norm(vectors, id_col, vec_col), id_col, 1)
-    ).select(id_col, "__v", "__nrm", "__cell")
-    q = (
-        _q_assigned
-        if _q_assigned is not None
-        else assign(
-            _with_norm(
-                queries.select(F.col(id_col).alias("query_id"), vec_col),
-                vec_col,
-            ).select("query_id", F.col("__v"), F.col("__nrm")),
-            "query_id",
-            n_probe,
-        )
-    ).select(
-        "query_id",
-        F.col("__v").alias("__qv"),
-        F.col("__nrm").alias("__qn"),
-        "__cell",
-    )
-    cos = F.expr(f"{_dot('__v', '__qv')}") / (F.col("__nrm") * F.col("__qn"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col(id_col).asc()
-    )
-    # broadcast the assigned-queries side (n_queries · n_probe rows —
-    # the probe batch is broadcast-sized by the tier contract, exactly
-    # as lsh_topk already hints): without it the initial plan
-    # sort-merge-joins, shuffling the whole assigned CORPUS by __cell
-    # before AQE can convert
-    return (
-        v.join(broadcast(q), "__cell")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .withColumn("__cos", cos)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col(id_col),
-            F.round("__cos", 6).alias("cosine"),
-            "rank",
-        )
-    )
+    return _search(a, q, _raw_code(), id_col=id_col, k=k, key="__cell")
 
 
 def oracle_ivf_topk_sql(
@@ -1487,102 +1569,35 @@ def ivf_sq_topk(
     k: int = 5,
     rerank: int = 4,
     centroids: DataFrame | None = None,
-    _assigned: DataFrame | None = None,
-    _q_assigned: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF × scalar quantization — the production warehouse-ANN shape
-    (Faiss/Milvus ``IVF_SQ8``): the coarse quantizer of
-    :func:`ivf_topk` prunes the search to each query's ``n_probe``
-    nearest cells, and WITHIN the probed cells candidates are ranked
-    by the int8 quantized cosine of :func:`sq_topk` (pure int64 inner
-    sums — candidate order bit-identical in the DuckDB oracle by
-    construction); the top ``rerank·k`` per query are re-ranked by
-    exact cosine. Output (query_id, vec_id, cosine, approx, rank).
+    """IVF × scalar quantization, coarse ``ivf`` × code ``sq`` — the
+    production warehouse-ANN shape (Faiss/Milvus ``IVF_SQ8``): the
+    coarse quantizer of :func:`ivf_topk` prunes the search to each
+    query's ``n_probe`` nearest cells, and WITHIN the probed cells
+    candidates are ranked by the int8 quantized cosine of
+    :func:`sq_topk` (pure int64 inner sums — candidate order
+    bit-identical in the DuckDB oracle by construction); the top
+    ``rerank·k`` per query are re-ranked by exact cosine. Output
+    (query_id, vec_id, cosine, approx, rank).
 
     Why this is the composition that matters at 100 TB: IVF bounds
     WHICH vectors are touched (cell population × probes, never the
     corpus), SQ bounds what touching one COSTS (4× smaller codes —
     the postings actually resident per cell — and an integer
     multiply-add stream instead of float loads); exact math runs only
-    on ``rerank·k`` survivors per query. Both parents' contracts
-    carry over: broadcast codebook + single cell-keyed shuffle from
-    ivf_topk, integer-exact candidate selection from sq_topk.
+    on ``rerank·k`` survivors per query.
 
     ``centroids`` (optional, columns ``__cell, __cv, __cn``) drops a
     :func:`train_centroids` codebook into the same plan, as in
-    :func:`ivf_topk`. ``_assigned``/``_q_assigned``: shared corpus /
-    probed-query assignments, same contracts as :func:`ivf_topk`'s."""
-    cents = broadcast(
-        centroids
-        if centroids is not None
-        else _seed_cells(vectors, id_col, vec_col, n_cells)
+    :func:`ivf_topk`."""
+    a, q = _ivf(
+        _corpus_norm(vectors, id_col, vec_col),
+        _query_norm(queries, id_col, vec_col),
+        centroids if centroids is not None
+        else _seed_cells(vectors, id_col, vec_col, n_cells),
+        id_col, n_probe,
     )
-    score = F.expr(f"{_dot('__v', '__cv')}") / (F.col("__nrm") * F.col("__cn"))
-
-    def assign(df: DataFrame, id_out: str, rank_limit: int) -> DataFrame:
-        w = Window.partitionBy(id_out).orderBy(
-            F.col("__score").desc(), F.col("__cell").asc()
-        )
-        return (
-            df.crossJoin(cents)
-            .withColumn("__score", score)
-            .withColumn("__cr", F.row_number().over(w))
-            .filter(F.col("__cr") <= rank_limit)
-            .drop("__cv", "__cn", "__score", "__cr")
-        )
-
-    v = _sq_encode(
-        _assigned.select(id_col, "__v", "__nrm", "__cell")
-        if _assigned is not None
-        else assign(
-            _corpus_norm(vectors, id_col, vec_col),
-            id_col, 1,
-        ),
-        "__a", [id_col, "__cell"],
-    )
-    q = _sq_encode(
-        _q_assigned.select("query_id", "__v", "__nrm", "__cell")
-        if _q_assigned is not None
-        else assign(
-            _with_norm(
-                queries.select(F.col(id_col).alias("query_id"), vec_col),
-                vec_col,
-            ).select("query_id", "__v", "__nrm"),
-            "query_id", n_probe,
-        ),
-        "__q", ["query_id", "__cell"],
-    )
-    appx = (
-        (F.col("__as2") * F.col("__qs2"))
-        * F.expr(_int_dot("__ac", "__qc")).cast("double")
-    ) / (F.col("__anrm") * F.col("__qnrm"))
-    w_cand = Window.partitionBy("query_id").orderBy(
-        F.col("__appx").desc(), F.col(id_col).asc()
-    )
-    # broadcast-sized q side (n_queries · n_probe) — the ivf_topk hint
-    cand = (
-        v.join(broadcast(q), "__cell")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .withColumn("__appx", appx)
-        .withColumn("__cr", F.row_number().over(w_cand))
-        .filter(F.col("__cr") <= rerank * k)
-    )
-    cos = F.expr(_dot("__av", "__qv")) / (F.col("__anrm") * F.col("__qnrm"))
-    w_final = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col(id_col).asc()
-    )
-    return (
-        cand.withColumn("__cos", cos)
-        .withColumn("rank", F.row_number().over(w_final))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col(id_col),
-            F.round("__cos", 6).alias("cosine"),
-            F.round("__appx", 6).alias("approx"),
-            "rank",
-        )
-    )
+    return _search(a, q, _sq_code(rerank), id_col=id_col, k=k, key="__cell")
 
 
 def oracle_ivf_sq_topk_sql(
@@ -1679,137 +1694,52 @@ def ivf_pq_topk(
     n_iters: int = 2,
     k: int = 5,
     rerank: int = 4,
-    _cb: tuple[dict, dict] | None = None,
-    _assigned: DataFrame | None = None,
-    _q_assigned: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF × product quantization — the full production IVF_PQ shape
-    (Faiss ``IVFx,PQy`` / Milvus ``IVF_PQ``): the coarse quantizer of
-    :func:`ivf_topk` prunes each query's search to its ``n_probe``
-    nearest cells, and WITHIN the probed cells candidates are ranked
-    by :func:`pq_topk`'s integer ADC sum (fixed-grid int64 table
-    lookups — candidate order bit-identical in the DuckDB oracle by
-    construction); the top ``rerank·k`` per query re-rank by exact
-    cosine. Output (query_id, vec_id, cosine, approx, rank).
+    """IVF × product quantization, coarse ``ivf`` × code ``pq`` — the
+    full production IVF_PQ shape (Faiss ``IVFx,PQy`` / Milvus
+    ``IVF_PQ``): the coarse quantizer of :func:`ivf_topk` prunes each
+    query's search to its ``n_probe`` nearest cells, and WITHIN the
+    probed cells candidates are ranked by :func:`pq_topk`'s integer ADC
+    sum (fixed-grid int64 table lookups — candidate order bit-identical
+    in the DuckDB oracle by construction); the top ``rerank·k`` per
+    query re-rank by exact cosine. Output (query_id, vec_id, cosine,
+    approx, rank).
 
     The non-residual variant: PQ codebooks are trained on the full
     normalized vectors, not on per-cell residuals (Faiss's default
-    encodes residuals for tighter codes; the non-residual form — what
-    Faiss calls ``IVFPQFastScan``'s layout and many warehouse systems
-    ship — keeps ONE codebook set shared across cells, which is what
-    lets the oracle re-derive training with a single CTE chain and the
-    codes stay valid if a vector migrates cells on retrain).
+    encodes residuals for tighter codes — :func:`ivf_pq_res_topk`; the
+    non-residual form — what Faiss calls ``IVFPQFastScan``'s layout and
+    many warehouse systems ship — keeps ONE codebook set shared across
+    cells, which is what lets the oracle re-derive training with a
+    single CTE chain and the codes stay valid if a vector migrates
+    cells on retrain).
 
     At 100 TB this is the endgame composition: IVF bounds WHICH
     vectors are touched (cell population × probes), PQ bounds what
     touching one COSTS — ``m_sub`` bytes of codes per vector (32×
     smaller than float32 at dim 64) and ``m_sub`` integer table
-    lookups per pair, with exact math only on rerank·k survivors.
-    Both parents' contracts carry over: broadcast coarse codebook +
-    single cell-keyed shuffle from ivf_topk, integer-exact candidate
-    selection from pq_topk; converges to :func:`ivf_topk` at full
-    rerank (pinned in tests)."""
+    lookups per pair, with exact math only on rerank·k survivors;
+    converges to :func:`ivf_topk` at full rerank (pinned in tests)."""
     if dim % m_sub:
         raise ValueError(
             f"ivf_pq_topk: dim {dim} not divisible by m_sub {m_sub}"
         )
-    sub = dim // m_sub
-    cents = broadcast(_seed_cells(vectors, id_col, vec_col, n_cells))
-    score = F.expr(f"{_dot('__v', '__cv')}") / (F.col("__nrm") * F.col("__cn"))
-
-    def assign(df: DataFrame, id_out: str, rank_limit: int) -> DataFrame:
-        w = Window.partitionBy(id_out).orderBy(
-            F.col("__score").desc(), F.col("__cell").asc()
-        )
-        return (
-            df.crossJoin(cents)
-            .withColumn("__score", score)
-            .withColumn("__cr", F.row_number().over(w))
-            .filter(F.col("__cr") <= rank_limit)
-            .drop("__cv", "__cn", "__score", "__cr")
-        )
-
-    nv = "transform(__v, x -> x / __nrm)"
-    # _assigned: a caller-pinned corpus assignment carrying __nv
-    # (recall_probe's shared _cell_assign pass, same seeded centroids) —
-    # skips both this tier's own base pin and its corpus-side
-    # crossJoin+window; bit-identical values, caller manages lifetime.
-    base = _assigned if _assigned is not None else pin(
-        _require_dim(
-            _corpus_norm(vectors, id_col, vec_col),
-            dim, "ivf_pq_topk",
-        ).withColumn("__nv", F.expr(nv))
+    a = pin(
+        _pq_prep(_corpus_norm(vectors, id_col, vec_col), dim, "ivf_pq_topk")
     )
-    pq_cents, cint = (
-        _cb if _cb is not None
-        else _pq_codebooks(base, id_col, dim, m_sub, n_codes, n_iters)
+    cb = _pq_codebooks(a, id_col, dim, m_sub, n_codes, n_iters)
+    a, q = _ivf(
+        a,
+        _pq_prep(
+            _query_norm(queries, id_col, vec_col), dim, "ivf_pq_topk",
+            query=True,
+        ),
+        _seed_cells(vectors, id_col, vec_col, n_cells), id_col, n_probe,
+        carry=("__qi",),
     )
-    if not pq_cents:
-        return _empty_pq_result(vectors, queries, id_col)
-    a = (
-        base if _assigned is not None else assign(base, id_col, 1)
-    ).select(
-        F.col(id_col),
-        F.col("__cell"),
-        F.col("__v").alias("__av"),
-        F.col("__nrm").alias("__anrm"),
-        _pq_codes_col(pq_cents, m_sub, sub).alias("__codes"),
-    )
-    q = (
-        # shared probed-query assignment (recall_probe, r12): carries
-        # __qi already — same expressions, bit-identical values
-        _q_assigned.select("query_id", "__cell", "__v", "__nrm", "__qi")
-        if _q_assigned is not None
-        else assign(
-            _require_dim(
-                _with_norm(
-                    queries.select(F.col(id_col).alias("query_id"), vec_col),
-                    vec_col,
-                ),
-                dim, "ivf_pq_topk",
-            )
-            .withColumn("__nv", F.expr(nv))
-            .withColumn("__qi", F.expr(_pq_qi_expr()))
-            .select("query_id", "__v", "__nrm", "__qi"),
-            "query_id", n_probe,
-        )
-    ).select(
-        "query_id",
-        "__cell",
-        F.col("__v").alias("__qv"),
-        F.col("__nrm").alias("__qnrm"),
-        F.expr(_pq_lut_expr(cint, m_sub, sub)).alias("__lut"),
-    )
-    w_cand = Window.partitionBy("query_id").orderBy(
-        F.col("__is").desc(), F.col(id_col).asc()
-    )
-    # broadcast-sized q side (n_queries · n_probe) — the ivf_topk hint
-    cand = (
-        a.join(broadcast(q), "__cell")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .withColumn("__is", _pq_iscore(m_sub))
-        .withColumn("__cr", F.row_number().over(w_cand))
-        .filter(F.col("__cr") <= rerank * k)
-    )
-    cos = F.expr(_dot("__av", "__qv")) / (F.col("__anrm") * F.col("__qnrm"))
-    w_final = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col(id_col).asc()
-    )
-    return (
-        cand.withColumn("__cos", cos)
-        .withColumn(
-            "__appx",
-            F.col("__is").cast("double") / F.lit(float(PQ_GRID) ** 2),
-        )
-        .withColumn("rank", F.row_number().over(w_final))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col(id_col),
-            F.round("__cos", 6).alias("cosine"),
-            F.round("__appx", 6).alias("approx"),
-            "rank",
-        )
+    return _search(
+        a, q, _pq_code(cb, dim, m_sub, rerank), id_col=id_col, k=k,
+        key="__cell",
     )
 
 
@@ -1972,7 +1902,7 @@ def semantic_decontaminate(
     c = _with_norm(
         spread(corpus, id_col).select(id_col, vec_col), vec_col
     ).select(id_col, "__v", "__nrm")
-    cos = F.expr(_dot("__v", "__ev")) / (F.col("__nrm") * F.col("__en"))
+    cos = _cos("__v", "__ev", "__nrm", "__en")
     pairs = (
         c.crossJoin(broadcast(e))
         .withColumn("__raw", cos)
@@ -2059,12 +1989,11 @@ def recall_probe(
     """Measured recall@k of the approximate tiers against the exact
     baseline, as a query: for each approximate method, the fraction of
     exact top-k (query, neighbor) pairs it also returns. Output one row
-    per method: (method, hits, possible, recall). Since r08 the probe
-    covers lsh, ivf, sq (int8 scalar quantization), and ivf_sq (the
-    IVF_SQ8 composition); r09 adds pq (product quantization, 32×
-    compression) and ivf_pq (the production IVF_PQ composite); r11
-    adds ivf_pq_res (residual encoding, the full Faiss formulation) —
-    seven rungs, so every step of the
+    per method: (method, hits, possible, recall), over seven rungs —
+    lsh, ivf, sq (int8 scalar quantization), ivf_sq (the IVF_SQ8
+    composition), pq (product quantization, 32× compression), ivf_pq
+    (the production IVF_PQ composite) and ivf_pq_res (residual
+    encoding, the full Faiss formulation) — so every step of the
     accuracy/cost ladder carries a driver-verified quality number. The
     synthetic corpus is PQ's worst case (no cluster structure for the
     per-subspace codebooks to exploit), which is exactly why its
@@ -2074,147 +2003,77 @@ def recall_probe(
     seeding / integer-exact quantized ranks / tie-breaks), so recall
     itself is deterministic and DuckDB-reproducible — the quality of
     the approximate tier becomes a driver-verified number instead of
-    an asserted one."""
-    # ONE shared normalized corpus scan for the exact baseline and all
-    # seven approximate tiers (r11): every tier used to build its own
-    # spread + normalize subtree over the raw corpus — eight identical
-    # scans, eight spread Exchanges, in one plan. The pinned base is
-    # detected by each tier via _corpus_norm/_seed_cells and reused
-    # as-is; values are bit-identical (it IS the same expression). The
-    # pin feeds the RETURNED plan's lineage, so it cannot be released
-    # here — bound its lifetime with pin_scope() in long-lived
-    # sessions (the unigram_lm cache contract).
+    an asserted one.
+
+    Each rung composes the search pipeline's stages over inputs built
+    ONCE, every value bit-identical to the standalone tier's (same
+    expressions, same seeded codebook, same tie-breaks): one pinned
+    normalized corpus scan feeds the exact baseline and every rung;
+    one pinned ivf assignment per side, carrying every code's inputs
+    (unit vectors, the queries' integer encoding, the assigned
+    centroid and the corpus residual), feeds the four IVF rungs; the
+    pq and ivf_pq rungs share one codebook training. Empty-seed
+    corpora stay bit-identical too: the shared assignment is empty
+    exactly when each tier's own would be. The pins feed the RETURNED
+    plan's lineage, so they cannot be released here — bound their
+    lifetime with pin_scope() in long-lived sessions (the unigram_lm
+    cache contract)."""
+    op = "recall_probe"
     vn = pin(_corpus_norm(vectors, id_col, vec_col))
-    exact = cosine_topk(
-        vn, queries, id_col=id_col, vec_col=vec_col, k=k
-    ).select("query_id", id_col)
+    qn = _query_norm(queries, id_col, vec_col)
+    exact = pin(
+        _search(vn, qn, _raw_code(), id_col=id_col, k=k)
+        .select("query_id", id_col)
+    )
+    lsh_a, lsh_q = _lsh(
+        _require_dim(vn, dim, op), _require_dim(qn, dim, op), dim, n_planes
+    )
+    # the pq rung trains on and scores the full corpus — NOT the
+    # assigned side, whose rows vanish when the seed cells are empty
+    pq_a, pq_q = _pq_prep(vn, dim, op), _pq_prep(qn, dim, op, query=True)
+    va, qa = _ivf(
+        pq_a, pq_q, _seed_cells(vn, id_col, vec_col, n_cells), id_col,
+        n_probe, carry=("__nv", "__qi"), keep_centroid=True,
+    )
+    va, qa = pin(va.withColumn("__res", F.expr(_RES))), pin(qa)
+    # the shared (pq/ivf_pq) training and the residual rung's training
+    # are independent deterministic jobs — overlap their
+    # driver⇄cluster round trips (guide §2.6). The residual codebooks
+    # cannot be shared: they quantize residuals, and the measured gap
+    # between ivf_pq and ivf_pq_res IS the answer to "is residual
+    # coding worth the re-encode-on-retrain coupling?".
+    cb, res_cb = run_build_steps(
+        lambda: _pq_codebooks(pq_a, id_col, dim, pq_m_sub, pq_codes, pq_iters),
+        lambda: _res_codebooks(va, id_col, dim, pq_m_sub, pq_codes, pq_iters),
+    )
+    pq = _pq_code(cb, dim, pq_m_sub, pq_rerank)
+    res = _pq_code(res_cb, dim, pq_m_sub, pq_rerank, residual=True)
+    rung = functools.partial(_search, id_col=id_col, k=k)
+    rungs = {
+        "lsh": rung(lsh_a, lsh_q, _raw_code(), key="__bkt"),
+        "ivf": rung(va, qa, _raw_code(), key="__cell"),
+        "sq": rung(vn, qn, _sq_code(rerank)),
+        "ivf_sq": rung(va, qa, _sq_code(rerank), key="__cell"),
+        "pq": rung(pq_a, pq_q, pq),
+        "ivf_pq": rung(va, qa, pq, key="__cell"),
+        "ivf_pq_res": rung(va, qa, res, key="__cell"),
+    }
 
-    # ONE shared corpus cell assignment for the four IVF rungs (r11
-    # optimization round, wave 6): ivf, ivf_sq, ivf_pq and ivf_pq_res
-    # each assigned the corpus with the SAME seeded centroids — four
-    # identical corpus-wide crossJoin+window passes in one plan. The
-    # shared pass carries the centroid columns and __nv/__res so every
-    # rung's projection (plain, int8 codes, PQ codes, residual codes)
-    # derives from it; values are bit-identical (same expressions,
-    # same tie-breaks). Empty-seed corpora stay bit-identical too: the
-    # shared assignment is empty exactly when each tier's own would be.
-    nv = "transform(__v, x -> x / __nrm)"
-    res = (
-        "zip_with(__nv, transform(__cv, c -> c / __cn), (x, y) -> x - y)"
-    )
-    va = pin(
-        _cell_assign(
-            _require_dim(vn, dim, "recall_probe").withColumn(
-                "__nv", F.expr(nv)
-            ),
-            broadcast(_seed_cells(vn, id_col, vec_col, n_cells)),
-            id_col, 1, keep_centroid=True,
-        ).withColumn("__res", F.expr(res))
-    )
-    # ONE shared probed-cell assignment for the four IVF rungs' QUERY
-    # side (r12 optimization round) — the query-side twin of `va`:
-    # ivf, ivf_sq, ivf_pq and ivf_pq_res each assigned the probe
-    # queries to their n_probe nearest cells with the SAME seeded
-    # centroids — four identical crossJoin+window chains in one plan.
-    # The shared pass carries __nv/__qi (the PQ rungs' integer query
-    # encoding) and __cv/__cn (the residual rung's coarse ADC term);
-    # every rung projects its tier columns from it. Values are
-    # bit-identical (same expressions, same tie-breaks); empty-seed
-    # corpora stay bit-identical too (the shared assignment is empty
-    # exactly when each tier's own would be).
-    qa = pin(
-        _cell_assign(
-            _require_dim(
-                _with_norm(
-                    queries.select(F.col(id_col).alias("query_id"), vec_col),
-                    vec_col,
-                ),
-                dim, "recall_probe",
-            )
-            .withColumn("__nv", F.expr(nv))
-            .withColumn("__qi", F.expr(_pq_qi_expr())),
-            broadcast(_seed_cells(vn, id_col, vec_col, n_cells)),
-            "query_id", n_probe, keep_centroid=True,
-        )
-    )
-
-    lsh = lsh_topk(
-        vn, queries, id_col=id_col, vec_col=vec_col, dim=dim,
-        n_planes=n_planes, k=k,
-    )
-    ivf = ivf_topk(
-        vn, queries, id_col=id_col, vec_col=vec_col, n_cells=n_cells,
-        n_probe=n_probe, k=k, _assigned=va, _q_assigned=qa,
-    )
-    sq = sq_topk(
-        vn, queries, id_col=id_col, vec_col=vec_col, k=k,
-        rerank=rerank,
-    )
-    ivf_sq = ivf_sq_topk(
-        vn, queries, id_col=id_col, vec_col=vec_col, n_cells=n_cells,
-        n_probe=n_probe, k=k, rerank=rerank, _assigned=va, _q_assigned=qa,
-    )
-    # the pq and ivf_pq tiers train IDENTICAL codebooks (same corpus,
-    # same dim/m_sub/n_codes/n_iters; ivf_pq is the non-residual
-    # variant precisely so codebooks are cell-independent) — train
-    # once here and share, saving a full redundant training pass per
-    # probe (measured ~3 s of the probe's 8 s at sf0.1). The training
-    # frame is a projection over the shared pinned base — NOT the
-    # assigned pass, whose rows vanish when the seed cells are empty
-    # while pq still scores the full corpus.
-    pq_base = _require_dim(vn, dim, "pq_topk").withColumn(
-        "__nv", F.expr(nv)
-    )
-
-    def train_shared():
-        return _pq_codebooks(
-            pq_base, id_col, dim, pq_m_sub, pq_codes, pq_iters
-        )
-
-    # the shared (pq/ivf_pq) codebook training and the residual tier's
-    # own training chain are independent deterministic jobs — overlap
-    # their driver⇄cluster round trips (guide §2.6). The residual rung
-    # (r11) trains on residuals, so the shared `cb` cannot be reused;
-    # the measured gap between ivf_pq and ivf_pq_res IS the answer to
-    # "is residual coding worth the re-encode-on-retrain coupling?".
-    cb, ivf_pq_res = run_build_steps(
-        train_shared,
-        lambda: ivf_pq_res_topk(
-            vn, queries, id_col=id_col, vec_col=vec_col, dim=dim,
-            n_cells=n_cells, n_probe=n_probe, m_sub=pq_m_sub,
-            n_codes=pq_codes, n_iters=pq_iters, k=k, rerank=pq_rerank,
-            _base=va, _q_assigned=qa,
-        ),
-    )
-    pq = pq_topk(
-        vn, queries, id_col=id_col, vec_col=vec_col, dim=dim,
-        m_sub=pq_m_sub, n_codes=pq_codes, n_iters=pq_iters, k=k,
-        rerank=pq_rerank, _cb=cb, _base=pq_base,
-    )
-    ivf_pq = ivf_pq_topk(
-        vn, queries, id_col=id_col, vec_col=vec_col, dim=dim,
-        n_cells=n_cells, n_probe=n_probe, m_sub=pq_m_sub,
-        n_codes=pq_codes, n_iters=pq_iters, k=k, rerank=pq_rerank, _cb=cb,
-        _assigned=va, _q_assigned=qa,
-    )
-    # Scoring layer: per-tier left-join + single-row aggregate branches,
-    # DELIBERATELY kept (r11 optimization round): a measured alternative
-    # — union the tiers' (query_id, id, method) hits and score with ONE
-    # join + ONE groupBy(method) — cut exec Spark jobs 64 → 27 but ran
-    # consistently ~40% SLOWER at sf0.1 (15.1 s tight cluster vs 9.5 s
-    # best): funneling all seven tier plans through one broadcast-union
-    # barrier serializes branches the scheduler otherwise overlaps
-    # across cores. Seven independent single-row aggs is the shape that
-    # parallelizes; see OPTIMIZATION_r11.md wave 6.
-    exact = pin(exact)
-
-    def one(approx: DataFrame, name: str) -> DataFrame:
-        # broadcast the tier's hit set: it is bounded by n_queries · k
-        # rows (top-k per probe query), so the left join against the
-        # pinned exact set never needs a shuffle — without the hint the
-        # initial plan sort-merge-joins two tiny sides (AQE only
-        # converts AFTER materializing both shuffles), costing two
-        # sort+exchange pairs per tier branch, seven times per probe
+    # Scoring: one left-join + single-row aggregate branch per rung,
+    # DELIBERATELY: a measured alternative — union the rungs' (query_id,
+    # id, method) hits and score with ONE join + ONE groupBy(method) —
+    # cut exec Spark jobs 64 → 27 but ran consistently ~40% SLOWER at
+    # sf0.1 (15.1 s tight cluster vs 9.5 s best): funneling all seven
+    # rung plans through one broadcast-union barrier serializes
+    # branches the scheduler otherwise overlaps across cores. Seven
+    # independent single-row aggs is the shape that parallelizes; see
+    # OPTIMIZATION_r11.md wave 6.
+    def one(name: str, approx: DataFrame) -> DataFrame:
+        # broadcast the rung's hit set: it is bounded by n_queries · k
+        # rows, so the left join against the pinned exact set never
+        # needs a shuffle — without the hint the initial plan
+        # sort-merge-joins two tiny sides (AQE only converts AFTER
+        # materializing both shuffles)
         a = F.broadcast(
             approx.select("query_id", id_col, F.lit(1).alias("__hit"))
         )
@@ -2228,12 +2087,11 @@ def recall_probe(
                 F.lit(name).alias("method"),
                 "hits",
                 "possible",
-                # nullif guard (r07 empty-input sweep): a global agg
-                # over ZERO exact rows still emits one row with
-                # possible = 0, and under ANSI the bare division kills
-                # the job (DIVIDE_BY_ZERO) where the oracle returned a
-                # NULL recall. NULL recall is the honest answer when
-                # there is nothing to recall.
+                # nullif guard: a global agg over ZERO exact rows still
+                # emits one row with possible = 0, and under ANSI the
+                # bare division kills the job (DIVIDE_BY_ZERO) where
+                # the oracle returns a NULL recall. NULL recall is the
+                # honest answer when there is nothing to recall.
                 F.round(
                     F.col("hits")
                     / F.expr("cast(nullif(possible, 0) as double)"),
@@ -2242,14 +2100,8 @@ def recall_probe(
             )
         )
 
-    return (
-        one(lsh, "lsh")
-        .unionByName(one(ivf, "ivf"))
-        .unionByName(one(sq, "sq"))
-        .unionByName(one(ivf_sq, "ivf_sq"))
-        .unionByName(one(pq, "pq"))
-        .unionByName(one(ivf_pq, "ivf_pq"))
-        .unionByName(one(ivf_pq_res, "ivf_pq_res"))
+    return functools.reduce(
+        DataFrame.unionByName, (one(n, df) for n, df in rungs.items())
     )
 
 
@@ -2414,7 +2266,7 @@ def embedding_near_dup(
             F.col("__nrm").alias("__nb"),
         )
         join_keys = ["__band", "__bkt"]
-    cos = F.expr(f"{_dot('__va', '__vb')}") / (F.col("__na") * F.col("__nb"))
+    cos = _cos("__va", "__vb", "__na", "__nb")
     return (
         a.join(b, join_keys)
         .filter(F.col("vec_a") < F.col("vec_b"))
@@ -2482,7 +2334,373 @@ def oracle_embedding_near_dup_sql(
 
 # ---------------------------------------------------- persistent index
 
-class IvfIndex:
+class _IvfLifecycle:
+    """The lifecycle both persistent IVF indexes share, written for
+    the raw code (exact vectors in ``cells/``, :class:`IvfIndex`):
+    epoch resolution and the table paths, coarse-codebook seeding with
+    its empty-codebook unwind, ingest, :meth:`compact`,
+    :meth:`drift_report`, :meth:`rebuild` and the query prune to the
+    probed cells (:meth:`_probe`). :class:`IvfPqIndex` overrides only
+    its code: what a side carries (:meth:`_prep`), the PQ codebooks'
+    load / train / write, the encode of assigned rows
+    (:meth:`_write_cells`), its drift stats and its query scoring.
+
+    Epoch resolution: a rebuild must replace every table together, and
+    separate manifest flips cannot be atomic — a crash between them
+    would leave assignments or codes inconsistent with codebooks, the
+    silent-wrong failure mode. So the index root carries its own
+    manifest naming the live EPOCH (one ``seg_*`` directory holding
+    every table); rebuild stages a complete new epoch and commits it
+    with the same ONE atomic pointer flip every table commit uses. A
+    pre-epoch index (tables directly under path, no root manifest)
+    resolves to the root itself. Paths resolve per access, so an
+    operation overlapping a rebuild's flip could mix epochs — but
+    rebuild (like compact) already requires exclusive access because
+    its post-flip GC deletes the old epoch's files out from under any
+    in-flight plan; the contract, not the resolution, is the isolation
+    boundary."""
+
+    _tables = ("centroids", "cells", "stats")  # one epoch's tables
+    _cell_tables = ("cells",)  # partitioned by __cell
+    _raw = ("cells", "__v", "__nrm")  # where the exact vectors live
+    _coarse_name = "codebook"
+    _q_carry: tuple[str, ...] = ()  # query columns the code reads
+
+    def __init__(
+        self,
+        path: str,
+        *,
+        id_col: str = "vec_id",
+        vec_col: str = "embedding",
+        n_cells: int = 8,
+        n_probe: int = 2,
+    ) -> None:
+        self.path = str(path)
+        self.id_col = id_col
+        self.vec_col = vec_col
+        self.n_cells = n_cells
+        self.n_probe = n_probe
+
+    def _root(self) -> str:
+        m = read_manifest(self.path)
+        if m is None or not m["segments"]:
+            return self.path
+        return os.path.join(self.path, m["segments"][-1])
+
+    @property
+    def centroids_path(self) -> str:
+        return f"{self._root()}/centroids"
+
+    @property
+    def cells_path(self) -> str:
+        return f"{self._root()}/cells"
+
+    @property
+    def stats_path(self) -> str:
+        return f"{self._root()}/stats"
+
+    def _centroids(self, spark) -> DataFrame | None:
+        return snapshot_read(spark, self.centroids_path)
+
+    # -- the code's hooks: the raw code has no state beyond the vectors
+
+    def _prep(self, df: DataFrame, query: bool = False) -> DataFrame:
+        """A normalized side with the code's inputs attached."""
+        return df
+
+    def _load_code(self, spark):
+        """The frozen code state, None before the first ingest."""
+        return None
+
+    def _ingest_code(self, spark, v: DataFrame, supplied):
+        """The code state an ingest encodes with; the first ingest
+        writes it (``supplied`` or trained on the batch ``v``)."""
+        return None
+
+    def _retrain_code(self, vecs: DataFrame):
+        """The code state a rebuild re-encodes with, trained on the
+        index's own exact vectors ``vecs``."""
+        return None
+
+    def _write_code(self, spark, code, root: str) -> None:
+        """Persist ``code`` under the table root ``root``."""
+
+    def _write_cells(self, assigned: DataFrame, root: str, code) -> None:
+        """Append ``assigned`` (id, __v, __nrm, __cell) under ``root``
+        — the versioned-manifest append: the batch becomes visible in
+        one atomic pointer flip; partition dirs (__cell=N/) live inside
+        the segment, so probed-cell pruning is unchanged."""
+        append_write(
+            _raw_code().corpus(assigned, self.id_col, "__cell"),
+            f"{root}/cells", partition_by="__cell",
+        )
+
+    def _stats(self, v: DataFrame, cb: dict, code, ingest_id) -> DataFrame:
+        return _drift_stats(
+            v, cb, None, batch_expr=F.lit(ingest_id)
+        ).withColumnRenamed("batch_id", "ingest_id")
+
+    # -- lifecycle ------------------------------------------------------
+
+    def _seed(self, spark, v: DataFrame, codebook) -> tuple[DataFrame, bool]:
+        """The frozen coarse codebook; the FIRST ingest writes it from
+        the supplied ``codebook`` or the batch's ``id_col < n_cells``
+        rows — the one-shot tiers' default seeding
+        (:func:`_seed_cells`). Returns (codebook, written now)."""
+        cents = self._centroids(spark)
+        if cents is not None:
+            return cents, False
+        replace_write(
+            codebook if codebook is not None
+            else _seed_cells(v, self.id_col, self.vec_col, self.n_cells),
+            self.centroids_path, n_files=1,
+        )
+        cents = self._centroids(spark)
+        # emptiness check AFTER the write, against the materialized
+        # file — one tiny file read that covers BOTH seed paths
+        # without re-evaluating the caller's codebook plan (a
+        # train_centroids plan would re-run its whole training
+        # loop). An empty codebook would "succeed" into an index
+        # that answers nothing, forever; unwrite it and fail loud.
+        if cents is None or not cents.limit(1).count():
+            shutil.rmtree(self.centroids_path, ignore_errors=True)
+            raise ValueError(
+                f"{type(self).__name__} first ingest produced an empty "
+                f"{self._coarse_name}"
+                + (
+                    ": the supplied codebook= has no rows."
+                    if codebook is not None
+                    else f": no batch ids satisfy {self.id_col} < "
+                    f"{self.n_cells}. Pass an explicit codebook= "
+                    "(e.g. train_centroids) when ids are not "
+                    "0-based contiguous."
+                )
+            )
+        return cents, True
+
+    def _ingest(self, vectors: DataFrame, codebook, supplied=None) -> None:
+        spark = vectors.sparkSession
+        v = pin(self._prep(_corpus_norm(vectors, self.id_col, self.vec_col)))
+        wrote = False
+        try:
+            cents, wrote = self._seed(spark, v, codebook)
+            code = self._ingest_code(spark, v, supplied)
+        except ValueError:
+            # a failed first ingest unwrites what it wrote in this
+            # call, so a later valid ingest on the same path succeeds
+            if wrote:
+                shutil.rmtree(self.centroids_path, ignore_errors=True)
+            v.unpersist()
+            raise
+        self._write_cells(
+            _cell_assign(v, broadcast(cents), self.id_col, 1),
+            self._root(), code,
+        )
+        # drift instrumentation: one stats row per ingest against the
+        # FROZEN codebook(s) — n and the floored-integer mean winning
+        # cosine (plus, under PQ, the exact-integer self-ADC error):
+        # the _drift_stats fragment ann_drift_probe certifies. A
+        # distribution that drifts from the training batch lands
+        # farther from every centroid and the cosine falls — the
+        # measured rebuild trigger for the documented frozen-codebook
+        # trade-off. Written LAST: a crash before this flip loses only
+        # the report row, never data.
+        m = read_manifest(self.stats_path)
+        append_write(
+            self._stats(
+                v, _collect_codebook(cents), code,
+                (m["version"] if m else 0) + 1,
+            ),
+            self.stats_path,
+        )
+        v.unpersist()
+
+    def compact(self, spark, *, files_per_cell: int = 1) -> None:
+        """Rewrite the per-cell tables coalesced per cell directory —
+        every :meth:`ingest` appends part files into each ``__cell=``
+        dir, so a long-lived index pays file-listing overhead per
+        query. The partition layout (and so probed-cell pruning) is
+        preserved. The distinct fold makes the query's tolerance for a
+        replayed ingest (which re-appends value-identical rows)
+        durable. Exclusive access required (no concurrent reader
+        mid-query, no concurrent ingest) — see
+        :func:`~streamtasks_spark.llmdata.dedup.compact_table`."""
+        for t in self._cell_tables:
+            compact_table(
+                spark, f"{self._root()}/{t}",
+                files=files_per_cell, partition_by="__cell",
+                transform=lambda df: df.distinct(),
+            )
+
+    def drift_report(self, spark) -> DataFrame:
+        """Per-ingest assignment quality vs the frozen codebook(s), with
+        the drops against the FIRST ingest (the training distribution)
+        as the rebuild-trigger columns: (ingest_id, n, mean_win_cosine,
+        win_cos_drop) — and, for a PQ-coded index, mean_adc_err after
+        mean_win_cosine and adc_err_rise last. Ingest-count-sized; the
+        single-partition window is bounded by ingest COUNT, never data
+        volume."""
+        st = snapshot_read(spark, self.stats_path)
+        if st is None:
+            raise ValueError(
+                f"{type(self).__name__} at {self.path} has no drift "
+                "stats yet"
+            )
+        w = (
+            Window.orderBy("ingest_id")
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+        adc = "mean_adc_err" in st.columns
+        return st.select(
+            "ingest_id", "n", "mean_win_cosine",
+            *(["mean_adc_err"] if adc else []),
+            (
+                F.first("mean_win_cosine").over(w)
+                - F.col("mean_win_cosine")
+            ).alias("win_cos_drop"),
+            *(
+                [
+                    (
+                        F.col("mean_adc_err")
+                        - F.first("mean_adc_err").over(w)
+                    ).alias("adc_err_rise")
+                ]
+                if adc else []
+            ),
+        )
+
+    def rebuild(self, spark, *, coarse_iters: int = 3) -> dict:
+        """Retrain the codebook(s) on everything ingested (full
+        spherical k-means for the coarse one now, not first-batch
+        seeding) and re-assign / re-encode every vector — the action
+        :meth:`drift_report`'s trigger exists to fire. The index
+        stores the exact vectors (``cells/``, a PQ index's
+        ``vectors/``), so no external corpus re-read; value-identical
+        duplicate rows of a replayed ingest fold here (dropDuplicates
+        on id).
+
+        Crash safety: the new index — codebooks, re-assigned cells and
+        a fresh stats baseline measured against the NEW books — stages
+        as a complete new EPOCH directory and commits with the index
+        root's single atomic manifest flip: a crash anywhere before
+        the flip leaves the old epoch fully live (the staged one is an
+        invisible orphan, swept by the next commit), and there is no
+        window where assignments or codes and codebooks mix epochs.
+        Exclusive access required (the compact contract).
+
+        Returns the measured effect, computed with the same
+        :func:`_drift_stats` fragment the stats rows use: ``{"n",
+        "before_win_cosine", "after_win_cosine"}``, plus
+        ``"before_adc_err", "after_adc_err"`` under PQ."""
+        idc = self.id_col
+        table, vcol, ncol = self._raw
+        old_root = self._root()
+        raw = snapshot_read(spark, f"{old_root}/{table}")
+        if raw is None:
+            raise ValueError(f"{type(self).__name__} at {self.path} has no data")
+        old_cb = _collect_codebook(self._centroids(spark))
+        old_code = self._load_code(spark)
+        vecs = pin(
+            self._prep(
+                raw.dropDuplicates([idc]).select(
+                    F.col(idc),
+                    F.col(vcol).alias("__v"),
+                    F.col(ncol).alias("__nrm"),
+                )
+            )
+        )
+        cents_df = train_centroids(
+            vecs.select(F.col(idc), F.col("__v").alias(self.vec_col)),
+            id_col=idc, vec_col=self.vec_col,
+            n_cells=self.n_cells, n_iters=coarse_iters,
+        )
+        new_cb = _collect_codebook(cents_df)
+        try:
+            new_code = self._retrain_code(vecs)
+        except ValueError:
+            vecs.unpersist()
+            raise
+        before = self._stats(vecs, old_cb, old_code, 0).collect()[0]
+        after = self._stats(vecs, new_cb, new_code, 0).collect()[0]
+        # stage the complete new epoch, invisible until the flip
+        seg, epoch = new_segment(self.path)
+        replace_write(cents_df, f"{epoch}/centroids", n_files=1)
+        self._write_code(spark, new_code, epoch)
+        self._write_cells(
+            vecs.withColumn(
+                "__cell", F.expr(_argmax_cell_expr(new_cb)).cast("int")
+            ),
+            epoch, new_code,
+        )
+        append_write(
+            self._stats(vecs, new_cb, new_code, 1), f"{epoch}/stats"
+        )
+        vecs.unpersist()
+        commit_segments(self.path, [seg])  # THE flip; also GC's an old
+        # epoch directory (it is an unreferenced seg_* sibling)
+        if old_root == self.path:
+            # pre-epoch layout: the legacy tables live directly under
+            # the root and are not seg_* dirs, so sweep them explicitly
+            for t in self._tables:
+                shutil.rmtree(f"{self.path}/{t}", ignore_errors=True)
+        effect = {
+            "n": int(after["n"]),
+            "before_win_cosine": float(before["mean_win_cosine"]),
+            "after_win_cosine": float(after["mean_win_cosine"]),
+        }
+        if new_code is not None:
+            effect["before_adc_err"] = float(before["mean_adc_err"])
+            effect["after_adc_err"] = float(after["mean_adc_err"])
+        return effect
+
+    def _probe(
+        self, queries: DataFrame, n_probe: int | None
+    ) -> tuple[DataFrame, list]:
+        """The query prune: each query's ``n_probe`` nearest cells
+        under the stored codebook (the ivf stage's query side), and the
+        probed cell ids — bounded by the codebook size (ENFORCED) —
+        which :meth:`_read_probed` pushes into every table scan as a
+        literal IN filter on the partition column, so query cost
+        follows probed-cell volume, not corpus size. No persist of the
+        assignment: a serving process calls query() repeatedly, and
+        pinned query-assignments would accumulate until session end;
+        the broadcast-codebook projection over the small query batch
+        is recomputed once for the probed collect and once in the
+        result plan, cheaper than a leak."""
+        cents = self._centroids(queries.sparkSession)
+        if cents is None:
+            raise ValueError(f"{type(self).__name__} at {self.path} has no data")
+        q = _cell_assign(
+            self._prep(
+                _query_norm(queries, self.id_col, self.vec_col), query=True
+            ).select("query_id", "__v", "__nrm", *self._q_carry),
+            broadcast(cents), "query_id",
+            self.n_probe if n_probe is None else n_probe,
+        )
+        probed = [
+            r["__cell"]
+            for r in bounded_collect(
+                q.select("__cell").distinct(), self.n_cells,
+                f"{type(self).__name__} probed cells",
+            )
+        ]
+        return q, probed
+
+    def _read_probed(self, spark, table: str, probed: list) -> DataFrame:
+        path = f"{self._root()}/{table}"
+        df = snapshot_read(spark, path, base_path=path)
+        if df is None:
+            # ingest commits every other table before cells/, so a
+            # table missing under live centroids is an index that
+            # holds nothing yet — or a damaged one; fail loudly
+            raise ValueError(
+                f"{type(self).__name__} at {self.path} has no data "
+                f"(no {table}/ table)"
+            )
+        return df.filter(F.col("__cell").isin(probed))
+
+
+class IvfIndex(_IvfLifecycle):
     """Persistent IVF ANN index — the serving shape of :func:`ivf_topk`:
     build the index once (or in increments), answer top-k queries
     against the stored cells without re-reading or re-assigning the
@@ -2505,77 +2723,13 @@ class IvfIndex:
         driver-safe) and pushes them as a partition filter, so the
         scan reads ONLY the probed directories — query cost follows
         probed-cell volume, not corpus size.
+      ``stats/`` — one drift row per ingest (:meth:`drift_report`).
 
-    Reads are snapshot-isolated against concurrent appends via
+    After a :meth:`rebuild` the tables live inside an epoch directory
+    (see :class:`_IvfLifecycle`). Reads are snapshot-isolated against
+    concurrent appends via
     :func:`~streamtasks_spark.llmdata.dedup.snapshot_read`.
     """
-
-    def __init__(
-        self,
-        path: str,
-        *,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-        n_cells: int = 8,
-        n_probe: int = 2,
-    ) -> None:
-        self.path = str(path)
-        self.id_col = id_col
-        self.vec_col = vec_col
-        self.n_cells = n_cells
-        self.n_probe = n_probe
-
-    # epoch resolution: identical to IvfPqIndex._root — a rebuild
-    # must replace centroids+cells+stats together, which separate
-    # flips cannot do atomically; the index root's manifest names the
-    # live epoch, one flip commits it. Paths resolve per access, so an
-    # operation overlapping a rebuild's flip could mix epochs — but
-    # rebuild (like compact) already requires exclusive access because
-    # its post-flip GC deletes the old epoch's files out from under
-    # any in-flight plan; the contract, not the resolution, is the
-    # isolation boundary.
-    def _root(self) -> str:
-        import os
-
-        from streamtasks_spark.core.state import read_manifest
-
-        m = read_manifest(self.path)
-        if m is None or not m["segments"]:
-            return self.path
-        return os.path.join(self.path, m["segments"][-1])
-
-    @property
-    def centroids_path(self) -> str:
-        return f"{self._root()}/centroids"
-
-    @property
-    def cells_path(self) -> str:
-        return f"{self._root()}/cells"
-
-    @property
-    def stats_path(self) -> str:
-        return f"{self._root()}/stats"
-
-    def _centroids(self, spark) -> DataFrame | None:
-        from streamtasks_spark.llmdata.dedup import snapshot_read
-
-        return snapshot_read(spark, self.centroids_path)
-
-    def _assign(self, df: DataFrame, cents: DataFrame, id_out: str,
-                rank_limit: int) -> DataFrame:
-        score = (
-            F.expr(f"{_dot('__v', '__cv')}") / (F.col("__nrm") * F.col("__cn"))
-        )
-        w = Window.partitionBy(id_out).orderBy(
-            F.col("__score").desc(), F.col("__cell").asc()
-        )
-        return (
-            df.crossJoin(broadcast(cents))
-            .withColumn("__score", score)
-            .withColumn("__cr", F.row_number().over(w))
-            .filter(F.col("__cr") <= rank_limit)
-            .drop("__cv", "__cn", "__score", "__cr")
-        )
 
     def ingest(
         self, vectors: DataFrame, *, codebook: DataFrame | None = None
@@ -2591,254 +2745,26 @@ class IvfIndex:
         one-shot and the index would otherwise see fewer than
         ``n_cells`` seed vectors.) Later ingests always reuse the
         stored codebook."""
-        spark = vectors.sparkSession
-        idc = self.id_col
-        v = _with_norm(
-            spread(vectors, idc).select(idc, self.vec_col), self.vec_col
-        ).select(idc, "__v", "__nrm")
-        cents = self._centroids(spark)
-        if cents is None:
-            seed = (
-                codebook
-                if codebook is not None
-                else v.filter(F.col(idc) < self.n_cells).select(
-                    F.col(idc).alias("__cell"),
-                    F.col("__v").alias("__cv"),
-                    F.col("__nrm").alias("__cn"),
-                )
-            )
-            from streamtasks_spark.core.state import replace_write
-
-            replace_write(seed, self.centroids_path, n_files=1)
-            cents = self._centroids(spark)
-            # emptiness check AFTER the write, against the materialized
-            # file — one tiny file read that covers BOTH seed paths
-            # without re-evaluating the caller's codebook plan (a
-            # train_centroids plan would re-run its whole training
-            # loop). An empty codebook would "succeed" into an index
-            # that answers nothing, forever; unwrite it and fail loud.
-            if cents is None or not cents.limit(1).count():
-                import shutil
-
-                shutil.rmtree(self.centroids_path, ignore_errors=True)
-                raise ValueError(
-                    "IvfIndex first ingest produced an empty codebook"
-                    + (
-                        ": the supplied codebook= has no rows."
-                        if codebook is not None
-                        else f": no batch ids satisfy {idc} < "
-                        f"{self.n_cells}. Pass an explicit codebook= "
-                        "(e.g. train_centroids) when ids are not "
-                        "0-based contiguous."
-                    )
-                )
-        v = pin(v)
-        assigned = self._assign(v, cents, idc, 1)
-        # versioned-manifest append: the batch becomes visible in one
-        # atomic pointer flip; partition dirs (__cell=N/) live inside
-        # the segment, so probed-cell pruning is unchanged
-        from streamtasks_spark.core.state import append_write, read_manifest
-
-        append_write(assigned, self.cells_path, partition_by="__cell")
-        # drift instrumentation (r11): one stats row per ingest against
-        # the FROZEN codebook — n and the floored-integer mean winning
-        # cosine (the _drift_stats fragment ann_drift_probe certifies).
-        # A distribution that drifts from the training batch lands
-        # farther from every centroid and this number falls — the
-        # measured rebuild trigger for the documented frozen-codebook
-        # trade-off. Written LAST: a crash before this flip loses only
-        # the report row, never data. One extra narrow pass over the
-        # pinned batch + a 1-row rollup.
-        m = read_manifest(self.stats_path)
-        ingest_id = (m["version"] if m else 0) + 1
-        stats = _drift_stats(
-            v, _collect_codebook(cents), None,
-            batch_expr=F.lit(ingest_id),
-        ).withColumnRenamed("batch_id", "ingest_id")
-        append_write(stats, self.stats_path)
-        v.unpersist()
-
-    def compact(self, spark, *, files_per_cell: int = 1) -> None:
-        """Rewrite the cells table coalesced per cell directory — every
-        :meth:`ingest` appends part files into each ``__cell=`` dir, so
-        a long-lived index pays file-listing overhead per query. The
-        partition layout (and so probed-cell pruning) is preserved.
-        Exclusive access required (no concurrent reader mid-query, no
-        concurrent ingest) — see
-        :func:`~streamtasks_spark.llmdata.dedup.compact_table`."""
-        from streamtasks_spark.llmdata.dedup import compact_table
-
-        compact_table(
-            spark, self.cells_path,
-            files=files_per_cell, partition_by="__cell",
-        )
-
-    def drift_report(self, spark) -> DataFrame:
-        """Per-ingest assignment quality vs the frozen codebook, with
-        the drop against the FIRST ingest (the training distribution)
-        as the rebuild-trigger column: (ingest_id, n, mean_win_cosine,
-        win_cos_drop). Ingest-count-sized; the single-partition window
-        is bounded by ingest COUNT, never data volume."""
-        from streamtasks_spark.llmdata.dedup import snapshot_read
-
-        st = snapshot_read(spark, self.stats_path)
-        if st is None:
-            raise ValueError(
-                f"IvfIndex at {self.path} has no drift stats yet"
-            )
-        w = (
-            Window.orderBy("ingest_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return st.select(
-            "ingest_id", "n", "mean_win_cosine",
-            (
-                F.first("mean_win_cosine").over(w)
-                - F.col("mean_win_cosine")
-            ).alias("win_cos_drop"),
-        )
-
-    def rebuild(self, spark, *, coarse_iters: int = 3) -> dict:
-        """Retrain the coarse codebook on everything ingested (full
-        spherical k-means now, not first-batch seeding) and re-assign
-        every vector — the action :meth:`drift_report`'s trigger
-        exists to fire. The cells table already stores the raw
-        vectors, so no external corpus re-read. The new index
-        (centroids + re-partitioned cells + a fresh stats baseline)
-        stages as a complete new EPOCH directory and commits with the
-        index root's single atomic manifest flip: a crash anywhere
-        before the flip leaves the old epoch fully live, and there is
-        no window where assignments and codebook mix epochs. Exclusive
-        access required (the compact contract). Returns the measured
-        effect: ``{"n", "before_win_cosine", "after_win_cosine"}``."""
-        import shutil
-
-        from streamtasks_spark.core.state import (
-            append_write,
-            commit_segments,
-            new_segment,
-            replace_write,
-        )
-        from streamtasks_spark.llmdata.dedup import snapshot_read
-
-        idc = self.id_col
-        raw = snapshot_read(spark, self.cells_path)
-        if raw is None:
-            raise ValueError(f"IvfIndex at {self.path} has no data")
-        old_root = self._root()
-        old_cb = _collect_codebook(self._centroids(spark))
-        vecs = pin(
-            raw.dropDuplicates([idc]).select(idc, "__v", "__nrm")
-        )
-        corpus = vecs.select(F.col(idc), F.col("__v").alias(self.vec_col))
-        cents_df = train_centroids(
-            corpus, id_col=idc, vec_col=self.vec_col,
-            n_cells=self.n_cells, n_iters=coarse_iters,
-        )
-        new_cb = _collect_codebook(cents_df)
-        before = _drift_stats(
-            vecs, old_cb, None, batch_expr=F.lit(0)
-        ).collect()[0]
-        after = _drift_stats(
-            vecs, new_cb, None, batch_expr=F.lit(0)
-        ).collect()[0]
-        name, epoch = new_segment(self.path)
-        replace_write(cents_df, f"{epoch}/centroids", n_files=1)
-        assigned = vecs.withColumn(
-            "__best", F.expr(_argmax_struct_expr(new_cb))
-        ).select(
-            F.col(idc), "__v", "__nrm",
-            (-F.col("__best.c")).cast("int").alias("__cell"),
-        )
-        append_write(assigned, f"{epoch}/cells", partition_by="__cell")
-        append_write(
-            _drift_stats(vecs, new_cb, None, batch_expr=F.lit(1))
-            .withColumnRenamed("batch_id", "ingest_id"),
-            f"{epoch}/stats",
-        )
-        vecs.unpersist()
-        commit_segments(self.path, [name])  # THE flip; sweeps an old
-        # epoch directory (unreferenced seg_* sibling)
-        if old_root == self.path:
-            for t in ("centroids", "cells", "stats"):
-                shutil.rmtree(f"{self.path}/{t}", ignore_errors=True)
-        return {
-            "n": int(after["n"]),
-            "before_win_cosine": float(before["mean_win_cosine"]),
-            "after_win_cosine": float(after["mean_win_cosine"]),
-        }
+        self._ingest(vectors, codebook)
 
     def query(
         self, queries: DataFrame, *, k: int = 5, n_probe: int | None = None
     ) -> DataFrame:
-        """Exact-rerank top-k within the probed cells. Output matches
+        """Exact top-k within the probed cells. Output matches
         :func:`ivf_topk` (query_id, vec_id, cosine, rank) when the
-        index was built from the same vectors and codebook seeding."""
-        from streamtasks_spark.llmdata.dedup import snapshot_read
-
-        spark = queries.sparkSession
-        n_probe = self.n_probe if n_probe is None else n_probe
-        idc = self.id_col
-        cents = self._centroids(spark)
-        if cents is None:
-            raise ValueError(f"IvfIndex at {self.path} has no data")
-        q = self._assign(
-            _with_norm(
-                queries.select(F.col(idc).alias("query_id"), self.vec_col),
-                self.vec_col,
-            ).select("query_id", "__v", "__nrm"),
-            cents,
-            "query_id",
-            n_probe,
-        ).select(
-            "query_id",
-            F.col("__v").alias("__qv"),
-            F.col("__nrm").alias("__qn"),
-            "__cell",
-        )
-        # (no persist here: a serving process calls query() repeatedly,
-        # and pinned query-assignments would accumulate until session
-        # end. The assignment is a broadcast-codebook projection over
-        # the small query batch — recomputing it once for the probed
-        # collect and once in the result plan is cheaper than a leak.)
-        # probed cells: bounded by the codebook size — driver-safe; a
-        # literal IN filter on the partition column prunes unprobed
-        # cell directories out of the scan entirely
-        # ≤ n_cells distinct cells: bound ENFORCED
-        probed = [
-            r["__cell"]
-            for r in bounded_collect(
-                q.select("__cell").distinct(), self.n_cells,
-                "IvfIndex probed cells",
-            )
-        ]
-        cells = snapshot_read(spark, self.cells_path, base_path=self.cells_path)
-        if cells is None:
-            raise ValueError(f"IvfIndex at {self.path} has no data")
-        cells = cells.filter(F.col("__cell").isin(probed))
-        cos = F.expr(f"{_dot('__v', '__qv')}") / (F.col("__nrm") * F.col("__qn"))
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("__cos").desc(), F.col(idc).asc()
-        )
-        return (
-            # broadcast-sized q side (n_queries · n_probe; q was
-            # already bounded_collect'ed for partition pruning above)
-            cells.join(broadcast(q), "__cell")
-            .filter(F.col(idc) != F.col("query_id"))
-            .withColumn("__cos", cos)
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                "query_id",
-                F.col(idc),
-                F.round("__cos", 6).alias("cosine"),
-                "rank",
-            )
+        index was built from the same vectors and codebook seeding.
+        Ranks distinct ids only, so the value-identical rows a replayed
+        ingest re-appends change no answer."""
+        q, probed = self._probe(queries, n_probe)
+        return _search(
+            self._read_probed(queries.sparkSession, "cells", probed), q,
+            _raw_code(), id_col=self.id_col, k=k, key="__cell",
+            distinct=True,
         )
 
 
-class IvfPqIndex:
-    """Persistent PQ-coded IVF ANN index (r10) — the serving shape of
+class IvfPqIndex(_IvfLifecycle):
+    """Persistent PQ-coded IVF ANN index — the serving shape of
     :func:`ivf_pq_topk`, and the storage answer :class:`IvfIndex`
     leaves open: at 100 TB the index IS the storage problem, and
     keeping raw float vectors per cell means the scan cost of a probe
@@ -2877,16 +2803,15 @@ class IvfPqIndex:
         survivors: the probed-cell filter bounds which directories
         are listed, and the join against the rerank·k candidate set
         bounds which rows are touched.
-      ``stats/`` — one drift row per ingest (r11):
+      ``stats/`` — one drift row per ingest:
         ``(ingest_id, n, mean_win_cosine, mean_adc_err)`` measured
         against the frozen codebooks; :meth:`drift_report` turns it
         into the rebuild-trigger view.
 
     After a :meth:`rebuild`, all five tables live inside an EPOCH
-    directory (``seg_*/``) named by a manifest at the index root —
-    the atomic-multi-table-replace mechanism rebuild needs (see the
-    epoch-resolution note at :meth:`_root`); a never-rebuilt index
-    keeps the flat layout above.
+    directory (``seg_*/``) named by a manifest at the index root (see
+    :class:`_IvfLifecycle`); a never-rebuilt index keeps the flat
+    layout above.
 
     One-shot equivalence (pinned in tests): an index built by a
     single :meth:`ingest` of a corpus with default seeding answers
@@ -2901,6 +2826,12 @@ class IvfPqIndex:
     Reads are snapshot-isolated against concurrent appends via
     :func:`~streamtasks_spark.llmdata.dedup.snapshot_read`; ingest
     requires a single owner (the MinHashIndex discipline)."""
+
+    _tables = ("centroids", "pq_codebook", "cells", "vectors", "stats")
+    _cell_tables = ("cells", "vectors")
+    _raw = ("vectors", "__av", "__anrm")
+    _coarse_name = "coarse codebook"
+    _q_carry = ("__qi",)
 
     def __init__(
         self,
@@ -2920,77 +2851,33 @@ class IvfPqIndex:
             raise ValueError(
                 f"IvfPqIndex: dim {dim} not divisible by m_sub {m_sub}"
             )
-        self.path = str(path)
-        self.id_col = id_col
-        self.vec_col = vec_col
+        super().__init__(
+            path, id_col=id_col, vec_col=vec_col, n_cells=n_cells,
+            n_probe=n_probe,
+        )
         self.dim = dim
-        self.n_cells = n_cells
-        self.n_probe = n_probe
         self.m_sub = m_sub
         self.n_codes = n_codes
         self.n_iters = n_iters
         self.rerank = rerank
-
-    # -- epoch resolution (r11) ----------------------------------------
-    #
-    # A REBUILD must replace all four tables + stats together, and four
-    # separate manifest flips cannot be atomic — a crash between them
-    # would leave codes inconsistent with codebooks, the silent-wrong
-    # failure mode. So the index root carries its own manifest naming
-    # the live EPOCH (one seg_* directory holding all five tables);
-    # rebuild stages a complete new epoch and commits it with the same
-    # ONE atomic pointer flip every table commit uses. A pre-epoch
-    # index (tables directly under path, no root manifest) resolves to
-    # the root itself — fully backward compatible. Paths resolve per
-    # access, so an operation overlapping a rebuild's flip could mix
-    # epochs — but rebuild (like compact) already requires exclusive
-    # access because its post-flip GC deletes the old epoch's files
-    # out from under any in-flight plan; the contract, not the
-    # resolution, is the isolation boundary.
-
-    def _root(self) -> str:
-        import os
-
-        from streamtasks_spark.core.state import read_manifest
-
-        m = read_manifest(self.path)
-        if m is None or not m["segments"]:
-            return self.path
-        return os.path.join(self.path, m["segments"][-1])
-
-    @property
-    def centroids_path(self) -> str:
-        return f"{self._root()}/centroids"
 
     @property
     def pq_codebook_path(self) -> str:
         return f"{self._root()}/pq_codebook"
 
     @property
-    def cells_path(self) -> str:
-        return f"{self._root()}/cells"
-
-    @property
     def vectors_path(self) -> str:
         return f"{self._root()}/vectors"
 
-    @property
-    def stats_path(self) -> str:
-        return f"{self._root()}/stats"
+    # -- the pq code ----------------------------------------------------
 
-    # -- codebooks ----------------------------------------------------
+    def _prep(self, df: DataFrame, query: bool = False) -> DataFrame:
+        op = "IvfPqIndex.query" if query else "IvfPqIndex.ingest"
+        return _pq_prep(df, self.dim, op, query=query)
 
-    def _centroids(self, spark) -> DataFrame | None:
-        from streamtasks_spark.llmdata.dedup import snapshot_read
-
-        return snapshot_read(spark, self.centroids_path)
-
-    def _pq_cents(self, spark) -> tuple[dict, dict] | None:
+    def _load_code(self, spark) -> tuple[dict, dict] | None:
         """Reload the frozen PQ codebooks as the (cents, cint) pair
-        the encoding/scoring expressions consume; None before the
-        first ingest."""
-        from streamtasks_spark.llmdata.dedup import snapshot_read
-
+        the encoding/scoring expressions consume."""
         df = snapshot_read(spark, self.pq_codebook_path)
         if df is None:
             return None
@@ -3000,33 +2887,84 @@ class IvfPqIndex:
             df, self.m_sub * self.n_codes, "IvfPqIndex pq_codebook"
         ):
             cents.setdefault(r["__m"], {})[r["__j"]] = list(r["__cv"])
-        cint = {
-            m: {
-                j: [int(math.floor(c * PQ_GRID + 0.5)) for c in cv]
-                for j, cv in cents[m].items()
-            }
-            for m in cents
-        }
-        return cents, cint
+        return cents, _pq_grid(cents)
 
-    def _assign(self, df: DataFrame, cents: DataFrame, id_out: str,
-                rank_limit: int) -> DataFrame:
-        score = (
-            F.expr(f"{_dot('__v', '__cv')}")
-            / (F.col("__nrm") * F.col("__cn"))
+    def _ingest_code(self, spark, v: DataFrame, supplied):
+        cb = self._load_code(spark)
+        if cb is not None:
+            return cb
+        try:
+            cb = supplied if supplied is not None else _pq_codebooks(
+                v, self.id_col, self.dim, self.m_sub, self.n_codes,
+                self.n_iters,
+            )
+            if not cb[0]:
+                raise ValueError("the batch has no usable vectors")
+        except ValueError as e:
+            raise ValueError(
+                f"IvfPqIndex first ingest could not train PQ "
+                f"codebooks: {e}. Pass pq_codebooks= (from "
+                f"train_pq_codebooks over a training corpus) when "
+                f"ids are not 0-based contiguous."
+            ) from e
+        self._write_code(spark, cb, self._root())
+        return self._load_code(spark)
+
+    def _retrain_code(self, vecs: DataFrame) -> tuple[dict, dict]:
+        cb = _pq_codebooks(
+            vecs, self.id_col, self.dim, self.m_sub, self.n_codes,
+            self.n_iters,
         )
-        w = Window.partitionBy(id_out).orderBy(
-            F.col("__score").desc(), F.col("__cell").asc()
-        )
-        return (
-            df.crossJoin(broadcast(cents))
-            .withColumn("__score", score)
-            .withColumn("__cr", F.row_number().over(w))
-            .filter(F.col("__cr") <= rank_limit)
-            .drop("__cv", "__cn", "__score", "__cr")
+        if not cb[0]:
+            raise ValueError(
+                "IvfPqIndex.rebuild could not train PQ codebooks — no "
+                "usable seed vectors in the raw table"
+            )
+        return cb
+
+    def _write_code(self, spark, cb: tuple[dict, dict], root: str) -> None:
+        cents = cb[0]
+        replace_write(
+            spark.createDataFrame(
+                [(m, j, cents[m][j]) for m in sorted(cents)
+                 for j in sorted(cents[m])],
+                "__m int, __j int, __cv array<double>",
+            ),
+            f"{root}/pq_codebook", n_files=1,
         )
 
-    # -- ingest -------------------------------------------------------
+    def _write_cells(self, assigned: DataFrame, root: str, cb) -> None:
+        """Encode ``assigned`` with the pq code's corpus projection and
+        append it RAW VECTORS FIRST: query()'s exact re-rank
+        inner-joins candidates (from cells/) against raw rows (from
+        vectors/), so the crash-safe order is the dependency order —
+        an orphan raw row no code row references is unreachable and
+        harmless, while a code row with no raw counterpart would
+        silently drop ADC candidates from top-k. Each commit is one
+        atomic flip."""
+        idc = self.id_col
+        enc = pin(
+            _pq_code(cb, self.dim, self.m_sub, self.rerank).corpus(
+                assigned, idc, "__cell"
+            )
+        )
+        append_write(
+            enc.select(idc, "__av", "__anrm", "__cell"),
+            f"{root}/vectors", partition_by="__cell",
+        )
+        append_write(
+            enc.select(idc, "__codes", "__cell"),
+            f"{root}/cells", partition_by="__cell",
+        )
+        enc.unpersist()
+
+    def _stats(self, v: DataFrame, cb: dict, code, ingest_id) -> DataFrame:
+        return _drift_stats(
+            v, cb, code, batch_expr=F.lit(ingest_id), dim=self.dim,
+            m_sub=self.m_sub,
+        ).withColumnRenamed("batch_id", "ingest_id")
+
+    # -- api --------------------------------------------------------------
 
     def ingest(
         self,
@@ -3042,328 +2980,13 @@ class IvfPqIndex:
         the PQ one: the supplied ``pq_codebooks`` (from
         :func:`train_pq_codebooks` over a training corpus — the
         production shape, and what makes an incremental build answer
-        identically to the one-shot :func:`ivf_pq_topk` fed the same
-        ``_cb``) or, by default, codebooks trained on this batch's
+        identically to the one-shot ivf × pq pipeline fed the same
+        codebooks) or, by default, codebooks trained on this batch's
         normalized vectors with the :func:`pq_topk` seeding
         (``id_col < n_codes``). Later ingests reuse both. A first
         ingest that cannot produce either codebook fails loudly and
         unwrites whatever it wrote in this call."""
-        spark = vectors.sparkSession
-        idc = self.id_col
-        nv = "transform(__v, x -> x / __nrm)"
-        v = pin(
-            _require_dim(
-                _with_norm(
-                    spread(vectors, idc).select(idc, self.vec_col),
-                    self.vec_col,
-                ),
-                self.dim, "IvfPqIndex.ingest",
-            ).withColumn("__nv", F.expr(nv))
-        )
-        wrote_centroids = False
-        cents = self._centroids(spark)
-        if cents is None:
-            seed = (
-                codebook
-                if codebook is not None
-                else v.filter(F.col(idc) < self.n_cells).select(
-                    F.col(idc).alias("__cell"),
-                    F.col("__v").alias("__cv"),
-                    F.col("__nrm").alias("__cn"),
-                )
-            )
-            from streamtasks_spark.core.state import replace_write
-
-            replace_write(seed, self.centroids_path, n_files=1)
-            wrote_centroids = True
-            cents = self._centroids(spark)
-            if cents is None or not cents.limit(1).count():
-                import shutil
-
-                shutil.rmtree(self.centroids_path, ignore_errors=True)
-                v.unpersist()
-                raise ValueError(
-                    "IvfPqIndex first ingest produced an empty coarse "
-                    "codebook"
-                    + (
-                        ": the supplied codebook= has no rows."
-                        if codebook is not None
-                        else f": no batch ids satisfy {idc} < "
-                        f"{self.n_cells}. Pass an explicit codebook= "
-                        "(e.g. train_centroids) when ids are not "
-                        "0-based contiguous."
-                    )
-                )
-        cb = self._pq_cents(spark)
-        if cb is None:
-            try:
-                trained = (
-                    pq_codebooks[0]
-                    if pq_codebooks is not None
-                    else _pq_codebooks(
-                        v, idc, self.dim, self.m_sub, self.n_codes,
-                        self.n_iters,
-                    )[0]
-                )
-                if not trained:
-                    raise ValueError("the batch has no usable vectors")
-            except ValueError as e:
-                import shutil
-
-                if wrote_centroids:
-                    shutil.rmtree(self.centroids_path, ignore_errors=True)
-                v.unpersist()
-                raise ValueError(
-                    f"IvfPqIndex first ingest could not train PQ "
-                    f"codebooks: {e}. Pass pq_codebooks= (from "
-                    f"train_pq_codebooks over a training corpus) when "
-                    f"ids are not 0-based contiguous."
-                ) from e
-            rows = [
-                (m, j, trained[m][j])
-                for m in sorted(trained)
-                for j in sorted(trained[m])
-            ]
-            from streamtasks_spark.core.state import replace_write
-
-            replace_write(
-                spark.createDataFrame(
-                    rows, "__m int, __j int, __cv array<double>"
-                ),
-                self.pq_codebook_path, n_files=1,
-            )
-            cb = self._pq_cents(spark)
-        pq_cents, _ = cb
-        sub = self.dim // self.m_sub
-        assigned = self._assign(v, cents, idc, 1).select(
-            F.col(idc),
-            F.col("__cell"),
-            F.col("__v").alias("__av"),
-            F.col("__nrm").alias("__anrm"),
-            _pq_codes_col(pq_cents, self.m_sub, sub).alias("__codes"),
-        )
-        assigned = pin(assigned)
-        # versioned-manifest appends, RAW VECTORS FIRST: query()'s
-        # exact re-rank inner-joins candidates (from cells/) against
-        # raw rows (from vectors/), so the crash-safe order is the
-        # dependency order — an orphan raw row no code row references
-        # is unreachable and harmless, while a code row with no raw
-        # counterpart would silently drop ADC candidates from top-k
-        # (r10 advisor finding). Each commit is one atomic flip.
-        from streamtasks_spark.core.state import append_write
-
-        append_write(
-            assigned.select(idc, "__av", "__anrm", "__cell"),
-            self.vectors_path, partition_by="__cell",
-        )
-        append_write(
-            assigned.select(idc, "__codes", "__cell"),
-            self.cells_path, partition_by="__cell",
-        )
-        assigned.unpersist()
-        # drift instrumentation (r11): one stats row per ingest against
-        # BOTH frozen codebooks — mean winning coarse cosine AND the
-        # exact-integer self-ADC error (the _drift_stats fragment
-        # ann_drift_probe certifies). Drift shows as the first falling
-        # and the second rising, per batch, as data. Written LAST: a
-        # crash before this flip loses only the report row.
-        from streamtasks_spark.core.state import read_manifest
-
-        m = read_manifest(self.stats_path)
-        ingest_id = (m["version"] if m else 0) + 1
-        stats = _drift_stats(
-            v, _collect_codebook(cents), cb,
-            batch_expr=F.lit(ingest_id), dim=self.dim, m_sub=self.m_sub,
-        ).withColumnRenamed("batch_id", "ingest_id")
-        append_write(stats, self.stats_path)
-        v.unpersist()
-
-    def compact(self, spark, *, files_per_cell: int = 1) -> None:
-        """Coalesce both per-cell tables' accreted part files;
-        partition layout (and probed-cell pruning) preserved. The
-        distinct fold makes the query-side tolerance for crash-replay
-        duplicates durable (a replayed ingest re-appends value-identical
-        rows). Exclusive access required — see
-        :func:`~streamtasks_spark.llmdata.dedup.compact_table`."""
-        from streamtasks_spark.llmdata.dedup import compact_table
-
-        compact_table(
-            spark, self.cells_path,
-            files=files_per_cell, partition_by="__cell",
-            transform=lambda df: df.distinct(),
-        )
-        compact_table(
-            spark, self.vectors_path,
-            files=files_per_cell, partition_by="__cell",
-            transform=lambda df: df.distinct(),
-        )
-
-    def drift_report(self, spark) -> DataFrame:
-        """Per-ingest assignment quality vs BOTH frozen codebooks:
-        (ingest_id, n, mean_win_cosine, mean_adc_err, win_cos_drop,
-        adc_err_rise) — the deltas are against the FIRST ingest (the
-        training distribution), the rebuild-trigger columns. Ingest-
-        count-sized; the single-partition window is bounded by ingest
-        COUNT, never data volume."""
-        from streamtasks_spark.llmdata.dedup import snapshot_read
-
-        st = snapshot_read(spark, self.stats_path)
-        if st is None:
-            raise ValueError(
-                f"IvfPqIndex at {self.path} has no drift stats yet"
-            )
-        w = (
-            Window.orderBy("ingest_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return st.select(
-            "ingest_id", "n", "mean_win_cosine", "mean_adc_err",
-            (
-                F.first("mean_win_cosine").over(w)
-                - F.col("mean_win_cosine")
-            ).alias("win_cos_drop"),
-            (
-                F.col("mean_adc_err") - F.first("mean_adc_err").over(w)
-            ).alias("adc_err_rise"),
-        )
-
-    # -- rebuild --------------------------------------------------------
-
-    def rebuild(self, spark, *, coarse_iters: int = 3) -> dict:
-        """Retrain BOTH codebooks on everything ingested and re-encode
-        the whole index — the action the :meth:`drift_report` trigger
-        exists to fire. The raw-vector side table IS the training
-        corpus (no external re-read of the source data), so a rebuild
-        costs one k-means per codebook plus one re-encode pass.
-
-        Crash safety: the new index — retrained centroids (full
-        spherical k-means now, not first-batch seeding), retrained PQ
-        codebooks, re-assigned/re-encoded cells and vectors, and a
-        fresh stats baseline measuring the corpus against the NEW
-        books — is staged as a complete new EPOCH directory, then made
-        live by the index root's single atomic manifest flip. A crash
-        anywhere before the flip leaves the old epoch fully live (the
-        staged one is an invisible orphan, swept by the next commit);
-        there is NO window where codes and codebooks mix epochs.
-        Requires exclusive access (the compact contract). Value-
-        identical duplicate raw rows from a crash-replayed ingest are
-        folded here (dropDuplicates on id), making the query-side
-        tolerance durable.
-
-        Returns ``{"n", "before_win_cosine", "after_win_cosine",
-        "before_adc_err", "after_adc_err"}`` — the rebuild's measured
-        effect (the quality-as-data discipline), computed with the
-        same :func:`_drift_stats` fragment the stats rows use."""
-        import shutil
-
-        from streamtasks_spark.core.state import (
-            append_write,
-            commit_segments,
-            new_segment,
-            replace_write,
-        )
-        from streamtasks_spark.llmdata.dedup import snapshot_read
-
-        idc = self.id_col
-        raw = snapshot_read(spark, self.vectors_path)
-        if raw is None:
-            raise ValueError(f"IvfPqIndex at {self.path} has no data")
-        old_root = self._root()
-        old_cb = _collect_codebook(self._centroids(spark))
-        old_pq = self._pq_cents(spark)
-        vecs = pin(
-            raw.dropDuplicates([idc]).select(
-                F.col(idc),
-                F.col("__av").alias("__v"),
-                F.col("__anrm").alias("__nrm"),
-            ).withColumn("__nv", F.expr("transform(__v, x -> x / __nrm)"))
-        )
-        corpus = vecs.select(F.col(idc), F.col("__v").alias(self.vec_col))
-        cents_df = train_centroids(
-            corpus, id_col=idc, vec_col=self.vec_col,
-            n_cells=self.n_cells, n_iters=coarse_iters,
-            expect_dim=self.dim,
-        )
-        new_cb = _collect_codebook(cents_df)
-        new_pq = _pq_codebooks(
-            vecs, idc, self.dim, self.m_sub, self.n_codes, self.n_iters
-        )
-        if not new_pq[0]:
-            vecs.unpersist()
-            raise ValueError(
-                "IvfPqIndex.rebuild could not train PQ codebooks — no "
-                "usable seed vectors in the raw table"
-            )
-        # measured effect, same fragment as the stats rows
-        before = _drift_stats(
-            vecs, old_cb, old_pq, batch_expr=F.lit(0),
-            dim=self.dim, m_sub=self.m_sub,
-        ).collect()[0]
-        after = _drift_stats(
-            vecs, new_cb, new_pq, batch_expr=F.lit(0),
-            dim=self.dim, m_sub=self.m_sub,
-        ).collect()[0]
-        # stage the complete new epoch, invisible until the flip
-        name, epoch = new_segment(self.path)
-        replace_write(cents_df, f"{epoch}/centroids", n_files=1)
-        pq_rows = [
-            (m, j, new_pq[0][m][j])
-            for m in sorted(new_pq[0])
-            for j in sorted(new_pq[0][m])
-        ]
-        replace_write(
-            spark.createDataFrame(
-                pq_rows, "__m int, __j int, __cv array<double>"
-            ),
-            f"{epoch}/pq_codebook", n_files=1,
-        )
-        sub = self.dim // self.m_sub
-        assigned = pin(
-            vecs.withColumn(
-                "__best", F.expr(_argmax_struct_expr(new_cb))
-            ).select(
-                F.col(idc),
-                (-F.col("__best.c")).cast("int").alias("__cell"),
-                F.col("__v").alias("__av"),
-                F.col("__nrm").alias("__anrm"),
-                _pq_codes_col(new_pq[0], self.m_sub, sub).alias("__codes"),
-            )
-        )
-        append_write(
-            assigned.select(idc, "__av", "__anrm", "__cell"),
-            f"{epoch}/vectors", partition_by="__cell",
-        )
-        append_write(
-            assigned.select(idc, "__codes", "__cell"),
-            f"{epoch}/cells", partition_by="__cell",
-        )
-        append_write(
-            _drift_stats(
-                vecs, new_cb, new_pq, batch_expr=F.lit(1),
-                dim=self.dim, m_sub=self.m_sub,
-            ).withColumnRenamed("batch_id", "ingest_id"),
-            f"{epoch}/stats",
-        )
-        assigned.unpersist()
-        vecs.unpersist()
-        commit_segments(self.path, [name])  # THE flip; also GC's an
-        # old epoch directory (it is an unreferenced seg_* sibling)
-        if old_root == self.path:
-            # pre-epoch layout: the legacy tables live directly under
-            # the root and are not seg_* dirs, so sweep them explicitly
-            for t in (
-                "centroids", "pq_codebook", "cells", "vectors", "stats"
-            ):
-                shutil.rmtree(f"{self.path}/{t}", ignore_errors=True)
-        return {
-            "n": int(after["n"]),
-            "before_win_cosine": float(before["mean_win_cosine"]),
-            "after_win_cosine": float(after["mean_win_cosine"]),
-            "before_adc_err": float(before["mean_adc_err"]),
-            "after_adc_err": float(after["mean_adc_err"]),
-        }
-
-    # -- query --------------------------------------------------------
+        self._ingest(vectors, codebook, pq_codebooks)
 
     def query(
         self,
@@ -3377,116 +3000,34 @@ class IvfPqIndex:
         over only the ``rerank·k`` survivors' raw vectors. Output
         matches :func:`ivf_pq_topk` (query_id, id, cosine, approx,
         rank) when the index was one-shot-built from the same corpus
-        and parameters."""
-        from streamtasks_spark.llmdata.dedup import snapshot_read
-
+        and parameters. Ranks distinct ids only: the value-identical
+        code rows a replayed ingest re-appends tie and share one
+        candidate slot, and their raw-side twins collapse before the
+        re-rank."""
         spark = queries.sparkSession
-        n_probe = self.n_probe if n_probe is None else n_probe
-        rerank = self.rerank if rerank is None else rerank
         idc = self.id_col
-        cents = self._centroids(spark)
-        cb = self._pq_cents(spark)
-        if cents is None or cb is None:
+        cb = self._load_code(spark)
+        if cb is None:
             raise ValueError(f"IvfPqIndex at {self.path} has no data")
-        _, cint = cb
-        sub = self.dim // self.m_sub
-        nv = "transform(__v, x -> x / __nrm)"
-        q = self._assign(
-            _require_dim(
-                _with_norm(
-                    queries.select(
-                        F.col(idc).alias("query_id"), self.vec_col
-                    ),
-                    self.vec_col,
-                ),
-                self.dim, "IvfPqIndex.query",
-            )
-            .withColumn("__nv", F.expr(nv))
-            .withColumn("__qi", F.expr(_pq_qi_expr()))
-            .select("query_id", "__v", "__nrm", "__qi"),
-            cents, "query_id", n_probe,
-        ).select(
-            "query_id",
-            "__cell",
-            F.col("__v").alias("__qv"),
-            F.col("__nrm").alias("__qnrm"),
-            F.expr(_pq_lut_expr(cint, self.m_sub, sub)).alias("__lut"),
+        q, probed = self._probe(queries, n_probe)
+        code = _pq_code(
+            cb, self.dim, self.m_sub,
+            self.rerank if rerank is None else rerank,
         )
-        # ≤ n_cells distinct cells: bound ENFORCED
-        probed = [
-            r["__cell"]
-            for r in bounded_collect(
-                q.select("__cell").distinct(), self.n_cells,
-                "IvfPqIndex probed cells",
-            )
-        ]
-        cells = snapshot_read(
-            spark, self.cells_path, base_path=self.cells_path
-        )
-        if cells is None:
-            raise ValueError(f"IvfPqIndex at {self.path} has no data")
-        cells = cells.filter(F.col("__cell").isin(probed))
-        w_cand = Window.partitionBy("query_id").orderBy(
-            F.col("__is").desc(), F.col(idc).asc()
-        )
-        cand = (
-            # broadcast-sized q side (n_queries · n_probe; q was
-            # already bounded_collect'ed for partition pruning above)
-            cells.join(broadcast(q), "__cell")
-            .filter(F.col(idc) != F.col("query_id"))
-            .withColumn("__is", _pq_iscore(self.m_sub))
-            .withColumn("__cr", F.row_number().over(w_cand))
-            .filter(F.col("__cr") <= rerank * k)
-            .select(
-                "query_id", F.col(idc), "__cell", "__is",
-                "__qv", "__qnrm",
-            )
-        )
-        raw = snapshot_read(
-            spark, self.vectors_path, base_path=self.vectors_path
-        )
-        if raw is None:
-            # cells/ without vectors/ cannot arise from a crash (ingest
-            # commits vectors FIRST), so this is a damaged index — fail
-            # loudly rather than AttributeError (r10 advisor finding)
-            raise ValueError(
-                f"IvfPqIndex at {self.path} has no raw-vector side "
-                f"table (vectors/) — index is damaged or mid-build"
-            )
-        raw = raw.filter(F.col("__cell").isin(probed)).select(
+        cand = _candidates(
+            self._read_probed(spark, "cells", probed),
+            code.query(q, "__cell"), code, idc, "__cell",
+            code.rerank * k, "__cr", distinct=True,
+        ).select("query_id", idc, "__cell", "__is", "__qv", "__qnrm")
+        raw = self._read_probed(spark, "vectors", probed).select(
             idc, "__cell", "__av", "__anrm"
         )
-        cos = (
-            F.expr(_dot("__av", "__qv"))
-            / (F.col("__anrm") * F.col("__qnrm"))
-        )
-        w_final = Window.partitionBy("query_id").orderBy(
-            F.col("__cos").desc(), F.col(idc).asc()
-        )
-        return (
-            # cand is rerank·k-bounded per query — broadcast it so the
-            # partition-pruned raw side table is scanned, never shuffled
+        # cand is rerank·k-bounded per query — broadcast it so the
+        # partition-pruned raw side table is scanned, never shuffled
+        return _rerank(
             broadcast(cand).join(raw, [idc, "__cell"])
-            # tolerate value-identical duplicate raw rows (a crash
-            # between the checkpoint commit and a replayed ingest
-            # re-appends a batch; vectors/ commits before cells/):
-            # cand is already unique per (query_id, id), so this only
-            # collapses raw-side dups — rerank·k-bounded rows, cheap
-            .dropDuplicates(["query_id", idc])
-            .withColumn("__cos", cos)
-            .withColumn(
-                "__appx",
-                F.col("__is").cast("double") / F.lit(float(PQ_GRID) ** 2),
-            )
-            .withColumn("rank", F.row_number().over(w_final))
-            .filter(F.col("rank") <= k)
-            .select(
-                "query_id",
-                F.col(idc),
-                F.round("__cos", 6).alias("cosine"),
-                F.round("__appx", 6).alias("approx"),
-                "rank",
-            )
+            .dropDuplicates(["query_id", idc]),
+            idc, k, code.approx,
         )
 
 
@@ -3641,8 +3182,6 @@ def train_centroids(
     aggregation whose output is again codebook-sized. Corpus size
     enters only linearly, through the narrow pass.
     """
-    import math
-
     v = _with_norm(spread(vectors, id_col).select(id_col, vec_col), vec_col)
     if expect_dim is not None:
         # training itself is dim-agnostic (the codebook takes the
@@ -3945,8 +3484,8 @@ def cluster_profile(
     through the training pass (the cluster_prune hook): a dim-64
     oracle against non-64 data would otherwise diverge SILENTLY —
     DuckDB's fixed-range dot truncates where Spark's data-derived dot
-    uses the full vector. The r11 ``--dim`` fuzz axis found exactly
-    this live (the r10 record had missed it); callers coupled to a
+    uses the full vector (found live by the ``--dim`` fuzz axis);
+    callers coupled to a
     fixed-dim oracle pass the oracle's dim. Training-side only, so the
     returned plan — and the certified manifest hash — is unchanged for
     well-dimensioned corpora; with a supplied frozen ``centroids`` the
@@ -4009,7 +3548,7 @@ def oracle_cluster_profile_sql(
     floored-integer scaled sum. ``min_cos`` carries the ``+ 0.0``
     signed-zero normalization: DuckDB's ``round`` keeps IEEE ``-0.0``
     for a tiny-negative cosine where Spark's BigDecimal round emits
-    ``+0.0`` — a bit-only hash divergence the r11 fuzz campaign found
+    ``+0.0`` — a bit-only hash divergence the fuzz campaign found
     live at seed 31415 (the dedup_recall oracle set the precedent)."""
     kmeans, final = _duck_kmeans_ctes(dim, n_cells, n_iters, id_col)
     cdot = _duck_dot("x.__v", "c.__cv", dim)
@@ -4059,7 +3598,7 @@ def cluster_prune(
     rate_ceil: float = 0.9,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
-    """D4-style cluster-then-prune selection (r10) — the op that
+    """D4-style cluster-then-prune selection — the op that
     CONSUMES :func:`cluster_profile`'s per-cluster view and emits the
     per-document verdicts, completing the SemDeDup → profile → prune
     loop (Tirumala et al. 2023, "D4: Improving LLM Pretraining via
@@ -4149,7 +3688,7 @@ def cluster_prune(
             # clamped to the documented [rate_floor, rate_ceil] band:
             # a cluster with NEGATIVE mean cosine (anti-aligned mass)
             # makes (1 - avg) exceed 1, which unclamped would push the
-            # rate past rate_ceil (even past 1.0) — r10 advisor finding
+            # rate past rate_ceil (even past 1.0)
             F.expr(
                 f"least(CAST({rc!r} AS DOUBLE), "
                 f"greatest(CAST({rf!r} AS DOUBLE), "
@@ -4209,7 +3748,7 @@ def cluster_prune_frozen(
     vec_col: str = "embedding",
     dim: int = 64,
 ) -> DataFrame:
-    """Frozen-policy cluster pruning (r10) — the continuous-ingest
+    """Frozen-policy cluster pruning — the continuous-ingest
     form of :func:`cluster_prune`: profile + prune a REFERENCE corpus
     once, freeze the codebook and the per-cluster cosine cutoffs
     (:func:`prune_cutoffs`), then judge any vector against the frozen
@@ -4272,7 +3811,7 @@ def cluster_prune_policy(
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """:func:`cluster_prune` plus the frozen-policy re-judgment in ONE
-    PLAN (r10): derive each cluster's cutoff (the kept set's max
+    PLAN: derive each cluster's cutoff (the kept set's max
     cosine — what :func:`prune_cutoffs` freezes) as a ≤ n_cells-row
     aggregate INSIDE the plan and re-judge every vector against it —
     the certified form of the policy semantics the streaming twin
@@ -4534,7 +4073,7 @@ def semantic_dedup(
         F.col("__v").alias("__vb"),
         F.col("__nrm").alias("__nb"),
     )
-    cos = F.expr(_dot("__va", "__vb")) / (F.col("__na") * F.col("__nb"))
+    cos = _cos("__va", "__vb", "__na", "__nb")
     dropped = (
         a.join(b, "__cell")
         .filter(F.col("__idb") < F.col("__ida"))
@@ -4688,8 +4227,6 @@ class SemDedupIndex:
         self.max_cell = max_cell
 
     def codebook(self, spark) -> DataFrame | None:
-        from streamtasks_spark.llmdata.dedup import snapshot_read
-
         return snapshot_read(spark, self.codebook_path)
 
     def ingest(self, vectors: DataFrame) -> DataFrame:
@@ -4698,8 +4235,6 @@ class SemDedupIndex:
         — the same row shape as :func:`semantic_dedup`, restricted to
         this batch's (nonzero-norm) vectors. The returned DataFrame is
         persisted and already materialized."""
-        from streamtasks_spark.llmdata.dedup import snapshot_read
-
         spark = vectors.sparkSession
         idc = self.id_col
         cb = self.codebook(spark)
@@ -4709,8 +4244,6 @@ class SemDedupIndex:
                 n_cells=self.n_cells, n_iters=self.n_iters,
                 expect_dim=self.dim,
             )
-            from streamtasks_spark.core.state import replace_write
-
             replace_write(trained, self.codebook_path)
             cb = snapshot_read(spark, self.codebook_path)
         argmax = _argmax_cell_expr(_collect_codebook(cb))
@@ -4757,7 +4290,7 @@ class SemDedupIndex:
             F.col("__v").alias("__vb"),
             F.col("__nrm").alias("__nb"),
         )
-        cos = F.expr(_dot("__va", "__vb")) / (F.col("__na") * F.col("__nb"))
+        cos = _cos("__va", "__vb", "__na", "__nb")
         dropped = (
             a.join(b, "__cell")
             .filter(F.col("__idb") < F.col("__ida"))
@@ -4778,8 +4311,6 @@ class SemDedupIndex:
         verdict.count()  # materialize BEFORE the append below
         # versioned-manifest append: survivors become visible in one
         # atomic pointer flip (crash mid-write = invisible orphan)
-        from streamtasks_spark.core.state import append_write
-
         append_write(
             batch.join(
                 verdict.filter(F.col("keep")).select(idc), idc, "left_semi"
@@ -4794,8 +4325,6 @@ class SemDedupIndex:
         small-files hygiene as MinHashIndex.compact; the codebook is
         written once and never appended). EXCLUSIVE access required —
         see :func:`~streamtasks_spark.llmdata.dedup.compact_table`."""
-        from streamtasks_spark.llmdata.dedup import compact_table
-
         compact_table(spark, self.kept_path, files=files_per_table)
 
 
@@ -4892,7 +4421,7 @@ def ann_drift_probe(
     pq_iters: int = 2,
     split_id: int = 250,
 ) -> DataFrame:
-    """Codebook-drift probe (r11) — the certified form of the stats
+    """Codebook-drift probe — the certified form of the stats
     rows :meth:`IvfIndex.ingest` / :meth:`IvfPqIndex.ingest` append:
     train BOTH codebooks (coarse spherical k-means via
     :func:`train_centroids`, per-subspace PQ via
@@ -4928,10 +4457,10 @@ def ann_drift_probe(
             m_sub=m_sub, n_codes=n_codes, n_iters=pq_iters,
         ),
     )
-    v = _require_dim(
+    v = _pq_prep(
         _with_norm(spread(vectors, id_col).select(id_col, vec_col), vec_col),
         dim, "ann_drift_probe",
-    ).withColumn("__nv", F.expr("transform(__v, x -> x / __nrm)"))
+    )
     stats = _drift_stats(
         v, cb, pqcb,
         batch_expr=F.when(F.col(id_col) < split_id, 0).otherwise(1),
@@ -5090,18 +4619,17 @@ def ivf_pq_res_topk(
     n_iters: int = 2,
     k: int = 5,
     rerank: int = 4,
-    _base: DataFrame | None = None,
-    _q_assigned: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF-PQ with RESIDUAL encoding (r11) — the standard Faiss
-    ``IVFx,PQy`` formulation :func:`ivf_pq_topk` deliberately skips:
-    each vector is coded as the PQ quantization of its residual
-    ``r = v̂ − ĉ(cell)`` against its assigned unit centroid, not of v̂
-    itself. Residuals concentrate near the origin once the coarse
-    quantizer has soaked up the between-cell structure, so the same
-    ``m_sub × n_codes`` code budget spends its resolution on the
-    within-cell detail that actually ranks neighbors — the measured
-    recall gain is :func:`recall_probe`'s seventh rung.
+    """IVF-PQ with RESIDUAL encoding, coarse ``ivf`` × code ``pq_res``
+    — the standard Faiss ``IVFx,PQy`` formulation :func:`ivf_pq_topk`
+    deliberately skips: each vector is coded as the PQ quantization of
+    its residual ``r = v̂ − ĉ(cell)`` against its assigned unit
+    centroid, not of v̂ itself. Residuals concentrate near the origin
+    once the coarse quantizer has soaked up the between-cell
+    structure, so the same ``m_sub × n_codes`` code budget spends its
+    resolution on the within-cell detail that actually ranks
+    neighbors — the measured recall gain is :func:`recall_probe`'s
+    seventh rung.
 
     ADC decomposition: ``dot(q̂, v̂) ≈ dot(q̂, ĉ) + dot(q̂, recon(r))``.
     The first term is EXACT per (query, probed cell) — n_probe cheap
@@ -5128,141 +4656,23 @@ def ivf_pq_res_topk(
         raise ValueError(
             f"ivf_pq_res_topk: dim {dim} not divisible by m_sub {m_sub}"
         )
-    sub = dim // m_sub
-    cents = broadcast(_seed_cells(vectors, id_col, vec_col, n_cells))
-    score = F.expr(f"{_dot('__v', '__cv')}") / (F.col("__nrm") * F.col("__cn"))
-
-    def assign(df: DataFrame, id_out: str, rank_limit: int,
-               keep_centroid: bool) -> DataFrame:
-        w = Window.partitionBy(id_out).orderBy(
-            F.col("__score").desc(), F.col("__cell").asc()
-        )
-        out = (
-            df.crossJoin(cents)
-            .withColumn("__score", score)
-            .withColumn("__cr", F.row_number().over(w))
-            .filter(F.col("__cr") <= rank_limit)
-            .drop("__score", "__cr")
-        )
-        return out if keep_centroid else out.drop("__cv", "__cn")
-
-    nv = "transform(__v, x -> x / __nrm)"
-    # residual against the UNIT centroid: r = v̂ − ĉ
-    res = (
-        "zip_with(__nv, transform(__cv, c -> c / __cn), (x, y) -> x - y)"
+    op = "ivf_pq_res_topk"
+    a, q = _ivf(
+        _pq_prep(_corpus_norm(vectors, id_col, vec_col), dim, op),
+        _pq_prep(_query_norm(queries, id_col, vec_col), dim, op, query=True),
+        _seed_cells(vectors, id_col, vec_col, n_cells), id_col, n_probe,
+        carry=("__nv", "__qi"), keep_centroid=True,
     )
-    # _base: a caller-pinned assigned corpus already carrying __res
-    # (recall_probe's shared _cell_assign pass — the same expressions
-    # as the pin below, so codebooks and codes are bit-identical);
-    # the caller manages its lifetime, so only a locally created pin
-    # is released on the empty-codebook early exit.
-    base = _base if _base is not None else pin(
-        assign(
-            _require_dim(
-                _corpus_norm(vectors, id_col, vec_col),
-                dim, "ivf_pq_res_topk",
-            ).withColumn("__nv", F.expr(nv)),
-            id_col, 1, True,
-        ).withColumn("__res", F.expr(res))
+    a = pin(a.withColumn("__res", F.expr(_RES)))
+    code = _pq_code(
+        _res_codebooks(a, id_col, dim, m_sub, n_codes, n_iters),
+        dim, m_sub, rerank, residual=True,
     )
-    # pooled-residual codebooks: _pq_train consumes (id, __nv), so feed
-    # it the residuals under that name — same seeding (id < n_codes),
-    # same exact-integer means, same DuckDB CTE twin
-    pqcb = _pq_codebooks(
-        base.select(F.col(id_col), F.col("__res").alias("__nv")),
-        id_col, dim, m_sub, n_codes, n_iters,
-    )
-    pq_cents, cint = pqcb
-    if not pq_cents:
-        if _base is None:
-            base.unpersist()
-        return _empty_pq_result(vectors, queries, id_col)
-    a = base.select(
-        F.col(id_col),
-        F.col("__cell"),
-        F.col("__v").alias("__av"),
-        F.col("__nrm").alias("__anrm"),
-        _pq_codes_res_col(pq_cents, m_sub, sub).alias("__codes"),
-    )
-    q = (
-        # shared probed-query assignment (recall_probe, r12): built
-        # with keep_centroid=True, so __cv/__cn for the coarse ADC
-        # term ride along — same expressions, bit-identical values
-        _q_assigned.select(
-            "query_id", "__cell", "__v", "__nrm", "__nv", "__qi",
-            "__cv", "__cn",
-        )
-        if _q_assigned is not None
-        else assign(
-            _require_dim(
-                _with_norm(
-                    queries.select(F.col(id_col).alias("query_id"), vec_col),
-                    vec_col,
-                ),
-                dim, "ivf_pq_res_topk",
-            )
-            .withColumn("__nv", F.expr(nv))
-            .withColumn("__qi", F.expr(_pq_qi_expr()))
-            .select("query_id", "__v", "__nrm", "__nv", "__qi"),
-            "query_id", n_probe, True,
-        )
-    ).select(
-        "query_id",
-        "__cell",
-        F.col("__v").alias("__qv"),
-        F.col("__nrm").alias("__qnrm"),
-        # exact dot(q̂, ĉ) for the probed cell — the coarse ADC term
-        F.expr(
-            f"{_dot('__nv', 'transform(__cv, c -> c / __cn)')}"
-        ).alias("__cd"),
-        F.expr(_pq_lut_expr(cint, m_sub, sub)).alias("__lut"),
-    )
-    w_cand = Window.partitionBy("query_id").orderBy(
-        F.col("__adc").desc(), F.col(id_col).asc()
-    )
-    # broadcast-sized q side (n_queries · n_probe) — the ivf_topk hint
-    cand = (
-        a.join(broadcast(q), "__cell")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .withColumn("__is", _pq_iscore(m_sub))
-        .withColumn(
-            "__adc",
-            F.col("__cd")
-            + F.col("__is").cast("double") / F.lit(float(PQ_GRID) ** 2),
-        )
-        .withColumn("__cr", F.row_number().over(w_cand))
-        .filter(F.col("__cr") <= rerank * k)
-    )
-    cos = F.expr(_dot("__av", "__qv")) / (F.col("__anrm") * F.col("__qnrm"))
-    w_final = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col(id_col).asc()
-    )
-    return (
-        cand.withColumn("__cos", cos)
-        .withColumn("rank", F.row_number().over(w_final))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col(id_col),
-            F.round("__cos", 6).alias("cosine"),
-            F.round("__adc", 6).alias("approx"),
-            "rank",
-        )
-    )
+    if code is None:
+        a.unpersist()
+    return _search(a, q, code, id_col=id_col, k=k, key="__cell")
 
 
-def _pq_codes_res_col(cents: dict, m_sub: int, sub: int):
-    """Per-subspace argmin codes of the RESIDUAL column ``__res``
-    (same literal-centroid L2 argmin as :func:`_pq_codes_col`, which
-    reads ``__nv``)."""
-    return F.array(*[
-        F.expr(
-            _pq_argmin_expr(cents[m], m * sub, sub).replace(
-                "__nv", "__res"
-            )
-        )
-        for m in range(m_sub)
-    ])
 
 
 def oracle_ivf_pq_res_topk_sql(

@@ -1607,8 +1607,10 @@ def streaming_ann_ingest(
     Replay: the index commits inside ``ingest``, before the report is
     written. A crash between the final commit and the checkpoint commit
     re-ingests the batch: it re-appends VALUE-IDENTICAL code/vector
-    rows, which ``query()`` tolerates (dropDuplicates on the rerank
-    set) and ``compact()`` folds durably, plus a second stats row, and
+    rows, which ``query()`` tolerates (it ranks distinct ids only:
+    duplicate code rows tie and share one of the rerank·k candidate
+    slots, and duplicate raw rows collapse before the exact re-rank)
+    and ``compact()`` folds durably, plus a second stats row, and
     the report directory is rewritten with the replay's stats row. A
     crash at any manifest flip leaves the index at its previous version
     intact.

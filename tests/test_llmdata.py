@@ -1425,11 +1425,32 @@ def test_ivf_pq_index_incremental_reload_and_pruning(spark, tmp_path):
     idx = similarity.IvfPqIndex(path, **kw)
     idx.ingest(vecs.filter(F.col("vec_id") < 250), pq_codebooks=cb)
     idx.ingest(vecs.filter(F.col("vec_id") >= 250))
+    # the one-shot plan fed the same codebook: ivf_pq_topk's own
+    # stages (ivf coarse × pq code × exact re-rank) composed over the
+    # whole corpus, with cb in place of its in-plan training
+    a, q = similarity._ivf(
+        similarity._pq_prep(
+            similarity._corpus_norm(vecs, "vec_id", "embedding"), 64, "t"
+        ),
+        similarity._pq_prep(
+            similarity._query_norm(qs, "vec_id", "embedding"), 64, "t",
+            query=True,
+        ),
+        similarity._seed_cells(vecs, "vec_id", "embedding", 8),
+        "vec_id", 2, carry=("__qi",),
+    )
     want = {
         (r["query_id"], r["rank"]): (r["vec_id"], r["cosine"], r["approx"])
-        for r in similarity.ivf_pq_topk(
-            vecs, qs, k=5, _cb=cb, **kw
+        for r in similarity._search(
+            a, q, similarity._pq_code(cb, 64, 8, 4), id_col="vec_id",
+            k=5, key="__cell",
         ).collect()
+    }
+    # cb was trained on this same corpus with ivf_pq_topk's defaults,
+    # so the composition must also be the public tier's answer
+    assert want == {
+        (r["query_id"], r["rank"]): (r["vec_id"], r["cosine"], r["approx"])
+        for r in similarity.ivf_pq_topk(vecs, qs, k=5, **kw).collect()
     }
     reloaded = similarity.IvfPqIndex(path, **kw)  # fresh object
     out = reloaded.query(qs, k=5)

@@ -447,6 +447,37 @@ def test_ivf_pq_index_crash_at_flip(spark, tmp_path, monkeypatch, at):
     assert _canon(idx.query(qs, k=3)) == _canon(one.query(qs, k=3))
 
 
+@pytest.mark.parametrize("kind", ["ivf", "ivf_pq"])
+def test_ivf_index_query_tolerates_replayed_ingest(spark, tmp_path, kind):
+    """A crash after an ingest's last commit but before the stream's
+    checkpoint replays the batch: the same rows are appended twice.
+    query() ranks distinct ids only, so the twice-ingested index
+    answers exactly like the once-ingested one — no neighbour returned
+    twice (IvfIndex), no duplicate code row taking a second rerank·k
+    candidate slot (IvfPqIndex)."""
+    from streamtasks_spark.llmdata.similarity import IvfIndex, IvfPqIndex
+
+    vecs = _vecs(spark)
+    qs = vecs.filter(F.col("vec_id") < 10)
+    make = (
+        (lambda p: IvfIndex(p, n_cells=8, n_probe=2)) if kind == "ivf"
+        else (lambda p: IvfPqIndex(p, n_cells=8, n_probe=2, rerank=4))
+    )
+    once = make(str(tmp_path / "once"))
+    once.ingest(vecs)
+    replayed = make(str(tmp_path / "replayed"))
+    replayed.ingest(vecs)
+    replayed.ingest(vecs)
+    want = _canon(once.query(qs, k=5))
+    assert len(want) == 50
+    assert _canon(replayed.query(qs, k=5)) == want
+    # compaction folds the duplicates durably and keeps the answers
+    replayed.compact(spark)
+    assert _canon(replayed.query(qs, k=5)) == want
+    cells = snapshot_read(spark, replayed.cells_path)
+    assert cells.count() == snapshot_read(spark, once.cells_path).count()
+
+
 def test_semdedup_index_crash_at_flip(spark, tmp_path, monkeypatch):
     from streamtasks_spark.llmdata.similarity import SemDedupIndex
 
