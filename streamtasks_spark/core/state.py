@@ -21,7 +21,9 @@ renames. The protocol:
   ``{"query": id, "batch": n}`` of the streaming micro-batch whose
   state this version is, when a streaming twin commits it: the batch
   and its state become durable in the same flip, so a replay of that
-  batch can tell it is already in.
+  batch can tell it is already in (:func:`fenced`). An owner that
+  commits several tables per batch may record a token of its own
+  there, to tell a commit torn between its flips.
 - Commit = write the new manifest to a sibling temp file, fsync, then
   one atomic single-file replace (:func:`os.replace`). A crash at ANY
   point before the flip leaves the previous manifest — and therefore
@@ -157,17 +159,28 @@ def commit_segments(path: str, segments: list[str], *, gc: bool = True,
 
 
 def append_commit(path: str, new_names: list[str], *, gc: bool = True,
-                  schema=None) -> None:
+                  schema=None, fence: dict | None = None) -> None:
     """Atomically extend the live segment set with ``new_names``
     (APPEND semantics — one pointer flip makes the whole batch of new
     segments visible at once). ``schema`` is that of the new segments;
     it stays recorded only if the live segments are recorded with the
-    same one."""
+    same one. ``fence`` is recorded in the same flip."""
     prev = read_manifest(path)
     base = prev["segments"] if prev else []
     if base and schema is not None and prev.get("schema") != schema.jsonValue():
         schema = None
-    commit_segments(path, base + list(new_names), gc=gc, schema=schema)
+    commit_segments(
+        path, base + list(new_names), gc=gc, schema=schema, fence=fence
+    )
+
+
+def fenced(manifest: dict | None, fence: dict) -> bool:
+    """Whether ``manifest`` already holds ``fence``'s batch: it carries
+    a fence of the same query at that batch or a later one."""
+    done = (manifest or {}).get("fence") or {}
+    return done.get("query") == fence["query"] and (
+        done["batch"] >= fence["batch"]
+    )
 
 
 def gc_segments(path: str) -> None:

@@ -38,6 +38,7 @@ import os
 import random
 import re
 import threading
+import uuid
 from collections.abc import Iterator, Sequence
 from contextlib import contextmanager
 
@@ -2175,8 +2176,9 @@ def snapshot_read(spark, path: str, base_path: str | None = None):
     files explicitly. Appending to ``path`` fires Spark's
     refreshByPath cache invalidation, so any cached plan reading the
     plain path recomputes against a RE-LISTED directory — observing
-    rows appended after the read was planned (the double-counting trap
-    MinHashIndex documents). Explicit file lists pin the view;
+    rows appended after the read was planned (a plan that then sees
+    its own batch as history double-counts it). Explicit file lists
+    pin the view;
     ``base_path`` preserves partition columns when the dataset is
     directory-partitioned.
 
@@ -2243,7 +2245,9 @@ def compact_table(
     segment, one atomic pointer flip makes it the live version, and
     the superseded segments are swept — a crash anywhere before the
     flip leaves the previous version fully live (no rename gap; the
-    old directory-swap's crash window is gone). Legacy plain
+    old directory-swap's crash window is gone). The live manifest's
+    batch fence carries over to the compacted version, so a streaming
+    replay after compaction still finds its batch committed. Legacy plain
     directories keep the historical two-rename swap.
 
     Compaction still requires EXCLUSIVE access — no concurrent writer,
@@ -2252,7 +2256,6 @@ def compact_table(
     single maintenance owner of the index (the same discipline ingest
     already requires). Returns False if the dataset doesn't exist."""
     import shutil
-    import uuid
 
     from streamtasks_spark.core.state import (
         commit_segments,
@@ -2276,11 +2279,14 @@ def compact_table(
     ).write
     if partition_by:
         writer = writer.partitionBy(partition_by)
-    if read_manifest(path) is not None:
+    m = read_manifest(path)
+    if m is not None:
         name, seg = new_segment(path)
         writer.parquet(seg)
+        # the rows are the same, so the streaming batch they hold is too
         commit_segments(
-            path, [name], schema=file_schema(cur, partition_by)
+            path, [name], schema=file_schema(cur, partition_by),
+            fence=m.get("fence"),
         )
         return True
     tag = uuid.uuid4().hex[:8]
@@ -2347,14 +2353,28 @@ class MinHashIndex:
     then a superset of the capped one-shot result (and a subset of
     the uncapped one).
 
-    Scale shape: each ingest shuffles only the new batch's sketches;
-    the history side is ONE join keyed on (band_idx, band_key) against
-    the postings table — at warehouse scale, persist that table bucketed
-    on the band key so the join is co-located with no history shuffle.
-    ``max_bucket`` is the same hot-bucket guard as :func:`_band_pairs`,
-    applied to the combined bucket occupancy. Doc ids must be unique
-    across ingests (enforce upstream); re-ingesting an id would pair it
-    with itself.
+    Scale shape: each ingest sketches only the new batch, and history
+    is reached only through the index: one join keyed on (band_idx,
+    band_key) of the batch's postings against the postings table (at
+    warehouse scale, persist that table bucketed on the band key so
+    the join is co-located with no history shuffle), then one lookup
+    of the other end's hashes for the candidate pairs. ``max_bucket``
+    is the same hot-bucket guard as :func:`_band_pairs`, applied to
+    the combined bucket occupancy. Doc ids must be unique across
+    ingests (enforce upstream); re-ingesting an id would pair it with
+    itself.
+
+    Commit protocol (:meth:`stage`): the batch's ``hashes/`` and
+    ``bands/`` rows land first, in new uncommitted segments, and the
+    pair plan reads them next to the history segments the manifests
+    named before the write — so it never sees the batch twice and
+    needs no persisted working table. The commit then appends
+    ``hashes/`` and then ``bands/``, each flip carrying the batch's
+    fence (a streaming ``(query, batch)``, or a fresh token per batch
+    ingest). A batch whose fence ``bands/`` holds is in the index
+    whole. A fence in ``hashes/`` that ``bands/`` lacks is a crash
+    between the two flips, which the next ingest or compaction undoes
+    first (:meth:`_repair`), so no doc's hash row is ever held twice.
     """
 
     def __init__(
@@ -2376,32 +2396,36 @@ class MinHashIndex:
         self.threshold = threshold
         self.max_bucket = max_bucket
 
-    def _read_or_none(self, spark, path: str) -> DataFrame | None:
-        """Snapshot read (see :func:`snapshot_read`): the append at the
-        end of :meth:`ingest` invalidates path-based caches, and a
-        recomputation through a re-listed directory would see the
-        batch's OWN just-appended sketches, duplicate every id in the
-        hash-lookup join, and multiply the output pairs."""
-        return snapshot_read(spark, path)
+    def _repair(self) -> None:
+        """Undo a commit torn between its two flips: ``hashes/`` then
+        carries a fence ``bands/`` lacks, and its last segment is that
+        commit's. One flip points ``hashes/`` back at the segments
+        before it, with the fence of ``bands/``, and sweeps the
+        segment; a retry of the batch then appends it once."""
+        from pyspark.sql.types import StructType
 
-    def ingest(self, docs: DataFrame) -> DataFrame:
-        """Dedup one batch against itself + history, append its sketches
-        to the index, and return the verified pairs
-        (doc_a, doc_b, jaccard), doc_a < doc_b, ready to feed
-        :func:`connected_components`. The returned DataFrame is
-        materialized (persisted) BEFORE the index append so its plan
-        cannot observe the batch's own postings twice."""
-        spark = docs.sparkSession
-        idc = self.id_col
-        hs = pin(_shingle_hashes(docs, idc, self.text_col, self.k))
-        new_posts = pin(_band_postings(hs, idc))
-        new_hashes = hs.select(F.col(idc), F.col("hashes"))
+        from streamtasks_spark.core.state import commit_segments, read_manifest
 
-        old_posts = self._read_or_none(spark, self.bands_path)
-        posts = (
-            new_posts if old_posts is None
-            else new_posts.unionByName(old_posts)
+        h = read_manifest(self.hashes_path)
+        done = (read_manifest(self.bands_path) or {}).get("fence")
+        if h is None or h.get("fence") in (None, done):
+            return
+        commit_segments(
+            self.hashes_path, h["segments"][:-1], fence=done,
+            schema=StructType.fromJson(h["schema"]) if h.get("schema") else None,
         )
+
+    def _candidates(self, new_posts: DataFrame, old_posts) -> DataFrame:
+        """(__a, __b): distinct pairs sharing a band, __a in the batch.
+        The postings side tags the batch's own rows ``__new``, so a
+        (new, new) pair comes out once, with __a < __b."""
+        idc = self.id_col
+        posts = new_posts.withColumn("__new", F.lit(True))
+        if old_posts is not None:
+            posts = posts.unionByName(
+                old_posts.withColumn("__new", F.lit(False))
+            )
+        new_side = new_posts
         if self.max_bucket is not None:
             w = Window.partitionBy("__band_idx", "__band_key")
             posts = (
@@ -2409,67 +2433,113 @@ class MinHashIndex:
                 .filter(F.col("__bsz") <= self.max_bucket)
                 .drop("__bsz")
             )
-            new_side = posts.join(
-                new_posts.select(idc).distinct(), idc, "left_semi"
-            )
-        else:
-            new_side = new_posts
-        # candidate pairs: at least one end in the new batch; dedup the
-        # (new,new) double-count with doc_a < doc_b canonical order
+            new_side = posts.filter("__new")
         a, b = new_side.alias("a"), posts.alias("b")
-        cands = (
+        return (
             a.join(
                 b,
                 (F.col("a.__band_idx") == F.col("b.__band_idx"))
                 & (F.col("a.__band_key") == F.col("b.__band_key"))
-                & (F.col(f"a.{idc}") != F.col(f"b.{idc}")),
+                & F.when(
+                    F.col("b.__new"), F.col(f"a.{idc}") < F.col(f"b.{idc}")
+                ).otherwise(F.col(f"a.{idc}") != F.col(f"b.{idc}")),
             )
             .select(
-                F.least(F.col(f"a.{idc}"), F.col(f"b.{idc}")).alias("doc_a"),
-                F.greatest(F.col(f"a.{idc}"), F.col(f"b.{idc}")).alias("doc_b"),
+                F.col(f"a.{idc}").alias("__a"), F.col(f"b.{idc}").alias("__b")
             )
             .distinct()
         )
-        old_hashes = self._read_or_none(spark, self.hashes_path)
-        all_hashes = (
+
+    def stage(self, docs: DataFrame, fence: dict | None = None):
+        """Write one batch's sketches and plan its pairs, committing
+        nothing yet. Returns ``(pairs, commit)``, or None when the
+        streaming ``fence`` (``{"query": id, "batch": n}``) is already
+        committed. ``pairs`` is (doc_a, doc_b, jaccard), doc_a < doc_b,
+        ready to feed :func:`connected_components`; ``commit()`` makes
+        the batch part of history.
+
+        ``pairs`` reads the batch's new segments and the history
+        segments live before this call, nothing through a manifest, so
+        it evaluates to the same rows before the commit, after it and
+        after later ingests — until a :meth:`compact` sweeps the
+        segments it reads."""
+        from streamtasks_spark.core.state import (
+            adopt_legacy,
+            append_commit,
+            commit_segments,
+            fenced,
+            file_schema,
+            new_segment,
+            read_manifest,
+        )
+
+        if fence is not None and fenced(read_manifest(self.bands_path), fence):
+            return None
+        for path in (self.hashes_path, self.bands_path):
+            # an index written before manifests keeps its history
+            if read_manifest(path) is None and (legacy := adopt_legacy(path)):
+                commit_segments(path, legacy)
+        self._repair()
+        spark = docs.sparkSession
+        idc = self.id_col
+        old_hashes = snapshot_read(spark, self.hashes_path)
+        old_posts = snapshot_read(spark, self.bands_path)
+
+        def land(df: DataFrame, path: str):
+            name, seg = new_segment(path)
+            df.write.parquet(seg)
+            schema = file_schema(df)
+            return name, schema, spark.read.schema(schema).parquet(seg)
+
+        h_name, h_schema, new_hashes = land(
+            _shingle_hashes(docs, idc, self.text_col, self.k), self.hashes_path
+        )
+        b_name, b_schema, new_posts = land(
+            _band_postings(new_hashes, idc), self.bands_path
+        )
+        # one lookup serves both ends: its two joins share one plan, so
+        # Spark reads and broadcasts it once
+        look = (
             new_hashes if old_hashes is None
             else new_hashes.unionByName(old_hashes)
         )
-        x = all_hashes.select(
-            F.col(idc).alias("doc_a"), F.col("hashes").alias("__ha")
-        )
-        y = all_hashes.select(
-            F.col(idc).alias("doc_b"), F.col("hashes").alias("__hb")
-        )
+        x, y = look.alias("x"), look.alias("y")
         jac = F.expr(
-            "cast(size(array_intersect(__ha, __hb)) as double) / "
-            "cast(size(array_union(__ha, __hb)) as double)"
+            "cast(size(array_intersect(x.hashes, y.hashes)) as double) / "
+            "cast(size(array_union(x.hashes, y.hashes)) as double)"
         )
-        verified = pin(
-            cands.join(x, "doc_a")
-            .join(y, "doc_b")
-            .withColumn("__jac", jac)
+        pairs = (
+            self._candidates(new_posts, old_posts)
+            .join(x, F.col("__a") == F.col(f"x.{idc}"))
+            .join(y, F.col("__b") == F.col(f"y.{idc}"))
+            .select("__a", "__b", jac.alias("__jac"))
             .filter(F.col("__jac") >= F.lit(self.threshold))
-            .select("doc_a", "doc_b", F.round("__jac", 6).alias("jaccard"))
+            .select(
+                F.least("__a", "__b").alias("doc_a"),
+                F.greatest("__a", "__b").alias("doc_b"),
+                F.round("__jac", 6).alias("jaccard"),
+            )
         )
-        verified.count()  # materialize before the append below
-        # versioned-manifest appends, HASHES FIRST: a band posting must
-        # always find its hash row (the verify join is inner), so the
-        # crash-safe order is the dependency order — an orphan hash row
-        # with no posting is unreachable and harmless, a posting with
-        # no hashes would silently drop verified pairs. Each commit is
-        # one atomic pointer flip.
-        from streamtasks_spark.core.state import append_write
+        fence = fence or {"ingest": uuid.uuid4().hex}
 
-        append_write(new_hashes, self.hashes_path)
-        append_write(new_posts, self.bands_path)
-        # drop this batch's working pins — a long-running ingest loop
-        # would otherwise accumulate two persisted tables per batch
-        # (verified stays pinned: it is the returned result; callers
-        # unpersist when done, as streaming_dedup_minhash does)
-        new_posts.unpersist()
-        hs.unpersist()
-        return verified
+        def commit() -> None:
+            # hashes first: a posting must always find its hash row
+            append_commit(
+                self.hashes_path, [h_name], schema=h_schema, fence=fence
+            )
+            append_commit(
+                self.bands_path, [b_name], schema=b_schema, fence=fence
+            )
+
+        return pairs, commit
+
+    def ingest(self, docs: DataFrame) -> DataFrame:
+        """Dedup one batch against itself + history, commit its sketches
+        to the index, and return the verified pairs (doc_a, doc_b,
+        jaccard) — :meth:`stage`'s ``pairs``, evaluated lazily."""
+        pairs, commit = self.stage(docs)
+        commit()
+        return pairs
 
     def compact(self, spark, *, files_per_table: int = 8) -> None:
         """Rewrite both index tables into ``files_per_table`` files.
@@ -2483,17 +2553,18 @@ class MinHashIndex:
         :func:`compact_table`). EXCLUSIVE access required — no
         concurrent ingest and no reader mid-query: the post-flip sweep
         deletes superseded segment files a long-running plan may still
-        hold.
+        hold, the unevaluated ``pairs`` of an earlier ingest included.
 
         At warehouse scale this is where the postings table would also
         be re-bucketed on the band key (sort/cluster within rewrite);
         locally a plain coalesced rewrite keeps the semantics
-        byte-identical (pinned by the equivalence test). The distinct
-        fold is a no-op on clean data (one posting per (id, band), one
-        hash row per id) and durably cures the value-identical
-        duplicates a crash-replayed ingest can append (hashes commit
-        before bands, so a crash between the two flips makes the
-        replay re-append the batch's hash rows)."""
+        byte-identical (pinned by the equivalence test). A torn commit
+        is undone first (:meth:`_repair`), and each table keeps its
+        batch fence, so a streaming replay after compaction is still
+        skipped. The distinct fold is a no-op on an index written with
+        fenced commits; it removes the value-identical rows a replayed
+        ingest appended before them."""
+        self._repair()
         for path in (self.bands_path, self.hashes_path):
             compact_table(
                 spark, path, files=files_per_table,

@@ -2860,6 +2860,7 @@ class IvfPqIndex(_IvfLifecycle):
         self.n_codes = n_codes
         self.n_iters = n_iters
         self.rerank = rerank
+        self._code: tuple | None = None  # (manifest key, codebooks)
 
     @property
     def pq_codebook_path(self) -> str:
@@ -2877,8 +2878,16 @@ class IvfPqIndex(_IvfLifecycle):
 
     def _load_code(self, spark) -> tuple[dict, dict] | None:
         """Reload the frozen PQ codebooks as the (cents, cint) pair
-        the encoding/scoring expressions consume."""
-        df = snapshot_read(spark, self.pq_codebook_path)
+        the encoding/scoring expressions consume. The pull is cached
+        on the index, keyed by the codebook table's path and manifest:
+        a :meth:`rebuild` commits a new epoch, so its codebook table
+        has another path and is read afresh."""
+        path = self.pq_codebook_path
+        m = read_manifest(path)
+        key = (path, m and (m["version"], *m["segments"]))
+        if self._code is not None and self._code[0] == key:
+            return self._code[1]
+        df = snapshot_read(spark, path)
         if df is None:
             return None
         cents: dict[int, dict[int, list[float]]] = {}
@@ -2887,7 +2896,8 @@ class IvfPqIndex(_IvfLifecycle):
             df, self.m_sub * self.n_codes, "IvfPqIndex pq_codebook"
         ):
             cents.setdefault(r["__m"], {})[r["__j"]] = list(r["__cv"])
-        return cents, _pq_grid(cents)
+        self._code = (key, (cents, _pq_grid(cents)))
+        return self._code[1]
 
     def _ingest_code(self, spark, v: DataFrame, supplied):
         cb = self._load_code(spark)
@@ -4191,10 +4201,10 @@ class SemDedupIndex:
 
     Snapshot discipline: history is read via
     :func:`~streamtasks_spark.llmdata.dedup.snapshot_read` and the
-    batch verdict is MATERIALIZED before the append (the same
-    self-observation trap MinHashIndex documents — an append-then-
-    compute plan would see the batch's own rows as history and drop
-    everything as its own duplicate)."""
+    batch verdict is MATERIALIZED before the append (the
+    self-observation trap: an append-then-compute plan would see the
+    batch's own rows as history and drop everything as its own
+    duplicate)."""
 
     def __init__(
         self,

@@ -46,10 +46,14 @@ their output layout and replay contract:
   the merged state with the batch's ``(query, batch)`` fence in the same
   manifest flip, and skip a batch their query already fenced: state and
   reports are exactly-once per checkpoint.
-- Index twins commit their index inside ``ingest()``, before the output
-  exists. The output is still one copy per batch, but a crash between
-  the index commit and the checkpoint commit ingests the batch twice;
-  each one's docstring says what that does.
+- :func:`streaming_dedup_minhash` writes its batch's sketches into
+  uncommitted index segments, writes the pairs, then commits the index
+  with the batch's fence, and skips a batch its query already fenced:
+  index and pairs are exactly-once per checkpoint.
+- The other index twins commit their index inside ``ingest()``, before
+  the output exists. The output is still one copy per batch, but a
+  crash between the index commit and the checkpoint commit ingests the
+  batch twice; each one's docstring says what that does.
 - No twin runs a per-batch ``isEmpty`` job: a stateless upstream plan
   never sends an empty batch, and on an empty one (after a stateful
   upstream's no-data batch) each step changes no table's rows.
@@ -896,17 +900,14 @@ def _sketch_step(state_path: str, schema: str, cells, bound: int, merge,
     cached on the driver; the cache is merged into a copy, published
     only after the flip, and reloaded whenever the manifest version is
     not the one it mirrors."""
-    from streamtasks_spark.core.state import read_manifest
+    from streamtasks_spark.core.state import fenced, read_manifest
     from streamtasks_spark.llmdata.dedup import bounded_collect, snapshot_read
 
     cache: dict = {"version": None, "rows": None}
 
     def step(batch: DataFrame, fence: dict):
         m = read_manifest(state_path)
-        done = (m or {}).get("fence") or {}
-        if done.get("query") == fence["query"] and (
-            done["batch"] >= fence["batch"]
-        ):
+        if fenced(m, fence):
             return None  # this query already committed the batch
         spark = batch.sparkSession
         new = cells(batch)
@@ -968,11 +969,16 @@ def streaming_dedup_minhash(
     MinHashIndex pins in its batch-equivalence test; each pair is
     emitted by the micro-batch where its later doc arrives).
 
-    Replay: the index commits inside ``ingest``, before the pairs are
-    written. A crash between that commit and the checkpoint commit
-    re-ingests the batch: its pairs directory is still rewritten once,
-    but the index then holds the batch's sketches twice, and pairs
-    touching its documents can repeat, in that batch and later ones.
+    Replay: the batch's sketches land in uncommitted index segments,
+    its pairs are written, and only then does the index commit, with
+    the batch's ``(query, batch)`` fence in both flips
+    (:meth:`~streamtasks_spark.llmdata.dedup.MinHashIndex.stage`). A
+    replay of a batch the index already holds is skipped whole; its
+    pairs directory was written before the commit. A crash before the
+    commit, or between its two flips, leaves the batch out of the
+    index (a torn commit is undone first), so the replay ingests it
+    once. Either way no pair row repeats, in that batch or a later
+    one.
 
     Returns the started StreamingQuery.
     """
@@ -988,7 +994,7 @@ def streaming_dedup_minhash(
     )
     return _start_twin(
         docs, checkpoint, pairs_path,
-        lambda batch, _: index.ingest(batch.select(id_col, text_col)),
+        lambda batch, fence: index.stage(batch.select(id_col, text_col), fence),
     )
 
 

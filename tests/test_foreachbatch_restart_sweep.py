@@ -16,14 +16,16 @@ over all thirteen:
    bit-exactly, with no row re-emitted (the committed-offset log is
    what keeps run 2 from re-reading run 1's files).
 
-2. **crash after commit** (the nine twins without an index): the last
-   batch's output and state are durable but its checkpoint commit is
-   deleted, so the same checkpoint replays it. Every output row stays
-   one copy (the batch rewrites its own ``batch_id=<n>`` directory) and
-   the state does not move (the sketch twins' batch fence skips it), so
-   the Count-Min grid still equals the one-shot grid. The index twins
-   commit inside ``ingest()``, before their output exists, so they are
-   not exactly-once under this replay and have no such leg.
+2. **crash after commit** (the nine twins without an index, and
+   dedup_minhash): the last batch's output and state are durable but
+   its checkpoint commit is deleted, so the same checkpoint replays it.
+   Every output row stays one copy (the batch rewrites its own
+   ``batch_id=<n>`` directory) and the state does not move (the batch
+   fence in the sketch twins' state and in the MinHash index skips
+   it), so the Count-Min grid still equals the one-shot grid and the
+   MinHash pairs and index are unchanged. The bloom, semantic and ANN
+   index twins commit inside ``ingest()``, before their output exists,
+   so they are not exactly-once under this replay and have no such leg.
 
 3. **one query per output path**: a fresh checkpoint on the same output
    path fails before it writes; output and state are unchanged.
@@ -289,9 +291,15 @@ def _spec_minhash():
         expect=lambda spark, full, chunks, td, ctx: _canon(
             dedup_minhash(full, threshold=0.5)
         ),
-        state=lambda spark, td: sorted(
-            (r["doc_id"], r["__band_idx"], r["__band_key"])
-            for r in _state_read(spark, f"{td}/index/bands").collect()
+        state=lambda spark, td: (
+            sorted(
+                (r["doc_id"], r["__band_idx"], r["__band_key"])
+                for r in _state_read(spark, f"{td}/index/bands").collect()
+            ),
+            sorted(
+                (r["doc_id"], tuple(r["hashes"]))
+                for r in _state_read(spark, f"{td}/index/hashes").collect()
+            ),
         ),
         replay=None,
     )
@@ -611,7 +619,7 @@ SPECS = {
 }
 
 
-_INDEX_TWINS = ("ann_ingest", "bloom_dedup", "dedup_minhash", "semantic_dedup")
+_INDEX_TWINS = ("ann_ingest", "bloom_dedup", "semantic_dedup")
 
 
 def _uncommit_last_batch(ck):

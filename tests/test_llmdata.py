@@ -1056,6 +1056,29 @@ def test_minhash_index_incremental_equals_batch(spark, docs, tmp_path):
     assert got == full
 
 
+def test_minhash_index_max_bucket_sits_between_capped_and_uncapped(
+    spark, docs, tmp_path
+):
+    """With a bucket cap, each ingest caps the cumulative bucket
+    occupancy, so the incremental pairs contain the capped one-shot
+    pairs and are contained in the uncapped ones, each emitted once."""
+    def pairs(df):
+        return {(r["doc_a"], r["doc_b"]) for r in df.collect()}
+
+    full = pairs(dedup.dedup_minhash(docs, threshold=0.5))
+    capped = pairs(dedup.dedup_minhash(docs, threshold=0.5, max_bucket=2))
+    assert capped < full  # the cap binds on this corpus
+    idx = dedup.MinHashIndex(
+        str(tmp_path / "mh_index"), threshold=0.5, max_bucket=2
+    )
+    got = []
+    for part in range(3):
+        got += idx.ingest(docs.filter(F.col("doc_id") % 3 == part)).collect()
+    inc = {(r["doc_a"], r["doc_b"]) for r in got}
+    assert len(inc) == len(got)
+    assert capped <= inc <= full
+
+
 def test_minhash_index_first_ingest_is_self_dedup(spark, tmp_path):
     """Empty index: first ingest behaves exactly like batch minhash on
     that batch alone, and the index then persists its sketches."""

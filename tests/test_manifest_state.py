@@ -63,8 +63,8 @@ def _canon(df):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
-def _jobs_started(spark, fn):
-    """(fn(), number of Spark jobs it started): the status tracker's
+def _job_ids(spark, fn):
+    """(fn(), ids of the Spark jobs it started): the status tracker's
     job ids for a group set around the call, read after the listener
     bus has drained."""
     sc = spark.sparkContext
@@ -75,7 +75,23 @@ def _jobs_started(spark, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _jobs_started(spark, fn):
+    """(fn(), number of Spark jobs it started)."""
+    out, jobs = _job_ids(spark, fn)
+    return out, len(jobs)
+
+
+def _work_of(spark, fn):
+    """(jobs, tasks) that ``fn()`` started. A stage the tracker no
+    longer holds (it keeps the newest ones) counts no tasks."""
+    st = spark.sparkContext.statusTracker()
+    _, jobs = _job_ids(spark, fn)
+    stages = {s for j in jobs for s in st.getJobInfo(j).stageIds}
+    infos = [st.getStageInfo(s) for s in stages]
+    return len(jobs), sum(i.numCompletedTasks for i in infos if i)
 
 
 def _segment_union(spark, p):
@@ -248,6 +264,24 @@ def test_append_of_another_schema_drops_the_record(spark, tmp_path):
     assert "schema" in state.read_manifest(p)
 
 
+def test_compaction_keeps_the_batch_fence(spark, tmp_path):
+    """compact_table rewrites a fenced table's rows and keeps its
+    fence, so a streaming replay after compaction still finds its
+    batch committed."""
+    from streamtasks_spark.llmdata.dedup import compact_table
+
+    p = str(tmp_path / "t")
+    fence = {"query": "q", "batch": 3}
+    state.replace_write(spark.range(10).withColumnRenamed("id", "x"), p)
+    state.append_write(spark.range(10, 20).withColumnRenamed("id", "x"), p)
+    state.append_commit(p, [], fence=fence)
+    before = _canon(snapshot_read(spark, p))
+    assert compact_table(spark, p, files=1)
+    m = state.read_manifest(p)
+    assert m["fence"] == fence and len(m["segments"]) == 1
+    assert _canon(snapshot_read(spark, p)) == before
+
+
 def test_local_frame_is_a_jvm_local_relation(spark):
     from streamtasks_spark.session import local_frame
 
@@ -356,17 +390,15 @@ def test_minhash_index_crash_at_flip(spark, tmp_path, monkeypatch, at):
     """flip #1 = hashes (nothing committed), flip #2 = bands (hashes
     committed, postings not) — either way the verify invariant holds:
     no posting can ever reference a missing hash row, and the retry
-    converges to the one-shot pair set."""
+    converges to the one-shot pair set, emits no pair row twice and
+    leaves one hash row per doc."""
     from streamtasks_spark.llmdata.dedup import MinHashIndex, dedup_minhash
 
     docs = _docs(spark)
     b1 = docs.filter(F.col("doc_id") % 2 == 0)
     b2 = docs.filter(F.col("doc_id") % 2 == 1)
     idx = MinHashIndex(str(tmp_path / "mh"), threshold=0.5)
-    pairs = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in idx.ingest(b1).collect()
-    }
+    rows = idx.ingest(b1).collect()
     bands_before = snapshot_read(spark, idx.bands_path).count()
     with _crash_at_flip(monkeypatch, at=at):
         with pytest.raises(_FlipCrash):
@@ -379,17 +411,65 @@ def test_minhash_index_crash_at_flip(spark, tmp_path, monkeypatch, at):
     assert (
         posts.join(hashes, "doc_id", "left_anti").count() == 0
     )
-    for r in idx.ingest(b2).collect():  # clean retry
-        pairs[(r["doc_a"], r["doc_b"])] = r["jaccard"]
+    rows += idx.ingest(b2).collect()  # clean retry
+    pairs = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in rows}
+    assert len(pairs) == len(rows)  # no pair row emitted twice
     want = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
         for r in dedup_minhash(docs, threshold=0.5).collect()
     }
     assert pairs == want
+    h = snapshot_read(spark, idx.hashes_path)
+    assert h.count() == h.select("doc_id").distinct().count()
     # compact durably folds any replay-duplicated hash rows
     idx.compact(spark, files_per_table=2)
     h = snapshot_read(spark, idx.hashes_path)
     assert h.count() == h.select("doc_id").distinct().count()
+
+
+def test_minhash_index_pairs_read_alike_around_the_commit(spark, tmp_path):
+    """The staged pairs read the batch's own segments and the history
+    segments resolved before them, so no materialization has to guard
+    them from their own commit: they evaluate to the same rows before
+    the commit, after it, and after the next ingest."""
+    from streamtasks_spark.llmdata.dedup import MinHashIndex
+
+    b1, b2, b3 = _three_batches(spark)
+    idx = MinHashIndex(str(tmp_path / "mh"), threshold=0.5)
+    idx.ingest(b1)
+    pairs, commit = idx.stage(b2)
+    before = _canon(pairs)
+    commit()
+    after = _canon(pairs)
+    idx.ingest(b3)
+    assert before and before == after == _canon(pairs)
+
+
+def test_ivf_pq_index_caches_its_codebook_until_a_rebuild(spark, tmp_path):
+    """The frozen PQ codebook is pulled once per index object: a
+    repeat query starts one job fewer for the same rows, and after a
+    rebuild the index answers with the retrained codebook, as a fresh
+    object over the same path does."""
+    from streamtasks_spark.llmdata.similarity import IvfPqIndex
+
+    vecs = _vecs(spark)
+    path = str(tmp_path / "ivfpq")
+    kw = dict(n_cells=8, n_probe=2)
+    IvfPqIndex(path, **kw).ingest(vecs.filter(F.col("vec_id") < 250))
+    idx = IvfPqIndex(path, **kw)
+    idx.ingest(vecs.filter(F.col("vec_id") >= 250).select(
+        "vec_id", F.expr("transform(embedding, x -> x + 3.0)").alias("embedding"),
+    ))
+    qs = vecs.filter(F.col("vec_id") < 5)
+    cold_idx = IvfPqIndex(path, **kw)
+    first, cold = _jobs_started(spark, lambda: _canon(cold_idx.query(qs, k=3)))
+    again, warm = _jobs_started(spark, lambda: _canon(cold_idx.query(qs, k=3)))
+    assert again == first and warm == cold - 1, (cold, warm)
+    frozen = idx._load_code(spark)
+    idx.rebuild(spark)
+    fresh = IvfPqIndex(path, **kw)
+    assert idx._load_code(spark) == fresh._load_code(spark) != frozen
+    assert _canon(idx.query(qs, k=3)) == _canon(fresh.query(qs, k=3))
 
 
 def test_ivf_index_crash_at_flip(spark, tmp_path, monkeypatch):
@@ -642,6 +722,81 @@ def test_heavy_hitters_replay_after_the_state_commit(spark, tmp_path, monkeypatc
     )
     assert reports_of("crash") == reports_of("one")
     assert [r[0] for r in reports_of("crash")] == [0, 1, 2]  # batch_id
+
+
+def _minhash(tmp_path, name):
+    """A captured streaming_dedup_minhash over ``name``'s paths."""
+    from streamtasks_spark.streaming.stateful import streaming_dedup_minhash
+
+    return _capture(
+        streaming_dedup_minhash, str(tmp_path / name / "ckpt"),
+        index_path=str(tmp_path / name / "index"),
+        pairs_path=str(tmp_path / name / "pairs"), threshold=0.5,
+    )
+
+
+@pytest.mark.parametrize("at", [1, 2])
+def test_dedup_minhash_replay_after_the_index_commit(
+    spark, tmp_path, monkeypatch, at
+):
+    """A kill after the index's hashes flip (at=1: the commit is torn
+    between its two flips) or after both (at=2), before the checkpoint
+    commit, then the replay of that batch and one more batch: no pair
+    row appears twice, and pairs and index equal a run without the
+    kill and the one-shot pairs. A restarted process that replays the
+    last batch after a compaction changes nothing."""
+    from streamtasks_spark.llmdata.dedup import MinHashIndex, dedup_minhash
+
+    b1, b2, b3 = _three_batches(spark)
+    ingest = _minhash(tmp_path, "crash")
+    ingest(b1, 0)
+    with _flip_then_die(monkeypatch, at=at):
+        with pytest.raises(_FlipCrash):
+            ingest(b2, 1)
+    ingest(b2, 1)  # the replay, same closure
+    ingest(b3, 2)
+    MinHashIndex(str(tmp_path / "crash" / "index")).compact(
+        spark, files_per_table=2
+    )
+    _minhash(tmp_path, "crash")(b3, 2)  # a restarted process
+    one = _minhash(tmp_path, "one")
+    for i, b in enumerate((b1, b2, b3)):
+        one(b, i)
+    got = _canon(spark.read.parquet(str(tmp_path / "crash" / "pairs")))
+    assert got == _canon(spark.read.parquet(str(tmp_path / "one" / "pairs")))
+    pairs = [(a, b) for _, a, b, _ in got]
+    assert len(pairs) == len(set(pairs))
+    assert {n for n, *_ in got} == {0, 1, 2}  # every batch pairs
+    assert sorted(p[1:] for p in got) == _canon(
+        dedup_minhash(b1.unionByName(b2).unionByName(b3), threshold=0.5)
+    )
+    for table in ("hashes", "bands"):
+        index_of = lambda name: _canon(snapshot_read(  # noqa: E731
+            spark, str(tmp_path / name / "index" / table)
+        ))
+        assert index_of("crash") == index_of("one"), table
+
+
+def test_dedup_minhash_batch_work_does_not_grow_with_history(spark, tmp_path):
+    """A steady dedup_minhash batch runs at most 8 Spark jobs, and the
+    same jobs and tasks over a history of N docs as over 4N: its fixed
+    cost does not grow with the history it is checked against."""
+    docs = _docs(spark)
+
+    def batch_file(name, lo, hi):
+        f = str(tmp_path / "src" / name)
+        docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)) \
+            .coalesce(1).write.parquet(f)
+        return spark.read.parquet(f)
+
+    steady = [batch_file(f"s{i}", 400 + 50 * i, 450 + 50 * i) for i in (0, 1)]
+    work = []
+    for n in (100, 400):
+        ingest = _minhash(tmp_path, f"h{n}")
+        ingest(batch_file(f"h{n}", 0, n), 0)
+        ingest(steady[0], 1)
+        work.append(_work_of(spark, lambda: ingest(steady[1], 2)))
+    assert work[0] == work[1] and work[0][0] <= 8, work
 
 
 def test_unigram_lm_replay_keeps_one_copy(spark, tmp_path):
