@@ -194,7 +194,11 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
     parquet file arrives as ONE input split regardless of cores — md5/
     shingle pipelines would then run on one task. One round-robin/hash
     shuffle of the raw rows buys full parallelism for everything
-    downstream.
+    downstream. It is for one-shot corpus reads, where that one shuffle
+    is paid once per query; a foreachBatch twin's per-batch step does
+    not call it, because a micro-batch frame reports 0 input files and
+    would pay the shuffle on every trigger (its parallelism comes from
+    its source's files instead).
 
     Scale-adaptive since the r11 optimization round: when the frame's
     input already spans at least the target partition count in FILES
@@ -289,18 +293,25 @@ def _shingle_hashes(
     docs: DataFrame, id_col: str, text_col: str, k: int, *carry: str
 ) -> DataFrame:
     """(id, *carry, hashes): distinct 28-bit hashes of the k-word
-    shingles. Tokenization = whitespace-normalize then split on single
-    spaces, so both engines tokenize identically with no regex-escaping
-    divergence. ``carry`` columns (e.g. a blocking key) ride along in
-    the same scan so callers never re-join the source table."""
+    shingles of ``docs`` after a :func:`spread`. Tokenization =
+    whitespace-normalize then split on single spaces, so both engines
+    tokenize identically with no regex-escaping divergence. ``carry``
+    columns (e.g. a blocking key) ride along in the same scan so
+    callers never re-join the source table."""
+    return _shingle_kernel(spread(docs, id_col), id_col, text_col, k, *carry)
+
+
+def _shingle_kernel(
+    docs: DataFrame, id_col: str, text_col: str, k: int, *carry: str
+) -> DataFrame:
+    """:func:`_shingle_hashes` at ``docs``' own partitioning."""
     toks = f"split({norm_text(text_col, 'spark')}, ' ')"
     shingles = (
         f"transform(sequence(0, size(__toks) - {k}), "
         f"i -> concat_ws(' ', slice(__toks, i + 1, {k})))"
     )
     return (
-        spread(docs, id_col)
-        .select(F.col(id_col), *carry, F.expr(toks).alias("__toks"))
+        docs.select(F.col(id_col), *carry, F.expr(toks).alias("__toks"))
         .filter(F.expr(f"size(__toks) >= {k}"))
         .select(F.col(id_col), *carry, F.expr(shingles).alias("__sh"))
         .select(
@@ -2456,7 +2467,10 @@ class MinHashIndex:
         streaming ``fence`` (``{"query": id, "batch": n}``) is already
         committed. ``pairs`` is (doc_a, doc_b, jaccard), doc_a < doc_b,
         ready to feed :func:`connected_components`; ``commit()`` makes
-        the batch part of history.
+        the batch part of history. ``docs`` is sketched at its own
+        partitioning, so a micro-batch is not reshuffled on every
+        trigger, and a one-partition batch adds one ``hashes/`` and one
+        ``bands/`` file.
 
         ``pairs`` reads the batch's new segments and the history
         segments live before this call, nothing through a manifest, so
@@ -2492,7 +2506,7 @@ class MinHashIndex:
             return name, schema, spark.read.schema(schema).parquet(seg)
 
         h_name, h_schema, new_hashes = land(
-            _shingle_hashes(docs, idc, self.text_col, self.k), self.hashes_path
+            _shingle_kernel(docs, idc, self.text_col, self.k), self.hashes_path
         )
         b_name, b_schema, new_posts = land(
             _band_postings(new_hashes, idc), self.bands_path
@@ -2536,8 +2550,10 @@ class MinHashIndex:
     def ingest(self, docs: DataFrame) -> DataFrame:
         """Dedup one batch against itself + history, commit its sketches
         to the index, and return the verified pairs (doc_a, doc_b,
-        jaccard) — :meth:`stage`'s ``pairs``, evaluated lazily."""
-        pairs, commit = self.stage(docs)
+        jaccard) — :meth:`stage`'s ``pairs``, evaluated lazily. The
+        batch is :func:`spread` first, so a bulk load sketches at full
+        parallelism."""
+        pairs, commit = self.stage(spread(docs, self.id_col))
         commit()
         return pairs
 

@@ -27,11 +27,21 @@ from threading import Lock
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQueryListener
 
+from streamtasks_spark.session import local_frame
+
+# the engine's per-trigger phases (``progress.durationMs``), one
+# ``<phase>_ms`` column each; a phase a trigger did not run reads 0
+PHASES = (
+    "addBatch", "getBatch", "latestOffset", "queryPlanning", "walCommit",
+    "commitOffsets",
+)
+
 METRICS_SCHEMA = (
     "query_name string, query_id string, batch_id long, ts string, "
     "num_input_rows long, input_rows_per_sec double, "
     "processed_rows_per_sec double, batch_duration_ms long, "
-    "state_rows long, state_bytes long"
+    "state_rows long, state_bytes long, "
+    + ", ".join(f"{ph}_ms long" for ph in PHASES)
 )
 
 
@@ -56,6 +66,7 @@ class QueryMetricsListener(StreamingQueryListener):
         for op in p.stateOperators or []:
             state_rows += op.numRowsTotal or 0
             state_bytes += op.memoryUsedBytes or 0
+        dur = p.durationMs or {}
         row = (
             p.name,
             str(p.id),
@@ -64,9 +75,10 @@ class QueryMetricsListener(StreamingQueryListener):
             p.numInputRows or 0,
             float(p.inputRowsPerSecond or 0.0),
             float(p.processedRowsPerSecond or 0.0),
-            (p.durationMs or {}).get("triggerExecution", 0),
+            dur.get("triggerExecution", 0),
             state_rows,
             state_bytes,
+            *(dur.get(ph, 0) for ph in PHASES),
         )
         with self._lock:
             self._rows.append(row)
@@ -96,5 +108,6 @@ def detach_metrics(spark: SparkSession, listener: QueryMetricsListener) -> None:
 
 
 def metrics_df(spark: SparkSession, listener: QueryMetricsListener) -> DataFrame:
-    """The collected monitoring tail as a queryable DataFrame."""
-    return spark.createDataFrame(listener.snapshot(), METRICS_SCHEMA)
+    """The collected monitoring tail as a queryable DataFrame (a JVM
+    local relation: no Python worker runs)."""
+    return local_frame(spark, listener.snapshot(), METRICS_SCHEMA)

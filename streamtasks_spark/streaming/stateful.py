@@ -54,6 +54,9 @@ their output layout and replay contract:
   the output exists. The output is still one copy per batch, but a
   crash between the index commit and the checkpoint commit ingests the
   batch twice; each one's docstring says what that does.
+- The sketch twins and :func:`streaming_dedup_minhash` run a batch at
+  the partitioning its source gave it (a small file is one partition),
+  with no per-trigger repartition.
 - No twin runs a per-batch ``isEmpty`` job: a stateless upstream plan
   never sends an empty batch, and on an empty one (after a stateful
   upstream's no-data batch) each step changes no table's rows.
@@ -1275,7 +1278,6 @@ def streaming_approx_distinct(
     per state table, the MinHashIndex discipline.
 
     Returns the started StreamingQuery."""
-    from streamtasks_spark.llmdata.dedup import spread
     from streamtasks_spark.llmdata.textstats import (
         _hll_corrected_expr,
         _hll_units_expr,
@@ -1295,8 +1297,7 @@ def streaming_approx_distinct(
 
     def registers(batch: DataFrame) -> DataFrame:
         return (
-            spread(batch.select(id_col, text_col), id_col)
-            .select(
+            batch.select(
                 F.explode(F.expr(_hll_units_expr(text_col, n, "spark")))
                 .alias("__t")
             )
@@ -1380,14 +1381,11 @@ def streaming_heavy_hitters(
     runs over the full corpus when the exact column is wanted.
 
     Returns the started StreamingQuery."""
-    from streamtasks_spark.llmdata.dedup import spread, tokens_expr
+    from streamtasks_spark.llmdata.dedup import tokens_expr
 
     def cells(batch: DataFrame) -> DataFrame:
-        toks = (
-            spread(batch.select(id_col, text_col), id_col)
-            .select(
-                F.explode(F.expr(tokens_expr(text_col))).alias("__t")
-            )
+        toks = batch.select(
+            F.explode(F.expr(tokens_expr(text_col))).alias("__t")
         )
         counts = toks.groupBy("__t").agg(
             F.count(F.lit(1)).cast("bigint").alias("__c")

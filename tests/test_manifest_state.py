@@ -778,9 +778,10 @@ def test_dedup_minhash_replay_after_the_index_commit(
 
 
 def test_dedup_minhash_batch_work_does_not_grow_with_history(spark, tmp_path):
-    """A steady dedup_minhash batch runs at most 8 Spark jobs, and the
-    same jobs and tasks over a history of N docs as over 4N: its fixed
-    cost does not grow with the history it is checked against."""
+    """A steady dedup_minhash batch from one file runs at most 6 Spark
+    jobs and 10 tasks, and the same jobs and tasks over a history of N
+    docs as over 4N: its fixed cost does not grow with the history it
+    is checked against."""
     docs = _docs(spark)
 
     def batch_file(name, lo, hi):
@@ -796,7 +797,55 @@ def test_dedup_minhash_batch_work_does_not_grow_with_history(spark, tmp_path):
         ingest(batch_file(f"h{n}", 0, n), 0)
         ingest(steady[0], 1)
         work.append(_work_of(spark, lambda: ingest(steady[1], 2)))
-    assert work[0] == work[1] and work[0][0] <= 8, work
+    assert work[0] == work[1] and work[0][0] <= 6 and work[0][1] <= 10, work
+
+
+def _part_files(path) -> int:
+    return sum(
+        n.startswith("part-") for _, _, names in os.walk(path) for n in names
+    )
+
+
+def test_dedup_minhash_batch_keeps_its_source_partitioning(spark, tmp_path):
+    """A steady dedup_minhash batch read from one small file is one
+    partition, and is not reshuffled: it adds one ``hashes/`` and one
+    ``bands/`` part file to the index."""
+    docs = _docs(spark)
+    files = []
+    for i, (lo, hi) in enumerate(((0, 100), (100, 200))):
+        f = str(tmp_path / "src" / f"b{i}")
+        docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)) \
+            .coalesce(1).write.parquet(f)
+        files.append(f)
+    ingest = _minhash(tmp_path, "m")
+    ingest(spark.read.parquet(files[0]), 0)
+    index = tmp_path / "m" / "index"
+    before = [_part_files(index / t) for t in ("hashes", "bands")]
+    ingest(spark.read.parquet(files[1]), 1)
+    after = [_part_files(index / t) for t in ("hashes", "bands")]
+    assert [a - b for a, b in zip(after, before)] == [1, 1], (before, after)
+
+
+def test_minhash_index_ingest_spreads_a_single_file(spark, tmp_path, monkeypatch):
+    """``MinHashIndex.ingest`` is a bulk load: a one-file frame is
+    still repartitioned before it is sketched, so it shingles at full
+    parallelism."""
+    from streamtasks_spark.llmdata import dedup
+
+    f = str(tmp_path / "src")
+    _docs(spark).coalesce(1).write.parquet(f)
+    seen = []
+    kernel = dedup._shingle_kernel
+
+    def spy(docs, *a):
+        seen.append(docs)
+        return kernel(docs, *a)
+
+    monkeypatch.setattr(dedup, "_shingle_kernel", spy)
+    dedup.MinHashIndex(str(tmp_path / "index")).ingest(spark.read.parquet(f))
+    assert len(seen) == 1
+    plan = seen[0]._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange hashpartitioning(doc_id" in plan, plan
 
 
 def test_unigram_lm_replay_keeps_one_copy(spark, tmp_path):

@@ -906,6 +906,7 @@ def test_query_metrics_listener_collects_progress(spark, tmp_path):
     progress rows must accumulate per micro-batch and come back as a
     queryable DataFrame with sane rates."""
     from streamtasks_spark.streaming.metrics import (
+        PHASES,
         attach_metrics,
         detach_metrics,
         metrics_df,
@@ -938,6 +939,13 @@ def test_query_metrics_listener_collects_progress(spark, tmp_path):
         assert len(got) >= 2
         assert all(r["processed_rows_per_sec"] > 0 for r in got)
         assert all(r["batch_duration_ms"] >= 0 for r in got)
+        # the engine's phases: none negative, and the sink's addBatch
+        # is part of the trigger it ran in
+        assert all(r[f"{ph}_ms"] >= 0 for r in got for ph in PHASES)
+        assert all(r["addBatch_ms"] <= r["batch_duration_ms"] for r in got)
+        # a local relation: the ring reaches the JVM without a Python worker
+        assert "LocalTableScan" in mdf._jdf.queryExecution() \
+            .executedPlan().toString()
         # empty-ring path stays queryable
         from streamtasks_spark.streaming.metrics import QueryMetricsListener
 
