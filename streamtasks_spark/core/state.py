@@ -21,9 +21,9 @@ renames. The protocol:
   ``{"query": id, "batch": n}`` of the streaming micro-batch whose
   state this version is, when a streaming twin commits it: the batch
   and its state become durable in the same flip, so a replay of that
-  batch can tell it is already in (:func:`fenced`). An owner that
-  commits several tables per batch may record a token of its own
-  there, to tell a commit torn between its flips.
+  batch can tell it is already in (:meth:`Staging.committed`). A
+  non-streaming :class:`Staging` batch records a fresh token there
+  instead, so a commit torn between its flips is still told apart.
 - Commit = write the new manifest to a sibling temp file, fsync, then
   one atomic single-file replace (:func:`os.replace`). A crash at ANY
   point before the flip leaves the previous manifest — and therefore
@@ -51,15 +51,28 @@ live data files, but the CONTRACT is that readers resolve through
 manifest is present) — after a crash, unreferenced orphan segments may
 sit on disk until the next commit sweeps them.
 
-Concurrency contract (unchanged from the rename era): ONE writer per
-table (the MinHashIndex ingest discipline). Readers are
-snapshot-isolated for free — segments are immutable and the manifest
-read is one atomic file read, so a reader resolves either version N
-or N+1, never a torn mix. GC runs inside commit under the single-owner
-contract; compaction additionally requires no concurrent reader
-mid-query (it deletes superseded segments a long-running plan may
-still reference — same exclusivity :func:`dedup.compact_table` always
-demanded, minus its crash window).
+Every index ingests a batch through ONE protocol, :class:`Staging`,
+over the append-only tables it advances together, in a fixed order:
+**stage** — skip a batch whose streaming fence the LAST table already
+holds, else adopt pre-manifest tables and repair; **land** — write
+each table's rows into a new uncommitted segment and read them back
+with their recorded schema, so a plan over them and over history
+resolved before them reads an explicit segment list that no commit
+can change; **fenced commit** — once the caller's output is durable,
+append the segments table by table, every flip carrying the batch's
+fence; **repair** — an earlier table carrying a fence the last one
+lacks is a commit torn between its flips: the next stage (or a
+compaction) drops that table's last segment and records the last
+table's fence, so a retry appends the batch once.
+
+Concurrency contract: ONE writer per table (the index ingest
+discipline). Readers are snapshot-isolated for free — segments are
+immutable and the manifest read is one atomic file read, so a reader
+resolves either version N or N+1, never a torn mix. GC runs inside
+commit under the single-owner contract; compaction additionally
+requires no concurrent reader mid-query (it deletes superseded
+segments a long-running plan may still reference — same exclusivity
+:func:`dedup.compact_table` always demanded, minus its crash window).
 """
 
 from __future__ import annotations
@@ -171,15 +184,6 @@ def append_commit(path: str, new_names: list[str], *, gc: bool = True,
         schema = None
     commit_segments(
         path, base + list(new_names), gc=gc, schema=schema, fence=fence
-    )
-
-
-def fenced(manifest: dict | None, fence: dict) -> bool:
-    """Whether ``manifest`` already holds ``fence``'s batch: it carries
-    a fence of the same query at that batch or a later one."""
-    done = (manifest or {}).get("fence") or {}
-    return done.get("query") == fence["query"] and (
-        done["batch"] >= fence["batch"]
     )
 
 
@@ -312,18 +316,75 @@ def replace_write(df, path: str, *, n_files: int | None = None,
     )
 
 
-def append_write(df, path: str, *, partition_by: str | None = None) -> str:
-    """Append ``df`` as a new committed segment (the crash-safe
-    successor of ``write.mode('append')``): the segment becomes
-    visible only at the pointer flip. Pre-manifest loose content is
-    adopted into the live set on the first commit so an upgraded index
-    keeps its history. Returns the segment name."""
-    name, seg = new_segment(path)
-    writer = df.write
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(seg)
-    legacy = [] if read_manifest(path) is not None else adopt_legacy(path)
-    schema = None if legacy else file_schema(df, partition_by)
-    append_commit(path, legacy + [name], schema=schema)
-    return name
+def append_write(df, path: str, *, partition_by: str | None = None) -> None:
+    """Append ``df`` to the table at ``path`` as one committed segment
+    (the crash-safe successor of ``write.mode('append')``)."""
+    st = Staging.open((path,))
+    st.land(df, path, partition_by=partition_by)
+    st.commit()
+
+
+class Staging:
+    """One batch's ingest into the append-only tables ``paths``, in
+    commit order; the last is authoritative (module docstring).
+    ``fence`` is the streaming ``{"query": id, "batch": n}``; without
+    one the commit records a fresh token."""
+
+    def __init__(self, paths: tuple[str, ...], fence: dict | None = None):
+        self.paths = paths
+        self.fence = fence or {"ingest": uuid.uuid4().hex}
+        self.landed: dict[str, tuple] = {}
+
+    def committed(self) -> bool:
+        """Whether the last table holds the streaming fence's batch: a
+        fence of the same query at that batch or a later one."""
+        done = (read_manifest(self.paths[-1]) or {}).get("fence") or {}
+        query = self.fence.get("query")
+        return query is not None and done.get("query") == query and (
+            done["batch"] >= self.fence["batch"]
+        )
+
+    @classmethod
+    def open(cls, paths: tuple[str, ...], fence: dict | None = None):
+        """The staging of a batch, or None when ``fence`` is already
+        committed. Adopts pre-manifest tables, then undoes a torn
+        commit: an earlier table whose fence the last lacks is pointed
+        back at the segments before its last one, with that fence."""
+        from pyspark.sql.types import StructType
+
+        st = cls(paths, fence)
+        if st.committed():
+            return None
+        for path in paths:
+            if read_manifest(path) is None and (legacy := adopt_legacy(path)):
+                commit_segments(path, legacy)
+        done = (read_manifest(paths[-1]) or {}).get("fence")
+        for path in paths[:-1]:
+            m = read_manifest(path)
+            if m is not None and m.get("fence") not in (None, done):
+                commit_segments(
+                    path, m["segments"][:-1], fence=done,
+                    schema=m.get("schema") and StructType.fromJson(m["schema"]),
+                )
+        return st
+
+    def land(self, df, path: str, *, partition_by: str | None = None):
+        """Write ``df`` into a new uncommitted segment of ``path`` and
+        return it read back with its recorded schema (no inference job)."""
+        name, seg = new_segment(path)
+        writer = df.write
+        if partition_by:
+            writer = writer.partitionBy(partition_by)
+        writer.parquet(seg)
+        schema = file_schema(df, partition_by)
+        self.landed[path] = (name, schema)
+        reader = df.sparkSession.read.schema(schema)
+        if partition_by:
+            reader = reader.option("basePath", seg)
+        return reader.parquet(seg)
+
+    def commit(self) -> None:
+        """Append each landed segment, in table order, with the fence."""
+        for path in self.paths:
+            name, schema = self.landed[path]
+            append_commit(path, [name], schema=schema, fence=self.fence)

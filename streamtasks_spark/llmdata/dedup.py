@@ -38,13 +38,19 @@ import os
 import random
 import re
 import threading
-import uuid
 from collections.abc import Iterator, Sequence
 from contextlib import contextmanager
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from streamtasks_spark.core.state import (
+    Staging,
+    manifest_read,
+    read_manifest,
+    replace_write,
+)
 
 # modulus for the minhash universal-hash family (a*h + b) % P.
 # P is prime and > every 28-bit shingle hash; a < 2^30 keeps a*h < 2^58,
@@ -222,6 +228,19 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
     except Exception:
         pass  # no file lineage (local relation, stream): keep the spread
     return df.repartition(n, *cols) if cols else df.repartition(n)
+
+
+class StagedIndex:
+    """An index whose ``stage(batch, fence=None)`` lands the batch in
+    uncommitted segments and returns ``(out, commit)`` (the
+    :class:`~streamtasks_spark.core.state.Staging` ingest)."""
+
+    def ingest(self, batch: DataFrame) -> DataFrame:
+        """:meth:`stage` over the :func:`spread` batch — a bulk load
+        runs at full parallelism — then the commit; returns ``out``."""
+        out, commit = self.stage(spread(batch, self.id_col))
+        commit()
+        return out
 
 
 def norm_text(text_col: str, engine: str = "spark") -> str:
@@ -457,17 +476,17 @@ def paragraph_dedup(
     bounded by document size."""
     # feeds the winner agg, the join probe AND the per-doc count — three
     # consumers of one explode lineage (see pin/pin_scope contract)
-    paras = pin(_para_rows(docs, id_col, text_col))
+    paras = pin(_para_rows(spread(docs, id_col), id_col, text_col))
     return _para_reassemble(paras, _para_winners(paras, id_col), id_col)
 
 
 def _para_rows(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, __idx, __para, __h): the non-empty paragraphs of each doc
     with 0-based split index and normalized-text hash — the shared
-    explode step of :func:`paragraph_dedup` and :class:`ParagraphIndex`."""
+    explode step of :func:`paragraph_dedup` and :class:`ParagraphIndex`,
+    at ``docs``' own partitioning."""
     return (
-        spread(docs, id_col)
-        .select(
+        docs.select(
             F.col(id_col),
             F.posexplode(F.split(F.col(text_col), PARA_SPLIT_RE)).alias(
                 "__idx", "__para"
@@ -505,7 +524,7 @@ def paragraph_dedup_rows(
     surviving ``(id, idx, para, para_hash)`` rows — the batch twin of
     ``streaming_paragraph_dedup``'s output shape (the streaming
     equivalence harness compares the two frame-for-frame)."""
-    paras = pin(_para_rows(docs, id_col, text_col))
+    paras = pin(_para_rows(spread(docs, id_col), id_col, text_col))
     return _para_winners(paras, id_col).select(
         F.col(id_col),
         F.col("__idx").alias("idx"),
@@ -1378,25 +1397,23 @@ def bloom_dedup(
     stays engine-neutral. NULL-text docs can never match (NULL
     positions join nothing) and report ``n_bits_hit = 0``."""
     return _bloom_probe(
-        new_docs,
-        _bloom_bits(ref_docs, id_col, text_col, m_bits, n_hashes),
+        spread(new_docs, id_col),
+        _bloom_bits(spread(ref_docs, id_col), text_col, m_bits, n_hashes),
         id_col, text_col, m_bits, n_hashes,
     )
 
 
 def _bloom_bits(
-    ref_docs: DataFrame, id_col: str, text_col: str, m_bits: int,
-    n_hashes: int,
+    ref_docs: DataFrame, text_col: str, m_bits: int, n_hashes: int
 ) -> DataFrame:
     """The reference corpus's DISTINCT set bit positions — the bloom
     'filter' in relational form, shared by :func:`bloom_dedup` and
-    :class:`BloomIndex`."""
+    :class:`BloomIndex` — at ``ref_docs``' own partitioning."""
     pos = _bloom_pos_expr(
         f"md5({norm_text(text_col)})", n_hashes, m_bits, "spark"
     )
     return (
-        spread(ref_docs, id_col)
-        .select(F.explode(F.expr(pos)).alias("__pos"))
+        ref_docs.select(F.explode(F.expr(pos)).alias("__pos"))
         .filter(F.col("__pos").isNotNull())
         .distinct()
     )
@@ -1406,16 +1423,16 @@ def _bloom_probe(
     new_docs: DataFrame, bits: DataFrame, id_col: str, text_col: str,
     m_bits: int, n_hashes: int,
 ) -> DataFrame:
-    """Probe ``new_docs`` against a bit-position set from
-    :func:`_bloom_bits` (freshly derived or read back from a
-    :class:`BloomIndex`)."""
+    """Probe ``new_docs``, at their own partitioning, against a
+    bit-position set from :func:`_bloom_bits` (freshly derived or read
+    back from a :class:`BloomIndex`)."""
     pos = _bloom_pos_expr(
         f"md5({norm_text(text_col)})", n_hashes, m_bits, "spark"
     )
     ref_bits = bits.withColumn("__set", F.lit(1))
     if m_bits <= (1 << 22):
         ref_bits = F.broadcast(ref_bits)
-    probe = spread(new_docs, id_col).select(
+    probe = new_docs.select(
         F.col(id_col), F.explode(F.expr(pos)).alias("__pos")
     )
     return (
@@ -1460,7 +1477,7 @@ def oracle_bloom_dedup_sql(
     """
 
 
-class BloomIndex:
+class BloomIndex(StagedIndex):
     """Persistent incremental bloom membership filter — the
     :class:`MinHashIndex` pattern applied to the exact-membership
     pre-gate: the DISTINCT set bit positions of every ingested
@@ -1473,10 +1490,12 @@ class BloomIndex:
     B₁..Bₙ in ANY order/partitioning, ``probe(X)`` equals
     ``bloom_dedup(X, B₁∪..∪Bₙ)`` exactly — positions carry no counts,
     nothing can be double-set. Pinned by the batch-equivalence test.
-    Per :meth:`ingest` batch, each doc is probed against HISTORY ONLY
-    (its own batch's bits append after the probe materializes), the
-    incremental-crawl semantics: within-batch duplicates are the
-    batch's own dedup_exact problem.
+    Per :meth:`stage` batch, each doc is probed against HISTORY ONLY
+    (its own batch's bits land in an uncommitted segment the probe
+    never reads), the incremental-crawl semantics: within-batch
+    duplicates are the batch's own dedup_exact problem. The commit is
+    the :class:`~streamtasks_spark.core.state.Staging` ingest over the
+    one table ``bits/``.
 
     Scale shape: the bits table is bounded by ``m_bits`` rows however
     much history accretes (saturation degrades precision, never
@@ -1504,11 +1523,8 @@ class BloomIndex:
         self.m_bits = m_bits
         self.n_hashes = n_hashes
 
-    def _bits_or_none(self, spark) -> DataFrame | None:
-        return snapshot_read(spark, self.bits_path)
-
     def _history_bits(self, spark) -> DataFrame:
-        old = self._bits_or_none(spark)
+        old = snapshot_read(spark, self.bits_path)
         if old is None:
             return spark.createDataFrame([], "__pos bigint")
         # appended part-files can repeat a position (each ingest writes
@@ -1519,29 +1535,28 @@ class BloomIndex:
     def probe(self, docs: DataFrame) -> DataFrame:
         """(id, n_bits_hit, maybe_dup) for each doc against everything
         ingested so far; read-only."""
+        return self._probe(spread(docs, self.id_col))
+
+    def _probe(self, docs: DataFrame) -> DataFrame:
         return _bloom_probe(
             docs, self._history_bits(docs.sparkSession),
             self.id_col, self.text_col, self.m_bits, self.n_hashes,
         )
 
-    def ingest(self, docs: DataFrame) -> DataFrame:
-        """Probe the batch against HISTORY, then append the batch's own
-        bit positions; returns the probe result, materialized before
-        the append so its plan cannot observe the batch's own bits
-        (the MinHashIndex snapshot rule)."""
-        spark = docs.sparkSession
-        res = pin(self.probe(docs))
-        res.count()  # materialize before the append below
-        new_bits = _bloom_bits(
-            docs, self.id_col, self.text_col, self.m_bits, self.n_hashes
+    def stage(self, docs: DataFrame, fence: dict | None = None):
+        """Land the batch's bit positions and plan its :meth:`probe`
+        flags against the history live before them, at ``docs``' own
+        partitioning: ``(flags, commit)``, or None when the streaming
+        ``fence`` is already committed."""
+        st = Staging.open((self.bits_path,), fence)
+        if st is None:
+            return None
+        flags = self._probe(docs)
+        st.land(
+            _bloom_bits(docs, self.text_col, self.m_bits, self.n_hashes),
+            self.bits_path,
         )
-        # versioned-manifest append: the batch's positions become
-        # visible in one atomic pointer flip — a crash mid-write leaves
-        # an invisible orphan segment, never a torn bit set
-        from streamtasks_spark.core.state import append_write
-
-        append_write(new_bits, self.bits_path)
-        return res
+        return flags, st.commit
 
     def compact(self, spark, *, files: int = 4) -> None:
         """Fold accreted part-files and cross-file duplicate positions
@@ -2197,8 +2212,6 @@ def snapshot_read(spark, path: str, base_path: str | None = None):
     path (no scheme, or ``file:``, and no glob characters) returns
     before any Spark read: the failed resolution would log a ~50-line
     FileNotFoundException WARN on every twin's first batch."""
-    from streamtasks_spark.core.state import manifest_read, read_manifest
-
     if read_manifest(path) is not None:
         return manifest_read(spark, path)
     local = _local_fs_path(path)
@@ -2251,30 +2264,21 @@ def compact_table(
     partition directory when ``partition_by`` is set). Cures the
     small-files accretion of append-based index tables.
 
-    Manifest tables (the normal case since r11) rewrite through the
-    versioned-manifest protocol: the compacted copy lands as a NEW
-    segment, one atomic pointer flip makes it the live version, and
-    the superseded segments are swept — a crash anywhere before the
-    flip leaves the previous version fully live (no rename gap; the
-    old directory-swap's crash window is gone). The live manifest's
-    batch fence carries over to the compacted version, so a streaming
-    replay after compaction still finds its batch committed. Legacy plain
-    directories keep the historical two-rename swap.
+    The rewrite commits through the versioned-manifest protocol
+    (:func:`~streamtasks_spark.core.state.replace_write`): the
+    compacted copy lands as a NEW segment, one atomic pointer flip
+    makes it the live version, and the superseded segments are swept —
+    a crash anywhere before the flip leaves the previous version fully
+    live. The live manifest's batch fence carries over to the
+    compacted version, so a streaming replay after compaction still
+    finds its batch committed. A pre-manifest plain directory becomes
+    a manifest table, its loose files swept by the flip.
 
     Compaction still requires EXCLUSIVE access — no concurrent writer,
     and no concurrent reader mid-query (the post-flip sweep deletes
     segment files a long-running plan may still hold). Run it from the
     single maintenance owner of the index (the same discipline ingest
     already requires). Returns False if the dataset doesn't exist."""
-    import shutil
-
-    from streamtasks_spark.core.state import (
-        commit_segments,
-        file_schema,
-        new_segment,
-        read_manifest,
-    )
-
     cur = snapshot_read(
         spark, path, base_path=path if partition_by else None
     )
@@ -2285,28 +2289,12 @@ def compact_table(
         # BloomIndex re-distincts positions duplicated across appended
         # part files (append-mode parquet cannot dedup across files)
         cur = transform(cur)
-    writer = cur.repartition(
-        files, *( [partition_by] if partition_by else [] )
-    ).write
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    m = read_manifest(path)
-    if m is not None:
-        name, seg = new_segment(path)
-        writer.parquet(seg)
-        # the rows are the same, so the streaming batch they hold is too
-        commit_segments(
-            path, [name], schema=file_schema(cur, partition_by),
-            fence=m.get("fence"),
-        )
-        return True
-    tag = uuid.uuid4().hex[:8]
-    tmp = f"{path}__compact_{tag}"
-    old = f"{path}__old_{tag}"
-    writer.parquet(tmp)
-    shutil.move(path, old)
-    shutil.move(tmp, path)
-    shutil.rmtree(old)
+    # the rows are the same, so the streaming batch they hold is too
+    replace_write(
+        cur.repartition(files, *([partition_by] if partition_by else [])),
+        path, partition_by=partition_by,
+        fence=(read_manifest(path) or {}).get("fence"),
+    )
     return True
 
 
@@ -2336,7 +2324,7 @@ def _band_postings(hs: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-class MinHashIndex:
+class MinHashIndex(StagedIndex):
     """Incremental corpus-scale near-dedup: a persistent banded-LSH
     index on disk, so each new ingest batch is deduplicated against the
     ENTIRE historical corpus without recomputing it.
@@ -2375,17 +2363,12 @@ class MinHashIndex:
     ingests (enforce upstream); re-ingesting an id would pair it with
     itself.
 
-    Commit protocol (:meth:`stage`): the batch's ``hashes/`` and
-    ``bands/`` rows land first, in new uncommitted segments, and the
-    pair plan reads them next to the history segments the manifests
-    named before the write — so it never sees the batch twice and
-    needs no persisted working table. The commit then appends
-    ``hashes/`` and then ``bands/``, each flip carrying the batch's
-    fence (a streaming ``(query, batch)``, or a fresh token per batch
-    ingest). A batch whose fence ``bands/`` holds is in the index
-    whole. A fence in ``hashes/`` that ``bands/`` lacks is a crash
-    between the two flips, which the next ingest or compaction undoes
-    first (:meth:`_repair`), so no doc's hash row is ever held twice.
+    Commit protocol (:meth:`stage`): the
+    :class:`~streamtasks_spark.core.state.Staging` ingest over
+    ``hashes/`` then ``bands/``. The pair plan reads the batch's landed
+    segments next to the history segments named before them, so it
+    never sees the batch twice and needs no persisted working table,
+    and no doc's hash row is ever held twice.
     """
 
     def __init__(
@@ -2406,25 +2389,6 @@ class MinHashIndex:
         self.k = k
         self.threshold = threshold
         self.max_bucket = max_bucket
-
-    def _repair(self) -> None:
-        """Undo a commit torn between its two flips: ``hashes/`` then
-        carries a fence ``bands/`` lacks, and its last segment is that
-        commit's. One flip points ``hashes/`` back at the segments
-        before it, with the fence of ``bands/``, and sweeps the
-        segment; a retry of the batch then appends it once."""
-        from pyspark.sql.types import StructType
-
-        from streamtasks_spark.core.state import commit_segments, read_manifest
-
-        h = read_manifest(self.hashes_path)
-        done = (read_manifest(self.bands_path) or {}).get("fence")
-        if h is None or h.get("fence") in (None, done):
-            return
-        commit_segments(
-            self.hashes_path, h["segments"][:-1], fence=done,
-            schema=StructType.fromJson(h["schema"]) if h.get("schema") else None,
-        )
 
     def _candidates(self, new_posts: DataFrame, old_posts) -> DataFrame:
         """(__a, __b): distinct pairs sharing a band, __a in the batch.
@@ -2477,40 +2441,18 @@ class MinHashIndex:
         it evaluates to the same rows before the commit, after it and
         after later ingests — until a :meth:`compact` sweeps the
         segments it reads."""
-        from streamtasks_spark.core.state import (
-            adopt_legacy,
-            append_commit,
-            commit_segments,
-            fenced,
-            file_schema,
-            new_segment,
-            read_manifest,
-        )
-
-        if fence is not None and fenced(read_manifest(self.bands_path), fence):
+        # hashes commit first: a posting must always find its hash row
+        st = Staging.open((self.hashes_path, self.bands_path), fence)
+        if st is None:
             return None
-        for path in (self.hashes_path, self.bands_path):
-            # an index written before manifests keeps its history
-            if read_manifest(path) is None and (legacy := adopt_legacy(path)):
-                commit_segments(path, legacy)
-        self._repair()
         spark = docs.sparkSession
         idc = self.id_col
         old_hashes = snapshot_read(spark, self.hashes_path)
         old_posts = snapshot_read(spark, self.bands_path)
-
-        def land(df: DataFrame, path: str):
-            name, seg = new_segment(path)
-            df.write.parquet(seg)
-            schema = file_schema(df)
-            return name, schema, spark.read.schema(schema).parquet(seg)
-
-        h_name, h_schema, new_hashes = land(
+        new_hashes = st.land(
             _shingle_kernel(docs, idc, self.text_col, self.k), self.hashes_path
         )
-        b_name, b_schema, new_posts = land(
-            _band_postings(new_hashes, idc), self.bands_path
-        )
+        new_posts = st.land(_band_postings(new_hashes, idc), self.bands_path)
         # one lookup serves both ends: its two joins share one plan, so
         # Spark reads and broadcasts it once
         look = (
@@ -2534,28 +2476,7 @@ class MinHashIndex:
                 F.round("__jac", 6).alias("jaccard"),
             )
         )
-        fence = fence or {"ingest": uuid.uuid4().hex}
-
-        def commit() -> None:
-            # hashes first: a posting must always find its hash row
-            append_commit(
-                self.hashes_path, [h_name], schema=h_schema, fence=fence
-            )
-            append_commit(
-                self.bands_path, [b_name], schema=b_schema, fence=fence
-            )
-
-        return pairs, commit
-
-    def ingest(self, docs: DataFrame) -> DataFrame:
-        """Dedup one batch against itself + history, commit its sketches
-        to the index, and return the verified pairs (doc_a, doc_b,
-        jaccard) — :meth:`stage`'s ``pairs``, evaluated lazily. The
-        batch is :func:`spread` first, so a bulk load sketches at full
-        parallelism."""
-        pairs, commit = self.stage(spread(docs, self.id_col))
-        commit()
-        return pairs
+        return pairs, st.commit
 
     def compact(self, spark, *, files_per_table: int = 8) -> None:
         """Rewrite both index tables into ``files_per_table`` files.
@@ -2575,12 +2496,12 @@ class MinHashIndex:
         be re-bucketed on the band key (sort/cluster within rewrite);
         locally a plain coalesced rewrite keeps the semantics
         byte-identical (pinned by the equivalence test). A torn commit
-        is undone first (:meth:`_repair`), and each table keeps its
-        batch fence, so a streaming replay after compaction is still
-        skipped. The distinct fold is a no-op on an index written with
-        fenced commits; it removes the value-identical rows a replayed
-        ingest appended before them."""
-        self._repair()
+        is undone first, and each table keeps its batch fence, so a
+        streaming replay after compaction is still skipped. The
+        distinct fold is a no-op on an index written with fenced
+        commits; it removes the value-identical rows a replayed ingest
+        appended before them."""
+        Staging.open((self.hashes_path, self.bands_path))
         for path in (self.bands_path, self.hashes_path):
             compact_table(
                 spark, path, files=files_per_table,
@@ -2588,7 +2509,7 @@ class MinHashIndex:
             )
 
 
-class ParagraphIndex:
+class ParagraphIndex(StagedIndex):
     """Incremental corpus-scale paragraph dedup: ONE persistent table
     (``seen/``: para_hash) of every normalized-paragraph hash ever
     kept, so each crawl increment keeps only its first-occurrence
@@ -2608,16 +2529,17 @@ class ParagraphIndex:
     by one reassembles byte-identically to the one-shot operator on
     the union — pinned by the batch-equivalence test.
 
-    Crash safety: the single append commits through the
-    versioned-manifest protocol (one atomic pointer flip, object-store
-    safe). A crash BEFORE the flip loses nothing (the batch just
-    re-ingests); a replay AFTER the flip appends value-identical hash
-    rows, which the anti-join is insensitive to and :meth:`compact`'s
-    distinct fold removes — replayed ingests are idempotent by
-    construction. Scale shape: the history side is one left-anti join
-    keyed on the hash (at warehouse scale, keep ``seen/`` bucketed on
-    para_hash so it co-locates); only the new batch's paragraphs ever
-    shuffle."""
+    Crash safety: the batch's new hashes commit through the
+    :class:`~streamtasks_spark.core.state.Staging` ingest over the one
+    table ``seen/`` (one atomic pointer flip, object-store safe). A
+    crash BEFORE the flip loses nothing (the batch just re-ingests); a
+    streaming fence already in ``seen/`` skips the batch, and an
+    unfenced replay AFTER the flip appends value-identical hash rows,
+    which the anti-join is insensitive to and :meth:`compact`'s
+    distinct fold removes. Scale shape: the history side is one
+    left-anti join keyed on the hash (at warehouse scale, keep
+    ``seen/`` bucketed on para_hash so it co-locates); only the new
+    batch's paragraphs ever shuffle."""
 
     def __init__(
         self, path: str, *, id_col: str = "doc_id", text_col: str = "text"
@@ -2627,36 +2549,31 @@ class ParagraphIndex:
         self.id_col = id_col
         self.text_col = text_col
 
-    def ingest(self, docs: DataFrame) -> DataFrame:
-        """Paragraph-dedup one batch against itself + history, append
-        its newly-seen hashes, and return the per-doc survivors. The
-        returned DataFrame is materialized (persisted) BEFORE the
-        append so its plan cannot observe the batch's own hashes as
-        history (see :func:`snapshot_read`)."""
-        from streamtasks_spark.core.state import append_write
-
-        spark = docs.sparkSession
+    def stage(self, docs: DataFrame, fence: dict | None = None):
+        """Land the batch's newly-seen hashes and plan its per-doc
+        survivors from that segment, never history again, at ``docs``'
+        own partitioning: ``(out, commit)``, or None when the streaming
+        ``fence`` is already committed."""
+        st = Staging.open((self.seen_path,), fence)
+        if st is None:
+            return None
         idc = self.id_col
-        paras = pin(_para_rows(docs, idc, self.text_col))
+        paras = _para_rows(docs, idc, self.text_col)
         batch_kept = _para_winners(paras, idc)
-        old = snapshot_read(spark, self.seen_path)
-        kept = (
+        old = snapshot_read(docs.sparkSession, self.seen_path)
+        new = (
             batch_kept if old is None
             else batch_kept.join(
                 old.withColumnRenamed("para_hash", "__h"), "__h", "left_anti"
             )
         )
-        # kept feeds BOTH the reassembled output and the hash append —
-        # without the pin the winner agg + join + history anti-join
-        # would execute twice per ingest
-        kept = pin(kept)
-        out = pin(_para_reassemble(paras, kept, idc))
-        out.count()  # materialize before the append below
-        new_hashes = kept.select(F.col("__h").alias("para_hash"))
-        append_write(new_hashes, self.seen_path)
-        kept.unpersist()
-        paras.unpersist()
-        return out
+        seen = st.land(
+            new.select(F.col("__h").alias("para_hash")), self.seen_path
+        )
+        kept = batch_kept.join(
+            seen.withColumnRenamed("para_hash", "__h"), "__h", "left_semi"
+        )
+        return _para_reassemble(paras, kept, idc), st.commit
 
     def compact(self, spark, *, files: int = 8) -> None:
         """Rewrite ``seen/`` coalesced (and distinct — curing the

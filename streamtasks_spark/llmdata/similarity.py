@@ -44,13 +44,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from streamtasks_spark.core.state import (
-    append_write,
+    Staging,
     commit_segments,
     new_segment,
     read_manifest,
     replace_write,
 )
 from streamtasks_spark.llmdata.dedup import (
+    StagedIndex,
     bounded_collect,
     compact_table,
     pin,
@@ -2340,10 +2341,13 @@ class _IvfLifecycle:
     epoch resolution and the table paths, coarse-codebook seeding with
     its empty-codebook unwind, ingest, :meth:`compact`,
     :meth:`drift_report`, :meth:`rebuild` and the query prune to the
-    probed cells (:meth:`_probe`). :class:`IvfPqIndex` overrides only
+    probed cells (:meth:`_probe`). Ingest is :meth:`stage` — the
+    :class:`~streamtasks_spark.core.state.Staging` ingest over the
+    tables of :attr:`_appended` — then its commit.
+    :class:`IvfPqIndex` overrides only
     its code: what a side carries (:meth:`_prep`), the PQ codebooks'
     load / train / write, the encode of assigned rows
-    (:meth:`_write_cells`), its drift stats and its query scoring.
+    (:meth:`_land_cells`), its drift stats and its query scoring.
 
     Epoch resolution: a rebuild must replace every table together, and
     separate manifest flips cannot be atomic — a crash between them
@@ -2361,6 +2365,7 @@ class _IvfLifecycle:
     boundary."""
 
     _tables = ("centroids", "cells", "stats")  # one epoch's tables
+    _appended = ("cells", "stats")  # per ingest, in commit order
     _cell_tables = ("cells",)  # partitioned by __cell
     _raw = ("cells", "__v", "__nrm")  # where the exact vectors live
     _coarse_name = "codebook"
@@ -2425,15 +2430,18 @@ class _IvfLifecycle:
     def _write_code(self, spark, code, root: str) -> None:
         """Persist ``code`` under the table root ``root``."""
 
-    def _write_cells(self, assigned: DataFrame, root: str, code) -> None:
-        """Append ``assigned`` (id, __v, __nrm, __cell) under ``root``
-        — the versioned-manifest append: the batch becomes visible in
-        one atomic pointer flip; partition dirs (__cell=N/) live inside
-        the segment, so probed-cell pruning is unchanged."""
-        append_write(
+    def _land_cells(self, st: Staging, assigned: DataFrame, root: str,
+                    code) -> None:
+        """Land ``assigned`` (id, __v, __nrm, __cell) under ``root``;
+        partition dirs (__cell=N/) live inside the segment, so
+        probed-cell pruning is unchanged."""
+        st.land(
             _raw_code().corpus(assigned, self.id_col, "__cell"),
             f"{root}/cells", partition_by="__cell",
         )
+
+    def _appended_paths(self, root: str) -> tuple[str, ...]:
+        return tuple(f"{root}/{t}" for t in self._appended)
 
     def _stats(self, v: DataFrame, cb: dict, code, ingest_id) -> DataFrame:
         return _drift_stats(
@@ -2478,7 +2486,17 @@ class _IvfLifecycle:
             )
         return cents, True
 
-    def _ingest(self, vectors: DataFrame, codebook, supplied=None) -> None:
+    def stage(self, vectors: DataFrame, fence: dict | None = None, *,
+              codebook=None, supplied=None):
+        """Land one batch's cell rows and its drift-stats row:
+        ``(stats, commit)``, or None when the streaming ``fence`` is
+        already committed. The first batch freezes the codebook(s)
+        (``codebook``/``supplied``, or trained on it). ``stats/``
+        commits last, so its manifest version is the ingest count."""
+        root = self._root()
+        st = Staging.open(self._appended_paths(root), fence)
+        if st is None:
+            return None
         spark = vectors.sparkSession
         v = pin(self._prep(_corpus_norm(vectors, self.id_col, self.vec_col)))
         wrote = False
@@ -2492,9 +2510,8 @@ class _IvfLifecycle:
                 shutil.rmtree(self.centroids_path, ignore_errors=True)
             v.unpersist()
             raise
-        self._write_cells(
-            _cell_assign(v, broadcast(cents), self.id_col, 1),
-            self._root(), code,
+        self._land_cells(
+            st, _cell_assign(v, broadcast(cents), self.id_col, 1), root, code
         )
         # drift instrumentation: one stats row per ingest against the
         # FROZEN codebook(s) — n and the floored-integer mean winning
@@ -2503,17 +2520,17 @@ class _IvfLifecycle:
         # distribution that drifts from the training batch lands
         # farther from every centroid and the cosine falls — the
         # measured rebuild trigger for the documented frozen-codebook
-        # trade-off. Written LAST: a crash before this flip loses only
-        # the report row, never data.
-        m = read_manifest(self.stats_path)
-        append_write(
+        # trade-off.
+        m = read_manifest(f"{root}/stats")
+        stats = st.land(
             self._stats(
                 v, _collect_codebook(cents), code,
                 (m["version"] if m else 0) + 1,
             ),
-            self.stats_path,
+            f"{root}/stats",
         )
         v.unpersist()
+        return stats, st.commit
 
     def compact(self, spark, *, files_per_cell: int = 1) -> None:
         """Rewrite the per-cell tables coalesced per cell directory —
@@ -2522,12 +2539,15 @@ class _IvfLifecycle:
         query. The partition layout (and so probed-cell pruning) is
         preserved. The distinct fold makes the query's tolerance for a
         replayed ingest (which re-appends value-identical rows)
-        durable. Exclusive access required (no concurrent reader
-        mid-query, no concurrent ingest) — see
+        durable. A torn commit is undone first: compaction rewrites the
+        last segment that undo drops. Exclusive access required (no
+        concurrent reader mid-query, no concurrent ingest) — see
         :func:`~streamtasks_spark.llmdata.dedup.compact_table`."""
+        root = self._root()
+        Staging.open(self._appended_paths(root))
         for t in self._cell_tables:
             compact_table(
-                spark, f"{self._root()}/{t}",
+                spark, f"{root}/{t}",
                 files=files_per_cell, partition_by="__cell",
                 transform=lambda df: df.distinct(),
             )
@@ -2595,6 +2615,7 @@ class _IvfLifecycle:
         idc = self.id_col
         table, vcol, ncol = self._raw
         old_root = self._root()
+        Staging.open(self._appended_paths(old_root))  # undo a torn commit
         raw = snapshot_read(spark, f"{old_root}/{table}")
         if raw is None:
             raise ValueError(f"{type(self).__name__} at {self.path} has no data")
@@ -2626,15 +2647,16 @@ class _IvfLifecycle:
         seg, epoch = new_segment(self.path)
         replace_write(cents_df, f"{epoch}/centroids", n_files=1)
         self._write_code(spark, new_code, epoch)
-        self._write_cells(
+        st = Staging(self._appended_paths(epoch))
+        self._land_cells(
+            st,
             vecs.withColumn(
                 "__cell", F.expr(_argmax_cell_expr(new_cb)).cast("int")
             ),
             epoch, new_code,
         )
-        append_write(
-            self._stats(vecs, new_cb, new_code, 1), f"{epoch}/stats"
-        )
+        st.land(self._stats(vecs, new_cb, new_code, 1), f"{epoch}/stats")
+        st.commit()
         vecs.unpersist()
         commit_segments(self.path, [seg])  # THE flip; also GC's an old
         # epoch directory (it is an unreferenced seg_* sibling)
@@ -2744,8 +2766,9 @@ class IvfIndex(_IvfLifecycle):
         non-zero-based ids, supply an explicit codebook: both the
         one-shot and the index would otherwise see fewer than
         ``n_cells`` seed vectors.) Later ingests always reuse the
-        stored codebook."""
-        self._ingest(vectors, codebook)
+        stored codebook. :meth:`stage` then the commit."""
+        _, commit = self.stage(vectors, codebook=codebook)
+        commit()
 
     def query(
         self, queries: DataFrame, *, k: int = 5, n_probe: int | None = None
@@ -2828,6 +2851,7 @@ class IvfPqIndex(_IvfLifecycle):
     requires a single owner (the MinHashIndex discipline)."""
 
     _tables = ("centroids", "pq_codebook", "cells", "vectors", "stats")
+    _appended = ("vectors", "cells", "stats")
     _cell_tables = ("cells", "vectors")
     _raw = ("vectors", "__av", "__anrm")
     _coarse_name = "coarse codebook"
@@ -2943,26 +2967,27 @@ class IvfPqIndex(_IvfLifecycle):
             f"{root}/pq_codebook", n_files=1,
         )
 
-    def _write_cells(self, assigned: DataFrame, root: str, cb) -> None:
+    def _land_cells(self, st: Staging, assigned: DataFrame, root: str,
+                    cb) -> None:
         """Encode ``assigned`` with the pq code's corpus projection and
-        append it RAW VECTORS FIRST: query()'s exact re-rank
-        inner-joins candidates (from cells/) against raw rows (from
-        vectors/), so the crash-safe order is the dependency order —
-        an orphan raw row no code row references is unreachable and
-        harmless, while a code row with no raw counterpart would
-        silently drop ADC candidates from top-k. Each commit is one
-        atomic flip."""
+        land raw vectors and codes. :attr:`_appended` commits RAW
+        VECTORS FIRST: query()'s exact re-rank inner-joins candidates
+        (from cells/) against raw rows (from vectors/), so the
+        crash-safe order is the dependency order — an orphan raw row
+        no code row references is unreachable and harmless, while a
+        code row with no raw counterpart would silently drop ADC
+        candidates from top-k."""
         idc = self.id_col
         enc = pin(
             _pq_code(cb, self.dim, self.m_sub, self.rerank).corpus(
                 assigned, idc, "__cell"
             )
         )
-        append_write(
+        st.land(
             enc.select(idc, "__av", "__anrm", "__cell"),
             f"{root}/vectors", partition_by="__cell",
         )
-        append_write(
+        st.land(
             enc.select(idc, "__codes", "__cell"),
             f"{root}/cells", partition_by="__cell",
         )
@@ -2995,8 +3020,12 @@ class IvfPqIndex(_IvfLifecycle):
         normalized vectors with the :func:`pq_topk` seeding
         (``id_col < n_codes``). Later ingests reuse both. A first
         ingest that cannot produce either codebook fails loudly and
-        unwrites whatever it wrote in this call."""
-        self._ingest(vectors, codebook, pq_codebooks)
+        unwrites whatever it wrote in this call. :meth:`stage` then
+        the commit."""
+        _, commit = self.stage(
+            vectors, codebook=codebook, supplied=pq_codebooks
+        )
+        commit()
 
     def query(
         self,
@@ -4148,7 +4177,7 @@ def oracle_semantic_dedup_sql(
     """
 
 
-class SemDedupIndex:
+class SemDedupIndex(StagedIndex):
     """Persistent incremental semantic dedup — the ingestion shape of
     :func:`semantic_dedup`, the way :class:`~streamtasks_spark.llmdata.
     dedup.MinHashIndex` is the ingestion shape of ``dedup_minhash``: a
@@ -4199,12 +4228,13 @@ class SemDedupIndex:
     upstream); monotone ids are required only for the one-shot
     comparison above, not for well-defined output.
 
-    Snapshot discipline: history is read via
-    :func:`~streamtasks_spark.llmdata.dedup.snapshot_read` and the
-    batch verdict is MATERIALIZED before the append (the
-    self-observation trap: an append-then-compute plan would see the
-    batch's own rows as history and drop everything as its own
-    duplicate)."""
+    Commit protocol: the :class:`~streamtasks_spark.core.state.Staging`
+    ingest over the one table ``kept/`` (:meth:`stage`). The batch's
+    survivors land in an uncommitted segment, and the verdict reads
+    kept history through the segments live before that, so it never
+    sees the batch as its own history (which would drop everything as
+    its own duplicate); a streaming fence already in ``kept/`` skips
+    the batch, so a replay adds no survivor twice."""
 
     def __init__(
         self,
@@ -4239,12 +4269,15 @@ class SemDedupIndex:
     def codebook(self, spark) -> DataFrame | None:
         return snapshot_read(spark, self.codebook_path)
 
-    def ingest(self, vectors: DataFrame) -> DataFrame:
-        """Dedup one batch against itself + kept history, append its
-        survivors, and return the batch verdict ({id_col}, cell, keep)
-        — the same row shape as :func:`semantic_dedup`, restricted to
-        this batch's (nonzero-norm) vectors. The returned DataFrame is
-        persisted and already materialized."""
+    def stage(self, vectors: DataFrame, fence: dict | None = None):
+        """Land the batch's survivors, at ``vectors``' own
+        partitioning: ``(verdict, commit)``, or None when the streaming
+        ``fence`` is already committed. ``verdict`` ({id_col}, cell,
+        keep) is persisted and materialized by the landing. The first
+        batch trains the codebook, frozen from then on."""
+        st = Staging.open((self.kept_path,), fence)
+        if st is None:
+            return None
         spark = vectors.sparkSession
         idc = self.id_col
         cb = self.codebook(spark)
@@ -4258,12 +4291,10 @@ class SemDedupIndex:
             cb = snapshot_read(spark, self.codebook_path)
         argmax = _argmax_cell_expr(_collect_codebook(cb))
         v = _require_dim(
-            _with_norm(
-                spread(vectors, idc).select(idc, self.vec_col),
-                self.vec_col,
-            ),
+            _with_norm(vectors.select(idc, self.vec_col), self.vec_col),
             self.dim, "SemDedupIndex.ingest",
         )
+        # the batch feeds both sides of the pairing and the survivors
         batch = pin(
             v.withColumn("__cell", F.expr(argmax))
             .select(idc, "__v", "__nrm", "__cell")
@@ -4310,6 +4341,7 @@ class SemDedupIndex:
             .distinct()
             .withColumn("__drop", F.lit(True))
         )
+        # the verdict feeds both the survivors and the caller's output
         verdict = pin(
             batch.join(dropped, idc, "left")
             .select(
@@ -4318,17 +4350,14 @@ class SemDedupIndex:
                 F.coalesce(~F.col("__drop"), F.lit(True)).alias("keep"),
             )
         )
-        verdict.count()  # materialize BEFORE the append below
-        # versioned-manifest append: survivors become visible in one
-        # atomic pointer flip (crash mid-write = invisible orphan)
-        append_write(
+        st.land(
             batch.join(
                 verdict.filter(F.col("keep")).select(idc), idc, "left_semi"
             ),
             self.kept_path,
         )
-        batch.unpersist()
-        return verdict
+        batch.unpersist()  # the verdict is cached now
+        return verdict, st.commit
 
     def compact(self, spark, *, files_per_table: int = 8) -> None:
         """Coalesce the append-accreted ``kept/`` part files (the same

@@ -41,22 +41,20 @@ their output layout and replay contract:
   therefore needs a fresh output path.
 - Frozen-model twins are pure functions of the batch: a replay rewrites
   the same rows, so the output is exactly-once per checkpoint.
-- Sketch twins (:func:`streaming_approx_distinct`,
-  :func:`streaming_heavy_hitters`) write the report first, then commit
-  the merged state with the batch's ``(query, batch)`` fence in the same
-  manifest flip, and skip a batch their query already fenced: state and
-  reports are exactly-once per checkpoint.
-- :func:`streaming_dedup_minhash` writes its batch's sketches into
-  uncommitted index segments, writes the pairs, then commits the index
-  with the batch's fence, and skips a batch its query already fenced:
-  index and pairs are exactly-once per checkpoint.
-- The other index twins commit their index inside ``ingest()``, before
-  the output exists. The output is still one copy per batch, but a
-  crash between the index commit and the checkpoint commit ingests the
-  batch twice; each one's docstring says what that does.
-- The sketch twins and :func:`streaming_dedup_minhash` run a batch at
-  the partitioning its source gave it (a small file is one partition),
-  with no per-trigger repartition.
+- Stateful twins return ``(output, commit)``, and the skeleton runs
+  skip → write output → commit: a batch whose ``(query, batch)`` fence
+  the state already holds is skipped whole, and the fence is committed
+  with the state, in the same manifest flip, only after the output is
+  durable. The sketch twins (:func:`streaming_approx_distinct`,
+  :func:`streaming_heavy_hitters`) merge a state table; the index twins
+  (MinHash, bloom, semantic dedup, ANN ingest) land the batch's index
+  rows in uncommitted segments and commit them through
+  :class:`~streamtasks_spark.core.state.Staging`, which also undoes a
+  commit torn between two tables. Output and state are exactly-once per
+  checkpoint for all of them.
+- The sketch twins and the bloom, MinHash and semantic twins run a
+  batch at the partitioning its source gave it (a small file is one
+  partition), with no per-trigger repartition.
 - No twin runs a per-batch ``isEmpty`` job: a stateless upstream plan
   never sends an empty batch, and on an empty one (after a stateful
   upstream's no-data batch) each step changes no table's rows.
@@ -861,10 +859,11 @@ def _start_twin(stream: DataFrame, checkpoint: str, out_path: str, step):
     """Start ``stream`` as the foreachBatch query of a twin below.
     ``step(batch, fence)`` is the twin's per-batch work, with ``fence``
     its ``{"query": id, "batch": n}``. It returns None (nothing to
-    write), the batch's output DataFrame, or ``(output, commit)``, where
-    ``commit()`` runs once the output is durable. Batch ``n``'s output
-    replaces ``<out_path>/batch_id=<n>/``; see the module docstring for
-    the replay contract this gives."""
+    write, or a batch already committed), the batch's output DataFrame,
+    or ``(output, commit)`` — an index's ``stage(batch, fence)`` —
+    where ``commit()`` runs once the output is durable. Batch ``n``'s
+    output replaces ``<out_path>/batch_id=<n>/``; see the module
+    docstring for the replay contract this gives."""
 
     def run(batch: DataFrame, batch_id: int) -> None:
         qid = _claim(checkpoint, out_path)
@@ -903,15 +902,15 @@ def _sketch_step(state_path: str, schema: str, cells, bound: int, merge,
     cached on the driver; the cache is merged into a copy, published
     only after the flip, and reloaded whenever the manifest version is
     not the one it mirrors."""
-    from streamtasks_spark.core.state import fenced, read_manifest
+    from streamtasks_spark.core.state import Staging, read_manifest
     from streamtasks_spark.llmdata.dedup import bounded_collect, snapshot_read
 
     cache: dict = {"version": None, "rows": None}
 
     def step(batch: DataFrame, fence: dict):
-        m = read_manifest(state_path)
-        if fenced(m, fence):
+        if Staging((state_path,), fence).committed():
             return None  # this query already committed the batch
+        m = read_manifest(state_path)
         spark = batch.sparkSession
         new = cells(batch)
         # the bound is enforced, not just argued
@@ -972,16 +971,9 @@ def streaming_dedup_minhash(
     MinHashIndex pins in its batch-equivalence test; each pair is
     emitted by the micro-batch where its later doc arrives).
 
-    Replay: the batch's sketches land in uncommitted index segments,
-    its pairs are written, and only then does the index commit, with
-    the batch's ``(query, batch)`` fence in both flips
-    (:meth:`~streamtasks_spark.llmdata.dedup.MinHashIndex.stage`). A
-    replay of a batch the index already holds is skipped whole; its
-    pairs directory was written before the commit. A crash before the
-    commit, or between its two flips, leaves the batch out of the
-    index (a torn commit is undone first), so the replay ingests it
-    once. Either way no pair row repeats, in that batch or a later
-    one.
+    Replay: the index twins' contract (module docstring), through
+    :meth:`~streamtasks_spark.llmdata.dedup.MinHashIndex.stage`; no
+    pair row repeats.
 
     Returns the started StreamingQuery.
     """
@@ -1026,10 +1018,9 @@ def streaming_bloom_dedup(
     batch's flags equal ``bloom_dedup(batch, all prior batches)``
     bit-exactly regardless of batching (BloomIndex pins this).
 
-    Replay: the bits commit inside ``ingest``, before the flags are
-    written. A crash between that commit and the checkpoint commit
-    re-ingests the batch: the bit set is unchanged (set union), but the
-    rewritten flags probe the batch's own bits.
+    Replay: the index twins' contract (module docstring), through
+    :meth:`~streamtasks_spark.llmdata.dedup.BloomIndex.stage`; a
+    replay never probes the batch's own bits.
 
     Returns the started StreamingQuery."""
     from streamtasks_spark.llmdata.dedup import BloomIndex
@@ -1043,7 +1034,7 @@ def streaming_bloom_dedup(
     )
     return _start_twin(
         docs, checkpoint, flags_path,
-        lambda batch, _: index.ingest(batch.select(id_col, text_col)),
+        lambda batch, fence: index.stage(batch.select(id_col, text_col), fence),
     )
 
 
@@ -1080,11 +1071,9 @@ def streaming_semantic_dedup(
     verdict row (each id is verdict-ed by the micro-batch that carries
     it).
 
-    Replay: the kept table commits inside ``ingest``, before the
-    verdicts are written. A crash between that commit and the
-    checkpoint commit re-ingests the batch: its verdicts directory is
-    still rewritten once, but the kept table then holds the batch's
-    survivors twice.
+    Replay: the index twins' contract (module docstring), through
+    :meth:`~streamtasks_spark.llmdata.similarity.SemDedupIndex.stage`;
+    ``kept/`` holds each survivor once.
 
     Returns the started StreamingQuery."""
     from streamtasks_spark.core.state import read_manifest
@@ -1100,11 +1089,11 @@ def streaming_semantic_dedup(
         threshold=threshold,
     )
 
-    def step(batch: DataFrame, _):
+    def step(batch: DataFrame, fence: dict):
         # an empty batch cannot train the codebook: checked until it can
         if read_manifest(index.codebook_path) is None and batch.isEmpty():
             return None
-        return index.ingest(batch.select(id_col, vec_col))
+        return index.stage(batch.select(id_col, vec_col), fence)
 
     return _start_twin(vectors, checkpoint, verdicts_path, step)
 
@@ -1608,20 +1597,13 @@ def streaming_ann_ingest(
     natural id-monotone crawl order — or pre-build the index with
     trained codebooks before starting the stream).
 
-    Replay: the index commits inside ``ingest``, before the report is
-    written. A crash between the final commit and the checkpoint commit
-    re-ingests the batch: it re-appends VALUE-IDENTICAL code/vector
-    rows, which ``query()`` tolerates (it ranks distinct ids only:
-    duplicate code rows tie and share one of the rerank·k candidate
-    slots, and duplicate raw rows collapse before the exact re-rank)
-    and ``compact()`` folds durably, plus a second stats row, and
-    the report directory is rewritten with the replay's stats row. A
-    crash at any manifest flip leaves the index at its previous version
-    intact.
+    Replay: the index twins' contract (module docstring), through
+    :meth:`~streamtasks_spark.llmdata.similarity.IvfPqIndex.stage`;
+    the report is the batch's landed stats row, and ``stats/`` holds
+    one row per batch.
 
     Returns the started StreamingQuery."""
     from streamtasks_spark.core.state import read_manifest
-    from streamtasks_spark.llmdata.dedup import snapshot_read
     from streamtasks_spark.llmdata.similarity import IvfPqIndex
 
     index = IvfPqIndex(
@@ -1637,17 +1619,10 @@ def streaming_ann_ingest(
         rerank=rerank,
     )
 
-    def step(batch: DataFrame, _):
+    def step(batch: DataFrame, fence: dict):
         # an empty batch cannot seed the codebooks: checked until it can
         if read_manifest(index.centroids_path) is None and batch.isEmpty():
             return None
-        index.ingest(batch.select(id_col, vec_col))
-        # the ingest's own stats row (one commit per ingest, so the
-        # stats manifest version IS its ingest_id) — a sketch-sized
-        # read, never the data tables
-        iid = read_manifest(index.stats_path)["version"]
-        return snapshot_read(batch.sparkSession, index.stats_path).filter(
-            F.col("ingest_id") == iid
-        )
+        return index.stage(batch.select(id_col, vec_col), fence)
 
     return _start_twin(vectors, checkpoint, reports_path, step)

@@ -16,16 +16,13 @@ over all thirteen:
    bit-exactly, with no row re-emitted (the committed-offset log is
    what keeps run 2 from re-reading run 1's files).
 
-2. **crash after commit** (the nine twins without an index, and
-   dedup_minhash): the last batch's output and state are durable but
-   its checkpoint commit is deleted, so the same checkpoint replays it.
-   Every output row stays one copy (the batch rewrites its own
-   ``batch_id=<n>`` directory) and the state does not move (the batch
-   fence in the sketch twins' state and in the MinHash index skips
-   it), so the Count-Min grid still equals the one-shot grid and the
-   MinHash pairs and index are unchanged. The bloom, semantic and ANN
-   index twins commit inside ``ingest()``, before their output exists,
-   so they are not exactly-once under this replay and have no such leg.
+2. **crash after commit** (all thirteen): the last batch's output and
+   state are durable but its checkpoint commit is deleted, so the same
+   checkpoint replays it. Every output row stays one copy (the batch
+   rewrites its own ``batch_id=<n>`` directory) and the state does not
+   move (the batch fence in the sketch twins' state and in every
+   index's last table skips it), so the Count-Min grid still equals
+   the one-shot grid and every index is unchanged.
 
 3. **one query per output path**: a fresh checkpoint on the same output
    path fails before it writes; output and state are unchanged.
@@ -53,7 +50,7 @@ import os
 
 import pytest
 
-# driver-facing default run excludes this sweep (pytest.ini, r12):
+# the default run excludes this sweep (pytest.ini):
 # it is the slow tier — run with `-m slow`
 pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
@@ -93,7 +90,7 @@ def _drain(q):
 
 def _state_read(spark, path):
     """Durable state tables commit through the versioned-manifest
-    protocol (r11) — resolve them the way the engine does."""
+    protocol — resolve them the way the engine does."""
     from streamtasks_spark.llmdata.dedup import snapshot_read
 
     df = snapshot_read(spark, path)
@@ -344,9 +341,7 @@ def _spec_bloom():
         ),
         state_expect=lambda spark, full, td: sorted(
             r["__pos"]
-            for r in _bloom_bits(
-                full, "doc_id", "text", 1 << 16, 5
-            ).collect()
+            for r in _bloom_bits(full, "text", 1 << 16, 5).collect()
         ),
         replay="idempotent",
     )
@@ -619,8 +614,6 @@ SPECS = {
 }
 
 
-_INDEX_TWINS = ("ann_ingest", "bloom_dedup", "semantic_dedup")
-
 
 def _uncommit_last_batch(ck):
     """Delete the checkpoint's last batch commit (and its checksum):
@@ -687,16 +680,15 @@ def test_foreachbatch_twin_restart_and_replay(name, spark, tmp_path):
     # crash-after-commit leg: the last batch's output and state are
     # durable, its checkpoint commit is not; the same checkpoint
     # replays it, and nothing may land twice
-    if name not in _INDEX_TWINS:
-        _uncommit_last_batch(ck)
-        _drain(spec["start"](make_stream(), td, ctx, ck, out))
-        assert canon_out(spark, out) == pre_out, (
-            f"{name}: a replayed batch changed the output"
+    _uncommit_last_batch(ck)
+    _drain(spec["start"](make_stream(), td, ctx, ck, out))
+    assert canon_out(spark, out) == pre_out, (
+        f"{name}: a replayed batch changed the output"
+    )
+    if before is not None:
+        assert spec["state"](spark, td) == before, (
+            f"{name}: a replayed batch moved the state"
         )
-        if before is not None:
-            assert spec["state"](spark, td) == before, (
-                f"{name}: a replayed batch moved the state"
-            )
 
     # one query per output path: a fresh checkpoint on the same output
     # path fails before it writes anything
@@ -736,12 +728,12 @@ def test_foreachbatch_twin_restart_and_replay(name, spark, tmp_path):
         )
 
 
-# ------------------------------------------------- crash injection (r11)
+# ------------------------------------------------------- crash injection
 #
 # All durable state now commits through the versioned-manifest
 # protocol (core/state.py): immutable segments + ONE atomic
 # single-file pointer flip. This leg kills the flip itself — the one
-# instant the r10 rename-swap could not survive on an object store —
+# instant a directory-rename swap could not survive on an object store —
 # mid-stream, and proves (a) the durable state still resolves to the
 # pre-batch version intact, and (b) a restart from the same checkpoint
 # replays the failed batch cleanly to the bit-exact one-shot result.

@@ -1,7 +1,7 @@
-"""Versioned-manifest commit protocol (r11) — unit tests plus crash
+"""Versioned-manifest commit protocol — unit tests plus crash
 injection over every persistent-state owner.
 
-The protocol (``streamtasks_spark/core/state.py``) replaces the r10
+The protocol (``streamtasks_spark/core/state.py``) replaces
 directory-rename swaps: data lands in immutable segment directories,
 and the ONLY commit point is one atomic single-file replacement of
 ``_MANIFEST.json`` (``_flip``). These tests inject a crash exactly at
@@ -337,7 +337,7 @@ def test_bloom_index_crash_at_flip(spark, tmp_path, monkeypatch):
     idx.ingest(b2)  # clean retry
     want = sorted(
         r["__pos"]
-        for r in _bloom_bits(docs, "doc_id", "text", 1 << 16, 5).collect()
+        for r in _bloom_bits(docs, "text", 1 << 16, 5).collect()
     )
     got = sorted(
         set(
@@ -495,14 +495,15 @@ def test_ivf_index_crash_at_flip(spark, tmp_path, monkeypatch):
     assert _canon(idx.query(qs, k=3)) == _canon(one.query(qs, k=3))
 
 
-@pytest.mark.slow  # slow tier (pytest.ini, r12)
+@pytest.mark.slow  # slow tier (pytest.ini)
 @pytest.mark.parametrize("at", [1, 2])
 def test_ivf_pq_index_crash_at_flip(spark, tmp_path, monkeypatch, at):
     """Second-ingest flips: #1 = vectors (raw side), #2 = cells
     (codes). A crash between them leaves orphan RAW rows only — the
     direction query() tolerates by construction (candidates originate
-    from cells); the r10 advisor's silent-candidate-drop window is
-    closed. The retry converges to the one-shot twin."""
+    from cells), never a code row without its raw row, which would
+    silently drop an ADC candidate. The retry converges to the
+    one-shot twin."""
     from streamtasks_spark.llmdata.similarity import IvfPqIndex
 
     vecs = _vecs(spark)
@@ -735,46 +736,172 @@ def _minhash(tmp_path, name):
     )
 
 
-@pytest.mark.parametrize("at", [1, 2])
-def test_dedup_minhash_replay_after_the_index_commit(
-    spark, tmp_path, monkeypatch, at
-):
-    """A kill after the index's hashes flip (at=1: the commit is torn
-    between its two flips) or after both (at=2), before the checkpoint
-    commit, then the replay of that batch and one more batch: no pair
-    row appears twice, and pairs and index equal a run without the
-    kill and the one-shot pairs. A restarted process that replays the
-    last batch after a compaction changes nothing."""
-    from streamtasks_spark.llmdata.dedup import MinHashIndex, dedup_minhash
+def _index_twins():
+    """kind -> (twin, output keyword, options, index class, its
+    tables, the output key each row holds once, (table, key) pairs
+    each index row holds once)."""
+    from streamtasks_spark.llmdata.dedup import BloomIndex, MinHashIndex
+    from streamtasks_spark.llmdata.similarity import IvfPqIndex, SemDedupIndex
+    from streamtasks_spark.streaming import stateful as st
 
-    b1, b2, b3 = _three_batches(spark)
-    ingest = _minhash(tmp_path, "crash")
+    return {
+        "minhash": (
+            st.streaming_dedup_minhash, "pairs_path", {"threshold": 0.5},
+            MinHashIndex, ("hashes", "bands"), ("doc_a", "doc_b"),
+            [("hashes", "doc_id")],
+        ),
+        "bloom": (
+            st.streaming_bloom_dedup, "flags_path", {"m_bits": 1 << 16},
+            BloomIndex, ("bits",), ("doc_id",), [],
+        ),
+        "semantic": (
+            st.streaming_semantic_dedup, "verdicts_path", {},
+            SemDedupIndex, ("codebook", "kept"), ("vec_id",),
+            [("kept", "vec_id")],
+        ),
+        "ann": (
+            st.streaming_ann_ingest, "reports_path", {},
+            IvfPqIndex, ("centroids", "pq_codebook", "vectors", "cells", "stats"),
+            ("ingest_id",), [("cells", "vec_id"), ("stats", "ingest_id")],
+        ),
+    }
+
+
+def _index_twin_batches(spark, kind):
+    if kind in ("minhash", "bloom"):
+        return _three_batches(spark)
+    vecs = _vecs(spark)
+    return [
+        vecs.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
+        for lo, hi in ((0, 170), (170, 340), (340, 1 << 62))
+    ]
+
+
+def _index_twin(tmp_path, kind, name):
+    """A captured index twin of ``kind`` over ``name``'s paths, and a
+    reader of its (output, index tables)."""
+    twin, out_kw, opts, _, tables, _, _ = _index_twins()[kind]
+    base = tmp_path / name
+    ingest = _capture(
+        twin, str(base / "ckpt"), index_path=str(base / "index"),
+        **{out_kw: str(base / "out")}, **opts,
+    )
+
+    def read(spark):
+        return (
+            spark.read.parquet(str(base / "out")),
+            {t: snapshot_read(spark, str(base / "index" / t)) for t in tables},
+        )
+
+    return ingest, read
+
+
+def _canon_run(run):
+    out, tables = run
+    return _canon(out), {t: _canon(df) for t, df in tables.items()}
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, tmp_path_factory):
+    """kind -> the canonical (output, index tables) of three batches
+    through its index twin without a kill, run once per kind."""
+    runs = {}
+
+    def run(kind):
+        if kind not in runs:
+            ingest, read = _index_twin(tmp_path_factory.mktemp(kind), kind, "one")
+            for i, b in enumerate(_index_twin_batches(spark, kind)):
+                ingest(b, i)
+            runs[kind] = _canon_run(read(spark))
+        return runs[kind]
+
+    return run
+
+
+@pytest.mark.parametrize("kind, at", [
+    ("minhash", 1), ("minhash", 2), ("bloom", 1), ("semantic", 1),
+    ("ann", 1), ("ann", 2), ("ann", 3),
+])
+def test_index_twin_replay_after_the_index_commit(
+    spark, tmp_path, monkeypatch, uninterrupted, kind, at
+):
+    """A kill right after flip ``at`` of an index twin's commit (before
+    its last flip the commit is torn between tables), before the
+    checkpoint commit, then the replay of that batch and one more
+    batch: the output holds one copy of every batch, and output and
+    index tables equal a run without the kill (semantic ``kept/``
+    holds each survivor once, ANN ``stats/`` one row per batch). A
+    restarted process that replays the last batch after a compaction
+    changes nothing."""
+    *_, index_cls, _, out_key, once = _index_twins()[kind]
+    b1, b2, b3 = _index_twin_batches(spark, kind)
+    ingest, read = _index_twin(tmp_path, kind, "crash")
     ingest(b1, 0)
     with _flip_then_die(monkeypatch, at=at):
         with pytest.raises(_FlipCrash):
             ingest(b2, 1)
     ingest(b2, 1)  # the replay, same closure
     ingest(b3, 2)
-    MinHashIndex(str(tmp_path / "crash" / "index")).compact(
-        spark, files_per_table=2
-    )
-    _minhash(tmp_path, "crash")(b3, 2)  # a restarted process
-    one = _minhash(tmp_path, "one")
-    for i, b in enumerate((b1, b2, b3)):
-        one(b, i)
-    got = _canon(spark.read.parquet(str(tmp_path / "crash" / "pairs")))
-    assert got == _canon(spark.read.parquet(str(tmp_path / "one" / "pairs")))
-    pairs = [(a, b) for _, a, b, _ in got]
-    assert len(pairs) == len(set(pairs))
-    assert {n for n, *_ in got} == {0, 1, 2}  # every batch pairs
-    assert sorted(p[1:] for p in got) == _canon(
-        dedup_minhash(b1.unionByName(b2).unionByName(b3), threshold=0.5)
-    )
-    for table in ("hashes", "bands"):
-        index_of = lambda name: _canon(snapshot_read(  # noqa: E731
-            spark, str(tmp_path / name / "index" / table)
+    out, tables = read(spark)
+    assert _canon_run((out, tables)) == uninterrupted(kind)
+    assert {r["batch_id"] for r in out.select("batch_id").collect()} == {0, 1, 2}
+    assert out.count() == out.select(*out_key).distinct().count()
+    if kind == "minhash":  # and the pairs are the one-shot pairs
+        from streamtasks_spark.llmdata.dedup import dedup_minhash
+
+        assert sorted(r[1:] for r in _canon(out)) == _canon(dedup_minhash(
+            b1.unionByName(b2).unionByName(b3), threshold=0.5
         ))
-        assert index_of("crash") == index_of("one"), table
+    for t, key in once:
+        assert tables[t].count() == tables[t].select(key).distinct().count(), t
+    index_cls(str(tmp_path / "crash" / "index")).compact(spark)
+    before = _canon_run(read(spark))
+    _index_twin(tmp_path, kind, "crash")[0](b3, 2)  # a restarted process
+    assert _canon_run(read(spark)) == before
+
+
+def test_ivf_pq_index_compaction_after_a_torn_commit(spark, tmp_path, monkeypatch):
+    """A kill after the ``vectors/`` and ``cells/`` flips of an ingest,
+    before ``stats/``: compaction undoes the torn commit before it
+    rewrites the cell tables, so the retried ingest leaves the tables
+    of an index that ingested each batch once."""
+    from streamtasks_spark.llmdata.similarity import IvfPqIndex
+
+    vecs = _vecs(spark)
+    b1, b2 = vecs.filter(F.col("vec_id") < 250), vecs.filter(F.col("vec_id") >= 250)
+    torn = IvfPqIndex(str(tmp_path / "torn"), n_cells=8, n_probe=2)
+    torn.ingest(b1)
+    with _flip_then_die(monkeypatch, at=2):
+        with pytest.raises(_FlipCrash):
+            torn.ingest(b2)
+    torn.compact(spark)
+    torn.ingest(b2)
+    one = IvfPqIndex(str(tmp_path / "one"), n_cells=8, n_probe=2)
+    one.ingest(b1)
+    one.ingest(b2)
+    for t in ("vectors", "cells", "stats"):
+        assert _canon(snapshot_read(spark, f"{torn.path}/{t}")) == _canon(
+            snapshot_read(spark, f"{one.path}/{t}")
+        ), t
+
+
+def test_bloom_dedup_batch_runs_no_count_job(spark, tmp_path):
+    """A steady streaming_bloom_dedup batch from one file runs at most
+    7 Spark jobs: nothing evaluates the flags before they are written,
+    because the flags read the history segments live before the
+    batch's bits land, never the bits themselves."""
+    docs = _docs(spark)
+    files = []
+    for i, (lo, hi) in enumerate(((0, 100), (100, 150), (150, 200))):
+        f = str(tmp_path / "src" / f"b{i}")
+        docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)) \
+            .coalesce(1).write.parquet(f)
+        files.append(f)
+    ingest, _ = _index_twin(tmp_path, "bloom", "b")
+    ingest(spark.read.parquet(files[0]), 0)
+    ingest(spark.read.parquet(files[1]), 1)
+    _, jobs = _jobs_started(spark, lambda: ingest(spark.read.parquet(files[2]), 2))
+    assert jobs <= 7, jobs
 
 
 def test_dedup_minhash_batch_work_does_not_grow_with_history(spark, tmp_path):
