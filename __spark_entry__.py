@@ -1762,123 +1762,15 @@ def _q_synchronizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("user_id", "ts", "value", "event_id", "stream_idx")
 
 
-# Every query whose implementation OR oracle SQL changed this round —
-# these MUST sit inside the driver's 50-entry verification window (the
-# driver hash-checks only the first 50 queries() entries; a changed
-# query outside it ships uncertified). queries() enforces this
-# programmatically, and tests/test_oracle_audit.py mechanically fails
-# naming any query whose rendered oracle SQL or canonical plan drifted
-# from ORACLE_MANIFEST.json without a listing here.
-_MUST_VERIFY_R11 = [
-    # NEW op r11 (r10 verdict task 2): the codebook-drift probe — both
-    # codebooks trained on the first id-half and frozen, every half's
-    # assignment quality measured against them as data (the certified
-    # form of the IvfIndex/IvfPqIndex per-ingest stats rows). New code
-    # certifies in-window.
-    "ann_index_drift",
-    # NEW op r11 (r10 verdict task 4): residual-encoding IVF-PQ — the
-    # standard Faiss formulation; codes quantize the residual against
-    # the assigned centroid, candidates rank by exact cell-dot +
-    # integer ADC.
-    "ann_ivf_pq_res_topk",
-    # changed r11: the recall probe gained its seventh rung
-    # (ivf_pq_res) — output grows a row, plan and oracle changed
-    # together, so it re-certifies despite its r09-green history.
-    "ann_recall",
-    # changed r11 (r10 advisor finding): keep_rate now clamps to the
-    # documented [rate_floor, rate_ceil] band in BOTH the plan and the
-    # oracle — values identical on this corpus (no negative-mean
-    # cluster), plan changed, so both consumers re-certify. Changed
-    # AGAIN late-r11: the fuzz campaign (seed 31415, promoted to the
-    # fixtures) caught DuckDB round() emitting IEEE -0.0 where Spark's
-    # BigDecimal round gives +0.0 — the cosine/min_cos emissions now
-    # carry the dedup_recall-precedent '+ 0.0' normalization, pulling
-    # cluster_profile into the window too.
-    "cluster_prune", "cluster_prune_policy", "cluster_profile",
-    # NEW op r11 (second wave): paragraph-level exact dedup — the
-    # C4/RefinedWeb corpus-prep step (keep-first per normalized
-    # paragraph corpus-wide, reassemble survivors).
-    "paragraph_dedup",
-    # NEW op r11 (second wave): key-skew profiling — per-key count
-    # distribution (exact integer percentiles via the count-of-counts
-    # histogram), heavy keys, and the suggested salted_join fan-out.
-    "key_skew_report",
-    # NEW op r11 (second wave): Morton z-order key for multi-dimensional
-    # file skipping — min-max quantize + bit interleave, one shared
-    # fragment loop for both engines.
-    "zorder_key",
-    # NEW op r11 (second wave): Hilbert-curve key — the jump-free
-    # layout walk (adjacency pinned by test); unrolled rotate/flip
-    # levels rendered for both engines from one fragment helper.
-    "hilbert_key",
-    # NEW op r11 (third wave): learned BPE tokenizer — 10-round
-    # Sennrich merge learner over the corpus vocabulary (exact BIGINT
-    # pair counts, delimited-string fuse identical in both engines;
-    # oracle unrolls the learner as chained CTEs), the exact
-    # per-document subword counts under it, the per-source fertility
-    # quality probe (integer micro-unit floor division), and the
-    # trained-vocabulary artifact table.
-    "bpe_train", "bpe_token_count", "bpe_fertility", "bpe_vocab",
-    # changed r11 optimization round: the ANN tiers' corpus-side
-    # normalization now goes through the shared _corpus_norm /
-    # _seed_cells helpers (one pinned normalized scan serves all of
-    # recall_probe's tiers; raw callers gain an earlier narrow
-    # select) — results bit-identical (oracle-green at all three SFs,
-    # certified this session), analyzed plans changed, so every
-    # affected tier re-certifies in-window. ann_topk's plan was
-    # already in the helper's exact shape and did not drift.
-    "ann_lsh_topk", "ann_ivf_topk", "ann_ivf_trained", "ann_sq_topk",
-    "ann_ivf_sq_topk", "ann_pq_topk", "ann_ivf_pq_topk",
-]
-
-# r11 rotation (r10 verdict task 3): the r08-certified backlog, queued
-# oldest-first since r10. 21 must-verify + 29 rotation = 50. The eight
-# NEW second/third-wave ops plus cluster_profile's late -0.0 oracle
-# fix displaced the backlog's last nine rows (timestamp_update,
-# frame_sample, image_renderer, string_matcher, text_semantic_dedup,
-# dsir_weights, ann_sq_topk, ann_ivf_sq_topk, time_to_text); the
-# optimization round's seven re-certifying ANN tiers (two of which —
-# ann_sq_topk, ann_ivf_sq_topk — return from that displaced set)
-# displace seven more (stratified_sample, split_assign, mix_sample,
-# events_quantiles, q2_min_cost_supplier, unigram_lm, semantic_dedup).
-# Displaced rows stay r08-certified (byte-identical under the manifest
-# gate, spot-verified via scripts/check_oracle.py this round) and
-# rotate FIRST in r12.
-_ROTATE_R11 = [
-    # the 29 oldest r08-green rows (r08 window order)
-    "set_ops", "top_customers_per_nation", "orders_without_lineitems",
-    "customers_with_orders_semi", "synchronizer", "asof_join", "switch",
-    "calculator", "calculator_multivar", "sr_latch", "pause_state",
-    "string_concatenator", "fn_task", "fn_task_stateful", "audio_mixer",
-    "video_activity_meter", "media_switch", "video_reformatter",
-    "q3_shipping_priority", "q10_returned_items", "q15_top_supplier",
-    "q17_small_quantity_revenue", "audio_chunker", "padded_chunker",
-    "audio_resampler", "video_mixer", "q22_global_sales_opportunity",
-    "salted_join", "range_join",
-]
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every declared query by name; tests/test_oracle.py certifies each
+    against its ``oracle_sql()`` twin. Keep the key order: bench.py
+    resolves its short aliases in it."""
+
     def rel(fn):
         return lambda spark, sf_dir: fn(load_tables(spark, sf_dir))
 
-    # NOTE on ordering: the driver's correctness check covers only the
-    # FIRST 50 entries (verified empirically, CORRECTNESS_r02..r04).
-    # r11 window = the NEW ops and changed-this-round queries first
-    # (_MUST_VERIFY_R11, 21 rows — incl. the seven ANN tiers whose
-    # plans the optimization round's shared-corpus-scan helpers
-    # changed), then the 29 oldest r08-certified backlog rows
-    # (_ROTATE_R11). The displaced r08 rows sit at the tail head and
-    # rotate first in r12. The tail stays ordered oldest-first
-    # (displaced r08 rows, then r09-certified rows in r09 window
-    # order, then the r10-certified rows in r10 window order) so r12
-    # keeps rotating the same way; all 152 stay covered by the
-    # bit-level compare in scripts/check_oracle.py locally, and
-    # tests/test_oracle_audit.py mechanically fails any query whose
-    # rendered oracle/plan drifts without a _MUST_VERIFY_R11 listing.
     q = {
-        # --- r11 window: changed + NEW code certifies first (see
-        # _MUST_VERIFY_R11)
         "ann_index_drift": _q_ann_index_drift,
         "paragraph_dedup": _q_paragraph_dedup,
         "key_skew_report": _q_key_skew_report,
@@ -1893,9 +1785,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cluster_prune": _q_cluster_prune,
         "cluster_prune_policy": _q_cluster_prune_policy,
         "cluster_profile": _q_cluster_profile,
-        # optimization-round re-certifications: the shared-corpus-scan
-        # helpers changed these tiers' analyzed plans (results
-        # bit-identical; see _MUST_VERIFY_R11)
         "ann_lsh_topk": _q_ann_lsh_topk,
         "ann_ivf_topk": _q_ann_ivf_topk,
         "ann_ivf_trained": _q_ann_ivf_trained,
@@ -1903,9 +1792,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_ivf_sq_topk": _q_ann_ivf_sq_topk,
         "ann_pq_topk": _q_ann_pq_topk,
         "ann_ivf_pq_topk": _q_ann_ivf_pq_topk,
-        # --- r11 window rotation: the 38 oldest r08-certified backlog
-        # rows (r08 window order). After this round the only rows older
-        # than r09 are the seven displaced ones at the tail head below.
         "set_ops": rel(rq.union_intersect_except),
         "top_customers_per_nation": rel(rq.top_customers_per_nation),
         "orders_without_lineitems": rel(rq.orders_without_lineitems),
@@ -1935,13 +1821,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q22_global_sales_opportunity": rel(rq.q22_global_sales_opportunity),
         "salted_join": _q_salted_join,
         "range_join": _q_range_join,
-        # ------- first entry PAST the driver's 50-query window -------
-        # tail head: the r08 rows displaced from the window — first the
-        # seven the optimization round's ANN re-certifications pushed
-        # out, then the rows the second/third-wave ops (and
-        # cluster_profile's late -0.0 oracle fix) displaced —
-        # byte-identical under the manifest gate, spot-verified via
-        # check_oracle this round, rotate FIRST in r12
         "stratified_sample": _q_stratified_sample,
         "split_assign": _q_split_assign,
         "mix_sample": _q_mix_sample,
@@ -1956,8 +1835,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "frame_sample": _q_frame_sample,
         "image_renderer": _q_image_renderer,
         "string_matcher": _q_string_matcher,
-        # r09-certified rows in r09 window order (ann_recall
-        # re-certifies in the r11 window above: seventh rung added)
         "contamination_report": _q_contamination_report,
         "ngram_containment": _q_ngram_containment,
         "split_leakage": _q_split_leakage,
@@ -2001,9 +1878,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "vocab_topk": _q_vocab_topk,
         "substring_dedup": _q_substring_dedup,
         "token_histogram": _q_token_histogram,
-        # r10-certified rows in r10 window order (cluster_prune and
-        # cluster_prune_policy re-certify in the r11 window above
-        # because the clamp changed their plans)
         "approx_distinct": _q_approx_distinct,
         "bm25_topk": _q_bm25_topk,
         "bm25_search": _q_bm25_search,
@@ -2050,16 +1924,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quality_buckets": _q_quality_buckets,
         "events_session_windows": rel(rq.events_session_windows),
     }
-    window = list(q)[:50]
-    missing = [n for n in _MUST_VERIFY_R11 + _ROTATE_R11
-               if n not in window]
-    if missing:
-        # explicit raise, not assert — survives python -O (the same
-        # hazard class the r06 q11 precondition fix closed)
-        raise ValueError(
-            f"queries changed this round sit outside the driver's "
-            f"50-entry verification window: {missing}"
-        )
     return q
 
 

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
-"""Driver-emulating correctness check: run every __spark_entry__.queries()
-entry on Spark AND its oracle_sql() on DuckDB over the same parquet dir,
-compare row count + column names + order-insensitive values.
+"""Run every __spark_entry__.queries() entry on Spark AND its oracle_sql()
+on DuckDB over the same parquet dir, and print each query's problems
+(streamtasks_spark.oracle.certify).
 
 Usage: python scripts/check_oracle.py [sf_dir] [query ...]
        python scripts/check_oracle.py --all-sf [query ...]   # sweep all 3 scales
@@ -13,139 +13,22 @@ import os
 import sys
 import time
 
-import duckdb
-import numpy as np
-import pandas as pd
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def duck_conn(sf_dir: str):
-    con = duckdb.connect()
-    for t in TABLES:
-        path = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(path):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
-    return con
-
-
-def normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        if pd.api.types.is_datetime64_any_dtype(df[c]):
-            df[c] = pd.to_datetime(df[c]).dt.tz_localize(None)
-        elif pd.api.types.is_integer_dtype(df[c]):
-            df[c] = df[c].astype("float64") if df[c].isna().any() else df[c].astype("int64")
-    return df.sort_values(by=list(df.columns), ignore_index=True, na_position="first")
-
-
-# DuckDB types whose pandas conversion silently changes the byte-level
-# representation: integer sum() returns HUGEINT which .df() converts to
-# float64 while Spark emits int64 — identical values, different bytes,
-# driver hash fails (burned 4 driver rows in round 3).
-_TRAP_DUCK_TYPES = ("HUGEINT", "INT128", "UHUGEINT")
-
-
-def _kind(dtype) -> str:
-    """Collapse a pandas dtype to the class the driver's byte hash sees."""
-    k = dtype.kind
-    if k in "iu":
-        return "int"
-    if k == "f":
-        return "float"
-    if k == "b":
-        return "bool"
-    if k in "mM":
-        return "datetime"
-    return "object"
-
-
-def audit_types(
-    sdf: pd.DataFrame, odf: pd.DataFrame, duck_types: dict[str, str] | None = None
-) -> list[str]:
-    """Byte-level trap audit: catches oracle-typing artifacts that the
-    approximate value compare below cannot (r2's -0.0, r3's HUGEINT).
-
-    Flags (a) any oracle column whose DuckDB type is HUGEINT/INT128,
-    (b) any shared column whose pandas dtype class differs between the
-    Spark and oracle frames, (c) float columns whose -0.0 population
-    differs between the frames."""
-    problems = []
-    for c, t in (duck_types or {}).items():
-        if any(trap in t.upper() for trap in _TRAP_DUCK_TYPES):
-            problems.append(
-                f"col {c}: DuckDB result type {t} — pandas converts to float64 "
-                f"while Spark emits int64; CAST(... AS BIGINT) in the oracle SQL"
-            )
-    for c in sdf.columns:
-        if c not in odf.columns:
-            continue
-        sk, ok_ = _kind(sdf[c].dtype), _kind(odf[c].dtype)
-        if sk != ok_:
-            problems.append(
-                f"col {c}: dtype class differs: spark={sdf[c].dtype} ({sk}) vs "
-                f"oracle={odf[c].dtype} ({ok_}) — driver hashes bytes, this fails"
-            )
-        elif sk == "float":
-            a = sdf[c].to_numpy(dtype="float64")
-            b = odf[c].to_numpy(dtype="float64")
-            neg0_s = int((np.signbit(a) & (a == 0.0)).sum())
-            neg0_o = int((np.signbit(b) & (b == 0.0)).sum())
-            if neg0_s != neg0_o:
-                problems.append(
-                    f"col {c}: -0.0 count differs: spark={neg0_s} oracle={neg0_o} "
-                    f"— normalize with '+ 0.0' on both sides"
-                )
-    return problems
-
-
-def compare(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
-    problems = []
-    if sorted(sdf.columns) != sorted(odf.columns):
-        problems.append(f"columns differ: spark={sorted(sdf.columns)} oracle={sorted(odf.columns)}")
-        return problems
-    if len(sdf) != len(odf):
-        problems.append(f"row count differs: spark={len(sdf)} oracle={len(odf)}")
-    s, o = normalize(sdf), normalize(odf)
-    if len(s) == len(o):
-        for c in s.columns:
-            sv, ov = s[c], o[c]
-            if pd.api.types.is_float_dtype(sv) or pd.api.types.is_float_dtype(ov):
-                a = sv.astype("float64").to_numpy()
-                b = ov.astype("float64").to_numpy()
-                both_nan = np.isnan(a) & np.isnan(b)
-                # bit-level compare: the driver hashes bytes, so -0.0 != +0.0
-                eq = (a.view(np.uint64) == b.view(np.uint64)) | both_nan
-                if not eq.all():
-                    bad = int((~eq).sum())
-                    num_eq = ((a == b) | both_nan).all()
-                    mx = np.nanmax(np.abs(np.where(eq, 0, a - b)))
-                    kind = "BIT-ONLY (e.g. -0.0)" if num_eq else "value"
-                    problems.append(f"col {c}: {bad} {kind} mismatches (max abs diff {mx:.3e})")
-            else:
-                eq = (sv.astype(str) == ov.astype(str))
-                if not eq.all():
-                    i = int(np.argmax(~eq.to_numpy()))
-                    problems.append(
-                        f"col {c}: {int((~eq).sum())} mismatches, first at row {i}: "
-                        f"spark={sv.iloc[i]!r} oracle={ov.iloc[i]!r}"
-                    )
-    return problems
+from streamtasks_spark.oracle import (  # noqa: E402,F401  (re-exported)
+    audit_types,
+    certify,
+    compare,
+    duck_conn,
+)
 
 
 def main() -> int:
     argv = [a for a in sys.argv[1:] if a != "--all-sf"]
     if "--all-sf" in sys.argv[1:]:
-        # the multi-scale sweep that caught the r05 tied-percentile
-        # bug: the driver only ever checks sf0.01, but cross-engine
-        # float edges (interpolation between ties, round() boundaries)
-        # are SCALE-DEPENDENT — tiny corpora tie more, big ones hit
-        # more round() edges. One command, three scales.
+        # cross-engine float edges (interpolation between ties, round()
+        # boundaries) are scale-dependent — tiny corpora tie more, big
+        # ones hit more round() edges. One command, three scales.
         rc = 0
         for sf in ("sf0.001", "sf0.01", "sf0.1"):
             print(f"===== /root/testdata/{sf} =====", flush=True)
@@ -161,39 +44,19 @@ def run_suite(sf_dir: str, only: set[str]) -> int:
 
     spark = get_spark("oracle_check")
     con = duck_conn(sf_dir)
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-
     n_fail = 0
-    for name, fn in qs.items():
+    for name in entrymod.queries():
         if only and name not in only:
             continue
         t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir).toPandas()
-        except Exception as e:
-            print(f"FAIL {name}: spark error: {e}")
-            n_fail += 1
-            continue
-        if name not in oracles:
-            print(f"SKIP {name}: no oracle (rows-only: {len(sdf)} rows, {time.time()-t0:.1f}s)")
-            continue
-        try:
-            odf = con.execute(oracles[name]).df()
-            desc = con.execute(f"DESCRIBE ({oracles[name]})").fetchall()
-            duck_types = {row[0]: row[1] for row in desc}
-        except Exception as e:
-            print(f"FAIL {name}: duckdb error: {e}")
-            n_fail += 1
-            continue
-        problems = audit_types(sdf, odf, duck_types) + compare(name, sdf, odf)
+        problems = certify(spark, con, name, sf_dir)
         if problems:
             n_fail += 1
-            print(f"FAIL {name} ({len(sdf)} spark rows, {len(odf)} oracle rows):")
+            print(f"FAIL {name}:")
             for p in problems:
                 print(f"   - {p}")
         else:
-            print(f"OK   {name}: {len(sdf)} rows match ({time.time()-t0:.1f}s)")
+            print(f"OK   {name} ({time.time()-t0:.1f}s)")
     print(f"\n{'ALL OK' if n_fail == 0 else f'{n_fail} FAILURES'}")
     return 1 if n_fail else 0
 

@@ -82,11 +82,13 @@ sys.path.insert(0, f"{REPO}/tests")
 import pyarrow as pa  # noqa: E402
 import pyarrow.parquet as pq  # noqa: E402
 
+from streamtasks_spark.oracle import (  # noqa: E402
+    MISSING_TABLE,
+    certify,
+    duck_conn,
+)
 from test_oracle_fuzz import (  # noqa: E402
     TPCH_TABLES,
-    audit_types,
-    compare,
-    duck_conn,
     make_corpus,
     make_events,
     make_vectors,
@@ -106,13 +108,6 @@ VEC_SCHEMA = pa.schema([
     ("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32())),
     ("label", pa.int32()),
 ])
-
-# every table any queries() entry may load — a KeyError on one of
-# these means "tier lacks the table" (benign); any other key is a bug
-ALL_TABLES = frozenset(
-    list(TPCH_TABLES) + ["events", "documents", "embeddings"]
-)
-
 
 def write_one(d: str, name: str, schema, rows) -> None:
     cols = list(zip(*rows))
@@ -338,8 +333,6 @@ def main() -> int:
     from streamtasks_spark.session import get_spark
 
     spark = get_spark("fuzz_sweep")
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
     n_fail = 0
     for tier in tiers:
         for seed in seeds:
@@ -347,53 +340,17 @@ def main() -> int:
                          rich_props, nonfinite, para_frac)
             con = duck_conn(d)
             ran = 0
-            for name, fn in qs.items():
-                try:
-                    sdf = fn(spark, d).toPandas()
-                except Exception as e:  # noqa: BLE001
-                    msg = f"{type(e).__name__}: {e}"
-                    # benign = the tier genuinely lacks a table the
-                    # query loads. A KeyError is only that case when
-                    # its key IS a table name (load_tables drops
-                    # missing parquet files) — any other KeyError is a
-                    # real bug inside an operator and must count as an
-                    # ERR, not a silent skip (r06 ADVICE finding).
-                    missing_table_key = (
-                        isinstance(e, KeyError)
-                        and len(e.args) == 1
-                        and e.args[0] in ALL_TABLES
-                    )
-                    if (
-                        "PATH_NOT_FOUND" in msg
-                        or "Path does not exist" in msg
-                        or missing_table_key
-                    ):
-                        continue  # query needs tables this tier lacks
-                    n_fail += 1
-                    print(f"ERR  {tier}/{seed}/{name}: {msg[:200]}",
-                          flush=True)
-                    continue
-                if name not in oracles:
-                    continue
-                try:
-                    odf = con.execute(oracles[name]).df()
-                    desc = con.execute(
-                        f"DESCRIBE ({oracles[name]})"
-                    ).fetchall()
-                    duck_types = {r[0]: r[1] for r in desc}
-                except Exception as e:  # noqa: BLE001
-                    n_fail += 1
-                    print(f"ERR  {tier}/{seed}/{name}: oracle "
-                          f"{type(e).__name__}: {str(e)[:200]}", flush=True)
-                    continue
-                ran += 1
-                problems = audit_types(sdf, odf, duck_types) + compare(
-                    name, sdf, odf
-                )
+            for name in entrymod.queries():
+                problems = certify(spark, con, name, d)
+                err = bool(problems) and problems[0].startswith(
+                    ("spark error", "duckdb error"))
+                if err and problems[0].startswith(MISSING_TABLE):
+                    continue  # query needs tables this tier lacks
+                ran += not err
                 if problems:
                     n_fail += 1
-                    print(f"FAIL {tier}/{seed}/{name}: {problems[:2]}",
-                          flush=True)
+                    print(f"{'ERR ' if err else 'FAIL'} {tier}/{seed}/"
+                          f"{name}: {problems[:2]}", flush=True)
             print(f"tier {tier} seed {seed}: {ran} queries compared",
                   flush=True)
     print(f"TOTAL FAILS: {n_fail}", flush=True)

@@ -1,26 +1,21 @@
 #!/usr/bin/env python
-"""Mechanized blast radius for the driver's certification window.
+"""Mechanized blast radius for a code change.
 
-The round driver hash-verifies only the first 50 ``queries()`` entries,
-so any query whose Spark plan OR rendered oracle SQL changes in a round
-must be rotated into that window (changed-code-certifies-first). The
-enumeration of "what changed" used to be manual — walk the diff, find
-every consumer of every touched helper — and it failed three times in
-round 7 alone: editing the shared ``norm_text`` helper changed every
-consuming query's plan and oracle, the review pass caught
-``source_stats`` and ``pack_sequences``, and ``quality_buckets`` (a
-consumer through ``text_stats``) shipped uncertified and mislabeled
-"untouched" (r07 verdict, "What's wrong" #1).
+A change to a shared helper (``norm_text``, ``tokens_expr``,
+``_duck_dot``, ...) changes the Spark plan or rendered oracle SQL of
+every query that consumes it, directly or through another helper —
+e.g. ``quality_buckets`` consumes ``norm_text`` through ``text_stats``.
+Walking the diff by hand to find those consumers misses some; this
+script makes the walk mechanical.
 
-This script turns that walk into a mechanical gate: it renders, for
-every declared query, ``sha256(rendered oracle SQL + canonical
-ANALYZED plan)`` at the driver's gate scale (sf0.01) and writes the map
-to ``ORACLE_MANIFEST.json`` at the repo root.
+It renders, for every declared query, ``sha256(rendered oracle SQL +
+canonical ANALYZED plan)`` at sf0.01 and writes the map to
+``ORACLE_MANIFEST.json`` at the repo root.
 ``tests/test_oracle_audit.py::test_oracle_manifest_blast_radius``
-re-renders the map and fails NAMING any query whose hash drifted from
-the committed manifest but which is neither inside the driver's
-50-entry window nor listed in the current round's ``_MUST_VERIFY_R{N}``
-— exactly the class of miss that shipped quality_buckets stale.
+re-renders the map and fails NAMING every query whose hash drifted from
+the committed manifest, and every query added or removed. A change
+records its blast radius by regenerating the manifest in the same
+commit, after ``tests/test_oracle.py`` has certified the named queries.
 
 Why the ANALYZED plan (not optimized/physical): it is computed before
 cache substitution and cost-based decisions, so the hash tracks WHAT
@@ -46,9 +41,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 MANIFEST_PATH = os.path.join(REPO, "ORACLE_MANIFEST.json")
-# the driver's gate scale: hashes embed data-derived literals (k-means
-# codebooks, collected vocabularies), so the manifest is pinned to the
-# same corpus the driver certifies against
+# hashes embed data-derived literals (k-means codebooks, collected
+# vocabularies), so the manifest is pinned to one corpus
 SF_DIR = "/root/testdata/sf0.01"
 
 _EXPR_ID = re.compile(r"#\d+L?")

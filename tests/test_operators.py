@@ -494,21 +494,12 @@ def test_stretch_align_resyncs_clock_and_matches_duckdb(spark, tmp_path):
     converge to event time under jitter, stretch stays within the
     ratio bound, and the whole op is bit-identical to a DuckDB twin
     built on the same integer recurrence."""
-    import os
-    import sys
     from datetime import datetime, timedelta
 
     import duckdb
 
     from streamtasks_spark.operators.chunks import stretch_align
-
-    scripts = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "scripts",
-    )
-    if scripts not in sys.path:
-        sys.path.insert(0, scripts)
-    from check_oracle import compare
+    from streamtasks_spark.oracle import compare
 
     n, rate, ratio = 16, 16_000, 1.1
     d = round(n * (ratio - 1.0))  # ±2 samples per chunk

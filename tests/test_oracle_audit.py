@@ -1,16 +1,17 @@
-"""Byte-level oracle-trap audit (scripts/check_oracle.py).
+"""Byte-level oracle-trap audit (streamtasks_spark/oracle.py).
 
-The round driver compares Spark and DuckDB results by hashing bytes, so
-two traps that are value-identical still fail it: DuckDB integer
-``sum()`` returns HUGEINT (pandas float64) where Spark emits int64
-(burned 4 driver rows in round 3), and DuckDB ``round()`` can emit -0.0
-where Spark emits +0.0 (burned 5 rows in round 2). ``audit_types`` must
-catch both locally, pre-driver. These tests pin that with deliberately
-broken frames — pure pandas/DuckDB, no Spark session needed.
+The oracle certification compares Spark and DuckDB results down to the
+bytes, so two traps that are value-identical still fail it: DuckDB
+integer ``sum()`` returns HUGEINT (pandas float64) where Spark emits
+int64, and DuckDB ``round()`` can emit -0.0 where Spark emits +0.0.
+``audit_types`` must name both. These tests pin that with deliberately
+broken frames — pure pandas/DuckDB, no Spark session needed. The
+per-query certification itself is tests/test_oracle.py.
 """
 
 from __future__ import annotations
 
+import ast
 import os
 import sys
 
@@ -18,10 +19,9 @@ import duckdb
 import pandas as pd
 import pytest
 
-sys.path.insert(
-    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
-)
-from check_oracle import audit_types  # noqa: E402
+from streamtasks_spark.oracle import audit_types
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _duck_frame_and_types(sql: str):
@@ -70,61 +70,43 @@ def test_int_float_kind_mismatch_is_flagged_without_duck_types():
     assert any("dtype class differs" in p for p in problems)
 
 
-def test_changed_queries_sit_inside_driver_window():
-    # the driver hash-checks only the first 50 queries() entries; every
-    # query whose code or oracle changed this round must be in there.
-    # queries() asserts this itself — importing and calling it is the test.
-    entry_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, entry_dir)
+def test_query_names_are_unique_and_every_query_has_an_oracle():
+    # a repeated key in queries()' dict literal silently drops a query,
+    # so count the literal's keys, not the built dict's
     import __spark_entry__ as entrymod
 
+    with open(os.path.join(REPO, "__spark_entry__.py")) as f:
+        tree = ast.parse(f.read())
+    fn = next(n for n in tree.body
+              if isinstance(n, ast.FunctionDef) and n.name == "queries")
+    literal = next(n for n in ast.walk(fn) if isinstance(n, ast.Dict))
+    keys = [k.value for k in literal.keys]
+    assert sorted(k for k in set(keys) if keys.count(k) > 1) == []
     qs = list(entrymod.queries())
-    assert len(qs) == len(set(qs))
-    window = qs[:50]
-    # resolve the current round's lists by prefix so this test can't
-    # silently pin a stale round after the per-round rename
-    must = max(n for n in vars(entrymod) if n.startswith("_MUST_VERIFY_R"))
-    rot = max(n for n in vars(entrymod) if n.startswith("_ROTATE_R"))
-    missing = [n for n in getattr(entrymod, must)
-               + getattr(entrymod, rot) if n not in window]
-    assert missing == []
-    # and every query has either an oracle or a documented rows-only path
+    assert qs == keys
     oracles = entrymod.oracle_sql()
     assert [q for q in qs if q not in oracles] == []
 
 
-@pytest.mark.slow  # slow tier (pytest.ini, r12)
+@pytest.mark.slow  # slow tier (pytest.ini)
 def test_oracle_manifest_blast_radius(spark):
-    """Mechanized indirect-consumer detection (r07 verdict task 2): the
-    committed ORACLE_MANIFEST.json maps every query to
-    sha256(rendered oracle SQL + canonical analyzed plan). Editing a
-    SHARED helper (norm_text, tokens_expr, _duck_dot, ...) changes the
-    rendered SQL/plan of every consuming query — this test re-renders
-    all 122 and fails NAMING any query that drifted from the manifest
-    without being either inside the driver's 50-entry window or listed
-    in the current _MUST_VERIFY_R{N}. This is the gate that would have
-    caught quality_buckets in r07 (changed via text_stats -> norm_text,
-    shipped displaced and mislabeled 'untouched').
-
-    Round workflow: change code -> this test names the blast radius ->
-    add the named queries to _MUST_VERIFY_R{N} (rotating them into the
-    window) -> regenerate the manifest (scripts/oracle_manifest.py
-    --write) and commit it with the change."""
-    entry_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, entry_dir)
-    import __spark_entry__ as entrymod
+    """Mechanized indirect-consumer detection: the committed
+    ORACLE_MANIFEST.json maps every query to sha256(rendered oracle SQL
+    + canonical analyzed plan). Editing a SHARED helper (norm_text,
+    tokens_expr, _duck_dot, ...) changes the rendered SQL/plan of every
+    consuming query; this test re-renders all of them and fails NAMING
+    every query that drifted from the manifest, was added, or was
+    removed. A change records its blast radius by regenerating the
+    manifest (scripts/oracle_manifest.py --write) in the same commit,
+    after tests/test_oracle.py has certified the named queries."""
+    sys.path.insert(0, os.path.join(REPO, "scripts"))
     from oracle_manifest import drift, load_manifest, render_manifest
 
-    committed = load_manifest()
-    current = render_manifest(spark)
-    changed, added, removed = drift(current, committed)
-    must = max(n for n in vars(entrymod) if n.startswith("_MUST_VERIFY_R"))
-    declared = set(getattr(entrymod, must)) | set(list(entrymod.queries())[:50])
-    undeclared = [n for n in changed + added if n not in declared]
-    assert undeclared == [], (
+    changed, added, removed = drift(render_manifest(spark), load_manifest())
+    assert changed + added == [], (
         f"queries whose rendered oracle SQL or plan drifted from "
-        f"ORACLE_MANIFEST.json without a {must} listing or a window "
-        f"slot — rotate them in and regenerate the manifest: {undeclared}"
+        f"ORACLE_MANIFEST.json — certify them and regenerate the "
+        f"manifest: {changed + added}"
     )
     # a removed query is a coverage regression, never silent
     assert removed == [], f"queries removed since the manifest: {removed}"

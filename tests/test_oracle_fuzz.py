@@ -1,16 +1,15 @@
-"""Cross-engine fuzz: the driver's Spark-vs-DuckDB comparison run over
+"""Cross-engine fuzz: the Spark-vs-DuckDB oracle certification run over
 RANDOMIZED adversarial corpora, not just the fixed testdata.
 
-The per-round driver (and `scripts/check_oracle.py`) compare every query
-against its oracle on `/root/testdata` — one fixed corpus. This suite
-regenerates small hostile corpora (empty docs, whitespace-only docs,
-exact duplicates, shared sentences, tabs/newlines, accented latin,
-punctuation runs, single-token docs) from seeded RNG, writes them as a
-parquet `documents` table, and runs the SAME query callables and oracle
-SQL through the same byte-level comparator (`scripts/check_oracle.py`'s
-`compare` + `audit_types`). A cross-engine margin (regex semantics,
-collation, rounding) that the fixed corpus never exercises fails here
-first, not in a burned driver row.
+tests/test_oracle.py certifies every declared query against its oracle
+on `/root/testdata` — fixed corpora. This suite regenerates small
+hostile corpora (empty docs, whitespace-only docs, exact duplicates,
+shared sentences, tabs/newlines, accented latin, punctuation runs,
+single-token docs) from seeded RNG, writes them as parquet tables, and
+runs the SAME query callables and oracle SQL through the same
+certifier (`streamtasks_spark.oracle.certify`: `compare` +
+`audit_types`). A cross-engine margin (regex semantics, collation,
+rounding) that the fixed corpora never exercise fails here.
 
 Alphabet notes (deliberate exclusions, documented margins):
 - no ``\\x0b``/``\\x0c``: Java ``\\s`` includes vertical tab, RE2's does
@@ -29,20 +28,45 @@ from __future__ import annotations
 
 import os
 import random
-import string
 import sys
 
-import duckdb
 import pytest
 
-# driver-facing default run excludes this sweep (pytest.ini, r12):
-# it is the slow tier — run with `-m slow`
+from streamtasks_spark.oracle import (
+    MISSING_TABLE,
+    certify,
+    compare,
+    duck_conn,
+)
+
+# the default run excludes this sweep (pytest.ini): it is the slow
+# tier — run with `-m slow`
 pytestmark = pytest.mark.slow
 
+# fuzz_sweep (imported lazily below) lives in scripts/
 sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
 )
-from check_oracle import audit_types, compare, duck_conn  # noqa: E402
+
+
+def certify_all(spark, sf_dirs, names, ran=None) -> list[str]:
+    """``certify`` every query in ``names`` over every dir, as
+    ``<dir>/<query>: <problem>`` lines. With ``ran`` given, a query
+    reading a table the dir lacks is skipped (single-table corpora run
+    the whole surface) and ``ran`` collects the queries compared."""
+    failures = []
+    for sf_dir in sf_dirs:
+        con = duck_conn(sf_dir)
+        for name in names:
+            problems = certify(spark, con, name, sf_dir)
+            if ran is not None:
+                if problems and problems[0].startswith(MISSING_TABLE):
+                    continue
+                ran.add(name)
+            failures += [f"{os.path.basename(sf_dir)}/{name}: {p}" for p in problems]
+        con.close()
+    return failures
+
 
 WORDS = [
     "the", "a", "and", "of", "to", "in", "is", "it", "for", "on",
@@ -323,46 +347,12 @@ def test_embedding_tier_matches_oracle_on_adversarial_vectors(
     """Zero vectors (ANSI DIVIDE_BY_ZERO without the zero-norm guard),
     exact duplicates (cosine exactly 1.0, rank ties), and near-zero /
     huge single components through the whole ANN tier on both engines."""
-    import __spark_entry__ as entrymod
-
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    failures = []
-    for sf_dir in fuzz_vec_dirs:
-        con = duck_conn(sf_dir)
-        for name in VEC_QUERIES:
-            try:
-                sdf = qs[name](spark, sf_dir).toPandas()
-                odf = con.execute(oracles[name]).df()
-                desc = con.execute(f"DESCRIBE ({oracles[name]})").fetchall()
-                duck_types = {row[0]: row[1] for row in desc}
-            except Exception as e:  # noqa: BLE001
-                failures.append(f"{sf_dir}/{name}: ERROR {type(e).__name__}: {e}")
-                continue
-            problems = audit_types(sdf, odf, duck_types) + compare(name, sdf, odf)
-            failures.extend(f"{os.path.basename(sf_dir)}/{name}: {p}" for p in problems)
+    failures = certify_all(spark, fuzz_vec_dirs, VEC_QUERIES)
     assert not failures, "\n".join(failures[:40])
 
 
 def test_document_tier_matches_oracle_on_adversarial_corpora(spark, fuzz_dirs):
-    import __spark_entry__ as entrymod
-
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    failures = []
-    for sf_dir in fuzz_dirs:
-        con = duck_conn(sf_dir)
-        for name in DOC_QUERIES:
-            try:
-                sdf = qs[name](spark, sf_dir).toPandas()
-                odf = con.execute(oracles[name]).df()
-                desc = con.execute(f"DESCRIBE ({oracles[name]})").fetchall()
-                duck_types = {row[0]: row[1] for row in desc}
-            except Exception as e:  # noqa: BLE001
-                failures.append(f"{sf_dir}/{name}: ERROR {type(e).__name__}: {e}")
-                continue
-            problems = audit_types(sdf, odf, duck_types) + compare(name, sdf, odf)
-            failures.extend(f"{os.path.basename(sf_dir)}/{name}: {p}" for p in problems)
+    failures = certify_all(spark, fuzz_dirs, DOC_QUERIES)
     assert not failures, "\n".join(failures[:40])
 
 
@@ -462,41 +452,8 @@ def test_event_tier_matches_oracle_on_adversarial_events(
     can't hollow it out."""
     import __spark_entry__ as entrymod
 
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    failures = []
     ran = set()
-    for sf_dir in fuzz_event_dirs:
-        con = duck_conn(sf_dir)
-        for name, fn in qs.items():
-            try:
-                sdf = fn(spark, sf_dir).toPandas()
-            except Exception as e:  # noqa: BLE001
-                msg = f"{type(e).__name__}: {e}"
-                if (
-                    "PATH_NOT_FOUND" in msg
-                    or "Path does not exist" in msg
-                    or isinstance(e, KeyError)  # load_tables: table absent
-                ):
-                    continue  # needs documents/embeddings/tpc-h tables
-                failures.append(f"{sf_dir}/{name}: SPARK ERROR {msg[:300]}")
-                continue
-            if name not in oracles:
-                continue
-            try:
-                odf = con.execute(oracles[name]).df()
-                desc = con.execute(f"DESCRIBE ({oracles[name]})").fetchall()
-                duck_types = {row[0]: row[1] for row in desc}
-            except Exception as e:  # noqa: BLE001
-                failures.append(
-                    f"{sf_dir}/{name}: ORACLE ERROR {type(e).__name__}: {str(e)[:300]}"
-                )
-                continue
-            ran.add(name)
-            problems = audit_types(sdf, odf, duck_types) + compare(name, sdf, odf)
-            failures.extend(
-                f"{os.path.basename(sf_dir)}/{name}: {p}" for p in problems
-            )
+    failures = certify_all(spark, fuzz_event_dirs, entrymod.queries(), ran)
     assert len(ran) >= 30, f"only {len(ran)} events-only queries ran: {sorted(ran)}"
     assert not failures, "\n".join(failures[:40])
 
@@ -599,41 +556,8 @@ def test_relational_tier_matches_oracle_on_mutated_tpch(
     can't hollow it out."""
     import __spark_entry__ as entrymod
 
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    failures = []
     ran = set()
-    for sf_dir in fuzz_tpch_dirs:
-        con = duck_conn(sf_dir)
-        for name, fn in qs.items():
-            try:
-                sdf = fn(spark, sf_dir).toPandas()
-            except Exception as e:  # noqa: BLE001
-                msg = f"{type(e).__name__}: {e}"
-                if (
-                    "PATH_NOT_FOUND" in msg
-                    or "Path does not exist" in msg
-                    or isinstance(e, KeyError)  # load_tables: table absent
-                ):
-                    continue  # needs events/documents/embeddings
-                failures.append(f"{sf_dir}/{name}: SPARK ERROR {msg[:300]}")
-                continue
-            if name not in oracles:
-                continue
-            try:
-                odf = con.execute(oracles[name]).df()
-                desc = con.execute(f"DESCRIBE ({oracles[name]})").fetchall()
-                duck_types = {row[0]: row[1] for row in desc}
-            except Exception as e:  # noqa: BLE001
-                failures.append(
-                    f"{sf_dir}/{name}: ORACLE ERROR {type(e).__name__}: {str(e)[:300]}"
-                )
-                continue
-            ran.add(name)
-            problems = audit_types(sdf, odf, duck_types) + compare(name, sdf, odf)
-            failures.extend(
-                f"{os.path.basename(sf_dir)}/{name}: {p}" for p in problems
-            )
+    failures = certify_all(spark, fuzz_tpch_dirs, entrymod.queries(), ran)
     assert len(ran) >= 25, f"only {len(ran)} relational queries ran: {sorted(ran)}"
     assert not failures, "\n".join(failures[:40])
 
@@ -691,21 +615,9 @@ def test_percentile_paths_survive_massive_ties(spark, tie_heavy_dir):
     """quality_buckets (and the other score-threshold doc queries) must
     match their oracles bit-exactly when the score distribution is
     almost entirely ties — the r05 regression geometry."""
-    import __spark_entry__ as entrymod
-
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    con = duck_conn(tie_heavy_dir)
-    failures = []
-    for name in ("quality_buckets", "quality_filter", "text_stats"):
-        sdf = qs[name](spark, tie_heavy_dir).toPandas()
-        odf = con.execute(oracles[name]).df()
-        desc = con.execute(f"DESCRIBE ({oracles[name]})").fetchall()
-        duck_types = {row[0]: row[1] for row in desc}
-        problems = audit_types(sdf, odf, duck_types) + compare(
-            name, sdf, odf
-        )
-        failures.extend(f"{name}: {p}" for p in problems)
+    failures = certify_all(
+        spark, [tie_heavy_dir], ("quality_buckets", "quality_filter", "text_stats")
+    )
     assert not failures, "\n".join(failures)
 
 
@@ -755,38 +667,15 @@ def test_fresh_seed_rotation(spark, tier):
 
     import fuzz_sweep  # scripts/ is on sys.path; imported lazily to
     # avoid a circular import (fuzz_sweep imports this module)
-    import __spark_entry__ as entrymod
 
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
     failures = []
     for seed in _rotation_seeds(tier):
         sf_dir = fuzz_sweep.make_dir(tier, seed)
         try:
-            con = duck_conn(sf_dir)
-            for name in ROTATION_QUERIES[tier]:
-                try:
-                    sdf = qs[name](spark, sf_dir).toPandas()
-                    odf = con.execute(oracles[name]).df()
-                    desc = con.execute(
-                        f"DESCRIBE ({oracles[name]})"
-                    ).fetchall()
-                    duck_types = {row[0]: row[1] for row in desc}
-                except Exception as e:  # noqa: BLE001
-                    failures.append(
-                        f"{tier}/{seed}/{name}: ERROR "
-                        f"{type(e).__name__}: {str(e)[:300]}"
-                    )
-                    continue
-                problems = audit_types(sdf, odf, duck_types) + compare(
-                    name, sdf, odf
-                )
-                failures.extend(
-                    f"{tier}/{seed}/{name}: {p}" for p in problems
-                )
+            failures += certify_all(spark, [sf_dir], ROTATION_QUERIES[tier])
         finally:
             # make_dir uses tempfile.mkdtemp — without cleanup every
-            # round accretes 20 parquet dirs in /tmp
+            # run accretes 20 parquet dirs in /tmp
             shutil.rmtree(sf_dir, ignore_errors=True)
     assert not failures, "\n".join(failures[:40])
 

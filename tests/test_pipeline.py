@@ -509,19 +509,8 @@ def test_shuffle_shards_matches_duckdb_bit_exactly(spark):
         oracle_shuffle_shards_sql,
         shuffle_shards,
     )
+    from streamtasks_spark.oracle import compare
     from streamtasks_spark.session import read_parquet
-
-    sys_path_scripts = __import__("os").path.join(
-        __import__("os").path.dirname(
-            __import__("os").path.dirname(__import__("os").path.abspath(__file__))
-        ),
-        "scripts",
-    )
-    import sys
-
-    if sys_path_scripts not in sys.path:
-        sys.path.insert(0, sys_path_scripts)
-    from check_oracle import compare
 
     docs = read_parquet(spark, "/root/testdata/sf0.001/documents.parquet")
     got = shuffle_shards(
